@@ -23,6 +23,45 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def local_frame(spark, rows, schema):
+    """Driver-built rows (a list of tuples in `schema` order) as an
+    Arrow-backed local relation. `createDataFrame(list, ...)` plans as
+    `Scan ExistingRDD` over a pickled Python RDD, so every action on
+    it (a broadcast included) runs Python-worker tasks; an Arrow table
+    plans as `LocalTableScan`, which Spark evaluates and broadcasts on
+    the driver without a job. `schema` is a StructType or a DDL
+    string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def file_key(path: str) -> str:
+    """A data file's identity for exact matching: `input_file_name()`
+    and `_metadata.file_path` give a percent-encoded URI
+    (`file:/t/p=a%20b/x.parquet`), table metadata a plain path. Both
+    map to the plain absolute path (scheme and host kept for non-local
+    URIs), so files that share a basename in different directories
+    stay distinct."""
+    import os
+    import urllib.parse as _url
+
+    u = _url.urlsplit(path)
+    if len(u.scheme) <= 1:  # plain path (or a drive letter)
+        return os.path.abspath(path)
+    local = os.path.normpath(_url.unquote(u.path))
+    return local if u.scheme == "file" else f"{u.scheme}://{u.netloc}{local}"
+
+
 def _hive_str(v) -> str | None:
     """A metadata partition value as the string hive-dir discovery
     would decode for it. Returns None for floats: Python's str() and
@@ -117,7 +156,7 @@ def assemble_view(
         ).withColumn("__pd_ridx", F.col("_metadata.row_index"))
 
     if not files:
-        empty = spark.createDataFrame([], schema)
+        empty = local_frame(spark, [], schema)
         if with_file:
             empty = empty.withColumn("_f", F.lit(None).cast("string"))
         if with_pos:

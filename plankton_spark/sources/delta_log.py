@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from plankton_spark.sources.assemble import file_key, local_frame
+
 
 # Reader-protocol support (Delta spec, "Protocol Evolution"): this
 # pure-Python reader implements reader-version-1 semantics plus the
@@ -788,8 +790,8 @@ def _dv_deleted_df(spark, table_path: str, dv_desc: dict):
         (os.path.basename(p), json.dumps(d))
         for p, d in sorted(dv_desc.items())
     ]
-    desc_df = spark.createDataFrame(
-        desc_rows, "f string, dv string"
+    desc_df = local_frame(
+        spark, desc_rows, "f string, dv string"
     ).repartition(min(len(desc_rows), 64))
     root = table_path
 
@@ -893,7 +895,7 @@ def _row_tracked_scan(
                 T.StructField("_row_commit_version", T.LongType()),
             ]
         )
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     data_names = {f.name for f in schema.fields}
     extra = [
         T.StructField(n, T.LongType(), True)
@@ -934,7 +936,8 @@ def _row_tracked_scan(
         if total_card <= _DV_BROADCAST_MAX_ROWS:
             deleted = F.broadcast(deleted)
         scan = scan.join(deleted, ["__dv_file", "__dv_ridx"], "left_anti")
-    rt_df = spark.createDataFrame(
+    rt_df = local_frame(
+        spark,
         [(b, base, cv) for b, (base, cv) in sorted(rt.items())],
         "__dv_file string, __rt_base long, __rt_ver long",
     )
@@ -1860,7 +1863,9 @@ class DeltaLogWriter:
         columns are dropped from file content per the Delta spec, and
         each add action carries the partitionValues dict the reader
         re-attaches (and prunes on). Declared CHECK constraints are
-        enforced on every staged frame."""
+        enforced on every staged frame. 0-row files (the one file
+        Spark writes for an empty frame) are discarded, so a rewrite
+        need not probe its survivors before staging them."""
         self._enforce_constraints(df)
         import glob as _glob
         import shutil as _shutil
@@ -1878,6 +1883,9 @@ class DeltaLogWriter:
         for part in sorted(
             _glob.glob(os.path.join(tmp, "**", "part-*.parquet"), recursive=True)
         ):
+            stats = _file_stats(part)
+            if stats["numRecords"] == 0:
+                continue  # removed with the stage dir below
             subdir = os.path.relpath(os.path.dirname(part), tmp)
             pv: dict[str, str | None] = {}
             if subdir != ".":
@@ -1904,7 +1912,7 @@ class DeltaLogWriter:
                         "dataChange": True,
                         # per-file column stats per the Delta spec —
                         # what MERGE's key-range file pruning reads
-                        "stats": json.dumps(_file_stats(dst)),
+                        "stats": json.dumps(stats),
                     }
                 }
             )
@@ -2825,14 +2833,11 @@ class DeltaLogWriter:
             self.spark, schema, part_cols, files, with_file=True,
             table_root=self.table_path,
         )
-        hit = [
-            r[0] for r in live.where(condition).select("_f").distinct().collect()
-        ]
-        hit_files = [
-            (p, pv)
-            for p, pv in files
-            if any(h.endswith(os.path.basename(p)) for h in hit)
-        ]
+        hit = {
+            file_key(r[0])
+            for r in live.where(condition).select("_f").distinct().collect()
+        }
+        hit_files = [(p, pv) for p, pv in files if file_key(p) in hit]
         hit_rel = sorted(
             _path_key(self.table_path, p) for p, _ in hit_files
         )
@@ -2860,8 +2865,7 @@ class DeltaLogWriter:
                 )
             )
             survivors = base.where(~F.coalesce(condition, F.lit(False)))
-            if not survivors.isEmpty():
-                surv_adds = self._stage(survivors, part_cols)
+            surv_adds = self._stage(survivors, part_cols)
             tail += [
                 {"remove": {"path": r, "dataChange": True}} for r in hit_rel
             ]
@@ -2921,14 +2925,11 @@ class DeltaLogWriter:
             self.spark, schema, part_cols, files, with_file=True,
             table_root=self.table_path,
         )
-        hit = [
-            r[0] for r in live.where(condition).select("_f").distinct().collect()
-        ]
-        hit_files = [
-            (p, pv)
-            for p, pv in files
-            if any(h.endswith(os.path.basename(p)) for h in hit)
-        ]
+        hit = {
+            file_key(r[0])
+            for r in live.where(condition).select("_f").distinct().collect()
+        }
+        hit_files = [(p, pv) for p, pv in files if file_key(p) in hit]
         hit_rel = sorted(
             _path_key(self.table_path, p) for p, _ in hit_files
         )
@@ -3231,7 +3232,8 @@ class DeltaLogWriter:
             # (materialized value where the source file was rewritten
             # before, baseRowId + position otherwise) with a RESET
             # commit version (null → the add's default)
-            rt_df = self.spark.createDataFrame(
+            rt_df = local_frame(
+                self.spark,
                 [
                     (
                         os.path.basename(rel),
@@ -3569,14 +3571,11 @@ class DeltaLogWriter:
             self.spark, schema, part_cols, files, with_file=True,
             table_root=self.table_path,
         )
-        hit = [
-            r[0] for r in live.where(condition).select("_f").distinct().collect()
-        ]
-        hit_files = [
-            (p, pv)
-            for p, pv in files
-            if any(h.endswith(os.path.basename(p)) for h in hit)
-        ]
+        hit = {
+            file_key(r[0])
+            for r in live.where(condition).select("_f").distinct().collect()
+        }
+        hit_files = [(p, pv) for p, pv in files if file_key(p) in hit]
         hit_rel = sorted(
             _path_key(self.table_path, p) for p, _ in hit_files
         )
@@ -3586,8 +3585,7 @@ class DeltaLogWriter:
                 self.spark, schema, part_cols, hit_files,
                 table_root=self.table_path,
             ).where(~F.coalesce(condition, F.lit(False)))
-            if not survivors.isEmpty():
-                actions += self._stage(survivors, part_cols)
+            actions += self._stage(survivors, part_cols)
             actions += [
                 {"remove": {"path": r, "dataChange": True}} for r in hit_rel
             ]
@@ -4790,7 +4788,7 @@ def read_delta_cdf(spark, table_path: str, v_from: int, v_to: int):
                 T.StructField("_commit_timestamp", T.TimestampType()),
             ]
         )
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
@@ -5087,4 +5085,4 @@ def files_meta(spark, table_path: str, version: int | None = None):
         "dv_cardinality long, min_values map<string,string>, "
         "max_values map<string,string>"
     )
-    return spark.createDataFrame(rows, out_schema)
+    return local_frame(spark, rows, out_schema)

@@ -73,6 +73,8 @@ import shutil
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from plankton_spark.sources.assemble import local_frame
+
 META_COLS = [
     "_hoodie_commit_time",
     "_hoodie_commit_seqno",
@@ -92,6 +94,27 @@ _PENDING_RE = re.compile(r"^(\d{14,17})\.(commit|deltacommit|replacecommit)\.(re
 _BASEFILE_RE = re.compile(r"^(?P<fid>[^_]+)_(?P<token>[^_]+)_(?P<instant>\d{14,17})\.parquet$")
 
 _UNPARTITIONED = ""
+
+
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_slices(spark, paths: list[str]):
+    """Read base files as ONE multi-path parquet scan under the Spark
+    row schema recorded in the first file's footer — the footer Spark's
+    own non-merging inference would read, minus the schema-inference
+    job. Footers without a JSON row schema (foreign parquet-avro
+    writers, Spark 1.x) still infer."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    raw = (pq.read_metadata(paths[0]).metadata or {}).get(_SPARK_ROW_SCHEMA)
+    try:
+        schema = T.StructType.fromJson(json.loads(raw))
+    except (TypeError, ValueError, KeyError):
+        # absent, or the pre-JSON case-class string of Spark 1.x
+        return spark.read.parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def _read_props(path: str) -> dict[str, str]:
@@ -381,7 +404,7 @@ def read_hudi(
         ):
             return _empty_like(spark, t, table_path, with_meta)
         raise ValueError(f"{table_path}: no file slices selected")
-    df = spark.read.parquet(*paths)
+    df = read_slices(spark, paths)
     if incremental is not None and not t.virtual_keys:
         df = df.where(
             (F.col("_hoodie_commit_time") > begin)
@@ -405,8 +428,8 @@ def _empty_like(spark, t, table_path, with_meta):
         tip = t.file_slices(None)
     if not tip:
         raise ValueError(f"{table_path}: no file slices selected")
-    df = spark.read.parquet(
-        os.path.join(table_path, tip[0][3])
+    df = read_slices(
+        spark, [os.path.join(table_path, tip[0][3])]
     ).where(F.lit(False))
     if not with_meta and not t.virtual_keys:
         df = df.drop(*META_COLS)
@@ -452,7 +475,7 @@ def _read_mor(
             return _empty_like(spark, t, table_path, with_meta)
         raise ValueError(f"{table_path}: no file slices selected")
     base_paths = [os.path.join(table_path, rel) for _, _, _, rel, _ in slices]
-    base = spark.read.parquet(*base_paths)
+    base = read_slices(spark, base_paths)
     log_paths = [
         os.path.join(table_path, lr)
         for _, _, _, _, lrs in slices
@@ -505,7 +528,7 @@ def _read_mor(
                     yield pd.DataFrame(rows, columns=cols + ["__del"])
 
         logs_df = (
-            spark.createDataFrame([(p,) for p in sorted(log_paths)], "path string")
+            local_frame(spark, [(p,) for p in sorted(log_paths)], "path string")
             .repartition(min(len(log_paths), 32))
             .mapInPandas(parse, log_schema)
         )
@@ -574,11 +597,12 @@ def _read_mor_virtual(
         ]
         if not paths:
             return base.where(F.lit(False))
-        return spark.read.parquet(*paths)
+        return read_slices(spark, paths)
     key_expr = F.col(t.record_key_field).cast("string")
     merged = base
     if log_paths:
-        inst_map = spark.createDataFrame(
+        inst_map = local_frame(
+            spark,
             [(os.path.basename(rel), bi) for _p, _fid, bi, rel, _l in slices],
             "__base string, __ct string",
         )
@@ -635,8 +659,8 @@ def _read_mor_virtual(
                     )
 
         logs_df = (
-            spark.createDataFrame(
-                [(p,) for p in sorted(log_paths)], "path string"
+            local_frame(
+                spark, [(p,) for p in sorted(log_paths)], "path string"
             )
             .repartition(min(len(log_paths), 32))
             .mapInPandas(parse, log_schema)
@@ -1098,7 +1122,8 @@ class HudiWriter:
                     # from a broadcast basename map built off the
                     # commit's own add list (metadata-scale) — the
                     # same attribution the virtual write paths use
-                    amap = self.spark.createDataFrame(
+                    amap = local_frame(
+                        self.spark,
                         [
                             (n, p, n.split("_")[0])
                             for p, n, _s in adds
@@ -1107,7 +1132,7 @@ class HudiWriter:
                         "__base string, part string, fname string",
                     )
                     keyed = (
-                        self.spark.read.parquet(*base_adds)
+                        read_slices(self.spark, base_adds)
                         .select(
                             self._key_expr().alias("__k"),
                             F.substring_index(
@@ -1117,7 +1142,7 @@ class HudiWriter:
                         .join(F.broadcast(amap), "__base")
                     )
                 else:
-                    keyed = self.spark.read.parquet(*base_adds).select(
+                    keyed = read_slices(self.spark, base_adds).select(
                         F.col("_hoodie_record_key").alias("__k"),
                         F.col("_hoodie_partition_path").alias("part"),
                         F.element_at(
@@ -1159,7 +1184,7 @@ class HudiWriter:
         if not rows and rli_df is None:
             return
         mpath = os.path.join(self.meta_dir, "metadata")
-        df = self.spark.createDataFrame(rows, mschema)
+        df = local_frame(self.spark, rows, mschema)
         if rli_df is not None:
             df = df.unionByName(rli_df)
         mw = HudiWriter(
@@ -1519,7 +1544,8 @@ class HudiWriter:
         VIRTUAL-KEY attribution: converted files carry no
         _hoodie_file_name, so file identity comes from
         _metadata.file_path joined to this metadata-scale map."""
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (os.path.basename(rel), p, fid)
                 for p, fid, _ti, rel in slices
@@ -1562,12 +1588,12 @@ class HudiWriter:
         if rli is not None:
             index = rli
         elif not cand_paths:
-            index = self.spark.createDataFrame(
-                [], "__key string, __part string, __fid string"
+            index = local_frame(
+                self.spark, [], "__key string, __part string, __fid string"
             )
         elif self.virtual:
             index = (
-                self.spark.read.parquet(*cand_paths)
+                read_slices(self.spark, cand_paths)
                 .select(
                     self._key_expr().alias("__key"),
                     F.substring_index(
@@ -1578,7 +1604,7 @@ class HudiWriter:
                 .select("__key", "__part", "__fid")
             )
         else:
-            index = self.spark.read.parquet(*cand_paths).select(
+            index = read_slices(self.spark, cand_paths).select(
                 F.col("_hoodie_record_key").alias("__key"),
                 F.col("_hoodie_partition_path").alias("__part"),
                 F.element_at(F.split("_hoodie_file_name", "_"), 1).alias("__fid"),
@@ -1623,7 +1649,7 @@ class HudiWriter:
                     for p, fid, _, rel in slices
                     if (p, fid) in touched
                 ]
-                old = self.spark.read.parquet(*touched_paths)
+                old = read_slices(self.spark, touched_paths)
                 upd_keys = tagged.select("__key").where(
                     F.col("__fid").isNotNull()
                 ).distinct()
@@ -1812,15 +1838,15 @@ class HudiWriter:
         if rli is not None:
             index = rli
         elif not base_paths:
-            index = self.spark.createDataFrame(
-                [], "__key string, __part string, __fid string"
+            index = local_frame(
+                self.spark, [], "__key string, __part string, __fid string"
             )
         elif self.virtual:
             # virtual-key tagging: the declared key column + the
             # broadcast (basename → part, fileId) slice map stand in
             # for the meta columns (same shape as the COW branch)
             index = (
-                self.spark.read.parquet(*base_paths)
+                read_slices(self.spark, base_paths)
                 .select(
                     self._key_expr().alias("__key"),
                     F.substring_index(
@@ -1838,7 +1864,7 @@ class HudiWriter:
                 .select("__key", "__part", "__fid")
             )
         else:
-            index = self.spark.read.parquet(*base_paths).select(
+            index = read_slices(self.spark, base_paths).select(
                 F.col("_hoodie_record_key").alias("__key"),
                 F.col("_hoodie_partition_path").alias("__part"),
                 F.element_at(F.split("_hoodie_file_name", "_"), 1).alias("__fid"),
@@ -2077,12 +2103,12 @@ class HudiWriter:
         if rli is not None:
             index = rli
         elif not base_paths:
-            index = self.spark.createDataFrame(
-                [], "__key string, __part string, __fid string"
+            index = local_frame(
+                self.spark, [], "__key string, __part string, __fid string"
             )
         elif self.virtual:
             index = (
-                self.spark.read.parquet(*base_paths)
+                read_slices(self.spark, base_paths)
                 .select(
                     self._key_expr().alias("__key"),
                     F.substring_index(
@@ -2100,7 +2126,7 @@ class HudiWriter:
                 .select("__key", "__part", "__fid")
             )
         else:
-            index = self.spark.read.parquet(*base_paths).select(
+            index = read_slices(self.spark, base_paths).select(
                 F.col("_hoodie_record_key").alias("__key"),
                 F.col("_hoodie_partition_path").alias("__part"),
                 F.element_at(F.split("_hoodie_file_name", "_"), 1).alias("__fid"),
@@ -2209,7 +2235,7 @@ class HudiWriter:
             # file group whose base held its key (same attribution as
             # the write paths — declared key + broadcast slice map)
             index = (
-                self.spark.read.parquet(*todo_bases)
+                read_slices(self.spark, todo_bases)
                 .select(
                     self._key_expr().alias("__key"),
                     F.substring_index(
@@ -2561,7 +2587,7 @@ def convert_hudi_to_delta(spark, table_path: str) -> int:
     if not slices:
         raise ValueError(f"{table_path}: no file slices to convert")
     paths = [os.path.join(table_path, rel) for _, _, _, rel in slices]
-    schema = spark.read.parquet(*paths).drop(*META_COLS).schema
+    schema = read_slices(spark, paths).drop(*META_COLS).schema
     adds = []
     for _, _, _, rel in slices:
         p = os.path.join(table_path, rel)
@@ -2617,7 +2643,7 @@ def convert_hudi_to_iceberg(spark, table_path: str) -> int:
     if not slices:
         raise ValueError(f"{table_path}: no file slices to convert")
     paths = [os.path.join(table_path, rel) for _, _, _, rel in slices]
-    schema = spark.read.parquet(*paths).drop(*META_COLS).schema
+    schema = read_slices(spark, paths).drop(*META_COLS).schema
     inventory = [(rel, {}) for _, _, _, rel in sorted(slices)]
     return _author_iceberg_over(spark, table_path, schema, inventory, [])
 

@@ -42,6 +42,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from plankton_spark.filestats import _reject_empty_string_partitions
 from plankton_spark.filestats import apply_partition_schema as _apply_partition_schema
+from plankton_spark.sources.assemble import file_key, local_frame
 from plankton_spark.sources.avro_ocf import read_ocf_generic
 
 
@@ -679,7 +680,7 @@ def read_iceberg(
                     ),
                 ]
             )
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     spec_ids = sorted({sid for _p, _pv, _seq, sid in full})
     lineage = None
     lineage_fields = None
@@ -933,7 +934,8 @@ def _posdelete_filtered_read(
             (os.path.basename(ref.rstrip("/")), p, int(off), int(sz), int(card))
             for p, ref, off, sz, card in sorted(dv_deletes)
         ]
-        desc_df = spark.createDataFrame(
+        desc_df = local_frame(
+            spark,
             desc_rows, "f string, puffin string, off long, sz long, card long"
         ).repartition(min(len(desc_rows), 64))
 
@@ -993,7 +995,8 @@ def _posdelete_filtered_read(
     # LIVE FILE — manifest metadata, broadcast by construction; the
     # projection is arithmetic on the already-present physical row
     # index, so lineage costs no extra scan or shuffle
-    lin_df = spark.createDataFrame(
+    lin_df = local_frame(
+        spark,
         [(b, int(fr), int(sq)) for b, (fr, sq) in sorted(lineage.items())],
         "__pd_file string, __pd_frid long, __pd_seq long",
     )
@@ -1037,7 +1040,8 @@ def _apply_equality_deletes(spark, t, schema, scan, eq_deletes, data_seq):
     for path, ids, seq in eq_deletes:
         groups[ids].append((path, seq))
     by_name = {f.name: f for f in schema.fields}
-    seq_df = spark.createDataFrame(
+    seq_df = local_frame(
+        spark,
         [(b, int(s)) for b, s in sorted(data_seq.items())],
         "__pd_file string, __data_seq long",
     )
@@ -1974,6 +1978,9 @@ class IcebergWriter:
         field_ids: dict[str, int] | None = None,
     ) -> list[dict]:
         """Write df as parquet under data/; return data_file dicts.
+        0-row files (the one file Spark writes for an empty frame) are
+        discarded, so a rewrite need not probe its survivors before
+        staging them.
 
         Data files carry the Iceberg FIELD IDS as parquet field ids
         (`parquet.field.id` column metadata — Spark's parquet writer
@@ -2058,6 +2065,11 @@ class IcebergWriter:
         for part in sorted(
             _glob.glob(os.path.join(tmp, "**", "part-*.parquet"), recursive=True)
         ):
+            # spec: record_count is REQUIRED and real — footer
+            # metadata only (no data pages read)
+            n_rows = _pq.ParquetFile(part).metadata.num_rows
+            if n_rows == 0:
+                continue  # removed with the stage dir below
             subdir = os.path.relpath(os.path.dirname(part), tmp)
             pv: dict = {}
             reldir = "data"
@@ -2090,11 +2102,7 @@ class IcebergWriter:
                     "file_path": rel,
                     "file_format": "PARQUET",
                     "partition": pv,
-                    # spec: record_count is REQUIRED and real — footer
-                    # metadata only (no data pages read)
-                    "record_count": _pq.ParquetFile(
-                        os.path.join(self.table_path, rel)
-                    ).metadata.num_rows,
+                    "record_count": n_rows,
                     "file_size_in_bytes": os.path.getsize(
                         os.path.join(self.table_path, rel)
                     ),
@@ -3265,14 +3273,11 @@ class IcebergWriter:
         live = _assemble_multispec(
             self.spark, table, schema, full, with_file=True
         )
-        hit = [
-            r[0] for r in live.where(condition).select("_f").distinct().collect()
-        ]
-        hit_full = [
-            (p, pv, sq, sid)
-            for p, pv, sq, sid in full
-            if any(h.endswith(os.path.basename(p)) for h in hit)
-        ]
+        hit = {
+            file_key(r[0])
+            for r in live.where(condition).select("_f").distinct().collect()
+        }
+        hit_full = [e for e in full if file_key(e[0]) in hit]
         if not hit_full:
             return self._commit_snapshot([], set(), keep_unhit=True)
         removed_rel = {
@@ -3281,13 +3286,9 @@ class IcebergWriter:
         lin_on = self._lineage_rewrite_on(table)
         base = self._hit_scan_ms(table, schema, hit_full, lin_on)
         survivors = base.where(~F.coalesce(condition, F.lit(False)))
-        staged = (
-            []
-            if survivors.isEmpty()
-            else self._stage(
-                survivors, 0, spec,
-                field_ids=self._lineage_stage_ids(table) if lin_on else None,
-            )
+        staged = self._stage(
+            survivors, 0, spec,
+            field_ids=self._lineage_stage_ids(table) if lin_on else None,
         )
         return self._commit_snapshot(
             staged, removed_rel, keep_unhit=True, assign_row_ids=lin_on
@@ -3334,14 +3335,11 @@ class IcebergWriter:
         live = _assemble_multispec(
             self.spark, table, schema, full, with_file=True
         )
-        hit = [
-            r[0] for r in live.where(condition).select("_f").distinct().collect()
-        ]
-        hit_full = [
-            (p, pv, sq, sid)
-            for p, pv, sq, sid in full
-            if any(h.endswith(os.path.basename(p)) for h in hit)
-        ]
+        hit = {
+            file_key(r[0])
+            for r in live.where(condition).select("_f").distinct().collect()
+        }
+        hit_full = [e for e in full if file_key(e[0]) in hit]
         if not hit_full:
             return self._commit_snapshot([], set(), keep_unhit=True)
         removed_rel = {
@@ -3423,27 +3421,21 @@ class IcebergWriter:
         live = _assemble_multispec(
             self.spark, table, schema, full, with_file=True
         )
-        hit = [
-            r[0] for r in live.where(condition).select("_f").distinct().collect()
-        ]
-        hit_full = [
-            (p, pv, sq, sid)
-            for p, pv, sq, sid in full
-            if any(h.endswith(os.path.basename(p)) for h in hit)
-        ]
+        hit = {
+            file_key(r[0])
+            for r in live.where(condition).select("_f").distinct().collect()
+        }
+        hit_full = [e for e in full if file_key(e[0]) in hit]
         removed_rel = {
             os.path.relpath(p, self.table_path) for p, _pv, _sq, _s in hit_full
         }
         if hit_full:
             base = self._hit_scan_ms(table, schema, hit_full, lin_on)
             survivors = base.where(~F.coalesce(condition, F.lit(False)))
-            if not survivors.isEmpty():
-                staged = staged + self._stage(
-                    survivors, 0, spec,
-                    field_ids=self._lineage_stage_ids(table)
-                    if lin_on
-                    else None,
-                )
+            staged = staged + self._stage(
+                survivors, 0, spec,
+                field_ids=self._lineage_stage_ids(table) if lin_on else None,
+            )
         return self._commit_snapshot(
             staged, removed_rel, keep_unhit=True, assign_row_ids=lin_on
         )
@@ -4725,7 +4717,7 @@ def read_iceberg_changelog(
         ]
     )
     if not in_range:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     from plankton_spark.sources import puffin as _puffin
 
@@ -4817,8 +4809,8 @@ def read_iceberg_changelog(
             for i in idx
         ]
         if pairs:
-            drop = spark.createDataFrame(
-                pairs, "__pd_file string, __pd_ridx long"
+            drop = local_frame(
+                spark, pairs, "__pd_file string, __pd_ridx long"
             )
             scan = scan.withColumn(
                 "__pd_file", F.substring_index("__pd_file", "/", -1)
@@ -4843,9 +4835,7 @@ def read_iceberg_changelog(
             for p, idx in sorted(keep_sets.items())
             for i in idx
         ]
-        keep = spark.createDataFrame(
-            pairs, "__pd_file string, __pd_ridx long"
-        )
+        keep = local_frame(spark, pairs, "__pd_file string, __pd_ridx long")
         scan = scan.withColumn(
             "__pd_file", F.substring_index("__pd_file", "/", -1)
         ).join(
@@ -4875,8 +4865,8 @@ def read_iceberg_changelog(
             for i in idx
         ]
         if pairs:
-            drop = spark.createDataFrame(
-                pairs, "__pd_file string, __pd_ridx long"
+            drop = local_frame(
+                spark, pairs, "__pd_file string, __pd_ridx long"
             )
             scan = scan.join(
                 F.broadcast(drop) if len(pairs) < 2_000_000 else drop,
@@ -4995,7 +4985,7 @@ def read_iceberg_changelog(
                 )
             )
     if not frames:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     out = frames[0]
     for fr in frames[1:]:
         out = out.unionByName(fr)
@@ -5746,9 +5736,7 @@ def files_meta(spark, table_path: str, snapshot_id: int | None = None):
     # key on path only: the tuples hold dicts, which are not orderable
     # (unique paths make full-tuple sort work by accident — until a
     # tie makes it a TypeError)
-    return spark.createDataFrame(
-        sorted(rows, key=lambda r: r[0]), out_schema
-    )
+    return local_frame(spark, sorted(rows, key=lambda r: r[0]), out_schema)
 
 
 def convert_delta_to_iceberg(spark, table_path: str) -> int:

@@ -14,7 +14,10 @@ on top of the winner's snapshot).
 Scale posture:
 - Data files are ordinary parquet: the 100 TB scan path is Spark's
   native vectorized reader over an explicit file list — the format
-  adds zero read-path overhead beyond the (tiny) log replay.
+  adds zero read-path overhead beyond the (tiny) log replay. Commits
+  that set or change the schema record it in the log (and the
+  checkpoint carries it), so a read plans without a schema-inference
+  job; only logs written before schemas were recorded still infer.
 - Every `add` action carries per-column min/max stats collected from
   the parquet footers at commit time; `scan(predicate_ranges=...)`
   prunes whole files BEFORE Spark ever opens them — the same
@@ -37,6 +40,7 @@ import uuid
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 CHECKPOINT_EVERY = 10
 _STATS_TYPES = ("int32", "int64", "double", "float", "string", "large_string")
@@ -66,11 +70,16 @@ def _checkpoint_file(path: str, v: int) -> str:
 
 
 from plankton_spark.filestats import stat_encode as _stat_value  # noqa: E402
+from plankton_spark.sources.assemble import file_key, local_frame  # noqa: E402
 
 
 def _collect_stats(file_path: str) -> dict:
     """Per-column min/max from the parquet footer (no data read)."""
-    md = pq.ParquetFile(file_path).metadata
+    return _footer_stats(pq.ParquetFile(file_path).metadata)
+
+
+def _footer_stats(md) -> dict:
+    """Per-column min/max from parquet footer metadata `md`."""
     stats: dict[str, dict] = {}
     for rg in range(md.num_row_groups):
         for ci in range(md.num_columns):
@@ -118,9 +127,14 @@ class PlankTable:
             raise FileNotFoundError(f"{self.path}: not a planktable (empty _log)")
         return vs[-1]
 
-    def _snapshot(self, version: int | None = None) -> dict[str, dict]:
-        """Replay log → {relative_file: stats} live at `version`.
-        Starts from the newest checkpoint ≤ version, if any."""
+    def _state(self, version: int | None = None) -> tuple[dict, dict, dict | None]:
+        """Replay log → (live {relative_file: stats}, properties,
+        schema JSON or None) at `version`. Starts from the newest
+        checkpoint ≤ version, if any; checkpoints carry the folded
+        properties and schema, so both survive expire_log. Properties
+        are `meta` actions (a {key: value} per commit; value None
+        unsets); the schema is the latest `schema` action, and None
+        for a log written before commits recorded it."""
         target = self.latest_version() if version is None else version
         d = _log_dir(self.path)
         ckpts = sorted(
@@ -129,10 +143,14 @@ class PlankTable:
             if e.endswith(".checkpoint.json") and int(e.split(".")[0]) <= target
         )
         live: dict[str, dict] = {}
+        props: dict = {}
+        schema = None
         start = 0
         if ckpts:
             with open(_checkpoint_file(self.path, ckpts[-1])) as f:
-                live = json.load(f)["live"]
+                ck = json.load(f)
+            live, props = ck["live"], dict(ck.get("meta") or {})
+            schema = ck.get("schema")
             start = ckpts[-1] + 1
         for v in range(start, target + 1):
             vf = _version_file(self.path, v)
@@ -154,7 +172,17 @@ class PlankTable:
                 live.pop(rm, None)
             for add in commit.get("add", []):
                 live[add["file"]] = add.get("stats", {})
-        return live
+            for k, val in (commit.get("meta") or {}).items():
+                if val is None:
+                    props.pop(k, None)
+                else:
+                    props[k] = val
+            schema = commit.get("schema", schema)
+        return live, props, schema
+
+    def _snapshot(self, version: int | None = None) -> dict[str, dict]:
+        """Replay log → {relative_file: stats} live at `version`."""
+        return self._state(version)[0]
 
     def history(self) -> list[dict]:
         out = []
@@ -172,48 +200,15 @@ class PlankTable:
         return out
 
     def properties(self, version: int | None = None) -> dict:
-        """Table properties at `version`: replayed from `meta` actions
-        (a {key: value} per commit; value None unsets). Checkpoints
-        carry the folded state, so properties survive expire_log."""
-        target = self.latest_version() if version is None else version
-        d = _log_dir(self.path)
-        ckpts = sorted(
-            int(e.split(".")[0])
-            for e in os.listdir(d)
-            if e.endswith(".checkpoint.json") and int(e.split(".")[0]) <= target
-        )
-        props: dict = {}
-        start = 0
-        if ckpts:
-            with open(_checkpoint_file(self.path, ckpts[-1])) as f:
-                props = dict(json.load(f).get("meta") or {})
-            start = ckpts[-1] + 1
-        for v in range(start, target + 1):
-            vf = _version_file(self.path, v)
-            if not os.path.exists(vf):
-                # same refusal _snapshot gives the identical state: a
-                # missing commit below the earliest checkpoint means
-                # the version expired — silently returning {} would be
-                # a wrong answer where reads raise (review finding)
-                all_ck = [
-                    int(e.split(".")[0])
-                    for e in os.listdir(d)
-                    if e.endswith(".checkpoint.json")
-                ]
-                if all_ck and min(all_ck) > target:
-                    raise ValueError(
-                        f"{self.path}: version {target} expired by "
-                        f"expire_log (earliest retained: {min(all_ck)})"
-                    )
-                raise FileNotFoundError(f"{self.path}: missing log version {v}")
-            with open(vf) as f:
-                m = json.load(f).get("meta") or {}
-            for k, val in m.items():
-                if val is None:
-                    props.pop(k, None)
-                else:
-                    props[k] = val
-        return props
+        """Table properties at `version` (see _state)."""
+        return self._state(version)[1]
+
+    def schema(self, version: int | None = None) -> T.StructType | None:
+        """The table schema recorded in the log at `version`, or None
+        when the log predates schema recording (reads then infer it
+        from the data files)."""
+        js = self._state(version)[2]
+        return None if js is None else T.StructType.fromJson(js)
 
     def set_properties(self, updates: dict) -> int:
         """Set (value) / unset (None) table properties in one commit."""
@@ -314,7 +309,20 @@ class PlankTable:
             if version is not None:
                 raise ValueError("pass version or timestamp, not both")
             version = self.version_at(timestamp)
-        files = self.files(version)
+        live, _props, schema = self._state(version)
+        return self._read_files(sorted(live), schema)
+
+    def _read_files(self, rels, schema: dict | None) -> DataFrame:
+        """Read the data files `rels` under the table schema (JSON, as
+        `_state` returns it). The schema comes from the log, so the
+        read plans without a Spark job; only logs that predate schema
+        recording infer it from the files."""
+        files = [os.path.join(self.path, rel) for rel in rels]
+        if schema is not None:
+            struct = T.StructType.fromJson(schema)
+            if not files:
+                return local_frame(self.spark, [], struct)
+            return self.spark.read.schema(struct).parquet(*files)
         if not files:
             # empty snapshot: derive schema from any historic file
             any_file = next(
@@ -339,7 +347,7 @@ class PlankTable:
         keeps only files whose footer min/max overlaps every range.
         The caller still applies the row-level filter; this prunes at
         FILE granularity before Spark opens anything."""
-        snap = self._snapshot(version)
+        snap, _props, schema = self._state(version)
         keep = []
         predicate_ranges = {
             col: (_stat_value(lo), _stat_value(hi))
@@ -357,10 +365,10 @@ class PlankTable:
                     ok = False
                     break
             if ok:
-                keep.append(os.path.join(self.path, rel))
+                keep.append(rel)
         if not keep:
             return self.read(version).limit(0)
-        return self.spark.read.option("mergeSchema", "true").parquet(*sorted(keep))
+        return self._read_files(sorted(keep), schema)
 
     # -- write path ----------------------------------------------------
 
@@ -368,7 +376,9 @@ class PlankTable:
         """Write df as parquet data files under a unique staging name;
         returns add-actions (file + stats). Files are invisible until
         a commit references them. Declared CHECK constraints are
-        enforced on every staged frame."""
+        enforced on every staged frame. 0-row files (the one file
+        Spark writes for an empty frame) are discarded, so a rewrite
+        need not probe its survivors before staging them."""
         self._enforce_constraints(df)
         stage_id = uuid.uuid4().hex
         stage_dir = os.path.join(self.path, f".stage-{stage_id}")
@@ -377,16 +387,14 @@ class PlankTable:
         for e in sorted(os.listdir(stage_dir)):
             if not e.endswith(".parquet"):
                 continue
+            md = pq.ParquetFile(os.path.join(stage_dir, e)).metadata
+            if md.num_rows == 0:
+                continue  # removed with the stage dir below
             rel = f"data-{stage_id}-{e}"
             os.replace(
                 os.path.join(stage_dir, e), os.path.join(self.path, rel)
             )
-            adds.append(
-                {
-                    "file": rel,
-                    "stats": _collect_stats(os.path.join(self.path, rel)),
-                }
-            )
+            adds.append({"file": rel, "stats": _footer_stats(md)})
         # clear remaining markers (_SUCCESS etc.) and the stage dir
         for e in os.listdir(stage_dir):
             os.remove(os.path.join(stage_dir, e))
@@ -402,10 +410,13 @@ class PlankTable:
         remove: list[str],
         txn: dict | None = None,
         meta: dict | None = None,
+        schema: T.StructType | None = None,
     ) -> int:
         """Atomically claim `version`. O_EXCL creation is the lock: if
         the file exists, a concurrent writer won — raise
-        CommitConflict so the caller can rebase and retry."""
+        CommitConflict so the caller can rebase and retry. `schema`
+        records the table schema from this version on (commits that
+        leave it unchanged omit it)."""
         os.makedirs(_log_dir(self.path), exist_ok=True)
         payload = {
             "version": version,
@@ -418,6 +429,8 @@ class PlankTable:
             payload["txn"] = txn
         if meta is not None:
             payload["meta"] = meta
+        if schema is not None:
+            payload["schema"] = schema.jsonValue()
         tmp = _version_file(self.path, version) + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(payload, f)
@@ -439,20 +452,30 @@ class PlankTable:
             # snapshot BEFORE creating the file: an open("w") first
             # would leave an empty checkpoint visible to the very
             # _snapshot() call that builds it
-            live = self._snapshot(version)
+            ck = self._checkpoint(version)
             ctmp = _checkpoint_file(self.path, version) + f".tmp-{uuid.uuid4().hex}"
             with open(ctmp, "w") as f:
-                # meta rides the checkpoint: properties must survive
-                # expire_log dropping the commits that set them
-                json.dump({"live": live, "meta": self.properties(version)}, f)
+                json.dump(ck, f)
             os.replace(ctmp, _checkpoint_file(self.path, version))
         return version
+
+    def _checkpoint(self, version: int) -> dict:
+        """The folded state at `version`: meta and schema ride the
+        checkpoint, since they must survive expire_log dropping the
+        commits that set them."""
+        live, props, schema = self._state(version)
+        out = {"live": live, "meta": props}
+        if schema is not None:
+            out["schema"] = schema
+        return out
 
     def _next_version(self) -> int:
         vs = self.versions()
         return (vs[-1] + 1) if vs else 0
 
-    def _commit_with_retry(self, operation, make_actions, max_retries=20) -> int:
+    def _commit_with_retry(
+        self, operation, make_actions, max_retries=20, schema=None
+    ) -> int:
         """Optimistic concurrency loop: try to claim the next version;
         on conflict, re-validate and retry. Claiming the version file
         (O_EXCL) is the serialization point, so a commit whose
@@ -462,10 +485,13 @@ class PlankTable:
         are only valid while every removed file is still live — if a
         concurrent writer rewrote one of them, committing the stale
         rewrite would silently undo that writer, so raise
-        ConcurrentModification instead."""
+        ConcurrentModification instead. `schema`, when given, returns
+        the schema to record, re-derived on every attempt so a
+        concurrent schema change is never overwritten."""
         for _ in range(max_retries):
             v = self._next_version()
             add, remove = make_actions()
+            new_schema = schema() if schema is not None else None
             if remove:
                 live = self._snapshot()
                 gone = sorted(r for r in remove if r not in live)
@@ -475,16 +501,39 @@ class PlankTable:
                         f"live (rewritten by a concurrent commit): {gone[:5]}"
                     )
             try:
-                return self._commit(v, operation=operation, add=add, remove=remove)
+                return self._commit(
+                    v, operation=operation, add=add, remove=remove,
+                    schema=new_schema,
+                )
             except CommitConflict:
                 continue
         raise CommitConflict(f"{self.path}: gave up after {max_retries} retries")
+
+    def _evolved(self, incoming: T.StructType) -> T.StructType | None:
+        """The schema a commit adding files shaped like `incoming`
+        records: `incoming` itself on an empty log, else the table
+        schema merged with it by the rules parquet mergeSchema reads
+        applied (Spark's StructType.merge: new columns appended,
+        decimal precision widened, incompatible types refused), or
+        None when that changes nothing. A log that predates schema
+        recording stays unrecorded (reads infer)."""
+        if not self.versions():
+            return incoming
+        cur = self.schema()
+        if cur is None:
+            return None
+        parse = self.spark._jsparkSession.parseDataType
+        merged = parse(cur.json()).merge(parse(incoming.json()), True)
+        out = T.StructType.fromJson(json.loads(merged.json()))
+        return None if out == cur else out
 
     def create(self, df: DataFrame) -> int:
         if self.versions():
             raise FileExistsError(f"{self.path}: table already exists")
         adds = self._stage(df)
-        return self._commit_with_retry("CREATE", lambda: (adds, []))
+        return self._commit_with_retry(
+            "CREATE", lambda: (adds, []), schema=lambda: df.schema
+        )
 
     def append(self, df: DataFrame, merge_schema: bool = False) -> int:
         """Append rows. Schema drift is rejected unless
@@ -495,7 +544,9 @@ class PlankTable:
         formats enforce."""
         self._check_schema(df, merge_schema)
         adds = self._stage(df)
-        return self._commit_with_retry("APPEND", lambda: (adds, []))
+        return self._commit_with_retry(
+            "APPEND", lambda: (adds, []), schema=lambda: self._evolved(df.schema)
+        )
 
     def _check_schema(self, df: DataFrame, merge_schema: bool) -> None:
         if not self.versions():
@@ -519,7 +570,9 @@ class PlankTable:
     def overwrite(self, df: DataFrame) -> int:
         adds = self._stage(df)
         return self._commit_with_retry(
-            "OVERWRITE", lambda: (adds, sorted(self._snapshot()))
+            "OVERWRITE",
+            lambda: (adds, sorted(self._snapshot())),
+            schema=lambda: df.schema,
         )
 
     def restore(self, version: int) -> int:
@@ -553,45 +606,54 @@ class PlankTable:
             remove = sorted(rel for rel in live if rel not in target)
             return add, remove
 
-        return self._commit_with_retry("RESTORE", make_actions)
+        # the restored snapshot reads under its own version's schema
+        schema = self.schema(version) or self.read(version).schema
+        return self._commit_with_retry(
+            "RESTORE", make_actions, schema=lambda: schema
+        )
 
-    def rename_column(self, old: str, new: str) -> int:
-        """Rename by REWRITE (one OVERWRITE-shaped pass): planktable
-        derives its schema FROM the data files, so a rename is a
-        content rewrite — the deliberate design tradeoff vs the
-        metadata-only renames of the Delta/Iceberg writers (stable-id
-        mapping machinery that planktable's file-derived-schema
-        philosophy omits). Historic snapshots keep reading the old
-        name (time travel intact).
-
-        Unlike a plain overwrite (which MEANS "replace whatever is
-        live"), a rename must preserve content exactly, so the commit
-        validates the live file set is STILL the set the rewrite read
-        — a concurrent append's rows must not be silently tombstoned
-        (r7 review #2)."""
-        cur = self.read()
-        if old not in cur.columns:
-            raise ValueError(f"{self.path}: no column {old!r}")
-        if new in cur.columns:
-            raise ValueError(f"{self.path}: column {new!r} exists")
+    def _rewrite_all(self, df: DataFrame, verb: str) -> int:
+        """Commit `df`, a rewrite of the whole live snapshot under a
+        new schema, as one OVERWRITE that records that schema. The
+        commit validates the live file set is STILL the set the
+        rewrite read, so a concurrent append's rows are never silently
+        tombstoned."""
         read_set = set(self._snapshot())
-        adds = self._stage(cur.withColumnRenamed(old, new))
+        adds = self._stage(df)
 
         def make_actions():
             now = sorted(self._snapshot())
             if set(now) != read_set:
                 raise ConcurrentModification(
-                    f"{self.path}: files changed during rename_column "
-                    "(concurrent commit); rerun the rename"
+                    f"{self.path}: files changed during {verb}_column "
+                    f"(concurrent commit); rerun the {verb}"
                 )
             return adds, now
 
-        return self._commit_with_retry("OVERWRITE", make_actions)
+        return self._commit_with_retry(
+            "OVERWRITE", make_actions, schema=lambda: df.schema
+        )
+
+    def rename_column(self, old: str, new: str) -> int:
+        """Rename by REWRITE (one OVERWRITE-shaped pass): planktable
+        data files resolve columns by NAME, so a rename is a content
+        rewrite — the deliberate design tradeoff vs the metadata-only
+        renames of the Delta/Iceberg writers (stable-id mapping
+        machinery that planktable omits). Historic snapshots keep
+        reading the old name (time travel intact).
+
+        Unlike a plain overwrite (which MEANS "replace whatever is
+        live"), a rename must preserve content exactly (see
+        _rewrite_all)."""
+        cur = self.read()
+        if old not in cur.columns:
+            raise ValueError(f"{self.path}: no column {old!r}")
+        if new in cur.columns:
+            raise ValueError(f"{self.path}: column {new!r} exists")
+        return self._rewrite_all(cur.withColumnRenamed(old, new), "rename")
 
     def drop_column(self, name: str) -> int:
-        """DROP COLUMN by REWRITE — planktable's file-derived-schema
-        philosophy again (see rename_column): the data files ARE the
-        schema, so narrowing it is a content rewrite, with the same
+        """DROP COLUMN by REWRITE (see rename_column), with the same
         read-set validation so a concurrent append is never silently
         tombstoned. Historic snapshots keep the column (time travel
         intact); Delta/Iceberg offer the metadata-only alternative."""
@@ -600,23 +662,11 @@ class PlankTable:
             raise ValueError(f"{self.path}: no column {name!r}")
         if len(cur.columns) == 1:
             raise ValueError(f"{self.path}: cannot drop the only column")
-        read_set = set(self._snapshot())
-        adds = self._stage(cur.drop(name))
-
-        def make_actions():
-            now = sorted(self._snapshot())
-            if set(now) != read_set:
-                raise ConcurrentModification(
-                    f"{self.path}: files changed during drop_column "
-                    "(concurrent commit); rerun the drop"
-                )
-            return adds, now
-
-        return self._commit_with_retry("OVERWRITE", make_actions)
+        return self._rewrite_all(cur.drop(name), "drop")
 
     def widen_column(self, name: str, new_type: str) -> int:
-        """Type promotion by REWRITE (planktable's file-derived-schema
-        philosophy; Delta/Iceberg do this metadata-only): the cast
+        """Type promotion by REWRITE (see rename_column; Delta/Iceberg
+        do this metadata-only): the cast
         must be a lossless widening — int→long, float→double, decimal
         precision growth at fixed scale — so content is preserved
         exactly; the same read-set validation protects against a
@@ -645,44 +695,42 @@ class PlankTable:
                 "widening (int→long, float→double, decimal precision "
                 "increase only)"
             )
-        read_set = set(self._snapshot())
-        adds = self._stage(cur.withColumn(name, F.col(name).cast(new_type)))
+        return self._rewrite_all(
+            cur.withColumn(name, F.col(name).cast(new_type)), "widen"
+        )
 
-        def make_actions():
-            now = sorted(self._snapshot())
-            if set(now) != read_set:
-                raise ConcurrentModification(
-                    f"{self.path}: files changed during widen_column "
-                    "(concurrent commit); rerun the widen"
-                )
-            return adds, now
-
-        return self._commit_with_retry("OVERWRITE", make_actions)
-
-    def delete_where(self, condition) -> int:
-        """Row-level delete: rewrite only the files that contain
-        matching rows; untouched files stay live as-is."""
-        snap = self._snapshot()
-        hit_files = [
-            r[0]
-            for r in self.read()
+    def _hits(self, condition) -> tuple[list[str], dict | None]:
+        """(sorted live files holding a row where `condition` holds,
+        table schema JSON): one Spark job over the snapshot. Files
+        match by exact path, so two files sharing a basename in
+        different directories never stand in for each other."""
+        snap, _props, schema = self._state()
+        hits = {
+            file_key(r[0])
+            for r in self._read_files(sorted(snap), schema)
             .withColumn("_pt_file", F.input_file_name())
             .where(condition)
             .select("_pt_file")
             .distinct()
             .collect()
-        ]
+        }
         hit_rel = sorted(
-            rel for rel in snap if any(h.endswith(rel) for h in hit_files)
+            rel for rel in snap if file_key(os.path.join(self.path, rel)) in hits
         )
+        return hit_rel, schema
+
+    def delete_where(self, condition) -> int:
+        """Row-level delete: rewrite only the files that contain
+        matching rows; untouched files stay live as-is."""
+        hit_rel, schema = self._hits(condition)
         if not hit_rel:
             return self._commit_with_retry("DELETE", lambda: ([], []))
         # DELETE semantics: only condition=TRUE rows go; NULL-evaluating
         # rows are retained (NOT NULL = NULL would silently drop them)
-        survivors = self.spark.read.parquet(
-            *[os.path.join(self.path, r) for r in hit_rel]
-        ).where(~F.coalesce(condition, F.lit(False)))
-        adds = self._stage(survivors) if not survivors.isEmpty() else []
+        survivors = self._read_files(hit_rel, schema).where(
+            ~F.coalesce(condition, F.lit(False))
+        )
+        adds = self._stage(survivors)
         return self._commit_with_retry("DELETE", lambda: (adds, hit_rel))
 
     def update_where(self, assignments: dict, condition) -> int:
@@ -704,24 +752,10 @@ class PlankTable:
             c: (e if isinstance(e, Column) else F.expr(e))
             for c, e in assignments.items()
         }
-        snap = self._snapshot()
-        hit_files = [
-            r[0]
-            for r in self.read()
-            .withColumn("_pt_file", F.input_file_name())
-            .where(condition)
-            .select("_pt_file")
-            .distinct()
-            .collect()
-        ]
-        hit_rel = sorted(
-            rel for rel in snap if any(h.endswith(rel) for h in hit_files)
-        )
+        hit_rel, recorded = self._hits(condition)
         if not hit_rel:
             return self._commit_with_retry("UPDATE", lambda: ([], []))
-        hot = self.spark.read.parquet(
-            *[os.path.join(self.path, r) for r in hit_rel]
-        )
+        hot = self._read_files(hit_rel, recorded)
         matched = F.coalesce(condition, F.lit(False))
         rewritten = hot.select(
             [
@@ -732,7 +766,7 @@ class PlankTable:
                     if f.name in exprs
                     else F.col(f.name)
                 )
-                for f in schema.fields
+                for f in hot.schema.fields
             ]
         )
         adds = self._stage(rewritten)
@@ -755,26 +789,13 @@ class PlankTable:
                 f"{self.path}: replace_where input has rows that do not "
                 "satisfy the replacement predicate"
             )
-        snap = self._snapshot()
-        hit_files = [
-            r[0]
-            for r in self.read()
-            .withColumn("_pt_file", F.input_file_name())
-            .where(condition)
-            .select("_pt_file")
-            .distinct()
-            .collect()
-        ]
-        hit_rel = sorted(
-            rel for rel in snap if any(h.endswith(rel) for h in hit_files)
-        )
+        hit_rel, schema = self._hits(condition)
         adds = self._stage(df)
         if hit_rel:
-            survivors = self.spark.read.parquet(
-                *[os.path.join(self.path, r) for r in hit_rel]
-            ).where(~F.coalesce(condition, F.lit(False)))
-            if not survivors.isEmpty():
-                adds = adds + self._stage(survivors)
+            survivors = self._read_files(hit_rel, schema).where(
+                ~F.coalesce(condition, F.lit(False))
+            )
+            adds = adds + self._stage(survivors)
         return self._commit_with_retry("REPLACEWHERE", lambda: (adds, hit_rel))
 
     def merge(self, source: DataFrame, key: str) -> int:
@@ -785,7 +806,7 @@ class PlankTable:
         lo, hi = source.agg(F.min(key), F.max(key)).first()
         if lo is None:  # empty source → MERGE is a no-op commit
             return self._commit_with_retry("MERGE", lambda: ([], []))
-        snap = self._snapshot()
+        snap, _props, schema = self._state()
         overlap = []
         for rel, stats in snap.items():
             s = stats.get(key)
@@ -793,14 +814,16 @@ class PlankTable:
                 overlap.append(rel)
         overlap = sorted(overlap)
         if overlap:
-            hot = self.spark.read.parquet(
-                *[os.path.join(self.path, r) for r in overlap]
-            )
+            hot = self._read_files(overlap, schema)
             merged = hot.join(source, key, "left_anti").unionByName(source)
         else:
             merged = source
         adds = self._stage(merged)
-        return self._commit_with_retry("MERGE", lambda: (adds, overlap))
+        return self._commit_with_retry(
+            "MERGE",
+            lambda: (adds, overlap),
+            schema=lambda: self._evolved(merged.schema),
+        )
 
     def optimize(
         self,
@@ -905,7 +928,7 @@ class PlankTable:
             try:
                 return self._commit(
                     v, operation="STREAM_APPEND", add=adds, remove=[],
-                    txn=payload_extra,
+                    txn=payload_extra, schema=self._evolved(df.schema),
                 )
             except CommitConflict:
                 continue
@@ -976,17 +999,10 @@ class PlankTable:
             return []
         ckpt = _checkpoint_file(self.path, cutoff)
         if not os.path.exists(ckpt):
-            import uuid as _uuid
-
-            tmp = ckpt + f".tmp-{_uuid.uuid4().hex}"
+            state = self._checkpoint(cutoff)
+            tmp = ckpt + f".tmp-{uuid.uuid4().hex}"
             with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "live": self._snapshot(cutoff),
-                        "meta": self.properties(cutoff),
-                    },
-                    f,
-                )
+                json.dump(state, f)
             os.replace(tmp, ckpt)
         d = _log_dir(self.path)
         expired: list[int] = []
@@ -1066,7 +1082,8 @@ def files_meta(spark, path: str, version: int | None = None):
                 {c: str(v["max"]) for c, v in (stats or {}).items()},
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "path string, num_records long, min_values map<string,string>, "
         "max_values map<string,string>",

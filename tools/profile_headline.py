@@ -51,9 +51,13 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # Event-log confs must exist at JVM launch; PYSPARK_SUBMIT_ARGS
-    # composes with get_spark's builder confs.
+    # composes with get_spark's builder confs. Spark 4.1 otherwise
+    # writes a rolling, compressed eventlog_v2_* directory, which the
+    # line parser below cannot read: ask for one plain JSON file.
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
         "--conf spark.eventLog.enabled=true "
+        "--conf spark.eventLog.compress=false "
+        "--conf spark.eventLog.rolling.enabled=false "
         f"--conf spark.eventLog.dir={EVLOG_DIR} pyspark-shell"
     )
     spark = get_spark("profile-headline", shuffle_partitions=32)
@@ -104,6 +108,8 @@ def main() -> None:
     job_desc: dict[int, str] = {}
     stage_job: dict[int, int] = {}
     for path in glob.glob(EVLOG_DIR + "/*"):
+        if not os.path.isfile(path):
+            continue
         with open(path) as fh:
             for line in fh:
                 try:
@@ -135,6 +141,11 @@ def main() -> None:
                             round((comp - sub) / 1000.0, 3),
                         )
                     )
+    if not stage_rows:
+        # an empty attribution must fail, not print nothing
+        raise RuntimeError(
+            f"no completed stages parsed from the event log in {EVLOG_DIR}"
+        )
     per_desc: dict[str, float] = {}
     for desc, sid, sname, ntasks, secs in stage_rows:
         per_desc[desc] = per_desc.get(desc, 0.0) + secs
