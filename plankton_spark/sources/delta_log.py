@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from plankton_spark.sources.assemble import file_key, local_frame
+from plankton_spark.sources import rewrite as rw
+from plankton_spark.sources.assemble import local_frame
 
 
 # Reader-protocol support (Delta spec, "Protocol Evolution"): this
@@ -2812,129 +2813,47 @@ class DeltaLogWriter:
                 continue  # fresh replay → fresh mark → re-allocate
         raise DeltaCommitConflict(f"{self.table_path}: gave up after retries")
 
-    def delete_where(self, condition) -> int:
-        """Row-level delete: rewrite only files containing matches;
-        validates its removed files are still live at commit (the same
-        OCC rule planktable enforces — stale rewrites must not commit).
-        Partitioned tables work too: the predicate is evaluated over
-        the assembled view (partition columns re-attached as cast
-        literals — evaluating against the raw files would see NULL for
-        them), and survivors re-stage through the hive layout."""
-        from pyspark.sql import functions as F
-
-        snapshot = DeltaLog(self.table_path)
-        schema, part_cols, files = snapshot.snapshot(None)
-        self._refuse_if_append_only(snapshot.table_config, "DELETE")
-        _, _, active = snapshot.replay(None)
+    def _rewrite(self, op, condition, assignments=None, insert=None) -> int:
+        """The copy-on-write path delete_where, update_where and
+        replace_where share. Refuses append-only tables (as `op`) and
+        bad `assignments` or `insert` input, collects the live files
+        holding a row where `condition` holds in one Spark job, then
+        stages `insert` plus the hit files' rows: the survivors, or
+        with `assignments` every row with the matched ones updated.
+        The predicate is evaluated over the assembled view (partition
+        columns re-attached as cast literals — the raw files would
+        read NULL for them), and the rewrite re-stages through the
+        hive layout. The hit files are read on their own (filtering
+        the full view on input_file_name cannot prune at the scan).
+        On a row-tracked table the read carries each row's id and
+        commit version under the MATERIALIZED names, so the rewrite
+        preserves identities (the same rule as OPTIMIZE) and the
+        commit gives the staged files fresh baseRowIds. A change-feed
+        table also stages the commit's change rows: matched rows as
+        deletes, or update pre/postimage pairs, and `insert` as
+        inserts. The commit is OCC-validated: a concurrent rewrite of
+        a hit file aborts this one."""
+        log = DeltaLog(self.table_path)
+        schema, part_cols, files = log.snapshot(None)
+        self._refuse_if_append_only(log.table_config, op)
+        if assignments is not None:
+            exprs = rw.update_exprs(assignments, schema, part_cols, self.table_path)
+        if insert is not None:
+            rw.check_replacement(insert, condition, self.table_path, schema)
+        _, _, active = log.replay(None)
         rt_on, mat_id, mat_cv, mat_head = self._rt_rewrite_state(
-            snapshot, schema, part_cols, active
+            log, schema, part_cols, active
         )
         live = _assemble_view(
             self.spark, schema, part_cols, files, with_file=True,
             table_root=self.table_path,
         )
-        hit = {
-            file_key(r[0])
-            for r in live.where(condition).select("_f").distinct().collect()
-        }
-        hit_files = [(p, pv) for p, pv in files if file_key(p) in hit]
-        hit_rel = sorted(
-            _path_key(self.table_path, p) for p, _ in hit_files
-        )
-        surv_adds: list[dict] = []
+        hit_files = rw.hit_files(live, condition, files)
+        hit_rel = sorted(_path_key(self.table_path, p) for p, _ in hit_files)
+        cdf = self._cdf_enabled(log.table_config)
+        adds = [] if insert is None else self._stage(insert, part_cols)
         tail: list[dict] = []
-        if hit_rel:
-            # Delta DELETE semantics: only rows where the condition is
-            # TRUE are deleted; rows where it evaluates to NULL are
-            # RETAINED. A bare ~condition would filter NULL rows out of
-            # the rewrite too (NOT NULL = NULL) — silent data loss.
-            # Survivors assemble over the HIT FILES ONLY — filtering
-            # the full view on input_file_name cannot prune at the
-            # scan, so it would re-read the whole table. On a
-            # row-tracked table the survivor read carries each row's
-            # id/commit version under the MATERIALIZED names, so the
-            # rewrite preserves identities (the same rule as OPTIMIZE).
-            base = (
-                self._rt_subset_scan(
-                    schema, part_cols, hit_files, active, mat_id, mat_cv
-                )
-                if rt_on
-                else _assemble_view(
-                    self.spark, schema, part_cols, hit_files,
-                    table_root=self.table_path,
-                )
-            )
-            survivors = base.where(~F.coalesce(condition, F.lit(False)))
-            surv_adds = self._stage(survivors, part_cols)
-            tail += [
-                {"remove": {"path": r, "dataChange": True}} for r in hit_rel
-            ]
-            if self._cdf_enabled(snapshot.table_config):
-                deleted = _assemble_view(
-                    self.spark, schema, part_cols, hit_files,
-                    table_root=self.table_path,
-                ).where(F.coalesce(condition, F.lit(False)))
-                tail += self._stage_cdc(
-                    deleted.withColumn("_change_type", F.lit("delete")),
-                    part_cols,
-                )
-        if rt_on and hit_rel:
-            return self._commit_rt_rewrite(
-                mat_head, surv_adds, tail, hit_rel, mat_id, mat_cv
-            )
-        return self._validate_then_commit(surv_adds + tail, hit_rel)
-
-    def update_where(self, assignments: dict, condition) -> int:
-        """Row-level UPDATE ... SET: rewrite ONLY files containing
-        matching rows — matched rows get `assignments` (column →
-        Column/SQL-string expression, evaluated against the pre-update
-        row like SQL UPDATE), unmatched rows in hit files restage
-        verbatim, untouched files never move. NULL-evaluating rows are
-        NOT updated (SQL semantics). OCC-validated like delete_where:
-        a concurrent rewrite of a hit file aborts this update. The
-        assignments must not target partition columns (that is a
-        partition MOVE — delete + insert, a different operation) and
-        must keep each column's type (UPDATE never retypes)."""
-        from pyspark.sql import Column
-
-        snapshot = DeltaLog(self.table_path)
-        schema, part_cols, files = snapshot.snapshot(None)
-        self._refuse_if_append_only(snapshot.table_config, "UPDATE")
-        bad_parts = sorted(set(assignments) & set(part_cols))
-        if bad_parts:
-            raise ValueError(
-                f"{self.table_path}: UPDATE on partition columns "
-                f"{bad_parts} would move rows across partitions — "
-                "use delete + append"
-            )
-        unknown = sorted(set(assignments) - {f.name for f in schema.fields})
-        if unknown:
-            raise ValueError(
-                f"{self.table_path}: UPDATE targets unknown columns "
-                f"{unknown}"
-            )
-        exprs = {
-            c: (e if isinstance(e, Column) else F.expr(e))
-            for c, e in assignments.items()
-        }
-        _, _, active = snapshot.replay(None)
-        rt_on, mat_id, mat_cv, mat_head = self._rt_rewrite_state(
-            snapshot, schema, part_cols, active
-        )
-        live = _assemble_view(
-            self.spark, schema, part_cols, files, with_file=True,
-            table_root=self.table_path,
-        )
-        hit = {
-            file_key(r[0])
-            for r in live.where(condition).select("_f").distinct().collect()
-        }
-        hit_files = [(p, pv) for p, pv in files if file_key(p) in hit]
-        hit_rel = sorted(
-            _path_key(self.table_path, p) for p, _ in hit_files
-        )
-        rw_adds: list[dict] = []
-        tail: list[dict] = []
+        changes = []
         if hit_rel:
             hot = (
                 self._rt_subset_scan(
@@ -2946,61 +2865,54 @@ class DeltaLogWriter:
                     table_root=self.table_path,
                 )
             )
-            matched = F.coalesce(condition, F.lit(False))
-            out_cols = [
-                (
-                    F.when(
-                        matched,
-                        exprs[f.name].cast(f.dataType),
-                    )
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                    if f.name in exprs
-                    else F.col(f.name)
-                )
-                for f in schema.fields
-            ]
-            if rt_on:
-                # spec semantics on the materialized columns: every
-                # row KEEPS its _row_id; an UPDATED row's commit
-                # version resets to THIS commit (materialized null →
-                # the add's defaultRowCommitVersion), survivors keep
-                # their original version
-                out_cols += [
-                    F.col(mat_id),
-                    F.when(matched, F.lit(None).cast("long"))
-                    .otherwise(F.col(mat_cv))
-                    .alias(mat_cv),
-                ]
-            rewritten = hot.select(out_cols)
-            rw_adds = self._stage(rewritten, part_cols)
-            tail += [
-                {"remove": {"path": r, "dataChange": True}} for r in hit_rel
-            ]
-            if self._cdf_enabled(snapshot.table_config):
-                # per-row UPDATE attribution — the thing a snapshot
-                # diff can never reconstruct: each matched row's
-                # preimage and its assignment-applied postimage
-                matched_rows = hot.where(matched)
-                pre = matched_rows.select(
-                    [f.name for f in schema.fields]
-                ).withColumn("_change_type", F.lit("update_preimage"))
-                post = matched_rows.select(
-                    [
-                        (
-                            exprs[f.name].cast(f.dataType).alias(f.name)
-                            if f.name in exprs
-                            else F.col(f.name)
-                        )
-                        for f in schema.fields
+            if assignments is None:
+                out = hot.where(rw.kept(condition))
+            else:
+                lineage = (mat_id, mat_cv) if rt_on else None
+                out = hot.select(rw.updated(schema, exprs, condition, lineage))
+            adds += self._stage(out, part_cols)
+            tail += [{"remove": {"path": r, "dataChange": True}} for r in hit_rel]
+            if cdf:
+                pre = hot.where(rw.matched(condition)).select(schema.fieldNames())
+                changes += (
+                    [(pre, "delete")]
+                    if assignments is None
+                    else [
+                        (pre, "update_preimage"),
+                        (pre.select(rw.updated(schema, exprs)), "update_postimage"),
                     ]
-                ).withColumn("_change_type", F.lit("update_postimage"))
-                tail += self._stage_cdc(pre.unionByName(post), part_cols)
-        if rt_on and hit_rel:
+                )
+        if insert is not None:
+            changes.append((insert, "insert"))
+        if cdf and changes:
+            tail += self._stage_cdc(rw.change_rows(changes), part_cols)
+        if rt_on and (hit_rel or adds):
             return self._commit_rt_rewrite(
-                mat_head, rw_adds, tail, hit_rel, mat_id, mat_cv
+                mat_head, adds, tail, hit_rel, mat_id, mat_cv
             )
-        return self._validate_then_commit(rw_adds + tail, hit_rel)
+        return self._validate_then_commit(adds + tail, hit_rel)
+
+    def delete_where(self, condition) -> int:
+        """Row-level delete: rewrite only files containing matches;
+        rows where `condition` evaluates to NULL are RETAINED (Delta
+        DELETE semantics). Partitioned and row-tracked tables work
+        too (see _rewrite)."""
+        return self._rewrite("DELETE", condition)
+
+    def update_where(self, assignments: dict, condition) -> int:
+        """Row-level UPDATE ... SET: rewrite ONLY files containing
+        matching rows — matched rows get `assignments` (column →
+        Column/SQL-string expression, evaluated against the pre-update
+        row like SQL UPDATE), unmatched rows in hit files restage
+        verbatim, untouched files never move. NULL-evaluating rows are
+        NOT updated (SQL semantics). OCC-validated like delete_where:
+        a concurrent rewrite of a hit file aborts this update. The
+        assignments must not target partition columns (that is a
+        partition MOVE — delete + insert, a different operation) and
+        must keep each column's type (UPDATE never retypes). On a
+        row-tracked table every row KEEPS its _row_id; an updated
+        row's commit version resets to this commit."""
+        return self._rewrite("UPDATE", condition, assignments=assignments)
 
     def delete_where_dv(self, condition) -> int | None:
         """Row-level delete via DELETION VECTORS: instead of rewriting
@@ -3050,7 +2962,7 @@ class DeltaLogWriter:
         # as fresh deletions (and mis-stage CDC rows). Positions stay
         # physical, so the masking below is unaffected.
         live = self._dv_live_rows(live, active)
-        new_hits = live.where(F.coalesce(condition, F.lit(False))).select(
+        new_hits = live.where(rw.matched(condition)).select(
             F.substring_index(F.col("__pd_file"), "/", -1).alias("__dv_file"),
             F.col("__pd_ridx").alias("__dv_ridx"),
         )
@@ -3077,9 +2989,9 @@ class DeltaLogWriter:
             return None
         actions, hit_rel = masked
         if self._cdf_enabled(log.table_config):
-            deleted = live.where(
-                F.coalesce(condition, F.lit(False))
-            ).select([f.name for f in schema.fields])
+            deleted = live.where(rw.matched(condition)).select(
+                schema.fieldNames()
+            )
             actions = actions + self._stage_cdc(
                 deleted.withColumn("_change_type", F.lit("delete")),
                 part_cols,
@@ -3128,8 +3040,6 @@ class DeltaLogWriter:
         the DVs and compacts the appended fragments."""
         import pandas as _pd  # noqa: F401
 
-        from pyspark.sql import Column
-
         log = DeltaLog(self.table_path)
         schema, part_cols, active = log.replay(None)
         self._refuse_if_append_only(log.table_config, "UPDATE (DV)")
@@ -3138,23 +3048,7 @@ class DeltaLogWriter:
                 f"{self.table_path}: DV update on a column-mapped table "
                 "is not implemented (assignments would bind logical names)"
             )
-        bad_parts = sorted(set(assignments) & set(part_cols))
-        if bad_parts:
-            raise ValueError(
-                f"{self.table_path}: UPDATE on partition columns "
-                f"{bad_parts} would move rows across partitions — "
-                "use delete + append"
-            )
-        unknown = sorted(set(assignments) - {f.name for f in schema.fields})
-        if unknown:
-            raise ValueError(
-                f"{self.table_path}: UPDATE targets unknown columns "
-                f"{unknown}"
-            )
-        exprs = {
-            c: (e if isinstance(e, Column) else F.expr(e))
-            for c, e in assignments.items()
-        }
+        exprs = rw.update_exprs(assignments, schema, part_cols, self.table_path)
         files = [
             (os.path.join(self.table_path, rel), a["partitionValues"])
             for rel, a in active.items()
@@ -3193,7 +3087,7 @@ class DeltaLogWriter:
         # re-stage its transformed copy — RESURRECTION (round-11
         # review fix, regression-tested)
         live = self._dv_live_rows(live, active)
-        matched = live.where(F.coalesce(condition, F.lit(False)))
+        matched = live.where(rw.matched(condition))
         new_hits = matched.select(
             F.substring_index(F.col("__pd_file"), "/", -1).alias("__dv_file"),
             F.col("__pd_ridx").alias("__dv_ridx"),
@@ -3219,14 +3113,7 @@ class DeltaLogWriter:
         actions, hit_rel = masked
         # the transformed copies of the masked rows, appended in the
         # SAME commit (assignments see the PRE-update row)
-        upd_cols = [
-            (
-                exprs[f.name].cast(f.dataType).alias(f.name)
-                if f.name in exprs
-                else F.col(f.name)
-            )
-            for f in schema.fields
-        ]
+        upd_cols = rw.updated(schema, exprs)
         if rt_on:
             # each updated copy keeps its row's ORIGINAL id
             # (materialized value where the source file was rewritten
@@ -3385,26 +3272,12 @@ class DeltaLogWriter:
                 f"{self.table_path}: OPTIMIZE on a column-mapped table "
                 "would re-stage under logical names; not implemented"
             )
-        has_dvs = any(a.get("deletionVector") for a in active.values())
+        if not active:
+            return self._commit_with_retry([])
         files = [
             (os.path.join(self.table_path, rel), a["partitionValues"])
             for rel, a in active.items()
         ]
-        paths = [p for p, _ in files]
-        if not paths:
-            return self._commit_with_retry([])
-        if target_file_mb is not None:
-            # size-targeted bin packing from the add actions' recorded
-            # sizes (O(log metadata), no file IO)
-            total = sum(
-                a.get("size") or os.path.getsize(
-                    os.path.join(self.table_path, rel)
-                )
-                for rel, a in active.items()
-            )
-            num_files = max(
-                1, -(-total // int(target_file_mb * 1024 * 1024))
-            )
         # ROW TRACKING: a compaction must PRESERVE row ids (the spec's
         # materialized-column rule) — rewritten files carry each row's
         # original _row_id/_row_commit_version in hidden physical
@@ -3413,7 +3286,7 @@ class DeltaLogWriter:
         # when the snapshot is FULLY tracked: a partially-tracked
         # table (files rewritten by a non-preserving op) keeps today's
         # non-preserving rewrite, and its lineage reads keep refusing.
-        rt_live, mat_id, mat_cv, mat_head0 = self._rt_rewrite_state(
+        rt_live, mat_id, mat_cv, mat_head = self._rt_rewrite_state(
             log, schema, part_cols, active
         )
         if rt_live:
@@ -3424,7 +3297,7 @@ class DeltaLogWriter:
                 df = df.withColumnRenamed("_row_id", mat_id)
             if mat_cv != "_row_commit_version":
                 df = df.withColumnRenamed("_row_commit_version", mat_cv)
-        elif has_dvs:
+        elif any(a.get("deletionVector") for a in active.values()):
             # compaction PURGES deletion vectors: the DV-aware read
             # drops the marked rows, so the rewritten files are clean
             # and the re-adds carry no DV. Still layout-only
@@ -3434,58 +3307,26 @@ class DeltaLogWriter:
             df = _assemble_view(
                 self.spark, schema, part_cols, files, table_root=self.table_path
             )
-        if zorder_by:
-            from plankton_spark.table_format import zvalue_column
-
-            df = (
-                df.withColumn("__z", zvalue_column(df, zorder_by))
-                .repartitionByRange(num_files, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
-        elif sort_by:
-            df = df.repartitionByRange(num_files, *sort_by).sortWithinPartitions(
-                *sort_by
-            )
-        elif target_file_mb is not None:
-            # repartition, not coalesce: a huge file must be able to
-            # SPLIT up to the target size. On a PARTITIONED table the
-            # hive split happens at staging, so a global round-robin
-            # would scatter every partition value across all tasks and
-            # write ~num_files files PER PARTITION (review finding,
-            # this round) — instead each partition tuple is salted
-            # into ceil(num_files / n_partitions) buckets.
-            if part_cols:
-                n_parts = max(
-                    1, len({tuple(sorted(pv.items())) for _, pv in files})
-                )
-                per_part = max(1, -(-num_files // n_parts))
-                salt = F.pmod(
-                    F.xxhash64(*[F.col(c) for c in df.columns]),
-                    F.lit(per_part),
-                )
-                df = (
-                    df.withColumn("__tsalt", salt)
-                    .repartition(num_files, *part_cols, "__tsalt")
-                    .drop("__tsalt")
-                )
-            else:
-                df = df.repartition(num_files)
-        else:
-            df = df.coalesce(num_files)
+        # a size target bin-packs the add actions' recorded sizes
+        # (O(log metadata), no file IO)
+        sizes = (
+            a.get("size") or os.path.getsize(os.path.join(self.table_path, rel))
+            for rel, a in active.items()
+        )
+        df = rw.compacted(
+            df, num_files, zorder_by, sort_by, target_file_mb, sizes,
+            part_cols, [pv for _, pv in files],
+        )
         adds = self._stage(df, part_cols)
         for a in adds:
             a["add"]["dataChange"] = False
-        rel = sorted(_path_key(self.table_path, p) for p in paths)
-        actions = adds + [
-            {"remove": {"path": r, "dataChange": False}} for r in rel
-        ]
+        rel = sorted(_path_key(self.table_path, p) for p, _ in files)
+        removes = [{"remove": {"path": r, "dataChange": False}} for r in rel]
         if rt_live:
-            removes = [a for a in actions if "remove" in a]
             return self._commit_rt_rewrite(
-                mat_head0, adds, removes, rel, mat_id, mat_cv
+                mat_head, adds, removes, rel, mat_id, mat_cv
             )
-        return self._validate_then_commit(actions, rel)
+        return self._validate_then_commit(adds + removes, rel)
 
     def overwrite(self, df) -> int:
         """Replace the table's content atomically: stage the new rows,
@@ -3546,50 +3387,10 @@ class DeltaLogWriter:
         table with a partition predicate, the matching files drop
         whole (their survivors are empty), so the rewrite cost is the
         NEW data only. NULL-evaluating rows are retained
-        (delete_where semantics)."""
-        from pyspark.sql import functions as F
-
-        snapshot = DeltaLog(self.table_path)
-        schema, part_cols, files = snapshot.snapshot(None)
-        self._refuse_if_append_only(snapshot.table_config, "replaceWhere")
-        # schema check FIRST: the predicate references table columns,
-        # so evaluating it over a mis-shaped df would raise Spark's
-        # resolution error instead of this actionable one
-        if [(f.name, f.dataType) for f in df.schema.fields] != [
-            (f.name, f.dataType) for f in schema.fields
-        ]:
-            raise ValueError(
-                f"{self.table_path}: replace_where input schema "
-                "differs from the table schema"
-            )
-        if not df.where(~F.coalesce(condition, F.lit(False))).isEmpty():
-            raise ValueError(
-                f"{self.table_path}: replace_where input has rows that "
-                "do not satisfy the replacement predicate"
-            )
-        live = _assemble_view(
-            self.spark, schema, part_cols, files, with_file=True,
-            table_root=self.table_path,
-        )
-        hit = {
-            file_key(r[0])
-            for r in live.where(condition).select("_f").distinct().collect()
-        }
-        hit_files = [(p, pv) for p, pv in files if file_key(p) in hit]
-        hit_rel = sorted(
-            _path_key(self.table_path, p) for p, _ in hit_files
-        )
-        actions: list[dict] = self._stage(df, part_cols)
-        if hit_rel:
-            survivors = _assemble_view(
-                self.spark, schema, part_cols, hit_files,
-                table_root=self.table_path,
-            ).where(~F.coalesce(condition, F.lit(False)))
-            actions += self._stage(survivors, part_cols)
-            actions += [
-                {"remove": {"path": r, "dataChange": True}} for r in hit_rel
-            ]
-        return self._validate_then_commit(actions, hit_rel)
+        (delete_where semantics), survivors keep their row ids, the
+        input rows get fresh ones, and a change-feed table records
+        the matched rows as deletes and `df` as inserts."""
+        return self._rewrite("replaceWhere", condition, insert=df)
 
     def restore(self, version: int) -> int:
         """RESTORE TABLE ... TO VERSION AS OF semantics: one NEW commit
@@ -3732,29 +3533,24 @@ class DeltaLogWriter:
         if key in part_cols:
             # partition-key merge: prune on partitionValues (the data
             # files don't even CONTAIN the key column), typed compare
-            overlap_files = []
-            for rel, add in active.items():
-                pv = add["partitionValues"]
-                v = _pv_typed(pv.get(key), schema[key].dataType)
-                if v is None or (raw_lo <= v <= raw_hi):
-                    overlap_files.append(
-                        (os.path.join(self.table_path, rel), pv)
-                    )
+            dtype = schema[key].dataType
+            pv = {
+                r: _pv_typed(a["partitionValues"].get(key), dtype)
+                for r, a in active.items()
+            }
+            overlap_rel = rw.overlapping(active, raw_lo, raw_hi, lambda r: (pv[r],) * 2)
         else:
-            stats = self.live_stats(active)
-            overlap_files = []
-            for rel, st in stats.items():
-                mn = st["minValues"].get(key)
-                mx = st["maxValues"].get(key)
-                # either bound missing (spec allows omitting untrusted
-                # bounds, e.g. truncated long strings) → must rewrite
-                if mn is None or mx is None or not (mx < lo or mn > hi):
-                    overlap_files.append(
-                        (
-                            os.path.join(self.table_path, rel),
-                            active[rel]["partitionValues"],
-                        )
-                    )
+            # either bound missing (spec allows omitting untrusted
+            # bounds, e.g. truncated long strings) → must rewrite
+            st = self.live_stats(active)
+            overlap_rel = rw.overlapping(
+                st, lo, hi,
+                lambda r: (st[r]["minValues"].get(key), st[r]["maxValues"].get(key)),
+            )
+        overlap_files = [
+            (os.path.join(self.table_path, rel), active[rel]["partitionValues"])
+            for rel in overlap_rel
+        ]
         overlap = sorted(
             _path_key(self.table_path, p) for p, _ in overlap_files
         )
@@ -3773,6 +3569,7 @@ class DeltaLogWriter:
                 "column names is not implemented — declare "
                 "delta.rowTracking.materialized*ColumnName first"
             )
+        hot = None
         if overlap:
             hot = (
                 self._rt_subset_scan(
@@ -3787,31 +3584,9 @@ class DeltaLogWriter:
             for f in added_fields:
                 # survivors predate the evolved columns: explicit nulls
                 hot = hot.withColumn(f.name, F.lit(None).cast(f.dataType))
-            if rt_on:
-                # spec MERGE semantics on the materialized columns:
-                # an UPDATED row (source replaces a same-key target)
-                # keeps the target's _row_id (min across key-dup
-                # targets — deterministic) with a RESET commit version
-                # (null → this commit); untouched survivors keep both;
-                # INSERTS carry nulls → fresh baseRowId + position
-                old_ids = (
-                    hot.groupBy(key)
-                    .agg(F.min(mat_id).alias(mat_id))
-                )
-                src = source.join(old_ids, key, "left").withColumn(
-                    mat_cv, F.lit(None).cast("long")
-                )
-                merged = hot.join(source, key, "left_anti").unionByName(src)
-            else:
-                merged = hot.join(source, key, "left_anti").unionByName(
-                    source
-                )
-        elif rt_on:
-            merged = source.withColumn(
-                mat_id, F.lit(None).cast("long")
-            ).withColumn(mat_cv, F.lit(None).cast("long"))
-        else:
-            merged = source
+        # on a row-tracked table an updated row keeps the target's
+        # _row_id with a reset commit version; inserts get fresh ids
+        merged = rw.merged(hot, source, key, (mat_id, mat_cv) if rt_on else None)
         head = [evolution] if evolution is not None else []
         rw_adds = self._stage(merged, part_cols)
         tail = [
@@ -3821,33 +3596,19 @@ class DeltaLogWriter:
             # MERGE change attribution: source rows whose key existed
             # become update pre/postimage pairs, the rest are inserts;
             # unmatched target rows restage verbatim and emit nothing
+            changes = [(source, "insert")]
             if overlap:
-                data_cols = [f.name for f in schema.fields] + [
-                    f.name for f in added_fields
-                ]
-                hot_data = hot.select(data_cols)
-                keys = hot_data.select(key).distinct()
-                pre = hot_data.join(
+                data_cols = schema.fieldNames() + [f.name for f in added_fields]
+                keys = hot.select(key).distinct()
+                pre = hot.select(data_cols).join(
                     source.select(key).distinct(), key, "semi"
                 )
-                post = source.join(keys, key, "semi")
-                ins = source.join(keys, key, "left_anti")
-                cdc_df = (
-                    pre.withColumn("_change_type", F.lit("update_preimage"))
-                    .unionByName(
-                        post.withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        ),
-                        allowMissingColumns=True,
-                    )
-                    .unionByName(
-                        ins.withColumn("_change_type", F.lit("insert")),
-                        allowMissingColumns=True,
-                    )
-                )
-            else:
-                cdc_df = source.withColumn("_change_type", F.lit("insert"))
-            tail += self._stage_cdc(cdc_df, part_cols)
+                changes = [
+                    (pre, "update_preimage"),
+                    (source.join(keys, key, "semi"), "update_postimage"),
+                    (source.join(keys, key, "left_anti"), "insert"),
+                ]
+            tail += self._stage_cdc(rw.change_rows(changes), part_cols)
         if rt_on:
             # head (schema evolution) and mat_head are mutually
             # exclusive here (the guard above), so concatenation never

@@ -42,7 +42,8 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from plankton_spark.filestats import _reject_empty_string_partitions
 from plankton_spark.filestats import apply_partition_schema as _apply_partition_schema
-from plankton_spark.sources.assemble import file_key, local_frame
+from plankton_spark.sources import rewrite as rw
+from plankton_spark.sources.assemble import local_frame
 from plankton_spark.sources.avro_ocf import read_ocf_generic
 
 
@@ -3244,55 +3245,63 @@ class IcebergWriter:
             out = out.unionByName(g)
         return out
 
-    def delete_where(self, condition) -> int:
-        """Row-level DELETE: rewrite only data files containing matching
-        rows; rows whose predicate evaluates to NULL are RETAINED (the
-        same semantics as DeltaLogWriter.delete_where). Hit files become
-        DELETED manifest entries; survivors of those files are staged as
-        a new ADDED manifest; untouched manifests carry forward. On a
-        lineage-tracked table the survivors restage WITH their
-        materialized _row_id / _last_updated_sequence_number (the same
-        preservation rule as OPTIMIZE). Partition-evolved tables
-        evaluate and rewrite PER SPEC (_assemble_multispec — each
-        file's partition record in its own spec's shape); survivors
-        restage under the current default spec, which is exactly how
-        evolution migrates data without a bulk rewrite."""
-        from pyspark.sql import functions as F
-
+    def _rewrite(self, condition, assignments=None, insert=None) -> int:
+        """The copy-on-write path delete_where, update_where and
+        replace_where share. Refuses bad `assignments` or `insert`
+        input and tables with row-level deletes, collects the live
+        data files holding a row where `condition` holds in one Spark
+        job, then stages `insert` plus the hit files' rows: the
+        survivors, or with `assignments` every row with the matched
+        ones updated. Hit files become DELETED manifest entries, the
+        staged files one ADDED manifest, and untouched manifests carry
+        forward. Partition-evolved tables evaluate and rewrite PER
+        SPEC (each file's partition record in its own spec's shape,
+        partition columns re-attached — the raw files would read NULL
+        for them); the staged files land under the current default
+        spec, which is how evolution migrates data without a bulk
+        rewrite. On a lineage-tracked table the rewritten rows restage
+        WITH their materialized _row_id / _last_updated_sequence_number
+        (the same preservation rule as OPTIMIZE) and the commit gives
+        the staged files fresh first_row_ids."""
         table = IcebergTable(self.table_path)
         schema = table.schema()
         spec = self._writer_spec(table)
-        entries = table.data_entries(None)  # refuses row-level deletes
-        if not entries:
-            return self._commit_snapshot([], set(), keep_unhit=True)
-        full = table.scan_entries_full(None)[0]
-        # the assembled view re-attaches partition columns (absent from
-        # the files) — evaluating the predicate on raw files would see
-        # NULL for them; per-spec grouping keeps old-spec files' own
-        # layout intact
-        live = _assemble_multispec(
-            self.spark, table, schema, full, with_file=True
+        if assignments is not None:
+            exprs = rw.update_exprs(
+                assignments, schema, table.partition_fields(), self.table_path
+            )
+        if insert is not None:
+            rw.check_replacement(insert, condition, self.table_path, schema)
+        hit_full = []
+        if table.data_entries(None):  # refuses row-level deletes
+            full = table.scan_entries_full(None)[0]
+            live = _assemble_multispec(self.spark, table, schema, full, with_file=True)
+            hit_full = rw.hit_files(live, condition, full)
+        lin_on = bool(hit_full or insert is not None) and self._lineage_rewrite_on(
+            table
         )
-        hit = {
-            file_key(r[0])
-            for r in live.where(condition).select("_f").distinct().collect()
-        }
-        hit_full = [e for e in full if file_key(e[0]) in hit]
-        if not hit_full:
-            return self._commit_snapshot([], set(), keep_unhit=True)
-        removed_rel = {
-            os.path.relpath(p, self.table_path) for p, _pv, _sq, _s in hit_full
-        }
-        lin_on = self._lineage_rewrite_on(table)
-        base = self._hit_scan_ms(table, schema, hit_full, lin_on)
-        survivors = base.where(~F.coalesce(condition, F.lit(False)))
-        staged = self._stage(
-            survivors, 0, spec,
-            field_ids=self._lineage_stage_ids(table) if lin_on else None,
-        )
+        staged = [] if insert is None else self._stage(insert, 0, spec)
+        if hit_full:
+            hot = self._hit_scan_ms(table, schema, hit_full, lin_on)
+            if assignments is None:
+                out = hot.where(rw.kept(condition))
+            else:
+                lineage = (_ROW_ID_COL, _LAST_SEQ_COL) if lin_on else None
+                out = hot.select(rw.updated(schema, exprs, condition, lineage))
+            staged = staged + self._stage(
+                out, 0, spec,
+                field_ids=self._lineage_stage_ids(table) if lin_on else None,
+            )
+        removed_rel = {os.path.relpath(e[0], self.table_path) for e in hit_full}
         return self._commit_snapshot(
             staged, removed_rel, keep_unhit=True, assign_row_ids=lin_on
         )
+
+    def delete_where(self, condition) -> int:
+        """Row-level DELETE: rewrite only data files containing matching
+        rows; rows whose predicate evaluates to NULL are RETAINED (the
+        same semantics as DeltaLogWriter.delete_where)."""
+        return self._rewrite(condition)
 
     def update_where(self, assignments: dict, condition) -> int:
         """Row-level UPDATE ... SET (DeltaLogWriter.update_where
@@ -3300,83 +3309,12 @@ class IcebergWriter:
         get the assignments (evaluated against the pre-update row),
         unmatched rows in hit files restage verbatim, NULL-evaluating
         rows are NOT updated. Identity partition columns refuse as
-        targets (a partition move is delete + insert). Commits as an
-        overwrite snapshot with the usual OCC rebase validation."""
-        from pyspark.sql import Column
-        from pyspark.sql import functions as F
-
-        table = IcebergTable(self.table_path)
-        schema = table.schema()
-        spec = self._writer_spec(table)
-        part_cols = table.partition_fields()
-        bad_parts = sorted(set(assignments) & set(part_cols))
-        if bad_parts:
-            raise ValueError(
-                f"{self.table_path}: UPDATE on partition columns "
-                f"{bad_parts} would move rows across partitions — "
-                "use delete + append"
-            )
-        unknown = sorted(
-            set(assignments) - {f.name for f in schema.fields}
-        )
-        if unknown:
-            raise ValueError(
-                f"{self.table_path}: UPDATE targets unknown columns "
-                f"{unknown}"
-            )
-        exprs = {
-            c: (e if isinstance(e, Column) else F.expr(e))
-            for c, e in assignments.items()
-        }
-        entries = table.data_entries(None)  # refuses row-level deletes
-        if not entries:
-            return self._commit_snapshot([], set(), keep_unhit=True)
-        full = table.scan_entries_full(None)[0]
-        live = _assemble_multispec(
-            self.spark, table, schema, full, with_file=True
-        )
-        hit = {
-            file_key(r[0])
-            for r in live.where(condition).select("_f").distinct().collect()
-        }
-        hit_full = [e for e in full if file_key(e[0]) in hit]
-        if not hit_full:
-            return self._commit_snapshot([], set(), keep_unhit=True)
-        removed_rel = {
-            os.path.relpath(p, self.table_path) for p, _pv, _sq, _s in hit_full
-        }
-        lin_on = self._lineage_rewrite_on(table)
-        hot = self._hit_scan_ms(table, schema, hit_full, lin_on)
-        matched = F.coalesce(condition, F.lit(False))
-        out_cols = [
-            (
-                F.when(matched, exprs[f.name].cast(f.dataType))
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-                if f.name in exprs
-                else F.col(f.name)
-            )
-            for f in schema.fields
-        ]
-        if lin_on:
-            # spec semantics: every row keeps its _row_id; an UPDATED
-            # row's _last_updated_sequence_number resets (materialized
-            # null → inherits the new file's data sequence number),
-            # survivors keep their original
-            out_cols += [
-                F.col(_ROW_ID_COL),
-                F.when(matched, F.lit(None).cast("long"))
-                .otherwise(F.col(_LAST_SEQ_COL))
-                .alias(_LAST_SEQ_COL),
-            ]
-        rewritten = hot.select(out_cols)
-        staged = self._stage(
-            rewritten, 0, spec,
-            field_ids=self._lineage_stage_ids(table) if lin_on else None,
-        )
-        return self._commit_snapshot(
-            staged, removed_rel, keep_unhit=True, assign_row_ids=lin_on
-        )
+        targets (a partition move is delete + insert). On a lineage
+        table every row keeps its _row_id and an updated row's
+        _last_updated_sequence_number resets (it inherits the new
+        file's data sequence number). Commits as an overwrite
+        snapshot with the usual OCC rebase validation."""
+        return self._rewrite(condition, assignments=assignments)
 
     def replace_where(self, df, condition) -> int:
         """Selective atomic overwrite (the spec's overwrite-by-filter
@@ -3388,57 +3326,8 @@ class IcebergWriter:
         matches are rewritten — with an identity-partition predicate,
         matching files drop whole and the rewrite cost is the NEW data
         only. NULL-evaluating rows are retained (delete_where
-        semantics)."""
-        from pyspark.sql import functions as F
-
-        table = IcebergTable(self.table_path)
-        schema = table.schema()
-        spec = self._writer_spec(table)
-        part_cols = table.partition_fields()  # identity attach subset
-        # schema check FIRST: the predicate references table columns,
-        # so evaluating it over a mis-shaped df would raise Spark's
-        # resolution error instead of this actionable one
-        if [(f.name, f.dataType) for f in df.schema.fields] != [
-            (f.name, f.dataType) for f in schema.fields
-        ]:
-            raise ValueError(
-                f"{self.table_path}: replace_where input schema "
-                "differs from the table schema"
-            )
-        if not df.where(~F.coalesce(condition, F.lit(False))).isEmpty():
-            raise ValueError(
-                f"{self.table_path}: replace_where input has rows that "
-                "do not satisfy the replacement predicate"
-            )
-        entries = table.data_entries(None)
-        lin_on = self._lineage_rewrite_on(table)
-        staged = self._stage(df, 0, spec)  # new rows: fresh identities
-        if not entries:
-            return self._commit_snapshot(
-                staged, set(), keep_unhit=True, assign_row_ids=lin_on
-            )
-        full = table.scan_entries_full(None)[0]
-        live = _assemble_multispec(
-            self.spark, table, schema, full, with_file=True
-        )
-        hit = {
-            file_key(r[0])
-            for r in live.where(condition).select("_f").distinct().collect()
-        }
-        hit_full = [e for e in full if file_key(e[0]) in hit]
-        removed_rel = {
-            os.path.relpath(p, self.table_path) for p, _pv, _sq, _s in hit_full
-        }
-        if hit_full:
-            base = self._hit_scan_ms(table, schema, hit_full, lin_on)
-            survivors = base.where(~F.coalesce(condition, F.lit(False)))
-            staged = staged + self._stage(
-                survivors, 0, spec,
-                field_ids=self._lineage_stage_ids(table) if lin_on else None,
-            )
-        return self._commit_snapshot(
-            staged, removed_rel, keep_unhit=True, assign_row_ids=lin_on
-        )
+        semantics); the input rows get fresh identities."""
+        return self._rewrite(condition, insert=df)
 
     def overwrite(self, df) -> int:
         """Replace the table's contents: every currently-live file gets
@@ -3495,54 +3384,36 @@ class IcebergWriter:
             )
         table.data_entries(None)  # refuses row-level deletes
         full = table.scan_entries_full(None)[0]
-        overlap_full = []
-        for p, pv, sq, sid in full:
-            if key in part_cols:
-                # partition-key merge: typed manifest values, no file
-                # IO (an old-spec file lacking the value is treated as
-                # overlapping — conservative, never lossy)
-                v = pv.get(key)
-                if v is None or (raw_lo <= v <= raw_hi):
-                    overlap_full.append((p, pv, sq, sid))
-                continue
-            st = _file_stats(p)
-            mn, mx = st["minValues"].get(key), st["maxValues"].get(key)
-            if mn is None or mx is None or not (mx < lo or mn > hi):
-                overlap_full.append((p, pv, sq, sid))
-        lin_on = self._lineage_rewrite_on(table)
-        overlap_entries = [(p, pv) for p, pv, _sq, _s in overlap_full]
-        if overlap_full:
-            hot = self._hit_scan_ms(table, schema, overlap_full, lin_on)
-            if lin_on:
-                # spec MERGE semantics on the materialized columns: an
-                # updated row keeps the target's _row_id (min across
-                # key-dup targets — deterministic) with a reset
-                # sequence number; survivors keep both; inserts carry
-                # nulls → fresh first_row_id + position
-                old_ids = hot.groupBy(key).agg(
-                    F.min(_ROW_ID_COL).alias(_ROW_ID_COL)
-                )
-                src = source.join(old_ids, key, "left").withColumn(
-                    _LAST_SEQ_COL, F.lit(None).cast("long")
-                )
-                merged = hot.join(source, key, "left_anti").unionByName(src)
-            else:
-                merged = hot.join(source, key, "left_anti").unionByName(
-                    source
-                )
-        elif lin_on:
-            merged = source.withColumn(
-                _ROW_ID_COL, F.lit(None).cast("long")
-            ).withColumn(_LAST_SEQ_COL, F.lit(None).cast("long"))
+        if key in part_cols:
+            # partition-key merge: typed manifest values, no file IO
+            # (an old-spec file lacking the value is treated as
+            # overlapping — conservative, never lossy)
+            overlap_full = rw.overlapping(
+                full, raw_lo, raw_hi, lambda e: (e[1].get(key),) * 2
+            )
         else:
-            merged = source
+
+            def bounds(e):
+                st = _file_stats(e[0])
+                return st["minValues"].get(key), st["maxValues"].get(key)
+
+            overlap_full = rw.overlapping(full, lo, hi, bounds)
+        lin_on = self._lineage_rewrite_on(table)
+        hot = (
+            self._hit_scan_ms(table, schema, overlap_full, lin_on)
+            if overlap_full
+            else None
+        )
+        # on a lineage table an updated row keeps the target's _row_id
+        # with a reset sequence number; inserts get fresh ids
+        merged = rw.merged(
+            hot, source, key, (_ROW_ID_COL, _LAST_SEQ_COL) if lin_on else None
+        )
         staged = self._stage(
             merged, 0, spec,
             field_ids=self._lineage_stage_ids(table) if lin_on else None,
         )
-        removed_rel = {
-            os.path.relpath(p, self.table_path) for p, _ in overlap_entries
-        }
+        removed_rel = {os.path.relpath(e[0], self.table_path) for e in overlap_full}
         return self._commit_snapshot(
             staged, removed_rel, keep_unhit=True, assign_row_ids=lin_on
         )
@@ -3590,7 +3461,7 @@ class IcebergWriter:
                 self.spark, table, schema, full, with_pos=True
             )
             hits = (
-                live.where(F.coalesce(condition, F.lit(False)))
+                live.where(rw.matched(condition))
                 .select(
                     F.substring_index(
                         F.col("__pd_file"), self.table_path + "/", -1
@@ -3750,7 +3621,7 @@ class IcebergWriter:
             live = _assemble_multispec(
                 self.spark, table, schema, full, with_pos=True
             )
-            hits_df = live.where(F.coalesce(condition, F.lit(False))).select(
+            hits_df = live.where(rw.matched(condition)).select(
                 F.substring_index(F.col("__pd_file"), "/", -1).alias("f"),
                 F.col("__pd_ridx").alias("pos"),
             )
@@ -4140,12 +4011,6 @@ class IcebergWriter:
         deletes = list(pos_dels)
         if not entries:
             return self._commit_snapshot([], set(), keep_unhit=True)
-        if target_file_mb is not None:
-            # size-targeted bin packing over the live data files
-            total = sum(os.path.getsize(p) for p, _ in entries)
-            num_files = max(
-                1, -(-total // int(target_file_mb * 1024 * 1024))
-            )
         # v3 ROW LINEAGE: a compaction must PRESERVE row identities —
         # the spec's rule is to MATERIALIZE _row_id and
         # _last_updated_sequence_number into the rewritten files
@@ -4153,11 +4018,10 @@ class IcebergWriter:
         # snapshot is FULLY tracked; a partially-tracked table (files
         # rewritten by a non-preserving op) keeps today's
         # non-preserving rewrite and its lineage reads keep refusing.
-        lineage_live = False
-        if table.metadata.get("next-row-id") is not None:
+        lineage_live = table.metadata.get("next-row-id") is not None
+        if lineage_live:
             try:
                 table.first_row_ids(None)
-                lineage_live = True
             except ValueError:
                 lineage_live = False
         multi_spec = len({sid for _p, _pv, _sq, sid in full}) > 1
@@ -4181,49 +4045,29 @@ class IcebergWriter:
                     f"lineage — data columns {clash} collide with the "
                     "reserved lineage column names"
                 )
-            if multi_spec:
-                # the MULTI-SPEC compaction — exactly the op that
-                # resolves partition evolution — preserves lineage by
-                # scanning each spec group separately (each with ITS
-                # identity columns attached) and unioning: the same
-                # per-spec assembly read_iceberg's plain multi-spec
-                # path uses, with the lineage projection riding along
-                groups: dict[int, list] = {}
-                for p, pv, _sq, sid in full:
-                    groups.setdefault(sid, []).append((p, pv))
-                parts = [
-                    self._lineage_subset_scan(
-                        table,
-                        table.schema(),
-                        table.partition_fields_for(sid),
-                        grp,
-                    )
-                    for sid, grp in sorted(groups.items())
-                ]
-                df = parts[0]
-                for g in parts[1:]:
-                    df = df.unionByName(g)
-            else:
-                # the lineage-projecting read is also delete-aware, so
-                # it doubles as the DV/pos-delete purge path; survivors
-                # keep their ids (positions are physical, DVs never
-                # rewrite)
-                df = read_iceberg(
-                    self.spark, self.table_path, with_lineage=True
-                )
-        elif deletes or dv_dels:
+            # the MULTI-SPEC compaction — exactly the op that resolves
+            # partition evolution — preserves lineage by scanning each
+            # spec group with ITS identity columns attached; a
+            # single-spec table takes the lineage-projecting read,
+            # which is also delete-aware, so it doubles as the
+            # DV/pos-delete purge path (survivors keep their ids:
+            # positions are physical, DVs never rewrite)
+            df = (
+                self._hit_scan_ms(table, table.schema(), full, True)
+                if multi_spec
+                else read_iceberg(self.spark, self.table_path, with_lineage=True)
+            )
+        elif deletes or dv_dels or multi_spec:
             # compaction PURGES row-level deletes: the delete-aware
             # read drops the marked rows (v2 parquet position files
             # and v3 Puffin DVs alike), the re-stage is clean, and the
             # data files read, the delete files, and the DV Puffin
-            # files all tombstone. Logical content unchanged.
-            df = read_iceberg(self.spark, self.table_path)
-        elif multi_spec:
-            # partition-evolved: per-spec assembly (attaching the
-            # default spec's columns across the board would NULL out
-            # old-spec files' content columns); the compaction output
-            # restages under the current default spec — exactly the
-            # op that RESOLVES the evolution back to one spec
+            # files all tombstone. Logical content unchanged. A
+            # partition-evolved table needs the same per-spec
+            # assembly (attaching the default spec's columns across
+            # the board would NULL out old-spec files' content
+            # columns); the output restages under the current default
+            # spec — exactly the op that RESOLVES the evolution
             df = read_iceberg(self.spark, self.table_path)
         elif part_cols:
             df = _assemble_iceberg(self.spark, table.schema(), part_cols, entries)
@@ -4231,70 +4075,21 @@ class IcebergWriter:
             df = self.spark.read.schema(table.schema()).parquet(
                 *[p for p, _ in entries]
             )
-        if zorder_by:
-            # multi-dimensional Z-ORDER clustering (planktable/Delta
-            # parity — shared zvalue_column): interleaved-bit ranks
-            # keep every file narrow in ALL z-ordered dimensions,
-            # tightening the per-file stats MERGE pruning reads.
-            # On a partition-spec'd table the hive split happens at
-            # staging, so num_files bounds files PER PARTITION — the
-            # same granularity Delta's OPTIMIZE documents (and this
-            # writer's own delete/merge use); the size-targeted path
-            # below is the one that salts for a GLOBAL file budget
-            from plankton_spark.table_format import zvalue_column
-
-            df = (
-                df.withColumn("__z", zvalue_column(df, zorder_by))
-                .repartitionByRange(num_files, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
-        elif sort_by:
-            df = df.repartitionByRange(num_files, *sort_by).sortWithinPartitions(
-                *sort_by
-            )
-        elif target_file_mb is not None:
-            # repartition, not coalesce: a huge file must be able to
-            # SPLIT up to the target size. Partition-spec'd tables
-            # split per partition via a salt over the spec's source
-            # columns — a global round-robin would write ~num_files
-            # files per partition dir (review finding, this round).
-            srcs = [f["source"] for f in spec]
-            if srcs:
-                n_parts = max(
-                    1,
-                    len({tuple(sorted(pv.items())) for _, pv in entries}),
-                )
-                per_part = max(1, -(-num_files // n_parts))
-                salt = F.pmod(
-                    F.xxhash64(*[F.col(c) for c in df.columns]),
-                    F.lit(per_part),
-                )
-                df = (
-                    df.withColumn("__tsalt", salt)
-                    .repartition(num_files, *srcs, "__tsalt")
-                    .drop("__tsalt")
-                )
-            else:
-                df = df.repartition(num_files)
-        else:
-            df = df.coalesce(num_files)
-        stage_ids = None
-        if lineage_live:
-            # stamp the materialized lineage columns with their
-            # RESERVED parquet field ids alongside the table columns'
-            # ids (id-resolving readers find them regardless of name;
-            # _ids_gate still suppresses wholesale on id-less tables,
-            # where name resolution covers the spec names)
-            try:
-                stage_ids = {
-                    **table.field_ids(),
-                    _ROW_ID_COL: _ROW_ID_FIELD_ID,
-                    _LAST_SEQ_COL: _LAST_SEQ_FIELD_ID,
-                }
-            except (ValueError, KeyError, StopIteration):
-                stage_ids = None
-        staged = self._stage(df, 0, spec, field_ids=stage_ids)
+        # Z-ORDER and sort_by on a partition-spec'd table split into
+        # partitions at staging, so num_files bounds files PER
+        # PARTITION (Delta's OPTIMIZE granularity); a size target
+        # salts on the spec's source columns for a GLOBAL file budget
+        df = rw.compacted(
+            df, num_files, zorder_by, sort_by, target_file_mb,
+            (os.path.getsize(p) for p, _ in entries),
+            [f["source"] for f in spec], [pv for _, pv in entries],
+        )
+        # the materialized lineage columns are stamped with their
+        # RESERVED parquet field ids alongside the table columns' ids
+        staged = self._stage(
+            df, 0, spec,
+            field_ids=self._lineage_stage_ids(table) if lineage_live else None,
+        )
         removed_rel = (
             {os.path.relpath(p, self.table_path) for p, _ in entries}
             | {os.path.relpath(p, self.table_path) for p in deletes}

@@ -70,7 +70,8 @@ def _checkpoint_file(path: str, v: int) -> str:
 
 
 from plankton_spark.filestats import stat_encode as _stat_value  # noqa: E402
-from plankton_spark.sources.assemble import file_key, local_frame  # noqa: E402
+from plankton_spark.sources import rewrite as rw  # noqa: E402
+from plankton_spark.sources.assemble import local_frame  # noqa: E402
 
 
 def _collect_stats(file_path: str) -> dict:
@@ -699,39 +700,29 @@ class PlankTable:
             cur.withColumn(name, F.col(name).cast(new_type)), "widen"
         )
 
-    def _hits(self, condition) -> tuple[list[str], dict | None]:
-        """(sorted live files holding a row where `condition` holds,
-        table schema JSON): one Spark job over the snapshot. Files
-        match by exact path, so two files sharing a basename in
-        different directories never stand in for each other."""
+    def _rewrite(self, operation, condition, rewrite, insert=None) -> int:
+        """The copy-on-write commit delete_where, update_where and
+        replace_where share: stage `insert` (when given) and
+        `rewrite(hot)` over the live files holding a row where
+        `condition` holds — found in one Spark job — and commit them
+        with those files removed. Untouched files stay live as-is."""
         snap, _props, schema = self._state()
-        hits = {
-            file_key(r[0])
-            for r in self._read_files(sorted(snap), schema)
-            .withColumn("_pt_file", F.input_file_name())
-            .where(condition)
-            .select("_pt_file")
-            .distinct()
-            .collect()
-        }
-        hit_rel = sorted(
-            rel for rel in snap if file_key(os.path.join(self.path, rel)) in hits
+        live = sorted(snap)
+        hit = rw.hit_files(
+            self._read_files(live, schema).withColumn("_pt_file", F.input_file_name()),
+            condition, live, lambda rel: os.path.join(self.path, rel), "_pt_file",
         )
-        return hit_rel, schema
+        adds = [] if insert is None else self._stage(insert)
+        if hit:
+            adds = adds + self._stage(rewrite(self._read_files(hit, schema)))
+        return self._commit_with_retry(operation, lambda: (adds, hit))
 
     def delete_where(self, condition) -> int:
         """Row-level delete: rewrite only the files that contain
-        matching rows; untouched files stay live as-is."""
-        hit_rel, schema = self._hits(condition)
-        if not hit_rel:
-            return self._commit_with_retry("DELETE", lambda: ([], []))
-        # DELETE semantics: only condition=TRUE rows go; NULL-evaluating
-        # rows are retained (NOT NULL = NULL would silently drop them)
-        survivors = self._read_files(hit_rel, schema).where(
-            ~F.coalesce(condition, F.lit(False))
+        matching rows; rows where `condition` is NULL are retained."""
+        return self._rewrite(
+            "DELETE", condition, lambda hot: hot.where(rw.kept(condition))
         )
-        adds = self._stage(survivors)
-        return self._commit_with_retry("DELETE", lambda: (adds, hit_rel))
 
     def update_where(self, assignments: dict, condition) -> int:
         """Row-level UPDATE ... SET (the Delta/Iceberg update_where on
@@ -740,37 +731,11 @@ class PlankTable:
         unmatched rows restage verbatim, NULL-evaluating rows are NOT
         updated. Assignments must target existing columns and keep
         their types (UPDATE never retypes)."""
-        from pyspark.sql import Column
-
-        schema = self.read().schema
-        unknown = sorted(set(assignments) - {f.name for f in schema.fields})
-        if unknown:
-            raise ValueError(
-                f"{self.path}: UPDATE targets unknown columns {unknown}"
-            )
-        exprs = {
-            c: (e if isinstance(e, Column) else F.expr(e))
-            for c, e in assignments.items()
-        }
-        hit_rel, recorded = self._hits(condition)
-        if not hit_rel:
-            return self._commit_with_retry("UPDATE", lambda: ([], []))
-        hot = self._read_files(hit_rel, recorded)
-        matched = F.coalesce(condition, F.lit(False))
-        rewritten = hot.select(
-            [
-                (
-                    F.when(matched, exprs[f.name].cast(f.dataType))
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                    if f.name in exprs
-                    else F.col(f.name)
-                )
-                for f in hot.schema.fields
-            ]
+        exprs = rw.update_exprs(assignments, self.read().schema, [], self.path)
+        return self._rewrite(
+            "UPDATE", condition,
+            lambda hot: hot.select(rw.updated(hot.schema, exprs, condition)),
         )
-        adds = self._stage(rewritten)
-        return self._commit_with_retry("UPDATE", lambda: (adds, hit_rel))
 
     def replace_where(self, df: DataFrame, condition) -> int:
         """Selective atomic overwrite (Delta's replaceWhere): ONE
@@ -784,19 +749,11 @@ class PlankTable:
         rewritten; rows whose predicate evaluates to NULL are
         retained (delete_where semantics)."""
         self._check_schema(df, merge_schema=False)
-        if not df.where(~F.coalesce(condition, F.lit(False))).isEmpty():
-            raise ValueError(
-                f"{self.path}: replace_where input has rows that do not "
-                "satisfy the replacement predicate"
-            )
-        hit_rel, schema = self._hits(condition)
-        adds = self._stage(df)
-        if hit_rel:
-            survivors = self._read_files(hit_rel, schema).where(
-                ~F.coalesce(condition, F.lit(False))
-            )
-            adds = adds + self._stage(survivors)
-        return self._commit_with_retry("REPLACEWHERE", lambda: (adds, hit_rel))
+        rw.check_replacement(df, condition, self.path)
+        return self._rewrite(
+            "REPLACEWHERE", condition,
+            lambda hot: hot.where(rw.kept(condition)), insert=df,
+        )
 
     def merge(self, source: DataFrame, key: str) -> int:
         """Upsert (MERGE): update matching keys from `source`, insert
@@ -807,17 +764,14 @@ class PlankTable:
         if lo is None:  # empty source → MERGE is a no-op commit
             return self._commit_with_retry("MERGE", lambda: ([], []))
         snap, _props, schema = self._state()
-        overlap = []
-        for rel, stats in snap.items():
-            s = stats.get(key)
-            if s is None or not (s["max"] < lo or s["min"] > hi):
-                overlap.append(rel)
-        overlap = sorted(overlap)
-        if overlap:
-            hot = self._read_files(overlap, schema)
-            merged = hot.join(source, key, "left_anti").unionByName(source)
-        else:
-            merged = source
+        rng = {rel: stats.get(key) or {} for rel, stats in snap.items()}
+        overlap = sorted(
+            rw.overlapping(
+                snap, lo, hi, lambda rel: (rng[rel].get("min"), rng[rel].get("max"))
+            )
+        )
+        hot = self._read_files(overlap, schema) if overlap else None
+        merged = rw.merged(hot, source, key)
         adds = self._stage(merged)
         return self._commit_with_retry(
             "MERGE",
@@ -848,48 +802,18 @@ class PlankTable:
         files become a handful of large clustered ones, and the
         rewrite itself is one shuffle (repartitionByRange, on the
         z-value for Z-order) sized by `num_files`, not a driver-side
-        merge. Z-values use 21-bit per-dimension ranks (ntile-free:
-        percent_rank over a salted-partition two-pass would be
-        overkill for a layout key — a per-dimension min/max affine
-        rank is monotone, which is all interleaving needs)."""
+        merge. `target_file_mb` sizes the output from the live bytes
+        instead (a fixed num_files that was right at 1 TB writes one
+        giant file at 100 TB)."""
         if sort_by and zorder_by:
             raise ValueError("pass sort_by or zorder_by, not both")
         snap = sorted(self._snapshot())
-        if target_file_mb is not None:
-            # size-targeted bin packing: the production knob (a fixed
-            # num_files that was right at 1 TB writes one giant file
-            # at 100 TB); live bytes come from the file inventory
-            total = sum(
-                os.path.getsize(os.path.join(self.path, rel)) for rel in snap
-            )
-            num_files = max(
-                1, -(-total // int(target_file_mb * 1024 * 1024))
-            )
-        df = self.read()
-        if zorder_by:
-            zcol = self._zvalue(df, zorder_by)
-            df = (
-                df.withColumn("__z", zcol)
-                .repartitionByRange(num_files, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
-        elif sort_by:
-            df = df.repartitionByRange(num_files, *sort_by).sortWithinPartitions(
-                *sort_by
-            )
-        elif target_file_mb is not None:
-            # repartition, not coalesce: coalesce only REDUCES
-            # partition count, so one huge file could never split up
-            # to the target size
-            df = df.repartition(num_files)
-        else:
-            df = df.coalesce(num_files)
+        sizes = (os.path.getsize(os.path.join(self.path, rel)) for rel in snap)
+        df = rw.compacted(
+            self.read(), num_files, zorder_by, sort_by, target_file_mb, sizes
+        )
         adds = self._stage(df)
         return self._commit_with_retry("OPTIMIZE", lambda: (adds, snap))
-
-    def _zvalue(self, df: DataFrame, cols: list[str], bits: int = 21):
-        return zvalue_column(df, cols, bits)
 
     # -- exactly-once streaming sink -----------------------------------
 
@@ -1015,48 +939,6 @@ class PlankTable:
                 continue  # count data versions only
             expired.append(int(stem))
         return expired
-
-
-def zvalue_column(df: DataFrame, cols: list[str], bits: int = 21):
-    """Interleaved-bit Z-value over numeric columns: each column is
-    affinely mapped to a [0, 2^bits) rank from its global min/max
-    (one tiny agg, broadcast as literals), then bit i of every
-    rank is woven into the output. Monotone per dimension, so
-    z-sorted files are narrow in all dimensions at once. Shared by
-    planktable and the Delta writer's OPTIMIZE ZORDER.
-
-    Two silent-overflow guards: (a) bits shrinks so the interleaved
-    value len(cols)*bits always fits a signed long (>3 columns at
-    21 bits would wrap and scramble the layout); (b) the rank is
-    computed in DOUBLE before the final cast — (col-mn)*(2^21-1) in
-    long arithmetic wraps for columns spanning more than ~2^42."""
-    bits = min(bits, 63 // max(len(cols), 1))
-    stats = df.agg(
-        *[F.min(c).alias(f"mn_{c}") for c in cols],
-        *[F.max(c).alias(f"mx_{c}") for c in cols],
-    ).first()
-    ranks = []
-    for c in cols:
-        mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-        span = max(float(mx) - float(mn), 1.0)
-        ranks.append(
-            F.least(
-                F.lit((1 << bits) - 1),
-                F.greatest(
-                    F.lit(0).cast("long"),
-                    (
-                        (F.col(c).cast("double") - F.lit(float(mn)))
-                        * F.lit(float((1 << bits) - 1))
-                        / F.lit(span)
-                    ).cast("long"),
-                ),
-            )
-        )
-    z = F.lit(0).cast("long")
-    for bit in range(bits - 1, -1, -1):
-        for r in ranks:
-            z = z * 2 + F.shiftrightunsigned(r, bit) % 2
-    return z
 
 
 def files_meta(spark, path: str, version: int | None = None):

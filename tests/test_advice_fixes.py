@@ -11,7 +11,7 @@
    conflict.
 4. (low) Delta checkpoints carry txn actions, so exactly-once dedup
    survives cleanup of pre-checkpoint JSON commits.
-5. (low) _zvalue never overflows a long: bits shrink with column
+5. (low) zvalue_column never overflows a long: bits shrink with column
    count, and wide-span columns rank via double math.
 """
 
@@ -31,6 +31,7 @@ from plankton_spark.sources.delta_log import (
     read_delta,
     write_delta_checkpoint,
 )
+from plankton_spark.sources.rewrite import zvalue_column
 from plankton_spark.table_format import PlankTable
 
 
@@ -188,7 +189,7 @@ def test_zvalue_many_columns_and_wide_spans_fit_long(spark, tmp_path):
     pt.optimize(zorder_by=["a", "b", "c", "d"], num_files=4)
     # content unchanged and, with 4 cols, bits shrink to 15 → 60 < 63:
     # max z must be non-negative (a wrapped long would go negative)
-    zcol = pt._zvalue(pt.read(), ["a", "b", "c", "d"])
+    zcol = zvalue_column(pt.read(), ["a", "b", "c", "d"])
     mn, mx = pt.read().select(
         F.min(zcol).alias("mn"), F.max(zcol).alias("mx")
     ).first()

@@ -81,6 +81,21 @@ def test_cdf_lifecycle_update_delete_merge(spark, tmp_path):
         a["path"].startswith("_change_data/") and a["dataChange"] is False
         for a in cdc_acts
     )
+    # REPLACE WHERE: only the matched rows (k 0..3; 4 went at v2) read
+    # back as deletes and the input as inserts — the survivors of the
+    # rewritten file are no change at all
+    w.replace_where(
+        spark.createDataFrame([(1, 7)], "k long, v long"), F.col("k") < 5
+    )                                                            # v4
+    rep = read_delta_cdf(spark, root, 4, 4)
+    assert _by_type(rep) == {(4, "delete"): 4, (4, "insert"): 1}
+    assert sorted((r["_change_type"], r["k"], r["v"]) for r in rep.collect()) == [
+        ("delete", 0, 0), ("delete", 1, 10), ("delete", 2, 20),
+        ("delete", 3, 31), ("insert", 1, 7),
+    ]
+    with open(os.path.join(root, "_delta_log", f"{4:020d}.json")) as fh:
+        acts = [json.loads(x) for x in fh if x.strip()]
+    assert any("cdc" in a for a in acts)
 
 
 def test_cdf_range_slicing_and_optimize_silent(spark, tmp_path):

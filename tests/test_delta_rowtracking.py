@@ -180,6 +180,32 @@ def test_delete_update_merge_preserve_row_ids(spark, tmp_path):
         k: t for k, t in after_mrg.items() if k not in (10, 500)
     }
     assert carried == {k: t for k, t in after_upd.items() if k != 10}
+    # REPLACE WHERE: survivors of the rewritten file keep id AND
+    # version; the replacement rows are new rows, with fresh ids above
+    # the high-water mark and this commit's version
+    log = DeltaLog(root)
+    log.replay(None)
+    hwm = json.loads(
+        log.domain_metadata["delta.rowTracking"]["configuration"]
+    )["rowIdHighWaterMark"]
+    region = (F.col("k") >= 20) & (F.col("k") < 25)
+    v_rep = w.replace_where(
+        spark.createDataFrame([(21, "r"), (22, "r")], "k long, v string"),
+        region,
+    )
+    after_rep = {
+        r["k"]: (r["_row_id"], r["_row_commit_version"])
+        for r in read_delta(spark, root, with_row_ids=True).collect()
+    }
+    assert {k: t for k, t in after_rep.items() if not 20 <= k < 25} == {
+        k: t for k, t in after_mrg.items() if not 20 <= k < 25
+    }
+    fresh = [after_rep[k] for k in (21, 22)]
+    assert sorted(after_rep) == sorted(
+        [k for k in after_mrg if not 20 <= k < 25] + [21, 22]
+    )
+    assert all(rid > hwm and cv == v_rep for rid, cv in fresh), (fresh, hwm)
+    assert len({rid for rid, _ in after_rep.values()}) == len(after_rep)
 
 
 def test_whole_file_delete_preserves_tracking(spark, tmp_path):

@@ -161,6 +161,32 @@ def test_dml_verb_job_counts(spark, tmp_path, fmt):
     assert keys == want
 
 
+# replace_where shares the row-rewrite path of delete and update; it
+# runs on a table of its own so the pins above keep their tables and
+# their key check. A rise means the shared path picked up a job.
+REPLACE_WHERE_JOBS = {"planktable": 5, "delta": 7, "iceberg": 6}
+
+
+@pytest.mark.parametrize("fmt", sorted(REPLACE_WHERE_JOBS))
+def test_replace_where_job_count(spark, tmp_path, fmt):
+    path = str(tmp_path / fmt)
+    w = {"planktable": PlankTable, "delta": DeltaLogWriter, "iceberg": IcebergWriter}[
+        fmt
+    ](spark, path)
+    w.create(_rows(spark, 0, 200).coalesce(2))
+    cond = F.col("grp") == 3
+    new = _rows(spark, 0, 200).where(cond).withColumn("v", F.col("v") * 2)
+    _, n = _jobs(spark, lambda: w.replace_where(new.coalesce(1), cond))
+    assert n == REPLACE_WHERE_JOBS[fmt]
+    read = {
+        "planktable": lambda: w.read(),
+        "delta": lambda: read_delta(spark, path),
+        "iceberg": lambda: read_iceberg(spark, path),
+    }[fmt]
+    got = sorted((r.k, r.v) for r in read().collect())
+    assert got == [(k, k * (1.0 if k % 5 == 3 else 0.5)) for k in range(200)]
+
+
 def test_local_frame_is_a_local_relation(spark):
     df = local_frame(
         spark,
