@@ -32,8 +32,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from plankton_spark.sources import positions
 from plankton_spark.sources import rewrite as rw
 from plankton_spark.sources.assemble import local_frame
+from plankton_spark.sources.deletion_vectors import dv_row_indexes, write_dv_file
 
 
 # Reader-protocol support (Delta spec, "Protocol Evolution"): this
@@ -718,7 +720,7 @@ def read_delta(
             rt[os.path.basename(rel)] = (int(b), int(cv))
         # basename is the join identity (same rule as the DV join) —
         # validate uniqueness/URI-safety over ALL live files
-        _dv_basename_map(active.keys(), table_path)
+        positions.basenames(active, _dv_refusal(table_path))
         # materialized row-id / commit-version columns (files rewritten
         # by OPTIMIZE carry the preserved ids physically; the names are
         # config-declared per the spec) — resolved here, never assumed
@@ -750,133 +752,51 @@ def read_delta(
     return out
 
 
-# deleted-row sets at or below this total cardinality broadcast to the
-# anti-join (a 2M-row (file, idx) frame is tens of MB); larger DVs
-# shuffle both sides — the metadata already knows the cardinality, so
-# the choice costs nothing
-_DV_BROADCAST_MAX_ROWS = 2_000_000
+def _dv_refusal(table_path: str):
+    """The basename-rule refusal (`positions.basenames`) for DV and
+    row-id joins."""
+    return lambda name: DeltaProtocolError(
+        f"{table_path}: cannot key deletion-vector joins by "
+        f"file basename: duplicate or URI-unsafe name {name!r}"
+    )
 
 
-_DV_SAFE_BASENAME = __import__("re").compile(r"[A-Za-z0-9._-]+\Z")
-
-
-def _dv_basename_map(rels, table_path: str) -> dict[str, str]:
-    """basename → rel path for the files a DV join touches. The join
-    keys on BASENAMES because the scan side only has the
-    URI-ENCODED `_metadata.file_path` (spaces → %20 etc.) while the
-    log records raw paths — any directory-containing key is
-    asymmetric the moment a path needs encoding. Basenames written by
-    real writers are uuid-ish ([A-Za-z0-9._-]); anything else, or a
-    duplicate, refuses loudly instead of silently mis-joining."""
-    out: dict[str, str] = {}
-    for rel in rels:
-        b = os.path.basename(rel)
-        if b in out or not _DV_SAFE_BASENAME.fullmatch(b):
-            raise DeltaProtocolError(
-                f"{table_path}: cannot key deletion-vector joins by "
-                f"file basename: duplicate or URI-unsafe name {b!r}"
-            )
-        out[b] = rel
-    return out
-
-
-def _dv_deleted_df(spark, table_path: str, dv_desc: dict):
-    """The deleted-row set of `dv_desc` ({abs-or-rel path:
-    deletionVector descriptor}) as a DataFrame (__dv_file: file
-    BASENAME, __dv_ridx: long). Decode runs on EXECUTORS (mapInPandas
-    over one row per descriptor), chunked at 1M rows per Arrow batch
-    so a worst-case DV (10^8 deletions in one file) can't OOM a
-    worker."""
-    desc_rows = [
-        (os.path.basename(p), json.dumps(d))
-        for p, d in sorted(dv_desc.items())
-    ]
-    desc_df = local_frame(
-        spark, desc_rows, "f string, dv string"
-    ).repartition(min(len(desc_rows), 64))
-    root = table_path
-
-    def _expand(batches):
-        import pandas as _pd
-
-        from plankton_spark.sources.deletion_vectors import dv_row_indexes
-
-        for pdf in batches:
-            for f, dj in zip(pdf["f"], pdf["dv"]):
-                idx = dv_row_indexes(root, json.loads(dj))
-                for i in range(0, len(idx), 1 << 20):
-                    yield _pd.DataFrame(
-                        {
-                            "__dv_file": f,
-                            "__dv_ridx": idx[i : i + (1 << 20)],
-                        }
-                    )
-
-    return desc_df.mapInPandas(_expand, "__dv_file string, __dv_ridx long")
+def _dv_deletes(spark, table_path: str, dv_desc: dict):
+    """The positions of `dv_desc` ({data file path: deletionVector
+    descriptor}), decoded on executors, as a `positions.live` delete."""
+    return positions.vectors(
+        spark,
+        [
+            (os.path.basename(p), p, [table_path, d], d.get("cardinality"))
+            for p, d in dv_desc.items()
+        ],
+        dv_row_indexes,
+    )
 
 
 def _dv_filtered_scan(
     spark, table_path: str, schema, part_cols, files, dv_desc
 ):
     """Scan `files` (all carrying deletion vectors) and drop their
-    deleted rows exactly.
-
-    Join key is (file BASENAME, _metadata.row_index) — see
-    _dv_basename_map for why directory-containing keys are unsafe
-    (URI encoding asymmetry); uniqueness/URI-safety of the DV'd
-    files' basenames is validated up front. The DV decode runs on
-    executors: one input row per descriptor, expanded to Arrow
-    batches of deleted row indexes (a DV's cardinality is bounded by
-    rows-per-file, and the driver never materializes it)."""
-    _dv_basename_map((p for p, _ in files), table_path)  # validate
-    data_schema = T.StructType(
-        [f for f in schema.fields if f.name not in part_cols]
+    deleted rows exactly: an anti-join on (file basename, row index)
+    against the vectors, decoded on executors."""
+    positions.basenames((p for p, _ in files), _dv_refusal(table_path))
+    scan = _assemble_view(
+        spark, schema, part_cols, files, table_root=table_path, with_pos=True
     )
-    by_pv: dict[tuple, list[str]] = {}
-    pv_of: dict[tuple, dict] = {}
-    for path, pv in files:
-        key = tuple(pv.get(c) for c in part_cols)
-        by_pv.setdefault(key, []).append(path)
-        pv_of[key] = pv
-    dtypes = {f.name: f.dataType for f in schema.fields}
-    pieces = []
-    for key, paths in sorted(by_pv.items(), key=lambda kv: str(kv[0])):
-        df = spark.read.schema(data_schema).parquet(*sorted(paths))
-        df = df.withColumn(
-            "__dv_file",
-            F.substring_index(F.col("_metadata.file_path"), "/", -1),
-        ).withColumn("__dv_ridx", F.col("_metadata.row_index"))
-        for c in part_cols:
-            df = df.withColumn(
-                c, _cast_partition_value(pv_of[key].get(c), dtypes[c])
-            )
-        pieces.append(df)
-    scan = pieces[0]
-    for p in pieces[1:]:
-        scan = scan.unionByName(p)
-
-    deleted = _dv_deleted_df(spark, table_path, dv_desc)
-    total_card = sum(
-        d.get("cardinality") or _DV_BROADCAST_MAX_ROWS + 1
-        for d in dv_desc.values()
+    return positions.live(scan, [_dv_deletes(spark, table_path, dv_desc)]).select(
+        schema.fieldNames()
     )
-    if total_card <= _DV_BROADCAST_MAX_ROWS:
-        deleted = F.broadcast(deleted)
-    out_cols = [f.name for f in schema.fields]
-    return scan.join(
-        deleted, ["__dv_file", "__dv_ridx"], "left_anti"
-    ).select(out_cols)
 
 
 def _row_tracked_scan(
     spark, table_path: str, schema, part_cols, files, dv_desc, rt,
     mat=(None, None),
 ):
-    """Scan with ROW TRACKING columns projected: attach the physical
-    row index + file basename to every file's scan (the _dv_filtered_
-    scan shape, over ALL files), subtract DV-deleted rows, then join
-    the broadcast (basename → baseRowId, defaultRowCommitVersion) log
-    metadata and compute _row_id = baseRowId + row position. Survivor
+    """Scan with ROW TRACKING columns projected: the live positional
+    scan (DV-deleted rows subtracted) with _row_id = baseRowId + row
+    position and _row_commit_version = defaultRowCommitVersion, from
+    `rt` = {basename: (baseRowId, defaultRowCommitVersion)}. Survivor
     rows keep their ids across DV deletes by construction — the
     position is physical and DVs never rewrite data.
 
@@ -887,73 +807,20 @@ def _row_tracked_scan(
     that predate the rewrite lack them and read NULL (explicit-schema
     parquet semantics), so the projection is the spec's rule verbatim:
     _row_id = coalesce(materialized, baseRowId + position)."""
-    mat_id, mat_cv = mat
-    if not files:  # every file partition-pruned away
-        out_schema = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField("_row_id", T.LongType()),
-                T.StructField("_row_commit_version", T.LongType()),
-            ]
-        )
-        return local_frame(spark, [], out_schema)
-    data_names = {f.name for f in schema.fields}
+    names = ("_row_id", "_row_commit_version")
     extra = [
         T.StructField(n, T.LongType(), True)
-        for n in (mat_id, mat_cv)
-        if n is not None and n not in data_names
+        for n in mat
+        if n is not None and n not in schema.fieldNames()
     ]
-    data_schema = T.StructType(
-        [f for f in schema.fields if f.name not in part_cols] + extra
+    scan = _assemble_view(
+        spark, T.StructType(list(schema.fields) + extra), part_cols, files,
+        table_root=table_path, with_pos=True,
     )
-    by_pv: dict[tuple, list[str]] = {}
-    pv_of: dict[tuple, dict] = {}
-    for path, pv in files:
-        key = tuple(pv.get(c) for c in part_cols)
-        by_pv.setdefault(key, []).append(path)
-        pv_of[key] = pv
-    dtypes = {f.name: f.dataType for f in schema.fields}
-    pieces = []
-    for key, paths in sorted(by_pv.items(), key=lambda kv: str(kv[0])):
-        df = spark.read.schema(data_schema).parquet(*sorted(paths))
-        df = df.withColumn(
-            "__dv_file",
-            F.substring_index(F.col("_metadata.file_path"), "/", -1),
-        ).withColumn("__dv_ridx", F.col("_metadata.row_index"))
-        for c in part_cols:
-            df = df.withColumn(
-                c, _cast_partition_value(pv_of[key].get(c), dtypes[c])
-            )
-        pieces.append(df)
-    scan = pieces[0]
-    for p in pieces[1:]:
-        scan = scan.unionByName(p)
-    if dv_desc:
-        deleted = _dv_deleted_df(spark, table_path, dv_desc)
-        total_card = sum(
-            d.get("cardinality") or _DV_BROADCAST_MAX_ROWS + 1
-            for d in dv_desc.values()
-        )
-        if total_card <= _DV_BROADCAST_MAX_ROWS:
-            deleted = F.broadcast(deleted)
-        scan = scan.join(deleted, ["__dv_file", "__dv_ridx"], "left_anti")
-    rt_df = local_frame(
-        spark,
-        [(b, base, cv) for b, (base, cv) in sorted(rt.items())],
-        "__dv_file string, __rt_base long, __rt_ver long",
-    )
-    out_cols = [f.name for f in schema.fields]
-    rid = F.col("__rt_base") + F.col("__dv_ridx")
-    cv = F.col("__rt_ver")
-    if mat_id is not None:
-        rid = F.coalesce(F.col(mat_id), rid)
-    if mat_cv is not None:
-        cv = F.coalesce(F.col(mat_cv), cv)
-    return scan.join(F.broadcast(rt_df), "__dv_file").select(
-        *out_cols,
-        rid.alias("_row_id"),
-        cv.alias("_row_commit_version"),
-    )
+    deletes = [_dv_deletes(spark, table_path, dv_desc)] if dv_desc else []
+    return positions.with_row_ids(
+        spark, positions.live(scan, deletes), rt, names, mat
+    ).select(*schema.fieldNames(), *names)
 
 
 def _pv_filter_str(v) -> str | None:
@@ -2034,7 +1901,7 @@ class DeltaLogWriter:
             )
             for rel, add in active.items()
         }
-        _dv_basename_map(active.keys(), self.table_path)
+        positions.basenames(active, _dv_refusal(self.table_path))
         dv_desc = {
             p: active[_path_key(self.table_path, p)]["deletionVector"]
             for p, _pv in files
@@ -2930,102 +2797,7 @@ class DeltaLogWriter:
         rows are retained, matching Delta DELETE semantics.
         Compaction purges DVs (optimize reads DV-aware and re-stages
         clean files); vacuum removes unreferenced DV files."""
-        import pandas as _pd  # noqa: F401
-
-        log = DeltaLog(self.table_path)
-        schema, part_cols, active = log.replay(None)
-        self._refuse_if_append_only(log.table_config, "DELETE (DV)")
-        if column_mapping(schema, log.table_config, self.table_path):
-            raise DeltaProtocolError(
-                f"{self.table_path}: DV delete on a column-mapped table "
-                "is not implemented (predicate would bind logical names)"
-            )
-        files = [
-            (os.path.join(self.table_path, rel), a["partitionValues"])
-            for rel, a in active.items()
-        ]
-        if not files:
-            return None
-        live = _assemble_view(
-            self.spark,
-            schema,
-            part_cols,
-            files,
-            table_root=self.table_path,
-            with_pos=True,
-        )
-        root = self.table_path
-        base_to_rel = _dv_basename_map(active, root)
-        # the raw positional scan is DV-UNAWARE — subtract the rows
-        # EXISTING vectors already deleted before evaluating the
-        # predicate, or a condition matching them would re-count them
-        # as fresh deletions (and mis-stage CDC rows). Positions stay
-        # physical, so the masking below is unaffected.
-        live = self._dv_live_rows(live, active)
-        new_hits = live.where(rw.matched(condition)).select(
-            F.substring_index(F.col("__pd_file"), "/", -1).alias("__dv_file"),
-            F.col("__pd_ridx").alias("__dv_ridx"),
-        )
-        # which files the predicate actually hit — a no-match delete
-        # must be a no-op (no version bump, no DV rewrites), and only
-        # the hit files' EXISTING vectors need merging in
-        hit_bases = {
-            r[0] for r in new_hits.select("__dv_file").distinct().collect()
-        }
-        if not hit_bases:
-            return None
-        existing_desc = {
-            rel: active[rel]["deletionVector"]
-            for rel in (base_to_rel[b] for b in sorted(hit_bases))
-            if active[rel].get("deletionVector")
-        }
-        hits = new_hits
-        if existing_desc:
-            hits = hits.unionByName(
-                _dv_deleted_df(self.spark, root, existing_desc)
-            )
-        masked = self._dv_mask_actions(log, active, base_to_rel, hits)
-        if masked is None:
-            return None
-        actions, hit_rel = masked
-        if self._cdf_enabled(log.table_config):
-            deleted = live.where(rw.matched(condition)).select(
-                schema.fieldNames()
-            )
-            actions = actions + self._stage_cdc(
-                deleted.withColumn("_change_type", F.lit("delete")),
-                part_cols,
-            )
-        return self._validate_then_commit(actions, hit_rel)
-
-    def _dv_live_rows(self, live, active):
-        """Subtract the rows EXISTING deletion vectors mark from a
-        positional (`__pd_file`/`__pd_ridx`) scan — the live view a
-        DV-writing DML must evaluate its predicate over (matching an
-        already-deleted row must be a no-op, never a resurrection)."""
-        dv_all = {
-            os.path.join(self.table_path, rel): a["deletionVector"]
-            for rel, a in active.items()
-            if a.get("deletionVector")
-        }
-        if not dv_all:
-            return live
-        prev = _dv_deleted_df(self.spark, self.table_path, dv_all)
-        total_card = sum(
-            d.get("cardinality") or _DV_BROADCAST_MAX_ROWS + 1
-            for d in dv_all.values()
-        )
-        if total_card <= _DV_BROADCAST_MAX_ROWS:
-            prev = F.broadcast(prev)
-        return (
-            live.withColumn(
-                "__dv_file",
-                F.substring_index(F.col("__pd_file"), "/", -1),
-            )
-            .withColumn("__dv_ridx", F.col("__pd_ridx"))
-            .join(prev, ["__dv_file", "__dv_ridx"], "left_anti")
-            .drop("__dv_file", "__dv_ridx")
-        )
+        return self._dv_rewrite("DELETE", condition)
 
     def update_where_dv(self, assignments: dict, condition) -> int | None:
         """UPDATE ... SET via DELETION VECTORS — the O(changed-rows)
@@ -3038,156 +2810,84 @@ class DeltaLogWriter:
         update_where (NULL predicates retained, no partition-column
         targets, pre-update row visibility); OPTIMIZE later purges
         the DVs and compacts the appended fragments."""
-        import pandas as _pd  # noqa: F401
+        return self._dv_rewrite("UPDATE", condition, assignments)
 
+    def _dv_rewrite(self, op, condition, assignments=None) -> int | None:
+        """The deletion-vector path delete_where_dv and update_where_dv
+        share. Refuses append-only (as `op (DV)`) and column-mapped
+        tables and bad `assignments`. The predicate is evaluated over
+        the LIVE rows — positions existing vectors mark are subtracted
+        first, so matching an already-deleted row is a no-op, never a
+        resurrection or a re-counted CDC row — and returns None when
+        no live row matches. Each hit file gets one merged vector,
+        authored on executors, and is re-added with it. With
+        `assignments` the matched rows' updated copies (assignments
+        see the pre-update row) are staged as new files in the same
+        commit; on a row-tracked table each copy keeps its row's id
+        (materialized value where its file was rewritten before,
+        baseRowId + position otherwise) with its commit version reset,
+        and the masked re-adds keep their copied baseRowIds. A
+        change-feed table stages the matched rows as deletes or update
+        pre/postimages. OCC-validated like the rewrite verbs."""
         log = DeltaLog(self.table_path)
         schema, part_cols, active = log.replay(None)
-        self._refuse_if_append_only(log.table_config, "UPDATE (DV)")
+        self._refuse_if_append_only(log.table_config, f"{op} (DV)")
         if column_mapping(schema, log.table_config, self.table_path):
+            binds = "predicate" if assignments is None else "assignments"
             raise DeltaProtocolError(
-                f"{self.table_path}: DV update on a column-mapped table "
-                "is not implemented (assignments would bind logical names)"
+                f"{self.table_path}: DV {op.lower()} on a column-mapped table "
+                f"is not implemented ({binds} would bind logical names)"
             )
-        exprs = rw.update_exprs(assignments, schema, part_cols, self.table_path)
-        files = [
-            (os.path.join(self.table_path, rel), a["partitionValues"])
+        if assignments is not None:
+            exprs = rw.update_exprs(assignments, schema, part_cols, self.table_path)
+        if not active:
+            return None
+        rt_on, mat_id, mat_cv, mat_head = (
+            self._rt_rewrite_state(log, schema, part_cols, active)
+            if assignments is not None
+            else (False, None, None, [])
+        )
+        root = self.table_path
+        rel_of = positions.basenames(active, _dv_refusal(root))
+        prior = {
+            os.path.join(root, rel): a["deletionVector"]
             for rel, a in active.items()
+            if a.get("deletionVector")
+        }
+        deletes = [_dv_deletes(self.spark, root, prior)] if prior else []
+        # a row-tracked update's copies carry their rows' ORIGINAL ids
+        # materialized: the scan reads the materialized columns too
+        # (NULL where a file was never rewritten)
+        extra = [
+            T.StructField(n, T.LongType(), True)
+            for n in (mat_id, mat_cv)
+            if rt_on and n not in schema.fieldNames()
         ]
-        if not files:
-            return None
-        rt_on, mat_id, mat_cv, mat_head = self._rt_rewrite_state(
-            log, schema, part_cols, active
+        live = positions.live(
+            _assemble_view(
+                self.spark, T.StructType(list(schema.fields) + extra),
+                part_cols,
+                [(os.path.join(root, rel), a["partitionValues"]) for rel, a in active.items()],
+                table_root=root, with_pos=True,
+            ),
+            deletes,
         )
-        scan_schema = schema
-        if rt_on:
-            # the updated copies must carry their rows' ORIGINAL ids
-            # materialized — extend the scan with the materialized
-            # columns (null where a file was never rewritten; the
-            # baseRowId + position fallback covers those below)
-            scan_schema = T.StructType(
-                list(schema.fields)
-                + [
-                    T.StructField(n, T.LongType(), True)
-                    for n in (mat_id, mat_cv)
-                    if n not in {f.name for f in schema.fields}
-                ]
-            )
-        live = _assemble_view(
-            self.spark,
-            scan_schema,
-            part_cols,
-            files,
-            table_root=self.table_path,
-            with_pos=True,
-        )
-        root = self.table_path
-        base_to_rel = _dv_basename_map(active, root)
-        # subtract EXISTING DVs first (see delete_where_dv): without
-        # this, a condition matching an already-deleted row would
-        # re-stage its transformed copy — RESURRECTION (round-11
-        # review fix, regression-tested)
-        live = self._dv_live_rows(live, active)
-        matched = live.where(rw.matched(condition))
-        new_hits = matched.select(
-            F.substring_index(F.col("__pd_file"), "/", -1).alias("__dv_file"),
-            F.col("__pd_ridx").alias("__dv_ridx"),
-        )
-        hit_bases = {
-            r[0] for r in new_hits.select("__dv_file").distinct().collect()
-        }
-        if not hit_bases:
-            return None
-        existing_desc = {
-            rel: active[rel]["deletionVector"]
-            for rel in (base_to_rel[b] for b in sorted(hit_bases))
-            if active[rel].get("deletionVector")
-        }
-        hits = new_hits
-        if existing_desc:
-            hits = hits.unionByName(
-                _dv_deleted_df(self.spark, root, existing_desc)
-            )
-        masked = self._dv_mask_actions(log, active, base_to_rel, hits)
-        if masked is None:
-            return None
-        actions, hit_rel = masked
-        # the transformed copies of the masked rows, appended in the
-        # SAME commit (assignments see the PRE-update row)
-        upd_cols = rw.updated(schema, exprs)
-        if rt_on:
-            # each updated copy keeps its row's ORIGINAL id
-            # (materialized value where the source file was rewritten
-            # before, baseRowId + position otherwise) with a RESET
-            # commit version (null → the add's default)
-            rt_df = local_frame(
-                self.spark,
-                [
-                    (
-                        os.path.basename(rel),
-                        int(a["baseRowId"]),
-                    )
-                    for rel, a in sorted(active.items())
-                ],
-                "__rt_file string, __rt_base long",
-            )
-            with_base = matched.withColumn(
-                "__rt_file",
-                F.substring_index(F.col("__pd_file"), "/", -1),
-            ).join(F.broadcast(rt_df), "__rt_file")
-            rid = F.col("__rt_base") + F.col("__pd_ridx")
-            if mat_id in scan_schema.fieldNames():
-                rid = F.coalesce(F.col(mat_id), rid)
-            updated = with_base.select(
-                upd_cols
-                + [
-                    rid.alias(mat_id),
-                    F.lit(None).cast("long").alias(mat_cv),
-                ]
-            )
-        else:
-            updated = matched.select(upd_cols)
-        new_adds = self._stage(updated, part_cols)
-        if self._cdf_enabled(log.table_config):
-            pre = matched.select(
-                [f.name for f in schema.fields]
-            ).withColumn("_change_type", F.lit("update_preimage"))
-            post = matched.select(upd_cols).withColumn(
-                "_change_type", F.lit("update_postimage")
-            )
-            actions = actions + self._stage_cdc(
-                pre.unionByName(post), part_cols
-            )
-        if rt_on:
-            # masked re-adds keep their copied baseRowIds; only the
-            # NEW files (updated copies) claim fresh ids
-            return self._commit_rt_rewrite(
-                mat_head, new_adds, actions, hit_rel, mat_id, mat_cv
-            )
-        return self._validate_then_commit(actions + new_adds, hit_rel)
-
-    def _dv_mask_actions(self, log, active, base_to_rel, hits):
-        """Shared DV-masking tail of delete_where_dv/update_where_dv:
-        author one merged DV per hit file ON EXECUTORS, return the
-        (protocol upgrade + remove/re-add-with-DV) actions and the hit
-        relpaths, or None when nothing was hit."""
-        root = self.table_path
+        hits = positions.hits(live, condition, deletes[0][0] if deletes else None)
 
         def _write_dv(key, pdf):
             import pandas as pd
 
-            from plankton_spark.sources.deletion_vectors import write_dv_file
-
-            desc = write_dv_file(root, pdf["__dv_ridx"].tolist())
+            desc = write_dv_file(root, pdf["__pd_ridx"].tolist())
             return pd.DataFrame({"f": [key[0]], "dv": [json.dumps(desc)]})
 
         descs = (
-            hits.groupBy("__dv_file")
+            hits.groupBy("__pd_file")
             .applyInPandas(_write_dv, "f string, dv string")
             .collect()  # one row per HIT FILE — metadata scale
         )
         if not descs:
             return None
-        hit_rel = sorted(base_to_rel[r.f] for r in descs)
+        hit_rel = sorted(rel_of[r.f] for r in descs)
         actions: list[dict] = []
         prot = log.table_protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
         rf = set(prot.get("readerFeatures") or [])
@@ -3208,16 +2908,36 @@ class DeltaLogWriter:
                 }
             )
         for r in descs:
-            rel = base_to_rel[r.f]
-            old = active[rel]
-            new_add = {
-                k: v for k, v in old.items() if k != "deletionVector"
-            }
+            rel = rel_of[r.f]
+            new_add = {k: v for k, v in active[rel].items() if k != "deletionVector"}
             new_add["deletionVector"] = json.loads(r.dv)
             new_add["dataChange"] = True
             actions.append({"remove": {"path": rel, "dataChange": True}})
             actions.append({"add": new_add})
-        return actions, hit_rel
+        matched = live.where(rw.matched(condition))
+        pre = matched.select(schema.fieldNames())
+        changes = [(pre, "delete")]
+        adds: list[dict] = []
+        if assignments is not None:
+            upd = rw.updated(schema, exprs)
+            changes = [(pre, "update_preimage"), (matched.select(upd), "update_postimage")]
+            if rt_on:
+                ids = {b: (int(active[rel]["baseRowId"]), None) for b, rel in rel_of.items()}
+                copies = positions.with_row_ids(
+                    self.spark, matched, ids, (mat_id, mat_cv), (mat_id, None)
+                ).select(upd + [F.col(mat_id), F.col(mat_cv)])
+            else:
+                copies = matched.select(upd)
+            adds = self._stage(copies, part_cols)
+        if self._cdf_enabled(log.table_config):
+            actions += self._stage_cdc(rw.change_rows(changes), part_cols)
+        if rt_on:
+            # masked re-adds keep their copied baseRowIds; only the
+            # NEW files (updated copies) claim fresh ids
+            return self._commit_rt_rewrite(
+                mat_head, adds, actions, hit_rel, mat_id, mat_cv
+            )
+        return self._validate_then_commit(actions + adds, hit_rel)
 
     def _validate_then_commit(self, actions: list[dict], depends_on_rel) -> int:
         """OCC commit for actions that REMOVE files: valid only while

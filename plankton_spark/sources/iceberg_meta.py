@@ -42,9 +42,11 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from plankton_spark.filestats import _reject_empty_string_partitions
 from plankton_spark.filestats import apply_partition_schema as _apply_partition_schema
+from plankton_spark.sources import positions
+from plankton_spark.sources import puffin as _puffin
 from plankton_spark.sources import rewrite as rw
 from plankton_spark.sources.assemble import local_frame
-from plankton_spark.sources.avro_ocf import read_ocf_generic
+from plankton_spark.sources.avro_ocf import read_ocf_generic, write_ocf_generic
 
 
 def _iceberg_type_to_spark(t) -> T.DataType:
@@ -850,168 +852,90 @@ def read_iceberg(
     )
 
 
+def _position_deletes(spark, pos_dels, dv_dels):
+    """The positions a snapshot's v2 position-delete files `pos_dels`
+    and v3 deletion vectors `dv_dels` (scan_entries_full shapes) mark,
+    as `positions.live` deletes. Both forms, legal to coexist
+    mid-migration, subtract through the same anti-join. Delete files
+    may reference absolute foreign URIs while the local resolve
+    re-roots, so both sides key on the file basename. The parquet
+    form is a native scan whose cardinality is its footers' row
+    count; the DVs decode on executors, cardinality-checked against
+    their manifest entries."""
+    out = []
+    if pos_dels:
+        import pyarrow.parquet as _pq
+
+        frame = (
+            spark.read.schema("file_path string, pos long")
+            .parquet(*pos_dels)
+            .select(
+                positions.basename(F.col("file_path")).alias("__pd_file"),
+                F.col("pos").alias("__pd_ridx"),
+            )
+        )
+        out.append((frame, [_pq.read_metadata(p).num_rows for p in pos_dels]))
+    if dv_dels:
+        out.append(
+            positions.vectors(
+                spark,
+                [
+                    (
+                        os.path.basename(ref.rstrip("/")),
+                        f"{p!r} (offset {int(off)})",
+                        [p, int(off), int(sz)],
+                        int(card),
+                    )
+                    for p, ref, off, sz, card in dv_dels
+                ],
+                _puffin.dv_indexes,
+            )
+        )
+    return out
+
+
 def _posdelete_filtered_read(
     spark, t: "IcebergTable", schema, part_cols, entries, delete_files,
     eq_deletes=(), data_seq=None, dv_deletes=(), lineage=None,
     lineage_fields=None, scan=None,
 ):
-    """Data scan minus the rows position-delete files mark.
-
-    ``dv_deletes`` are v3 deletion vectors [(puffin_path,
-    referenced_data_file, offset, size)]: each blob decodes to the
-    deleted row indexes of ONE data file. Decode runs on executors
-    (mapInPandas over the descriptor rows, one Arrow batch per ~1M
-    indexes — a DV's cardinality is bounded by rows-per-file and the
-    driver never materializes it), then joins into the same
-    (file-basename, row-index) anti-join the v2 parquet deletes use,
-    so both forms — legal to coexist mid-migration — subtract through
-    one code path.
-
-    Both sides normalize file identity to the path suffix under the
-    table's data/ dir (delete files may reference absolute URIs from
-    the writing engine while the local resolve re-roots — the same
-    rule IcebergTable._resolve applies, expressed as JVM column ops).
-    The delete set is a native parquet scan, so the whole subtraction
-    is shuffle-or-broadcast work with no Python in the row path."""
-    scan_schema = schema
-    if lineage is not None and lineage_fields:
-        scan_schema = T.StructType(
-            list(schema.fields) + list(lineage_fields)
-        )
+    """Data scan minus the rows position-delete files, deletion
+    vectors (`_position_deletes`) and equality deletes mark, with the
+    v3 lineage columns projected when `lineage` = {basename:
+    (first_row_id, data_seq)} is given (materialized values in
+    `lineage_fields` win). Callers may pass a pre-assembled positioned
+    `scan` (the multi-spec per-spec union): the subtraction only needs
+    its position columns. It is shuffle-or-broadcast work; only the
+    DV decode runs Python, one input row per vector."""
     if scan is None:
-        # callers may pass a PRE-ASSEMBLED positioned scan (the
-        # multi-spec per-spec union) — the subtraction below is
-        # assembly-agnostic, it only needs __pd_file/__pd_ridx
-        if part_cols:
-            scan = _assemble_iceberg(
-                spark, scan_schema, part_cols, entries, with_pos=True
-            )
-        else:
-            scan = (
-                spark.read.schema(scan_schema)
-                .parquet(*[p for p, _ in entries])
-                .withColumn("__pd_file", F.col("_metadata.file_path"))
-                .withColumn("__pd_ridx", F.col("_metadata.row_index"))
-            )
-    # ONE symmetric identity rule on both sides: the file BASENAME.
-    # Delete files may reference absolute foreign URIs while the scan
-    # sees the URI-ENCODED `_metadata.file_path` (spaces → %20, and
-    # partition directories encode too) — any directory-containing
-    # key is asymmetric the moment a path needs encoding. Basenames
-    # written by real engines are uuid-ish and URI-safe; uniqueness
-    # and safety are validated up front and refuse loudly otherwise.
-    import re as _re
-
-    safe = _re.compile(r"[A-Za-z0-9._-]+\Z")
-    seen_base: set[str] = set()
-    for p, _pv in entries:
-        b = os.path.basename(p)
-        if b in seen_base or not safe.fullmatch(b):
-            raise ValueError(
-                f"{t.table_path}: cannot key position-delete joins by "
-                f"file basename: duplicate or URI-unsafe name {b!r}"
-            )
-        seen_base.add(b)
-
-    def _norm(col):
-        return F.substring_index(col, "/", -1)
-
-    scan = scan.withColumn("__pd_file", _norm(F.col("__pd_file")))
-    if delete_files:
-        dels = (
-            spark.read.schema("file_path string, pos long")
-            .parquet(*delete_files)
-            .select(
-                _norm(F.col("file_path")).alias("__pd_file"),
-                F.col("pos").alias("__pd_ridx"),
-            )
-        )
-        total_delete_bytes = sum(os.path.getsize(p) for p in delete_files)
-        if total_delete_bytes < 32 << 20:  # compressed (file,pos) pairs
-            dels = F.broadcast(dels)
-        scan = scan.join(dels, ["__pd_file", "__pd_ridx"], "left_anti")
-    if dv_deletes:
-        desc_rows = [
-            (os.path.basename(ref.rstrip("/")), p, int(off), int(sz), int(card))
-            for p, ref, off, sz, card in sorted(dv_deletes)
-        ]
-        desc_df = local_frame(
+        scan = _assemble_iceberg(
             spark,
-            desc_rows, "f string, puffin string, off long, sz long, card long"
-        ).repartition(min(len(desc_rows), 64))
-
-        def _expand(batches):
-            import pandas as _pd
-
-            from plankton_spark.sources.puffin import dv_indexes
-
-            for pdf in batches:
-                for fb, pp, off, sz, card in zip(
-                    pdf["f"], pdf["puffin"], pdf["off"], pdf["sz"], pdf["card"]
-                ):
-                    idx = dv_indexes(pp, int(off), int(sz))
-                    # the broadcast decision below trusted the manifest
-                    # cardinality — verify the decoded bitmap agrees
-                    # (the Delta path's dv_row_indexes does the same),
-                    # so an understated foreign count fails loudly
-                    # executor-side instead of OOMing the driver on
-                    # collect-for-broadcast
-                    if int(card) >= 0 and len(idx) != int(card):
-                        raise ValueError(
-                            f"deletion vector at {pp!r} (offset {int(off)}) "
-                            f"decodes to {len(idx)} positions but the "
-                            f"manifest declares cardinality {int(card)}"
-                        )
-                    for i in range(0, len(idx), 1 << 20):
-                        yield _pd.DataFrame(
-                            {
-                                "__pd_file": fb,
-                                "__pd_ridx": idx[i : i + (1 << 20)],
-                            }
-                        )
-
-        dv_frame = desc_df.mapInPandas(
-            _expand, "__pd_file string, __pd_ridx long"
+            T.StructType(list(schema.fields) + list(lineage_fields or []))
+            if lineage is not None
+            else schema,
+            part_cols,
+            entries,
+            with_pos=True,
         )
-        # broadcast decision by CARDINALITY (expanded row count), not
-        # compressed blob bytes: roaring RLE is unbounded-ratio, so a
-        # few hundred bytes can expand to 10^8 (file,row) pairs and
-        # OOM the driver on collect-for-broadcast (round-9 review #4).
-        # ~16 B/pair -> 2M pairs ≈ 32 MB broadcast. An UNKNOWN
-        # cardinality (-1, spec-violating foreign entry) disqualifies
-        # broadcasting — fail safe to the shuffle join, never OOM
-        # (review-2 #5).
-        cards = [card for _p, _r, _o, _s, card in dv_deletes]
-        if all(c >= 0 for c in cards) and sum(cards) < 2_000_000:
-            dv_frame = F.broadcast(dv_frame)
-        scan = scan.join(dv_frame, ["__pd_file", "__pd_ridx"], "left_anti")
+    positions.basenames(
+        (p for p, _pv in entries),
+        lambda b: ValueError(
+            f"{t.table_path}: cannot key position-delete joins by "
+            f"file basename: duplicate or URI-unsafe name {b!r}"
+        ),
+    )
+    scan = positions.live(scan, _position_deletes(spark, delete_files, dv_deletes))
     if eq_deletes:
         scan = _apply_equality_deletes(
             spark, t, schema, scan, eq_deletes, data_seq or {}
         )
-    out_cols = [f.name for f in schema.fields]
+    out_cols = schema.fieldNames()
     if lineage is None:
         return scan.select(out_cols)
-    # v3 row lineage: one (basename → first_row_id, data_seq) row per
-    # LIVE FILE — manifest metadata, broadcast by construction; the
-    # projection is arithmetic on the already-present physical row
-    # index, so lineage costs no extra scan or shuffle
-    lin_df = local_frame(
-        spark,
-        [(b, int(fr), int(sq)) for b, (fr, sq) in sorted(lineage.items())],
-        "__pd_file string, __pd_frid long, __pd_seq long",
-    )
-    rid = F.col("__pd_frid") + F.col("__pd_ridx")
-    seq = F.col("__pd_seq")
-    if lineage_fields:
-        # materialized values (compacted files) win; inherited
-        # defaults cover files written before any rewrite
-        rid = F.coalesce(F.col(_ROW_ID_COL), rid)
-        seq = F.coalesce(F.col(_LAST_SEQ_COL), seq)
-    return scan.join(F.broadcast(lin_df), "__pd_file").select(
-        *out_cols,
-        rid.alias("_row_id"),
-        seq.alias("_last_updated_sequence_number"),
+    names = ("_row_id", "_last_updated_sequence_number")
+    mat = (_ROW_ID_COL, _LAST_SEQ_COL) if lineage_fields else (None, None)
+    return positions.with_row_ids(spark, scan, lineage, names, mat).select(
+        *out_cols, *names
     )
 
 
@@ -3425,10 +3349,13 @@ class IcebergWriter:
         referenced from a NEW delete manifest (data_file.content=1) —
         O(deleted rows). Deletes ACCUMULATE (no merge needed; the
         delete-aware read unions them) and OPTIMIZE purges them back
-        to clean files. The metadata bumps to format-version 2 so
+        to clean files. The metadata is at least format-version 2 so
         other readers know delete manifests may appear; whole-file
         paths (data_entries, the DSv2 wrapper, streaming) refuse
-        position-deleted snapshots. NULL-predicate rows are retained.
+        position-deleted snapshots. The predicate is evaluated over
+        the live rows: NULL-predicate rows are retained, and a call
+        that matches only already-deleted rows returns None without
+        committing.
 
         Minimal v2: sequence numbers are not written — our reader
         applies position deletes by exact file path, which is safe
@@ -3440,106 +3367,52 @@ class IcebergWriter:
 
         import pyarrow.parquet as _pq
 
-        from plankton_spark.sources.avro_ocf import (
-            read_ocf_generic,
-            write_ocf_generic,
-        )
-
         for _ in range(20):
             table = IcebergTable(self.table_path)
-            schema = table.schema()
-            table.scan_entries(None)  # keep the eq-delete refusal
+            _, pos_dels = table.scan_entries(None)  # refuses eq deletes and DVs
             full = table.scan_entries_full(None)[0]
             if not full:
                 return None
-            # per-spec assembly: a partition-evolved snapshot's
-            # old-spec files keep their partition column in CONTENT —
-            # attaching the default spec's columns would evaluate the
-            # predicate against NULLs and silently miss rows (the
-            # round-12 multi-spec audit)
-            live = _assemble_multispec(
-                self.spark, table, schema, full, with_pos=True
+            rel_of, hits = self._position_hits(
+                table, full, _position_deletes(self.spark, pos_dels, ()),
+                condition, "position-delete joins",
             )
-            hits = (
-                live.where(rw.matched(condition))
-                .select(
-                    F.substring_index(
-                        F.col("__pd_file"), self.table_path + "/", -1
-                    ).alias("file_path"),
-                    F.col("__pd_ridx").alias("pos"),
-                )
-                .orderBy("file_path", "pos")
+            snap_id = max(s["snapshot-id"] for s in table.metadata["snapshots"]) + 1
+            paths = local_frame(
+                self.spark, sorted(rel_of.items()), "__pd_file string, file_path string"
             )
-            if hits.isEmpty():
+            tmp = os.path.join(self.table_path, f"_stage-{_uuid.uuid4().hex}")
+            (
+                hits.join(F.broadcast(paths), "__pd_file")
+                .select("file_path", F.col("__pd_ridx").alias("pos"))
+                # one task writes the file, so one task sorts it too
+                # (the spec's (file_path, pos) order)
+                .repartition(1)
+                .sortWithinPartitions("file_path", "pos")
+                .write.mode("overwrite")
+                .parquet(tmp)
+            )
+            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))
+            n = _pq.ParquetFile(part[0]).metadata.num_rows if part else 0
+            if not n:
+                _shutil.rmtree(tmp, ignore_errors=True)
                 return None
-            tmp = os.path.join(
-                self.table_path, f"_stage-{_uuid.uuid4().hex}"
-            )
-            hits.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            snap_id = max(
-                s["snapshot-id"] for s in table.metadata["snapshots"]
-            ) + 1
             rel = f"data/posdel-snap{snap_id}-{_uuid.uuid4().hex}.parquet"
             dst = os.path.join(self.table_path, rel)
-            os.replace(part, dst)
+            os.replace(part[0], dst)
             _shutil.rmtree(tmp, ignore_errors=True)
             del_file = {
                 "content": 1,
                 "file_path": rel,
                 "file_format": "PARQUET",
                 "partition": {},
-                "record_count": _pq.ParquetFile(dst).metadata.num_rows,
+                "record_count": n,
                 "file_size_in_bytes": os.path.getsize(dst),
             }
-            m_name = self._unique(f"m{snap_id}-del")
-            m_path = os.path.join(self.meta_dir, m_name)
-            write_ocf_generic(
-                m_path,
-                _entry_schema([]),
-                [{"status": 1, "snapshot_id": snap_id, "data_file": del_file}],
-            )
-            prev = table._snapshot(None)
-            prev_ml = table._resolve(prev["manifest-list"])
-            manifests = [
-                {**m, "content": m.get("content", 0)}
-                for m in read_ocf_generic(prev_ml)
-            ] + [
-                {
-                    "manifest_path": f"metadata/{m_name}",
-                    "manifest_length": os.path.getsize(m_path),
-                    "partition_spec_id": 0,
-                    "content": 1,
-                    "added_snapshot_id": snap_id,
-                }
-            ]
-            ml_name = self._unique(f"snap-{snap_id}")
-            # _write_manifest_list preserves carried sequence numbers
-            # (a foreign v3/lineage table's data manifests carry them;
-            # re-listing with the seq-less record shape would zero
-            # every file's data sequence — found live, round 13)
-            _write_manifest_list(
-                os.path.join(self.meta_dir, ml_name), manifests
-            )
-            md = dict(table.metadata)
-            md["format-version"] = 2
-            md["snapshots"] = md["snapshots"] + [
-                {
-                    "snapshot-id": snap_id,
-                    "timestamp-ms": int(_time.time() * 1000),
-                    "manifest-list": f"metadata/{ml_name}",
-                    # spec: summary.operation is REQUIRED (v2)
-                    "summary": {
-                        "operation": "delete",
-                        "added-data-files": "0",
-                        "deleted-data-files": "0",
-                    },
-                }
-            ]
-            md["current-snapshot-id"] = snap_id
             try:
-                self._commit_metadata(table.metadata_version + 1, md)
-                return snap_id
+                return self._commit_deletes(
+                    table, snap_id, "del", _entry_schema([]), [del_file], 2
+                )
             except IcebergCommitConflict:
                 continue
         raise IcebergCommitConflict(f"{self.table_path}: gave up after retries")
@@ -3571,15 +3444,8 @@ class IcebergWriter:
         import uuid as _uuid
         from collections import defaultdict
 
-        from plankton_spark.sources import puffin as _puffin
-        from plankton_spark.sources.avro_ocf import (
-            read_ocf_generic,
-            write_ocf_generic,
-        )
-
         for _ in range(20):
             table = IcebergTable(self.table_path)
-            schema = table.schema()
             full, pos_dels, eq_dels, dv_dels = table.scan_entries_full(None)
             if pos_dels or eq_dels:
                 raise ValueError(
@@ -3587,221 +3453,76 @@ class IcebergWriter:
                     "with v2 position/equality deletes — OPTIMIZE to "
                     "clean files first, then use DVs"
                 )
-            entries = [(p, pv) for p, pv, _seq, _sid in full]
-            if not entries:
+            if not full:
                 return None
-            # round 12: read_iceberg now applies row-level deletes
-            # over multi-spec snapshots (per-spec union scan feeding
-            # the spec-agnostic subtraction), so the round-9
-            # would-brick-the-table refusal is lifted — the predicate
-            # evaluates on the per-spec assembly below, each file
-            # against ITS spec's identity columns (round-9 review-2
-            # #2, generalized)
-            # Same identity rule the DV-aware READ enforces (the safe
-            # regex at _posdelete_filtered_read): hits are keyed by the
-            # basename of the URI-ENCODED `_metadata.file_path`, while
-            # rel_of/prior_sets key by the raw os.path basename — a
-            # name that needs encoding (space, %) would KeyError after
-            # the collect, and a raw name colliding with another file's
-            # encoded form would silently mis-attribute deletes.
-            # URI-safe names encode to themselves; refuse otherwise.
-            import re as _re
-
-            _safe = _re.compile(r"[A-Za-z0-9._-]+\Z")
-            _seen: set[str] = set()
-            for _p, _pv in entries:
-                _b = os.path.basename(_p)
-                if _b in _seen or not _safe.fullmatch(_b):
-                    raise ValueError(
-                        f"{self.table_path}: cannot key DV hit "
-                        "attribution by file basename: duplicate or "
-                        f"URI-unsafe name {_b!r}"
-                    )
-                _seen.add(_b)
-            live = _assemble_multispec(
-                self.spark, table, schema, full, with_pos=True
+            # the predicate evaluates over the live rows of the
+            # per-spec assembly (each file against ITS spec's identity
+            # columns), and each hit file's prior DV positions join
+            # its hits: a re-hit file's new DV supersedes the old one
+            deletes = _position_deletes(self.spark, (), dv_dels)
+            rel_of, hits = self._position_hits(
+                table, full, deletes, condition, "DV hit attribution",
+                prior=deletes[0][0] if deletes else None,
             )
-            hits_df = live.where(rw.matched(condition)).select(
-                F.substring_index(F.col("__pd_file"), "/", -1).alias("f"),
-                F.col("__pd_ridx").alias("pos"),
-            )
-            raw_hits: dict[str, set[int]] = defaultdict(set)
-            for r in hits_df.collect():
-                raw_hits[r["f"]].add(int(r["pos"]))
-            if not raw_hits:
-                return None
-            # prior DVs: decode ONLY the blobs of files the predicate
-            # hit (memory/IO bounded by re-hit files, not every DV'd
-            # file in the table — round-9 review-2 #6); a row already
-            # deleted must not re-hit, and re-hit files MERGE
-            prior_sets: dict[str, set[int]] = {}
-            for pp, ref, off, sz, _card in dv_dels:
-                base = os.path.basename(ref.rstrip("/"))
-                if base in raw_hits:
-                    prior_sets.setdefault(base, set()).update(
-                        _puffin.dv_indexes(pp, off, sz)
-                    )
-            by_file: dict[str, set[int]] = {}
-            for f, poss in raw_hits.items():
-                fresh = poss - prior_sets.get(f, set())
-                if fresh:
-                    by_file[f] = fresh
+            by_file: dict[str, set[int]] = defaultdict(set)
+            for f, i in hits.collect():
+                by_file[f].add(int(i))
             if not by_file:
                 return None
-
-            rel_of = {
-                os.path.basename(p): os.path.relpath(p, self.table_path)
-                for p, _ in entries
-            }
-            if len(rel_of) != len(entries):
-                # same uniqueness rule the DV-aware read enforces: a
-                # basename collision across partition dirs would remap
-                # one file's deletes onto another's
-                raise ValueError(
-                    f"{self.table_path}: duplicate data-file basenames "
-                    "across directories — DV hit attribution would be "
-                    "ambiguous"
-                )
-            snap_id = max(
-                s["snapshot-id"] for s in table.metadata["snapshots"]
-            ) + 1
-            blobs, refs = [], []
-            for base in sorted(by_file):
-                merged = sorted(by_file[base] | prior_sets.get(base, set()))
-                blobs.append(
-                    {
-                        "type": "deletion-vector-v1",
-                        "data": _puffin.dv_blob(merged),
-                        "snapshot-id": snap_id,
-                        "properties": {
-                            "referenced-data-file": rel_of[base],
-                            "cardinality": str(len(merged)),
-                        },
-                    }
-                )
-                refs.append((rel_of[base], len(merged)))
+            snap_id = max(s["snapshot-id"] for s in table.metadata["snapshots"]) + 1
+            blobs = [
+                {
+                    "type": "deletion-vector-v1",
+                    "data": _puffin.dv_blob(sorted(by_file[b])),
+                    "snapshot-id": snap_id,
+                    "properties": {
+                        "referenced-data-file": rel_of[b],
+                        "cardinality": str(len(by_file[b])),
+                    },
+                }
+                for b in sorted(by_file)
+            ]
             puffin_rel = f"data/dv-snap{snap_id}-{_uuid.uuid4().hex}.puffin"
             puffin_abs = os.path.join(self.table_path, puffin_rel)
             metas = _puffin.write_puffin(puffin_abs, blobs)
-            puffin_size = os.path.getsize(puffin_abs)
 
-            def dv_entry(fp, ref, off, sz, card, status):
+            def dv_file(fp, ref, off, sz, card):
                 return {
-                    "status": status,
-                    "snapshot_id": snap_id,
-                    "data_file": {
-                        "content": 1,
-                        "file_path": fp,
-                        "file_format": "PUFFIN",
-                        "partition": {},
-                        "record_count": card,
-                        "file_size_in_bytes": (
-                            puffin_size
-                            if fp == puffin_rel
-                            else os.path.getsize(
-                                os.path.join(self.table_path, fp)
-                            )
-                        ),
-                        "referenced_data_file": ref,
-                        "content_offset": off,
-                        "content_size_in_bytes": sz,
-                    },
+                    "content": 1,
+                    "file_path": fp,
+                    "file_format": "PUFFIN",
+                    "partition": {},
+                    "record_count": card,
+                    "file_size_in_bytes": os.path.getsize(
+                        os.path.join(self.table_path, fp)
+                    ),
+                    "referenced_data_file": ref,
+                    "content_offset": off,
+                    "content_size_in_bytes": sz,
                 }
 
-            superseded = set(by_file)
-            new_entries = [
-                dv_entry(puffin_rel, ref, m["offset"], m["length"], card, 1)
-                for (ref, card), m in zip(refs, metas)
+            added = [
+                dv_file(puffin_rel, rel_of[b], m["offset"], m["length"], len(by_file[b]))
+                for b, m in zip(sorted(by_file), metas)
             ]
             # carry forward untouched files' DVs (status 0 EXISTING);
             # record_count comes from the prior manifest entry — no
-            # blob re-read/re-decode per untouched file (review #6);
-            # an unknown (-1) foreign cardinality decodes ONCE here so
-            # the carried entry records the truth, not a sentinel
-            for pp, ref, off, sz, card in dv_dels:
-                base = os.path.basename(ref.rstrip("/"))
-                if base in superseded:
-                    continue
-                if card < 0:
-                    card = len(_puffin.dv_indexes(pp, off, sz))
-                new_entries.append(
-                    dv_entry(
-                        os.path.relpath(pp, self.table_path),
-                        ref,
-                        off,
-                        sz,
-                        card,
-                        0,
-                    )
+            # blob re-read/re-decode per untouched file; an unknown
+            # (-1) foreign cardinality decodes ONCE here so the
+            # carried entry records the truth, not a sentinel
+            kept = [
+                dv_file(
+                    os.path.relpath(pp, self.table_path), ref, off, sz,
+                    card if card >= 0 else len(_puffin.dv_indexes(pp, off, sz)),
                 )
-            m_name = self._unique(f"m{snap_id}-dv")
-            m_path = os.path.join(self.meta_dir, m_name)
-            write_ocf_generic(
-                m_path, _DV_ENTRY_SCHEMA_V3, new_entries
-            )
-            prev = table._snapshot(None)
-            prev_ml = table._resolve(prev["manifest-list"])
-
-            def _carried_content(m: dict) -> int:
-                # Manifest-list records SHOULD carry content (0=data,
-                # 1=deletes). A foreign list that omits it must not
-                # default a DELETE manifest to data — its DV entries
-                # were just merged into the new manifest, and carrying
-                # the old one forward would leave TWO live DV entries
-                # per file (breaking the at-most-one-DV invariant) and
-                # keep stale Puffin files live. Classify by the
-                # manifest's own entries' data_file.content instead.
-                if m.get("content") is not None:
-                    return int(m["content"])
-                cs = {
-                    int((e.get("data_file") or {}).get("content") or 0)
-                    for e in read_ocf_generic(
-                        table._resolve(m["manifest_path"])
-                    )
-                }
-                return 0 if cs <= {0} else 1
-
-            manifests = [
-                {**m, "content": 0}
-                for m in read_ocf_generic(prev_ml)
-                if _carried_content(m) == 0  # drop prior delete manifests
-            ] + [
-                {
-                    "manifest_path": f"metadata/{m_name}",
-                    "manifest_length": os.path.getsize(m_path),
-                    "partition_spec_id": 0,
-                    "content": 1,
-                    "added_snapshot_id": snap_id,
-                }
+                for pp, ref, off, sz, card in dv_dels
+                if os.path.basename(ref.rstrip("/")) not in by_file
             ]
-            ml_name = self._unique(f"snap-{snap_id}")
-            # same carried-seq preservation as delete_where_pos: the
-            # lineage fixture's _last_updated_sequence_number rides on
-            # these numbers
-            _write_manifest_list(
-                os.path.join(self.meta_dir, ml_name), manifests
-            )
-            md = dict(table.metadata)
-            md["format-version"] = 3
-            dv_snap = {
-                "snapshot-id": snap_id,
-                "timestamp-ms": int(_time.time() * 1000),
-                "manifest-list": f"metadata/{ml_name}",
-                "summary": {
-                    "operation": "delete",
-                    "added-data-files": "0",
-                    "deleted-data-files": "0",
-                },
-            }
-            if md.get("next-row-id") is not None:
-                # v3 row lineage: a delete snapshot adds no rows, so
-                # its first-row-id equals the table's next-row-id
-                dv_snap["first-row-id"] = int(md["next-row-id"])
-            md["snapshots"] = md["snapshots"] + [dv_snap]
-            md["current-snapshot-id"] = snap_id
             try:
-                self._commit_metadata(table.metadata_version + 1, md)
-                return snap_id
+                return self._commit_deletes(
+                    table, snap_id, "dv", _DV_ENTRY_SCHEMA_V3, added, 3,
+                    kept=kept,
+                )
             except IcebergCommitConflict:
                 continue
         raise IcebergCommitConflict(f"{self.table_path}: gave up after retries")
@@ -3830,17 +3551,11 @@ class IcebergWriter:
 
         import pyarrow.parquet as _pq
 
-        from plankton_spark.sources.avro_ocf import (
-            read_ocf_generic,
-            write_ocf_generic,
-        )
-
         if keys_df.isEmpty():
             return None
         key_cols = list(keys_df.columns)
         table0 = IcebergTable(self.table_path)
-        tschema = table0.schema()
-        by_name = {f.name: f for f in tschema.fields}
+        by_name = {f.name: f for f in table0.schema().fields}
         missing = sorted(set(key_cols) - set(by_name))
         if missing:
             raise ValueError(
@@ -3856,7 +3571,6 @@ class IcebergWriter:
             if s.get("schema-id", 0) == md0.get("current-schema-id", 0)
         )
         ids_by_name = {f["name"]: f["id"] for f in cur["fields"]}
-        eq_ids = [ids_by_name[c] for c in key_cols]
         # stage the key rows once, typed exactly as the table declares
         # them (a long/int mismatch would silently never match)
         keys = keys_df.select(
@@ -3867,11 +3581,7 @@ class IcebergWriter:
         part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
         for _ in range(20):
             table = IcebergTable(self.table_path)
-            md = dict(table.metadata)
-            snap_id = max(
-                s["snapshot-id"] for s in md["snapshots"]
-            ) + 1
-            new_seq = (md.get("last-sequence-number") or 0) + 1
+            snap_id = max(s["snapshot-id"] for s in table.metadata["snapshots"]) + 1
             rel = f"data/eqdel-snap{snap_id}-{_uuid.uuid4().hex}.parquet"
             dst = os.path.join(self.table_path, rel)
             _shutil.copyfile(part, dst)
@@ -3882,56 +3592,126 @@ class IcebergWriter:
                 "partition": {},
                 "record_count": _pq.ParquetFile(dst).metadata.num_rows,
                 "file_size_in_bytes": os.path.getsize(dst),
-                "equality_ids": eq_ids,
+                "equality_ids": [ids_by_name[c] for c in key_cols],
             }
-            m_name = self._unique(f"m{snap_id}-eqdel")
-            m_path = os.path.join(self.meta_dir, m_name)
-            write_ocf_generic(
-                m_path,
-                _EQ_ENTRY_SCHEMA,
-                [{"status": 1, "snapshot_id": snap_id, "data_file": del_file}],
-            )
-            prev = table._snapshot(None)
-            prev_ml = table._resolve(prev["manifest-list"])
-            manifests = list(read_ocf_generic(prev_ml)) + [
-                {
-                    "manifest_path": f"metadata/{m_name}",
-                    "manifest_length": os.path.getsize(m_path),
-                    "partition_spec_id": 0,
-                    "content": 1,
-                    "sequence_number": new_seq,
-                    "added_snapshot_id": snap_id,
-                }
-            ]
-            ml_name = self._unique(f"snap-{snap_id}")
-            _write_manifest_list(
-                os.path.join(self.meta_dir, ml_name), manifests
-            )
-            md["format-version"] = 2
-            md["last-sequence-number"] = new_seq
-            md["snapshots"] = md["snapshots"] + [
-                {
-                    "snapshot-id": snap_id,
-                    "timestamp-ms": int(_time.time() * 1000),
-                    "manifest-list": f"metadata/{ml_name}",
-                    # spec: summary.operation is REQUIRED (v2)
-                    "summary": {
-                        "operation": "delete",
-                        "added-data-files": "0",
-                        "deleted-data-files": "0",
-                    },
-                }
-            ]
-            md["current-snapshot-id"] = snap_id
             try:
-                self._commit_metadata(table.metadata_version + 1, md)
+                sid = self._commit_deletes(
+                    table, snap_id, "eqdel", _EQ_ENTRY_SCHEMA, [del_file], 2,
+                    seq=(table.metadata.get("last-sequence-number") or 0) + 1,
+                )
                 _shutil.rmtree(tmp, ignore_errors=True)
-                return snap_id
+                return sid
             except IcebergCommitConflict:
                 os.remove(dst)
                 continue
         _shutil.rmtree(tmp, ignore_errors=True)
         raise IcebergCommitConflict(f"{self.table_path}: gave up after retries")
+
+    def _position_hits(self, table, full, deletes, condition, what, prior=None):
+        """(basename → table-relative path of every live data file,
+        the positions of the live rows where `condition` holds) for a
+        merge-on-read delete: the per-spec assembly of `full` minus
+        `deletes`, with `prior` as in `positions.hits`. Each file is
+        assembled against its own spec's identity columns: the default
+        spec's would read an evolved table's old-spec partition
+        columns as NULL and silently miss rows. Data files whose
+        basenames cannot key the join refuse, naming `what`."""
+        rel_of = {
+            b: os.path.relpath(p, self.table_path)
+            for b, p in positions.basenames(
+                (e[0] for e in full),
+                lambda b: ValueError(
+                    f"{self.table_path}: cannot key {what} by file basename: "
+                    f"duplicate or URI-unsafe name {b!r}"
+                ),
+            ).items()
+        }
+        scan = _assemble_multispec(
+            self.spark, table, table.schema(), full, with_pos=True
+        )
+        live = positions.live(scan, deletes)
+        return rel_of, positions.hits(live, condition, prior)
+
+    def _commit_deletes(
+        self, table, snap_id, tag, entry_schema, added, version, seq=None,
+        kept=None,
+    ) -> int:
+        """Commit snapshot `snap_id`, a delete: one new manifest lists
+        the delete files `added` (and, with `kept`, the still-live
+        delete files it re-lists as EXISTING, superseding every prior
+        delete manifest, which the snapshot then drops). `seq` gives
+        the manifest that sequence number and advances
+        `last-sequence-number`. A delete adds no rows, so on a
+        lineage table the snapshot's first-row-id is the table's
+        next-row-id. `format-version` rises to `version` and never
+        falls. Raises IcebergCommitConflict when another commit won."""
+        m_name = self._unique(f"m{snap_id}-{tag}")
+        m_path = os.path.join(self.meta_dir, m_name)
+        write_ocf_generic(
+            m_path,
+            entry_schema,
+            [{"status": 1, "snapshot_id": snap_id, "data_file": f} for f in added]
+            + [{"status": 0, "snapshot_id": snap_id, "data_file": f} for f in kept or []],
+        )
+
+        def content(m: dict) -> int:
+            # Manifest-list records SHOULD carry content (0=data,
+            # 1=deletes). A foreign list that omits it must not
+            # default a DELETE manifest to data when it is superseded:
+            # carrying it forward would leave TWO live DV entries per
+            # file (breaking the at-most-one-DV invariant) and keep
+            # stale Puffin files live. Classify by the manifest's own
+            # entries' data_file.content instead.
+            if m.get("content") is not None or kept is None:
+                return int(m.get("content") or 0)
+            cs = {
+                int((e.get("data_file") or {}).get("content") or 0)
+                for e in read_ocf_generic(table._resolve(m["manifest_path"]))
+            }
+            return 0 if cs <= {0} else 1
+
+        manifests = []
+        for m in read_ocf_generic(table._resolve(table._snapshot(None)["manifest-list"])):
+            c = content(m)
+            if kept is None or c == 0:
+                manifests.append({**m, "content": c})
+        manifests.append(
+            {
+                "manifest_path": f"metadata/{m_name}",
+                "manifest_length": os.path.getsize(m_path),
+                "partition_spec_id": 0,
+                "content": 1,
+                "added_snapshot_id": snap_id,
+                **({} if seq is None else {"sequence_number": seq}),
+            }
+        )
+        ml_name = self._unique(f"snap-{snap_id}")
+        # _write_manifest_list preserves carried sequence numbers
+        # (a foreign v3/lineage table's data manifests carry them;
+        # re-listing with the seq-less record shape would zero every
+        # file's data sequence)
+        _write_manifest_list(os.path.join(self.meta_dir, ml_name), manifests)
+        md = dict(table.metadata)
+        md["format-version"] = max(int(md.get("format-version") or 1), version)
+        if seq is not None:
+            md["last-sequence-number"] = seq
+        snap = {
+            "snapshot-id": snap_id,
+            "timestamp-ms": int(_time.time() * 1000),
+            "manifest-list": f"metadata/{ml_name}",
+            # spec: summary.operation is REQUIRED (v2)
+            "summary": {
+                "operation": "delete",
+                "added-data-files": "0",
+                "deleted-data-files": "0",
+            },
+        }
+        if md.get("next-row-id") is not None:
+            snap["first-row-id"] = int(md["next-row-id"])
+        md["snapshots"] = md["snapshots"] + [snap]
+        md["current-snapshot-id"] = snap_id
+        self._commit_metadata(table.metadata_version + 1, md)
+        return snap_id
 
     def set_property(self, key: str, value: str) -> None:
         """SET TBLPROPERTIES for Iceberg: metadata-only commit updating

@@ -315,14 +315,18 @@ def test_delete_where_dv_merges_per_file(spark, tmp_path):
     assert total == len([k for k in range(30) if k % 5 == 0 or k % 7 == 0])
 
 
-def test_delete_where_dv_noop_returns_none(spark, tmp_path):
+@pytest.mark.parametrize("verb", ["delete_where_dv", "delete_where_pos"])
+def test_delete_where_dv_noop_returns_none(spark, tmp_path, verb):
     from pyspark.sql import functions as F
 
     root, w = _fresh_table(spark, tmp_path, "wdv3")
-    assert w.delete_where_dv(F.col("k") > 1000) is None
+    delete = getattr(w, verb)
+    assert delete(F.col("k") > 1000) is None
     # already-deleted rows re-hit -> no new snapshot either
-    w.delete_where_dv(F.col("k") == 3)
-    assert w.delete_where_dv(F.col("k") == 3) is None
+    delete(F.col("k") == 3)
+    snapshots = len(IcebergTable(root).metadata["snapshots"])
+    assert delete(F.col("k") == 3) is None
+    assert len(IcebergTable(root).metadata["snapshots"]) == snapshots
 
 
 def test_delete_where_dv_refuses_v2_mix(spark, tmp_path):

@@ -561,3 +561,32 @@ def test_dv_delete_preserves_carried_sequence_numbers(spark, tmp_path):
         for r in read_iceberg(spark, root, with_lineage=True).collect()
     }
     assert set(rows) == {k for k in list(range(20)) + [100 + i for i in range(5)] if k % 4 != 0}
+
+
+@pytest.mark.parametrize("verb", ["pos", "eq"])
+def test_pos_and_eq_deletes_never_lower_format_version(spark, tmp_path, verb):
+    """A v2-form delete (position or equality delete file) on a v3
+    lineage table keeps format-version 3, and its snapshot records
+    first-row-id == next-row-id like a DV delete's (a delete adds no
+    rows). Survivors keep their ids."""
+    root, w = _mk(spark, tmp_path, f"fmt_{verb}")
+    w.delete_where_dv(F.col("k") % 7 == 0)
+    w.optimize(num_files=1)
+    before = {
+        r["k"]: r["_row_id"]
+        for r in read_iceberg(spark, root, with_lineage=True).collect()
+    }
+    if verb == "pos":
+        w.delete_where_pos(F.col("k") < 5)
+    else:
+        w.delete_where_eq(spark.createDataFrame([(k,) for k in range(5)], "k long"))
+    t = IcebergTable(root)
+    assert t.metadata["format-version"] == 3
+    snap = t.metadata["snapshots"][-1]
+    assert snap["summary"]["operation"] == "delete"
+    assert snap["first-row-id"] == t.metadata["next-row-id"]
+    after = {
+        r["k"]: r["_row_id"]
+        for r in read_iceberg(spark, root, with_lineage=True).collect()
+    }
+    assert after == {k: rid for k, rid in before.items() if k >= 5}

@@ -187,6 +187,47 @@ def test_replace_where_job_count(spark, tmp_path, fmt):
     assert got == [(k, k * (1.0 if k % 5 == 3 else 0.5)) for k in range(200)]
 
 
+# Merge-on-read verbs (deletion vectors, position and equality deletes)
+# mark rows instead of rewriting files. Each runs on a table of its own
+# so the pins above keep their tables; a rise means the verb picked up
+# a job. After the verb, building a snapshot read of the table, whose
+# deletes it must subtract, still runs no job.
+MOR_JOBS = {
+    ("delta", "delete_where_dv"): 2,
+    ("delta", "update_where_dv"): 4,
+    ("iceberg", "delete_where_pos"): 3,
+    ("iceberg", "delete_where_dv"): 1,
+    ("iceberg", "delete_where_eq"): 2,
+}
+
+
+@pytest.mark.parametrize("fmt,verb", sorted(MOR_JOBS))
+def test_merge_on_read_job_count(spark, tmp_path, fmt, verb):
+    path = str(tmp_path / verb)
+    w = {"delta": DeltaLogWriter, "iceberg": IcebergWriter}[fmt](spark, path)
+    w.create(_rows(spark, 0, 200).coalesce(2))
+    cond = F.col("grp") == 1
+    call = {
+        "delete_where_dv": lambda: w.delete_where_dv(cond),
+        "update_where_dv": lambda: w.update_where_dv({"v": F.col("v") + 1}, cond),
+        "delete_where_pos": lambda: w.delete_where_pos(cond),
+        "delete_where_eq": lambda: w.delete_where_eq(
+            _rows(spark, 0, 200).where(cond).select("k")
+        ),
+    }[verb]
+    _, n = _jobs(spark, call)
+    assert n == MOR_JOBS[(fmt, verb)]
+    read = {"delta": read_delta, "iceberg": read_iceberg}[fmt]
+    df, n = _jobs(spark, lambda: read(spark, path))
+    assert n == 0, f"{fmt}: building a {verb} snapshot read ran {n} Spark job(s)"
+    got = sorted((r.k, r.v) for r in df.collect())
+    if verb == "update_where_dv":
+        want = [(k, k * 0.5 + (k % 5 == 1)) for k in range(200)]
+    else:
+        want = [(k, k * 0.5) for k in range(200) if k % 5 != 1]
+    assert got == want
+
+
 def test_local_frame_is_a_local_relation(spark):
     df = local_frame(
         spark,
