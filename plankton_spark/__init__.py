@@ -17,4 +17,12 @@ Layout:
 - ``framework`` — plankton-parity Pipeline/Operator/ledger (§2.12).
 """
 
+import os
+
 __version__ = "0.1.0"
+
+# Root of the engine's scratch tables, sinks, checkpoints and SQL
+# warehouse: ``.scratch`` (git-ignored) next to this package.
+SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)

@@ -16,7 +16,7 @@ import numpy as np
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from plankton_spark.functions import lit_array
+from plankton_spark.functions import lit_array, lit_array_sql
 from plankton_spark.io import ensure_view, read_table, table_rows
 from plankton_spark.queries.llm_dedup import (
     SQL_PAIR_COSINE,
@@ -737,14 +737,18 @@ KMEANS_DIMS = 64
 # division below is truncation == floor in BOTH engines (they disagree
 # on negative integer division: Spark DIV truncates, DuckDB // floors)
 KMEANS_OFFSET = 2_000_000
-# Above this K, per-row literal argmin expressions (K structs × 64-ary
-# zip_with each) stop paying: measured at K=44 / 2,000 vectors the
-# whole-stage codegen COMPILE time of the ~2,800-term expression
-# dominates the query (11.8 s → 6.3 s warm by switching) — so the
-# literal path is kept only for small K (q_cluster_kmeans's declared
-# K=4, tiny corpora) where staying JVM-side beats Arrow batch setup,
-# and the integer-GEMM assignment (same exact int64 arithmetic) takes
-# over everywhere else.
+# Above this K, the per-row literal argmin (K structs × a 64-ary
+# zip_with + aggregate each) stops paying. Warm fit+assign (2 Lloyd
+# assignments, median of 5, 4 vCPUs, codegen cache warm), literal vs
+# integer GEMM (same exact int64 arithmetic):
+#   500 vectors:   K=4 0.60 / 0.60 s, K=16 0.74 / 0.75 s, K=44 1.39 / 0.83 s
+#   2,000 vectors: K=4 0.86 / 0.80 s, K=16 0.90 / 0.72 s, K=44 2.11 / 0.78 s
+# The literal cost is per-row evaluation growing with K, not compile
+# time: each new K compiles 2 classes once, then reuses them. At
+# K ≤ 16 the paths tie on small corpora, and adaptive K only lands
+# there for corpora under 289 vectors, so the literal path stays for
+# q_cluster_kmeans's declared K=4 and tiny corpora, and GEMM takes
+# every larger K.
 LITERAL_ASSIGN_MAX_K = 16
 # Adaptive-K SQL (DuckDB + Spark agree: IEEE-754 sqrt is correctly
 # rounded, so FLOOR(SQRT(n)) is engine-independent for n < 2^52).
@@ -1304,24 +1308,16 @@ def _kmeans_fit_assign_impl(spark, sf_dir, k: int | None):
     }
 
     def best_of(cent_map):
-        options = F.array(
-            *[
-                F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            "v",
-                            lit_array(list(cvec)),
-                            lambda x, y: (x - y) * (x - y),
-                        ),
-                        F.lit(0).cast("long"),
-                        lambda acc, x: acc + x,
-                    ).alias("d2"),
-                    F.lit(k).cast("int").alias("k"),
-                )
-                for k, cvec in sorted(cent_map.items())
-            ]
+        # one parsed SQL expression: the K structs built from
+        # F.struct/F.aggregate/F.zip_with lambdas made a warm
+        # q_cluster_kmeans build 1,763 py4j round trips, this 469
+        options = ",".join(
+            "named_struct('d2', aggregate(zip_with(v, "
+            f"{lit_array_sql(list(cvec))}, (x, y) -> (x - y) * (x - y)), "
+            f"CAST(0 AS BIGINT), (acc, x) -> acc + x), 'k', CAST({k} AS INT))"
+            for k, cvec in sorted(cent_map.items())
         )
-        return F.array_min(options)
+        return F.expr(f"array_min(array({options}))")
 
     def assign(cent_map):
         if len(cent_map) <= LITERAL_ASSIGN_MAX_K:

@@ -17,11 +17,12 @@ import os
 
 from pyspark.sql import functions as F
 
+from plankton_spark import SCRATCH_ROOT
 from plankton_spark.functions import dsum, sql_sum
 from plankton_spark.io import SCHEMAS, read_table
 from plankton_spark.registry import query
 
-SCRATCH = "/root/repo/.scratch"
+SCRATCH = SCRATCH_ROOT
 
 
 def _scratch(sf_dir: str, name: str) -> str:

@@ -21,9 +21,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from plankton_spark import SCRATCH_ROOT
 from plankton_spark.io import table_path
 
-SCRATCH = "/root/repo/.scratch/streaming"
+SCRATCH = os.path.join(SCRATCH_ROOT, "streaming")
 
 # State-store partition count for the STATEFUL streaming shadows
 # (optimization round 13). A stateful operator spins one state-store

@@ -5,10 +5,12 @@ repo scratch dir."""
 
 from __future__ import annotations
 
+import os
 import re
 
 from pyspark.sql import functions as F
 
+from plankton_spark import SCRATCH_ROOT
 from plankton_spark.io import read_table
 from tests.conftest import SF0001
 from tests.test_plans import plan_of
@@ -22,7 +24,9 @@ def test_bucketed_join_has_no_shuffle(spark):
     spark.sql("DROP TABLE IF EXISTS bucketdemo.orders_b")
     spark.sql("DROP TABLE IF EXISTS bucketdemo.customer_b")
     # in-memory catalog: DROP TABLE forgets orphaned managed dirs
-    shutil.rmtree("/root/repo/.scratch/warehouse/bucketdemo.db", ignore_errors=True)
+    shutil.rmtree(
+        os.path.join(SCRATCH_ROOT, "warehouse", "bucketdemo.db"), ignore_errors=True
+    )
 
     read_table(spark, SF0001, "orders").write.bucketBy(8, "o_custkey").sortBy(
         "o_custkey"
@@ -88,8 +92,6 @@ def test_scan_bloom_writes_filter_bytes(spark, tmp_path):
     in the file: same data written with and without the option, the
     bloom variant is measurably larger (pyarrow 16 doesn't expose
     bloom offsets, so byte delta is the observable)."""
-    import os
-
     d = read_table(spark, SF0001, "orders").coalesce(1)
     plain, bloom = str(tmp_path / "plain"), str(tmp_path / "bloom")
     d.write.mode("overwrite").parquet(plain)

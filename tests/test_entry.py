@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import importlib
+from pathlib import Path
 
 from tests.conftest import SF0001
 
@@ -10,7 +11,7 @@ from tests.conftest import SF0001
 def _entry_module():
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     return importlib.import_module("__spark_entry__")
 
 

@@ -4,17 +4,19 @@ detection, fingerprint chaining, ledger cache-skip, observability."""
 from __future__ import annotations
 
 import dataclasses
+import os
 
 import pytest
 
 from pyspark.sql import functions as F
 
+from plankton_spark import SCRATCH_ROOT
 from plankton_spark.framework import CycleError, Operator, Pipeline, RunLedger, fingerprint
 from plankton_spark.framework.pipeline import pipeline_status
 from plankton_spark.io import read_table
 from tests.conftest import SF0001
 
-SCRATCH = "/root/repo/.scratch/framework"
+SCRATCH = os.path.join(SCRATCH_ROOT, "framework")
 
 
 @dataclasses.dataclass(frozen=True)

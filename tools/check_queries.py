@@ -61,7 +61,17 @@ def main() -> int:
         for d in res.diffs:
             print(f"       {d[:220]}")
         n_ok += res.ok
-    print(f"== {n_ok}/{len(names)} passed in {time.time() - t0:.1f}s (sf={args.sf})")
+    # Janino compiles in this JVM and their total time: what sizes and
+    # re-checks session.CODEGEN_CACHE_ENTRIES
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    n_compiles = metrics.METRIC_COMPILATION_TIME().getCount()
+    compile_s = codegen.compileTime() / 1e9
+    print(
+        f"== {n_ok}/{len(names)} passed in {time.time() - t0:.1f}s (sf={args.sf}) "
+        f"codegen: {n_compiles} compiles in {compile_s:.1f}s"
+    )
     return 0 if n_ok == len(names) else 1
 
 
