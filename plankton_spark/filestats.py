@@ -1,8 +1,10 @@
-"""Shared parquet-footer statistics helpers for the table formats
-(planktable, Delta log, Iceberg) — one encoder, one footer reader, so
-a fix to either reaches every format (the round-6 review found two
-parallel implementations drifting: table_format's lacked the
-bytes-decode branch delta_log's had).
+"""Parquet-footer statistics shared by the table formats: one value
+encoder (`stat_encode`) and one footer reader (`footer_stats`, or
+`file_stats` for a path), so a fix to either reaches every format.
+Delta records the Delta-spec dict as is and PlankTable keeps its
+min/max; files a commit writes are read once, in the staging kernel
+(`sources/stage.py`). Also the partition-value guards and the
+in-place conversion inventory the formats share.
 """
 
 from __future__ import annotations
@@ -26,11 +28,17 @@ def stat_encode(v):
 
 
 def file_stats(path: str) -> dict:
-    """Delta-spec per-file stats from the parquet footer (no data IO):
-    {"numRecords", "minValues", "maxValues", "nullCount"}."""
+    """`footer_stats` of the parquet file at `path` (no data IO)."""
     import pyarrow.parquet as pq
 
-    md = pq.ParquetFile(path).metadata
+    return footer_stats(pq.ParquetFile(path).metadata)
+
+
+def footer_stats(md) -> dict:
+    """Delta-spec per-file stats from parquet footer metadata `md`:
+    {"numRecords", "minValues", "maxValues", "nullCount"}. Columns
+    whose min/max pyarrow cannot extract (DECIMAL) or that decode to
+    None (binary) have no min/max."""
     mins: dict = {}
     maxs: dict = {}
     nulls: dict = {}
@@ -151,14 +159,16 @@ def inventory_hive_dir(table_path, type_for=None):
     (convert_to_delta / convert_to_iceberg share this — the two loops
     had already been written twice and would silently diverge on the
     next parsing fix): returns ([(rel_path, partition_values)],
-    part_keys). Hive ``key=value`` segments parse in order;
-    ``__HIVE_DEFAULT_PARTITION__`` maps to None; ``type_for(key,
-    raw_string)`` types each value (default: keep the string).
+    part_keys). Hive ``key=value`` segments decode in order through the
+    staging kernel's `hive_values` (the default partition maps to
+    None); ``type_for(key, raw_string)`` types each value (default:
+    keep the string).
     Refuses non-hive subdirectories, inconsistent layouts, and
     directories with no parquet file."""
     import glob as _glob
     import os
-    import urllib.parse as _url
+
+    from plankton_spark.sources.stage import hive_values
 
     files = sorted(
         p
@@ -176,21 +186,15 @@ def inventory_hive_dir(table_path, type_for=None):
     inventory = []
     for p in files:
         rel = os.path.relpath(p, table_path)
-        keys = []
-        pv = {}
-        for piece in rel.split(os.sep)[:-1]:
-            k, eq, raw = piece.partition("=")
-            if not eq:
-                raise ValueError(
-                    f"{table_path}: non-hive subdirectory {piece!r} — "
-                    "cannot infer a partition column from it"
-                )
-            keys.append(k)
-            v = _url.unquote(raw)
-            if v == "__HIVE_DEFAULT_PARTITION__":
-                pv[k] = None
-            else:
-                pv[k] = type_for(k, v) if type_for is not None else v
+        try:
+            raw = hive_values(os.path.dirname(rel))
+        except ValueError as e:
+            raise ValueError(f"{table_path}: {e}") from None
+        keys = list(raw)
+        pv = {
+            k: v if v is None or type_for is None else type_for(k, v)
+            for k, v in raw.items()
+        }
         if part_keys is None:
             part_keys = keys
         elif keys != part_keys:

@@ -34,8 +34,8 @@ SHIP_CUTOFF = "1998-09-02"
 # parity pattern. The DataFrame formulation it replaces (optimization
 # round 13) built the same expression tree through ~250 py4j round
 # trips (~0.2 s of driver latency per bench invocation); the parsed
-# text is one round trip and the physical plan is unchanged
-# (plans/r13/q_agg_group_{before,after}.txt).
+# text is one round trip and the physical plan is unchanged (compared
+# as `.explain("formatted")` before and after the rewrite).
 #
 # Decimal widths are the NARROW domain-verified images from
 # plankton_spark.functions (optimization round 13, guide §2.3): the

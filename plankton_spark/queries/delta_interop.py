@@ -9,7 +9,6 @@ mix-up) fails the value hash."""
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -19,19 +18,17 @@ from pyspark.sql import functions as F
 from plankton_spark.io import read_table
 from plankton_spark.queries.scans import _scratch
 from plankton_spark.registry import query
+from plankton_spark.sources import stage
 from plankton_spark.sources.delta_log import read_delta
 
 
 def _write_data_file(df, root: str, rel_dir: str, name: str) -> str:
     """Write `df` as a single parquet file at `<root>/<rel_dir>/<name>`
     (Delta data files exclude partition columns; caller drops them)."""
-    tmp = os.path.join(root, "_tmp_write")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    os.makedirs(os.path.join(root, rel_dir) if rel_dir else root, exist_ok=True)
     rel = f"{rel_dir}/{name}" if rel_dir else name
-    os.replace(part, os.path.join(root, rel))
-    shutil.rmtree(tmp)
+    tmp = os.path.join(root, "_tmp_write")
+    if not stage.write(df.coalesce(1), tmp, root, lambda _rel, _values: rel):
+        raise ValueError(f"{rel}: no rows to write")
     return rel
 
 

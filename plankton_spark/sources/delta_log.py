@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,6 +35,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from plankton_spark.sources import positions
 from plankton_spark.sources import rewrite as rw
+from plankton_spark.sources import stage
 from plankton_spark.sources.assemble import local_frame
 from plankton_spark.sources.deletion_vectors import dv_row_indexes, write_dv_file
 
@@ -978,6 +980,7 @@ def register(spark) -> None:
 
 from plankton_spark.filestats import _reject_empty_string_partitions  # noqa: E402
 from plankton_spark.filestats import file_stats as _file_stats  # noqa: E402
+from plankton_spark.filestats import footer_stats as _footer_stats  # noqa: E402
 from plankton_spark.filestats import stat_encode as _stat_encode  # noqa: E402
 from plankton_spark.filestats import apply_partition_schema as _apply_partition_schema  # noqa: E402
 
@@ -1725,67 +1728,36 @@ class DeltaLogWriter:
             )
 
     def _stage(self, df, part_cols: list[str] | None = None) -> list[dict]:
-        """Write df's partitions as parquet files under the table root;
-        return their `add` actions. With `part_cols`, files land in
-        hive-style subdirectories (col=value/...), the partition
+        """Stage df through the staging kernel (0-row files dropped)
+        and return their `add` actions. With `part_cols`, files land
+        in hive-style subdirectories (col=value/...), the partition
         columns are dropped from file content per the Delta spec, and
         each add action carries the partitionValues dict the reader
         re-attaches (and prunes on). Declared CHECK constraints are
-        enforced on every staged frame. 0-row files (the one file
-        Spark writes for an empty frame) are discarded, so a rewrite
-        need not probe its survivors before staging them."""
+        enforced on every staged frame."""
         self._enforce_constraints(df)
-        import glob as _glob
-        import shutil as _shutil
-        import urllib.parse as _url
-        import uuid as _uuid
-
-        tmp = os.path.join(self.table_path, f"_stage-{_uuid.uuid4().hex}")
         if part_cols:
             _reject_empty_string_partitions(df, part_cols, self.table_path)
-            df.write.partitionBy(*part_cols).mode("overwrite").parquet(tmp)
-        else:
-            df.write.mode("overwrite").parquet(tmp)
-        adds = []
-        os.makedirs(self.table_path, exist_ok=True)
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "**", "part-*.parquet"), recursive=True)
-        ):
-            stats = _file_stats(part)
-            if stats["numRecords"] == 0:
-                continue  # removed with the stage dir below
-            subdir = os.path.relpath(os.path.dirname(part), tmp)
-            pv: dict[str, str | None] = {}
-            if subdir != ".":
-                for piece in subdir.split(os.sep):
-                    k, _, raw = piece.partition("=")
-                    v = _url.unquote(raw)
-                    pv[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-                os.makedirs(
-                    os.path.join(self.table_path, subdir), exist_ok=True
-                )
-            rel = os.path.join(
-                "" if subdir == "." else subdir,
-                f"part-{_uuid.uuid4().hex}.parquet",
-            )
-            dst = os.path.join(self.table_path, rel)
-            os.replace(part, dst)
-            adds.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": pv,
-                        "size": os.path.getsize(dst),
-                        "modificationTime": int(os.path.getmtime(dst) * 1000),
-                        "dataChange": True,
-                        # per-file column stats per the Delta spec —
-                        # what MERGE's key-range file pruning reads
-                        "stats": json.dumps(stats),
-                    }
+        return [
+            {
+                "add": {
+                    "path": s.path,
+                    "partitionValues": s.values,
+                    "size": s.stat.st_size,
+                    "modificationTime": int(s.stat.st_mtime * 1000),
+                    "dataChange": True,
+                    # per-file column stats per the Delta spec —
+                    # what MERGE's key-range file pruning reads
+                    "stats": json.dumps(_footer_stats(s.meta)),
                 }
-            )
-        _shutil.rmtree(tmp, ignore_errors=True)
-        return adds
+            }
+            for s in self._staged(df, part_cols, stage.renamed("part-"))
+        ]
+
+    def _staged(self, df, part_cols, dest) -> list:
+        """`stage.write` of df into a `_stage-<uuid>` temp dir."""
+        tmp = os.path.join(self.table_path, f"_stage-{uuid.uuid4().hex}")
+        return stage.write(df, tmp, self.table_path, dest, part_cols)
 
     def _cdf_enabled(self, cfg: dict) -> bool:
         """Whether the table opted into the Change Data Feed protocol
@@ -1794,56 +1766,29 @@ class DeltaLogWriter:
         return str(v).strip().lower() == "true"
 
     def _stage_cdc(self, df, part_cols: list[str] | None = None) -> list[dict]:
-        """Write change rows (table columns + `_change_type`) as
-        parquet under `_change_data/` and return their `cdc` actions
-        (the spec's AddCDCFile). When a commit carries cdc actions,
-        CDF readers use THEM as the commit's complete change set and
-        ignore its add/remove files — which is what lets an UPDATE
-        expose per-row preimage/postimage pairs that no snapshot diff
-        can reconstruct. dataChange is false by spec (the rows are
-        change METADATA, not table content); partitioned tables lay
-        the change files out hive-style under _change_data/ with the
+        """Stage change rows (table columns + `_change_type`) under
+        `_change_data/` and return their `cdc` actions (the spec's
+        AddCDCFile). When a commit carries cdc actions, CDF readers
+        use THEM as the commit's complete change set and ignore its
+        add/remove files — which is what lets an UPDATE expose per-row
+        preimage/postimage pairs that no snapshot diff can
+        reconstruct. dataChange is false by spec (the rows are change
+        METADATA, not table content); partitioned tables lay the
+        change files out hive-style under _change_data/ with the
         partition columns carried in partitionValues, mirroring the
-        data layout so change reads prune the same way."""
-        import glob as _glob
-        import shutil as _shutil
-        import urllib.parse as _url
-        import uuid as _uuid
-
-        tmp = os.path.join(self.table_path, f"_stage-{_uuid.uuid4().hex}")
-        if part_cols:
-            df.write.partitionBy(*part_cols).mode("overwrite").parquet(tmp)
-        else:
-            df.write.mode("overwrite").parquet(tmp)
-        out: list[dict] = []
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "**", "part-*.parquet"), recursive=True)
-        ):
-            subdir = os.path.relpath(os.path.dirname(part), tmp)
-            pv: dict[str, str | None] = {}
-            reldir = _CDC_DIR
-            if subdir != ".":
-                for piece in subdir.split(os.sep):
-                    k, _, raw = piece.partition("=")
-                    v = _url.unquote(raw)
-                    pv[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-                reldir = os.path.join(_CDC_DIR, subdir)
-            os.makedirs(os.path.join(self.table_path, reldir), exist_ok=True)
-            rel = os.path.join(reldir, f"cdc-{_uuid.uuid4().hex}.parquet")
-            dst = os.path.join(self.table_path, rel)
-            os.replace(part, dst)
-            out.append(
-                {
-                    "cdc": {
-                        "path": rel,
-                        "partitionValues": pv,
-                        "size": os.path.getsize(dst),
-                        "dataChange": False,
-                    }
+        data layout so change reads prune the same way. 0-row files
+        are dropped like data files."""
+        return [
+            {
+                "cdc": {
+                    "path": s.path,
+                    "partitionValues": s.values,
+                    "size": s.stat.st_size,
+                    "dataChange": False,
                 }
-            )
-        _shutil.rmtree(tmp, ignore_errors=True)
-        return out
+            }
+            for s in self._staged(df, part_cols, stage.renamed("cdc-", _CDC_DIR))
+        ]
 
     def _rt_rewrite_state(
         self, log: "DeltaLog", schema, part_cols, active
@@ -4420,7 +4365,7 @@ def convert_delta_to_planktable(spark, table_path: str) -> int:
     file-derived schema cannot represent), and snapshot() already
     refuses DV'd or column-mapped sources. The `_delta_log` stays
     behind for the old format's time travel."""
-    from plankton_spark.table_format import PlankTable, _collect_stats
+    from plankton_spark.table_format import PlankTable, _minmax
 
     t = PlankTable(spark, table_path)
     if t.versions():
@@ -4436,7 +4381,7 @@ def convert_delta_to_planktable(spark, table_path: str) -> int:
     adds = [
         {
             "file": os.path.relpath(p, table_path),
-            "stats": _collect_stats(p),
+            "stats": _minmax(_file_stats(p)),
         }
         for p, _ in sorted(files)
     ]

@@ -73,6 +73,7 @@ import shutil
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from plankton_spark.sources import stage
 from plankton_spark.sources.assemble import local_frame
 
 META_COLS = [
@@ -2495,42 +2496,29 @@ class HudiWriter:
 
     def _write_staged_groups(self, staged, instant: str, prev: dict) -> dict:
         """Physical tail of _write_groups: one base file per
-        (partition, fileId), stats from the landed footers."""
-        tmp = os.path.join(self.table_path, f".hoodie/.temp/{instant}")
-        shutil.rmtree(tmp, ignore_errors=True)
+        (partition, fileId), write stats from the staged footers."""
+        groups = set()
+
+        def dest(_rel, values):
+            part, fid = values["__part"] or _UNPARTITIONED, values["__fid"]
+            assert (part, fid) not in groups, f"{fid}: expected 1 file, got more"
+            groups.add((part, fid))
+            return os.path.join(part, f"{fid}_{self.WRITE_TOKEN}_{instant}.parquet")
+
         # _write_groups already clustered the rows by __fid (one
         # shuffle shared with the seqno window), so each group lands
         # wholly in one task and partitionBy emits one file per group
-        (
-            staged.write.partitionBy("__part", "__fid")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        from plankton_spark.filestats import file_stats as _fstats
-
+        tmp = os.path.join(self.table_path, f".hoodie/.temp/{instant}")
         stats: dict[str, list] = {}
-        for fdir in sorted(_glob.glob(os.path.join(tmp, "__part=*", "__fid=*"))):
-            import urllib.parse as _url
-
-            part = _url.unquote(os.path.basename(os.path.dirname(fdir)).split("=", 1)[1])
-            if part == "__HIVE_DEFAULT_PARTITION__":
-                part = _UNPARTITIONED
-            fid = _url.unquote(os.path.basename(fdir).split("=", 1)[1])
-            files = sorted(_glob.glob(os.path.join(fdir, "part-*.parquet")))
-            assert len(files) == 1, f"{fid}: expected 1 file, got {len(files)}"
-            name = f"{fid}_{self.WRITE_TOKEN}_{instant}.parquet"
-            rel = os.path.join(part, name) if part else name
-            dst = os.path.join(self.table_path, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(files[0], dst)
-            n = _fstats(dst)["numRecords"]
+        for s in stage.write(staged, tmp, self.table_path, dest, ["__part", "__fid"]):
+            part, fid = os.path.dirname(s.path), s.values["__fid"]
             stats.setdefault(part, []).append(
                 {
                     "fileId": fid,
-                    "path": rel,
+                    "path": s.path,
                     "prevCommit": prev.get((part, fid), "null"),
-                    "numWrites": n,
-                    "fileSizeInBytes": os.path.getsize(dst),
+                    "numWrites": s.meta.num_rows,
+                    "fileSizeInBytes": s.stat.st_size,
                 }
             )
         shutil.rmtree(os.path.join(self.table_path, ".hoodie/.temp"), ignore_errors=True)

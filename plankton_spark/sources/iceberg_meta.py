@@ -33,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 import time as _time
+import uuid
 
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints under
 # `from __future__ import annotations` (string hints eval in module globals)
@@ -45,6 +46,7 @@ from plankton_spark.filestats import apply_partition_schema as _apply_partition_
 from plankton_spark.sources import positions
 from plankton_spark.sources import puffin as _puffin
 from plankton_spark.sources import rewrite as rw
+from plankton_spark.sources import stage
 from plankton_spark.sources.assemble import local_frame
 from plankton_spark.sources.avro_ocf import read_ocf_generic, write_ocf_generic
 
@@ -1902,10 +1904,8 @@ class IcebergWriter:
         spec: list[dict] | None = None,
         field_ids: dict[str, int] | None = None,
     ) -> list[dict]:
-        """Write df as parquet under data/; return data_file dicts.
-        0-row files (the one file Spark writes for an empty frame) are
-        discarded, so a rewrite need not probe its survivors before
-        staging them.
+        """Stage df under data/ through the staging kernel (0-row
+        files dropped); return data_file dicts.
 
         Data files carry the Iceberg FIELD IDS as parquet field ids
         (`parquet.field.id` column metadata — Spark's parquet writer
@@ -1923,13 +1923,6 @@ class IcebergWriter:
         days-since-epoch int — the source column stays IN the files,
         which is what makes day() the idiomatic timestamp partitioning
         (metadata date-range pruning without losing the raw values)."""
-        import glob as _glob
-        import shutil as _shutil
-        import urllib.parse as _url
-        import uuid as _uuid
-
-        from pyspark.sql import functions as F
-
         spec = spec or []
         if field_ids is None:
             try:
@@ -1949,92 +1942,55 @@ class IcebergWriter:
                     for f in df.schema.fields
                 ]
             )
-        tmp = os.path.join(self.table_path, f"_stage-{_uuid.uuid4().hex}")
-        if spec:
-            dtypes = {f.name: f.dataType for f in df.schema.fields}
-            dir_cols = []
-            staged_df = df
-            trunc_str_cols = []
-            for f in spec:
-                kind, param = _norm_transform(f["transform"])
-                if kind == "identity":
-                    dir_cols.append(f["name"])  # name == source column
-                    continue
-                col = _derived_partition_col(
-                    kind, param, f["source"], dtypes[f["source"]]
-                )
-                staged_df = staged_df.withColumn(f["name"], col)
-                dir_cols.append(f["name"])
-                if kind == "truncate" and isinstance(
-                    dtypes[f["source"]], T.StringType
-                ):
-                    trunc_str_cols.append(f["name"])
-            ident_cols = [f["name"] for f in spec if f["transform"] == "identity"]
-            if ident_cols:
-                _reject_empty_string_partitions(df, ident_cols, self.table_path)
-            if trunc_str_cols:
-                # a truncated empty string is '' → would round-trip as
-                # NULL through __HIVE_DEFAULT_PARTITION__, same hazard
-                # as identity string keys
-                _reject_empty_string_partitions(
-                    staged_df, trunc_str_cols, self.table_path
-                )
-            staged_df.write.partitionBy(*dir_cols).mode("overwrite").parquet(tmp)
-            field_by_name = {f["name"]: f for f in spec}
-        else:
-            df.write.mode("overwrite").parquet(tmp)
-        os.makedirs(os.path.join(self.table_path, "data"), exist_ok=True)
-        import pyarrow.parquet as _pq
+        dtypes = {f.name: f.dataType for f in df.schema.fields}
+        staged_df, trunc_str_cols = df, []
+        for f in spec:
+            kind, param = _norm_transform(f["transform"])
+            if kind == "identity":
+                continue  # name == source column: a hive dir as is
+            col = _derived_partition_col(kind, param, f["source"], dtypes[f["source"]])
+            staged_df = staged_df.withColumn(f["name"], col)
+            if kind == "truncate" and isinstance(dtypes[f["source"]], T.StringType):
+                trunc_str_cols.append(f["name"])
+        ident_cols = [f["name"] for f in spec if f["transform"] == "identity"]
+        if ident_cols:
+            _reject_empty_string_partitions(df, ident_cols, self.table_path)
+        if trunc_str_cols:
+            # a truncated empty string is '' → would round-trip as
+            # NULL through __HIVE_DEFAULT_PARTITION__, same hazard
+            # as identity string keys
+            _reject_empty_string_partitions(
+                staged_df, trunc_str_cols, self.table_path
+            )
+        field_by_name = {f["name"]: f for f in spec}
 
-        out = []
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "**", "part-*.parquet"), recursive=True)
-        ):
-            # spec: record_count is REQUIRED and real — footer
-            # metadata only (no data pages read)
-            n_rows = _pq.ParquetFile(part).metadata.num_rows
-            if n_rows == 0:
-                continue  # removed with the stage dir below
-            subdir = os.path.relpath(os.path.dirname(part), tmp)
-            pv: dict = {}
-            reldir = "data"
-            if subdir != ".":
-                for piece in subdir.split(os.sep):
-                    k, _, raw = piece.partition("=")
-                    v = _url.unquote(raw)
-                    if v == "__HIVE_DEFAULT_PARTITION__":
-                        pv[k] = None
-                        continue
-                    kind, _ = _norm_transform(field_by_name[k]["transform"])
-                    if kind == "identity":
-                        pv[k] = _typed_pv(v, dtypes[k])
-                    elif kind == "truncate":
-                        # truncate keeps the source's primitive
-                        pv[k] = _typed_pv(
-                            v, dtypes[field_by_name[k]["source"]]
-                        )
-                    else:  # day/hour/bucket: dir value IS the int ordinal
-                        pv[k] = int(v)
-                reldir = os.path.join("data", subdir)
-                os.makedirs(os.path.join(self.table_path, reldir), exist_ok=True)
-            rel = os.path.join(
-                reldir, f"snap{snapshot_id}-{_uuid.uuid4().hex}.parquet"
+        def typed(k, v):
+            kind, _ = _norm_transform(field_by_name[k]["transform"])
+            if v is None:
+                return None
+            if kind == "identity":
+                return _typed_pv(v, dtypes[k])
+            if kind == "truncate":  # keeps the source's primitive
+                return _typed_pv(v, dtypes[field_by_name[k]["source"]])
+            return int(v)  # day/hour/bucket: the dir value IS the int ordinal
+
+        tmp = os.path.join(self.table_path, f"_stage-{uuid.uuid4().hex}")
+        dest = stage.renamed(f"snap{snapshot_id}-", "data")
+        return [
+            {
+                "content": 0,
+                "file_path": s.path,
+                "file_format": "PARQUET",
+                "partition": {k: typed(k, v) for k, v in s.values.items()},
+                # spec: record_count is REQUIRED and real — footer
+                # metadata only (no data pages read)
+                "record_count": s.meta.num_rows,
+                "file_size_in_bytes": s.stat.st_size,
+            }
+            for s in stage.write(
+                staged_df, tmp, self.table_path, dest, list(field_by_name)
             )
-            os.replace(part, os.path.join(self.table_path, rel))
-            out.append(
-                {
-                    "content": 0,
-                    "file_path": rel,
-                    "file_format": "PARQUET",
-                    "partition": pv,
-                    "record_count": n_rows,
-                    "file_size_in_bytes": os.path.getsize(
-                        os.path.join(self.table_path, rel)
-                    ),
-                }
-            )
-        _shutil.rmtree(tmp, ignore_errors=True)
-        return out
+        ]
 
     def _ids_gate(self, field_ids: dict[str, int] | None) -> dict[str, int]:
         """Suppress parquet field-id stamping when the table's EXISTING
@@ -3361,12 +3317,6 @@ class IcebergWriter:
         applies position deletes by exact file path, which is safe
         because paths are unique and a delete can only reference files
         that exist when it commits."""
-        import glob as _glob
-        import shutil as _shutil
-        import uuid as _uuid
-
-        import pyarrow.parquet as _pq
-
         for _ in range(20):
             table = IcebergTable(self.table_path)
             _, pos_dels = table.scan_entries(None)  # refuses eq deletes and DVs
@@ -3381,33 +3331,27 @@ class IcebergWriter:
             paths = local_frame(
                 self.spark, sorted(rel_of.items()), "__pd_file string, file_path string"
             )
-            tmp = os.path.join(self.table_path, f"_stage-{_uuid.uuid4().hex}")
-            (
+            tmp = os.path.join(self.table_path, f"_stage-{uuid.uuid4().hex}")
+            staged = stage.write(
                 hits.join(F.broadcast(paths), "__pd_file")
                 .select("file_path", F.col("__pd_ridx").alias("pos"))
                 # one task writes the file, so one task sorts it too
                 # (the spec's (file_path, pos) order)
                 .repartition(1)
-                .sortWithinPartitions("file_path", "pos")
-                .write.mode("overwrite")
-                .parquet(tmp)
+                .sortWithinPartitions("file_path", "pos"),
+                tmp,
+                self.table_path,
+                stage.renamed(f"posdel-snap{snap_id}-", "data"),
             )
-            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))
-            n = _pq.ParquetFile(part[0]).metadata.num_rows if part else 0
-            if not n:
-                _shutil.rmtree(tmp, ignore_errors=True)
+            if not staged:
                 return None
-            rel = f"data/posdel-snap{snap_id}-{_uuid.uuid4().hex}.parquet"
-            dst = os.path.join(self.table_path, rel)
-            os.replace(part[0], dst)
-            _shutil.rmtree(tmp, ignore_errors=True)
             del_file = {
                 "content": 1,
-                "file_path": rel,
+                "file_path": staged[0].path,
                 "file_format": "PARQUET",
                 "partition": {},
-                "record_count": n,
-                "file_size_in_bytes": os.path.getsize(dst),
+                "record_count": staged[0].meta.num_rows,
+                "file_size_in_bytes": staged[0].stat.st_size,
             }
             try:
                 return self._commit_deletes(
@@ -3545,12 +3489,6 @@ class IcebergWriter:
         OPTIMIZE, MERGE, overwrite) refuse equality-deleted snapshots
         via the scan_entries contract — applying them correctly needs
         delete-aware rewrites this engine reserves for reads."""
-        import glob as _glob
-        import shutil as _shutil
-        import uuid as _uuid
-
-        import pyarrow.parquet as _pq
-
         if keys_df.isEmpty():
             return None
         key_cols = list(keys_df.columns)
@@ -3576,35 +3514,39 @@ class IcebergWriter:
         keys = keys_df.select(
             *[F.col(c).cast(by_name[c].dataType) for c in key_cols]
         ).distinct()
-        tmp = os.path.join(self.table_path, f"_stage-{_uuid.uuid4().hex}")
-        keys.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        # each attempt renames the one staged file to its snapshot's name
+        token = uuid.uuid4().hex
+        tmp = os.path.join(self.table_path, f"_stage-{token}")
+        [staged] = stage.write(
+            keys.coalesce(1), tmp, self.table_path,
+            lambda _rel, _values: f"data/eqdel-{token}.parquet",
+        )
+        at = staged.path
         for _ in range(20):
             table = IcebergTable(self.table_path)
             snap_id = max(s["snapshot-id"] for s in table.metadata["snapshots"]) + 1
-            rel = f"data/eqdel-snap{snap_id}-{_uuid.uuid4().hex}.parquet"
-            dst = os.path.join(self.table_path, rel)
-            _shutil.copyfile(part, dst)
+            rel = f"data/eqdel-snap{snap_id}-{token}.parquet"
+            os.replace(
+                os.path.join(self.table_path, at), os.path.join(self.table_path, rel)
+            )
+            at = rel
             del_file = {
                 "content": 2,
                 "file_path": rel,
                 "file_format": "PARQUET",
                 "partition": {},
-                "record_count": _pq.ParquetFile(dst).metadata.num_rows,
-                "file_size_in_bytes": os.path.getsize(dst),
+                "record_count": staged.meta.num_rows,
+                "file_size_in_bytes": staged.stat.st_size,
                 "equality_ids": [ids_by_name[c] for c in key_cols],
             }
             try:
-                sid = self._commit_deletes(
+                return self._commit_deletes(
                     table, snap_id, "eqdel", _EQ_ENTRY_SCHEMA, [del_file], 2,
                     seq=(table.metadata.get("last-sequence-number") or 0) + 1,
                 )
-                _shutil.rmtree(tmp, ignore_errors=True)
-                return sid
             except IcebergCommitConflict:
-                os.remove(dst)
                 continue
-        _shutil.rmtree(tmp, ignore_errors=True)
+        os.remove(os.path.join(self.table_path, at))
         raise IcebergCommitConflict(f"{self.table_path}: gave up after retries")
 
     def _position_hits(self, table, full, deletes, condition, what, prior=None):
@@ -5659,7 +5601,8 @@ def convert_iceberg_to_planktable(spark, table_path: str) -> int:
     _iceberg_convertible_snapshot's delete/transform refusals. The
     metadata/ directory stays behind for the old format's time
     travel."""
-    from plankton_spark.table_format import PlankTable, _collect_stats
+    from plankton_spark.filestats import file_stats
+    from plankton_spark.table_format import PlankTable, _minmax
 
     t = PlankTable(spark, table_path)
     if t.versions():
@@ -5675,7 +5618,7 @@ def convert_iceberg_to_planktable(spark, table_path: str) -> int:
     adds = [
         {
             "file": os.path.relpath(p, table_path),
-            "stats": _collect_stats(p),
+            "stats": _minmax(file_stats(p)),
         }
         for p, _pv in sorted(entries)
     ]

@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 CHECKPOINT_EVERY = 10
-_STATS_TYPES = ("int32", "int64", "double", "float", "string", "large_string")
 
 
 class CommitConflict(Exception):
@@ -69,40 +68,20 @@ def _checkpoint_file(path: str, v: int) -> str:
     return os.path.join(_log_dir(path), f"{v:08d}.checkpoint.json")
 
 
+from plankton_spark.filestats import footer_stats  # noqa: E402
 from plankton_spark.filestats import stat_encode as _stat_value  # noqa: E402
 from plankton_spark.sources import rewrite as rw  # noqa: E402
+from plankton_spark.sources import stage  # noqa: E402
 from plankton_spark.sources.assemble import local_frame  # noqa: E402
 
 
-def _collect_stats(file_path: str) -> dict:
-    """Per-column min/max from the parquet footer (no data read)."""
-    return _footer_stats(pq.ParquetFile(file_path).metadata)
-
-
-def _footer_stats(md) -> dict:
-    """Per-column min/max from parquet footer metadata `md`."""
-    stats: dict[str, dict] = {}
-    for rg in range(md.num_row_groups):
-        for ci in range(md.num_columns):
-            col = md.row_group(rg).column(ci)
-            try:  # pyarrow can't extract stats for some types (DECIMAL)
-                s = col.statistics
-                if s is None or not s.has_min_max:
-                    continue
-                mn, mx = _stat_value(s.min), _stat_value(s.max)
-            except Exception:
-                continue
-            if mn is None or mx is None:
-                # stat_encode returns None for undecodable bytes
-                # (binary/media columns) — unusable as a range stat
-                continue
-            name = col.path_in_schema
-            if name in stats:
-                stats[name]["min"] = min(stats[name]["min"], mn)
-                stats[name]["max"] = max(stats[name]["max"], mx)
-            else:
-                stats[name] = {"min": mn, "max": mx}
-    return stats
+def _minmax(st: dict) -> dict:
+    """PlankTable's per-file stats, {col: {"min", "max"}}, from the
+    Delta-spec footer stats of `filestats.footer_stats`."""
+    return {
+        c: {"min": lo, "max": st["maxValues"][c]}
+        for c, lo in st["minValues"].items()
+    }
 
 
 class PlankTable:
@@ -374,33 +353,22 @@ class PlankTable:
     # -- write path ----------------------------------------------------
 
     def _stage(self, df: DataFrame) -> list[dict]:
-        """Write df as parquet data files under a unique staging name;
-        returns add-actions (file + stats). Files are invisible until
-        a commit references them. Declared CHECK constraints are
-        enforced on every staged frame. 0-row files (the one file
-        Spark writes for an empty frame) are discarded, so a rewrite
-        need not probe its survivors before staging them."""
+        """Stage df as `data-<id>-part-*.parquet` files through the
+        staging kernel (0-row files dropped); returns add-actions
+        (file + stats). Files are invisible until a commit references
+        them. Declared CHECK constraints are enforced on every staged
+        frame."""
         self._enforce_constraints(df)
-        stage_id = uuid.uuid4().hex
-        stage_dir = os.path.join(self.path, f".stage-{stage_id}")
-        df.write.mode("overwrite").parquet(stage_dir)
-        adds = []
-        for e in sorted(os.listdir(stage_dir)):
-            if not e.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(stage_dir, e)).metadata
-            if md.num_rows == 0:
-                continue  # removed with the stage dir below
-            rel = f"data-{stage_id}-{e}"
-            os.replace(
-                os.path.join(stage_dir, e), os.path.join(self.path, rel)
+        sid = uuid.uuid4().hex
+        return [
+            {"file": s.path, "stats": _minmax(footer_stats(s.meta))}
+            for s in stage.write(
+                df,
+                os.path.join(self.path, f".stage-{sid}"),
+                self.path,
+                lambda rel, _values: f"data-{sid}-{rel}",
             )
-            adds.append({"file": rel, "stats": _footer_stats(md)})
-        # clear remaining markers (_SUCCESS etc.) and the stage dir
-        for e in os.listdir(stage_dir):
-            os.remove(os.path.join(stage_dir, e))
-        os.rmdir(stage_dir)
-        return adds
+        ]
 
     def _commit(
         self,

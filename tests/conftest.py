@@ -54,3 +54,21 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_spark("plankton-tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def footer_opens(monkeypatch):
+    """Paths opened through pyarrow.parquet.ParquetFile from here on,
+    in order: the driver's parquet footer reads."""
+    import pyarrow.parquet as pq
+
+    opens: list[str] = []
+    base = pq.ParquetFile
+
+    class Counting(base):
+        def __init__(self, source, *a, **k):
+            opens.append(str(source))
+            super().__init__(source, *a, **k)
+
+    monkeypatch.setattr(pq, "ParquetFile", Counting)
+    return opens

@@ -602,3 +602,28 @@ def test_icebergcdf_stream_matches_batch_over_eq_deletes(spark, tmp_path):
     # file's rows (seq 4 < 5) and s2's, never the already-dead ones
     s5_dels = {r[0] for r in stream if r[3] == 5 and r[2] == "delete"}
     assert s5_dels == {x for x in range(600) if x % 20 == 0}
+
+
+def test_cdf_merge_with_empty_source(spark, tmp_path):
+    """Commits that change nothing keep an empty feed: a MERGE whose
+    source is empty (v1) and a replace_where of an empty frame over
+    no rows (v2, which stages an empty change frame). Staging drops
+    0-row files, change files included, so v2 carries no change
+    file."""
+    from plankton_spark.sources.delta_log import read_delta_changes
+
+    root, w = _mk(spark, tmp_path, "cdf_empty_merge")
+    empty = spark.createDataFrame([], "k long, v long")
+    w.merge(empty, "k")
+    w.replace_where(empty, F.col("k") > 100)
+    assert DeltaLog(root).latest_version() == 2
+    for v in (1, 2):
+        assert read_delta_cdf(spark, root, v, v).collect() == []
+        assert read_delta_changes(spark, root, v - 1, v).collect() == []
+    assert _by_type(read_delta_cdf(spark, root, 0, 2)) == {(0, "insert"): 20}
+    assert sorted(read_delta(spark, root).collect()) == sorted(
+        (i, i * 10) for i in range(20)
+    )
+    assert not glob.glob(
+        os.path.join(root, "_change_data", "**", "*.parquet"), recursive=True
+    )

@@ -161,6 +161,36 @@ def test_dml_verb_job_counts(spark, tmp_path, fmt):
     assert keys == want
 
 
+# Driver parquet-footer opens per verb on the tables above, as (opens
+# of files the verb staged, opens of other files). Every format reads
+# each staged file's footer once, in its staging dir
+# (sources/stage.py); only Iceberg's merge also opens live files, the
+# footers of the files whose key range it prunes against.
+FOOTER_OPENS = {
+    fmt: dict(
+        append=(1, 0), delete=(2, 0), update=(2, 0), merge=(2, 0), optimize=(1, 0)
+    )
+    for fmt in FORMATS
+}
+FOOTER_OPENS["iceberg"]["merge"] = (2, 2)
+_STAGE_DIRS = ("/.stage-", "/_stage-", "/.hoodie/.temp/")
+
+
+def test_dml_verb_footer_opens(spark, tmp_path, footer_opens):
+    t = _Tables(spark, str(tmp_path))
+    got = {}
+    for fmt in FORMATS:
+        got[fmt] = {}
+        for verb in ("append", "delete", "update", "merge", "optimize"):
+            footer_opens.clear()
+            t.verb(fmt, verb)
+            opens = list(footer_opens)
+            assert len(set(opens)) == len(opens), (fmt, verb, opens)
+            staged = sum(any(d in p for d in _STAGE_DIRS) for p in opens)
+            got[fmt][verb] = (staged, len(opens) - staged)
+    assert got == FOOTER_OPENS
+
+
 # replace_where shares the row-rewrite path of delete and update; it
 # runs on a table of its own so the pins above keep their tables and
 # their key check. A rise means the shared path picked up a job.
