@@ -102,6 +102,8 @@ def reset_session_memos() -> None:
     from plankton_spark.queries import llm_vectors as _lv
     from plankton_spark.queries import scale_patterns as _sp
 
+    for _frame, ckpt in _lv._CKPT_REUSE.values():
+        _lv._drop_checkpoint(ckpt)
     _lv._CKPT_REUSE.clear()
     _lv._KMEANS_MEMO.clear()
     _sp._MLP_MEMO.clear()

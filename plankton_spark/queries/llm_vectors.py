@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -106,6 +107,16 @@ GEMM_TOPK_CHECKPOINT_MIN_ROWS = 0
 _CKPT_REUSE: dict[tuple[str, str], tuple[object, object]] = {}
 
 
+def _drop_checkpoint(ckpt) -> None:
+    """Unpersist the RDD behind a dropped `localCheckpoint` frame,
+    without blocking: otherwise its blocks stay cached until a driver
+    GC lets the ContextCleaner collect them."""
+    try:
+        ckpt._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except (AttributeError, Py4JError):  # not a live checkpoint frame
+        pass
+
+
 def _checkpoint_reuse(key: str, frame):
     spark = frame.sparkSession
     full_key = (spark.sparkContext.applicationId, key)
@@ -116,6 +127,7 @@ def _checkpoint_reuse(key: str, frame):
                 return prev[1]
         except Exception:
             pass  # stale session — fall through and replace
+        _drop_checkpoint(prev[1])
     ckpt = frame.localCheckpoint(eager=True)
     _CKPT_REUSE[full_key] = (frame, ckpt)
     return ckpt

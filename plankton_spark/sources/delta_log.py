@@ -28,6 +28,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -248,6 +249,13 @@ def _path_key(table_path: str, p: str) -> str:
     return p if rel.split(os.sep, 1)[0] == ".." else rel
 
 
+def _commit_actions(log_dir: str, version: int) -> list[dict]:
+    """The actions of JSON commit `version`, in file order: the one
+    parser of `<version>.json` commit files."""
+    with open(os.path.join(log_dir, f"{version:020d}.json")) as fh:
+        return [json.loads(x) for x in fh if x.strip()]
+
+
 def _commit_versions(log_dir: str) -> list[int]:
     out = []
     for f in os.listdir(log_dir):
@@ -417,22 +425,17 @@ class DeltaLog:
                         _take(a["txn"])
         for v in _commit_versions(self.log_dir):
             if start <= v <= version:
-                with open(os.path.join(self.log_dir, f"{v:020d}.json")) as fh:
-                    for line in fh:
-                        line = line.strip()
-                        if line:
-                            a = json.loads(line)
-                            if "txn" in a:
-                                _take(a["txn"])
+                for a in _commit_actions(self.log_dir, v):
+                    if "txn" in a:
+                        _take(a["txn"])
         return best
 
-    def replay(self, version: int | None = None):
-        """Returns (schema, partition_cols, active: {rel_path: add
-        action dict}) — the full live add actions, so callers needing
+    def replay(self, version: int | None = None) -> "DeltaState":
+        """The table at `version` (default: latest) from the newest
+        checkpoint at or before it plus the JSON commits after that —
+        the full live add actions included, so callers needing
         per-file stats (MERGE pruning) read them from the log instead
-        of re-opening every parquet footer. The latest metaData
-        `configuration` is kept on `self.table_config` (column-mapping
-        mode lives there)."""
+        of re-opening every parquet footer."""
         if version is None:
             version = self.latest_version()
         cp_versions = list(_checkpoint_versions(self.log_dir))
@@ -452,103 +455,133 @@ class DeltaLog:
             units.append(cp[1])
         for v in _commit_versions(self.log_dir):
             if start <= v <= version:
-                with open(os.path.join(self.log_dir, f"{v:020d}.json")) as fh:
-                    units.append(
-                        [json.loads(x) for x in fh if x.strip()]
-                    )
-        schema: T.StructType | None = None
-        part_cols: list[str] = []
-        active: dict[str, dict] = {}
-        protocol: dict | None = None
-        self.table_config: dict = {}
-        self.table_protocol: dict | None = None
-        self.domain_metadata: dict[str, dict] = {}
-        for unit in units:
-            # spec reconciliation is per COMMIT: a remove tombstones the
-            # PRIOR version's file, so an add of the same path in the
-            # same commit (e.g. attaching a deletion vector) wins
-            # regardless of the actions' order within the commit file
-            for a in unit:
-                if "remove" in a:
-                    active.pop(a["remove"]["path"], None)
-            for a in unit:
-                if "metaData" in a:
-                    md = a["metaData"]
-                    schema = T.StructType.fromJson(json.loads(md["schemaString"]))
-                    _validate_type_changes(schema, self.table_path)
-                    part_cols = list(md.get("partitionColumns") or [])
-                    cfg = md.get("configuration") or {}
-                    if isinstance(cfg, list):  # pyarrow map roundtrip
-                        cfg = dict(cfg)
-                    self.table_config = cfg
-                elif "add" in a:
-                    add = dict(a["add"])
-                    pv = add.get("partitionValues") or {}
-                    if isinstance(pv, list):  # pyarrow map → list of (k, v)
-                        pv = dict(pv)
-                    add["partitionValues"] = pv
-                    dvd = add.get("deletionVector")
-                    if isinstance(dvd, dict) and not dvd.get("storageType"):
-                        # checkpoint struct column reads back as a
-                        # dict of Nones for DV-less files
-                        add.pop("deletionVector")
-                    active[add["path"]] = add
-                elif "protocol" in a:
-                    protocol = a["protocol"]
-                elif "domainMetadata" in a:
-                    # latest action per domain wins; removed=true drops
-                    # it (spec's domain-metadata reconciliation). JSON
-                    # commits carry these; checkpoints may not — hwm
-                    # consumers fall back to live adds' id ranges.
-                    dm = a["domainMetadata"]
-                    if dm.get("removed"):
-                        self.domain_metadata.pop(dm.get("domain"), None)
-                    elif dm.get("domain"):
-                        self.domain_metadata[dm["domain"]] = dm
-        if protocol is not None:
-            self.table_protocol = protocol
-            _check_reader_protocol(protocol, self.table_path)
-        if schema is None:
-            raise ValueError(f"no metaData action found in {self.log_dir}")
-        return schema, part_cols, active
+                units.append(_commit_actions(self.log_dir, v))
+        return _fold(self.table_path, units, version)
 
     def schema_info(self, version: int | None = None):
         """(schema, partition_cols) only — for writer paths that never
         READ existing files (append staging, evolution validation):
         these stay legal on DV'd tables, so no whole-files refusal."""
-        schema, part_cols, _ = self.replay(version)
-        return schema, part_cols
+        st = self.replay(version)
+        return st.schema, st.part_cols
 
     def snapshot(self, version: int | None = None):
         """Returns (schema: StructType, partition_cols: list[str],
         files: list[(abs_path, partition_values: dict)]) — the PLAIN
-        whole-files view. Callers treating these files as complete
-        (the DSv2 wrapper, the writer's rewrite ops) must not see a
-        table whose files carry deletion vectors: streaming or
-        rewriting such a file in full would resurrect deleted rows,
-        so this raises and points at the DV-aware `read_delta`."""
-        schema, part_cols, active = self.replay(version)
-        if column_mapping(schema, self.table_config, self.table_path):
-            raise DeltaProtocolError(
-                f"{self.table_path}: table uses column mapping; this "
-                "physical-files access path would mis-resolve columns — "
-                "use read_delta() (mapping-aware)"
-            )
-        dvd = sorted(
-            rel for rel, add in active.items() if add.get("deletionVector")
+        whole-files view (`_whole_files`)."""
+        st = self.replay(version)
+        return st.schema, st.part_cols, _whole_files(self.table_path, st)
+
+
+class DeltaState(NamedTuple):
+    """A Delta table at one log version, as one replay built it: the
+    schema and partition columns of the latest metaData, the live add
+    actions keyed by path, that metaData's configuration (column
+    mapping, constraints, row tracking and CDF settings live there),
+    the latest protocol action (None when the log carries none), the
+    live domain metadata keyed by domain, and the version."""
+
+    schema: T.StructType
+    part_cols: list[str]
+    active: dict[str, dict]
+    config: dict
+    protocol: dict | None
+    domains: dict[str, dict]
+    version: int
+
+
+def _fold(
+    table_path: str,
+    units: list[list[dict]],
+    version: int,
+    base: DeltaState | None = None,
+) -> DeltaState:
+    """`base` (or an empty table) with each unit of actions — a
+    checkpoint or one commit — applied in order: the state at
+    `version`. Refuses a protocol this reader cannot honour and a log
+    with no metaData."""
+    schema, part_cols, config, protocol = (
+        (base.schema, base.part_cols, base.config, base.protocol)
+        if base
+        else (None, [], {}, None)
+    )
+    active = dict(base.active) if base else {}
+    domains = dict(base.domains) if base else {}
+    for unit in units:
+        # spec reconciliation is per COMMIT: a remove tombstones the
+        # PRIOR version's file, so an add of the same path in the
+        # same commit (e.g. attaching a deletion vector) wins
+        # regardless of the actions' order within the commit file
+        for a in unit:
+            if "remove" in a:
+                active.pop(a["remove"]["path"], None)
+        for a in unit:
+            if "metaData" in a:
+                md = a["metaData"]
+                schema = T.StructType.fromJson(json.loads(md["schemaString"]))
+                _validate_type_changes(schema, table_path)
+                part_cols = list(md.get("partitionColumns") or [])
+                config = md.get("configuration") or {}
+                if isinstance(config, list):  # pyarrow map roundtrip
+                    config = dict(config)
+            elif "add" in a:
+                add = dict(a["add"])
+                pv = add.get("partitionValues") or {}
+                if isinstance(pv, list):  # pyarrow map → list of (k, v)
+                    pv = dict(pv)
+                add["partitionValues"] = pv
+                dvd = add.get("deletionVector")
+                if isinstance(dvd, dict) and not dvd.get("storageType"):
+                    # checkpoint struct column reads back as a
+                    # dict of Nones for DV-less files
+                    add.pop("deletionVector")
+                active[add["path"]] = add
+            elif "protocol" in a:
+                protocol = a["protocol"]
+            elif "domainMetadata" in a:
+                # latest action per domain wins; removed=true drops
+                # it (spec's domain-metadata reconciliation). JSON
+                # commits carry these; checkpoints may not — hwm
+                # consumers fall back to live adds' id ranges.
+                dm = a["domainMetadata"]
+                if dm.get("removed"):
+                    domains.pop(dm.get("domain"), None)
+                elif dm.get("domain"):
+                    domains[dm["domain"]] = dm
+    if protocol is not None:
+        _check_reader_protocol(protocol, table_path)
+    if schema is None:
+        raise ValueError(
+            f"no metaData action found in {os.path.join(table_path, '_delta_log')}"
         )
-        if dvd:
-            raise DeltaProtocolError(
-                f"{self.table_path}: {len(dvd)} live file(s) carry "
-                "deletion vectors; this whole-file access path would "
-                "resurrect deleted rows — use read_delta() (DV-aware) "
-                "for reads, and a DV-capable writer for rewrites"
-            )
-        files = [
-            (os.path.join(self.table_path, rel), add["partitionValues"])
-            for rel, add in active.items()
-        ]
-        return schema, part_cols, files
+    return DeltaState(schema, part_cols, active, config, protocol, domains, version)
+
+
+def _whole_files(table_path: str, st: DeltaState) -> list[tuple[str, dict]]:
+    """[(abs_path, partition_values)] of `st`'s live files — the PLAIN
+    whole-files view. Callers treating these files as complete (the
+    DSv2 wrapper, the writer's rewrite ops) must not see a table whose
+    files carry deletion vectors: streaming or rewriting such a file
+    in full would resurrect deleted rows, so this raises and points at
+    the DV-aware `read_delta`; a column-mapped table refuses too."""
+    if column_mapping(st.schema, st.config, table_path):
+        raise DeltaProtocolError(
+            f"{table_path}: table uses column mapping; this "
+            "physical-files access path would mis-resolve columns — "
+            "use read_delta() (mapping-aware)"
+        )
+    dvd = sorted(rel for rel, add in st.active.items() if add.get("deletionVector"))
+    if dvd:
+        raise DeltaProtocolError(
+            f"{table_path}: {len(dvd)} live file(s) carry "
+            "deletion vectors; this whole-file access path would "
+            "resurrect deleted rows — use read_delta() (DV-aware) "
+            "for reads, and a DV-capable writer for rewrites"
+        )
+    return [
+        (os.path.join(table_path, rel), add["partitionValues"])
+        for rel, add in st.active.items()
+    ]
 
 
 def _cast_partition_value(raw: str | None, dtype: T.DataType):
@@ -559,24 +592,58 @@ def _cast_partition_value(raw: str | None, dtype: T.DataType):
     return F.lit(raw).cast(dtype)
 
 
+def _ict(first: dict) -> int | None:
+    """inCommitTimestamp of a commit whose FIRST action is `first`, or
+    None: per the spec, when in-commit timestamps are enabled
+    commitInfo must be the first action."""
+    info = first.get("commitInfo")
+    if isinstance(info, dict) and "inCommitTimestamp" in info:
+        return int(info["inCommitTimestamp"])
+    return None
+
+
 def _commit_ict(log_dir: str, version: int) -> int | None:
-    """inCommitTimestamp of a retained JSON commit, or None. Per the
-    spec, when in-commit timestamps are enabled commitInfo must be the
-    FIRST action of the commit — only the first line is read."""
+    """inCommitTimestamp of a retained JSON commit, or None — only its
+    first line is read."""
     path = os.path.join(log_dir, f"{version:020d}.json")
     try:
         with open(path) as fh:
             for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                info = a.get("commitInfo")
-                if isinstance(info, dict) and "inCommitTimestamp" in info:
-                    return int(info["inCommitTimestamp"])
-                return None
+                if line.strip():
+                    return _ict(json.loads(line))
     except (OSError, ValueError):
         return None
     return None
+
+
+def _commit_states(table_path: str, versions):
+    """(version, actions, state before it or None, state after it) for
+    consecutive JSON commits `versions`: ONE replay, to the version
+    before the first, then each commit parsed once and folded forward.
+    When log cleanup expired the version before the first, the first
+    is replayed instead and its prior state is None."""
+    log = DeltaLog(table_path)
+    after = None
+    for v in versions:
+        acts = _commit_actions(log.log_dir, v)
+        if after is None and v > 0:
+            retained = _commit_versions(log.log_dir) + list(
+                _checkpoint_versions(log.log_dir)
+            )
+            if v == min(retained):
+                after = log.replay(v)
+                yield v, acts, None, after
+                continue
+            after = log.replay(v - 1)
+        before, after = after, _fold(table_path, [acts], v, after)
+        yield v, acts, before, after
+
+
+def _prior(table_path: str, version: int, prior: DeltaState | None) -> DeltaState:
+    """The state before `version` from `_commit_states`; when it is
+    None (expired by log cleanup), replaying it raises the expiry
+    refusal."""
+    return prior if prior is not None else DeltaLog(table_path).replay(version - 1)
 
 
 def version_at_timestamp(table_path: str, timestamp_ms: int) -> int:
@@ -654,9 +721,19 @@ def read_delta(
         if version is not None:
             raise ValueError("pass version or timestamp_ms, not both")
         version = version_at_timestamp(table_path, timestamp_ms)
-    log = DeltaLog(table_path)
-    schema, part_cols, active = log.replay(version)
-    cm = column_mapping(schema, log.table_config, table_path)
+    return _read_state(
+        spark, table_path, DeltaLog(table_path).replay(version), partitions,
+        with_row_ids,
+    )
+
+
+def _read_state(
+    spark, table_path: str, st: DeltaState, partitions=None, with_row_ids=False
+):
+    """`read_delta` of the replayed state `st`, so a writer that holds
+    one reads through it."""
+    schema, part_cols, active = st.schema, st.part_cols, st.active
+    cm = column_mapping(schema, st.config, table_path)
     mapping = cm["phys"] if cm else None
     logical_schema = schema
     if cm:
@@ -726,10 +803,7 @@ def read_delta(
         # materialized row-id / commit-version columns (files rewritten
         # by OPTIMIZE carry the preserved ids physically; the names are
         # config-declared per the spec) — resolved here, never assumed
-        mat = (
-            log.table_config.get(_MAT_ROW_ID_KEY),
-            log.table_config.get(_MAT_ROW_CV_KEY),
-        )
+        mat = (st.config.get(_MAT_ROW_ID_KEY), st.config.get(_MAT_ROW_CV_KEY))
         return _row_tracked_scan(
             spark, table_path, schema, part_cols, files, dv_desc, rt, mat
         )
@@ -1140,14 +1214,14 @@ def _assign_base_row_ids(adds: list[dict], base: int, commit_version: int) -> in
     return rid - 1
 
 
-def _row_id_hwm(log: "DeltaLog", active: dict[str, dict]) -> int:
+def _row_id_hwm(st: DeltaState) -> int:
     """Current row-id high-water mark: the `delta.rowTracking` domain
     metadata when present (the spec's source of truth), with a
     live-adds fallback (max baseRowId + numRecords − 1) so a
     checkpoint that dropped domain-metadata actions can't cause id
     reuse."""
     hwm = -1
-    dm = (getattr(log, "domain_metadata", None) or {}).get("delta.rowTracking")
+    dm = st.domains.get("delta.rowTracking")
     if dm is not None:
         try:
             cfg = dm.get("configuration") or "{}"
@@ -1155,7 +1229,7 @@ def _row_id_hwm(log: "DeltaLog", active: dict[str, dict]) -> int:
             hwm = int(cfg.get("rowIdHighWaterMark", -1))
         except (ValueError, TypeError):
             pass
-    for add in active.values():
+    for add in st.active.values():
         b = add.get("baseRowId")
         if b is None:
             continue
@@ -1166,6 +1240,13 @@ def _row_id_hwm(log: "DeltaLog", active: dict[str, dict]) -> int:
             continue
         hwm = max(hwm, int(b) + int(n) - 1)
     return hwm
+
+
+def _constraints(cfg: dict) -> dict[str, str]:
+    """{name: sql_expr} of the `delta.constraints.<name>` keys in a
+    table configuration."""
+    pre = "delta.constraints."
+    return {k[len(pre):]: v for k, v in cfg.items() if k.startswith(pre)}
 
 
 class DeltaLogWriter:
@@ -1203,9 +1284,7 @@ class DeltaLogWriter:
         if versions:
             return _commit_ict(self.log_dir, max(versions))
         if _checkpoint_versions(self.log_dir):
-            log = DeltaLog(self.table_path)
-            log.replay(None)
-            cfg = log.table_config
+            cfg = DeltaLog(self.table_path).replay(None).config
             if (cfg.get("delta.enableInCommitTimestamps") or "").lower() == (
                 "true"
             ):
@@ -1315,7 +1394,7 @@ class DeltaLogWriter:
         by writers that omit them. `active` lets a caller that already
         replayed the log (MERGE) avoid a second, racy replay."""
         if active is None:
-            _, _, active = DeltaLog(self.table_path).replay(None)
+            active = DeltaLog(self.table_path).replay(None).active
         out: dict[str, dict] = {}
         for rel, add in active.items():
             raw = add.get("stats")
@@ -1334,16 +1413,9 @@ class DeltaLogWriter:
         """{name: sql_expr} CHECK constraints from the table config
         (the spec's `delta.constraints.<name>` keys)."""
         try:
-            log = DeltaLog(self.table_path)
-            log.replay(None)
+            return _constraints(DeltaLog(self.table_path).replay(None).config)
         except FileNotFoundError:
             return {}
-        pre = "delta.constraints."
-        return {
-            k[len(pre):]: v
-            for k, v in (log.table_config or {}).items()
-            if k.startswith(pre)
-        }
 
     def _commit_metadata_update(self, build_actions) -> int:
         """Metadata-only commit with a per-retry REBUILD from a fresh
@@ -1351,14 +1423,12 @@ class DeltaLogWriter:
         and re-fixed here): a conflict means the snapshot moved, so
         re-committing the pre-conflict metaData/protocol actions
         would silently revert the concurrent writer's schema, config,
-        or protocol changes. `build_actions(log, schema, part_cols,
+        or protocol changes. `build_actions(state, schema, part_cols,
         cfg)` re-validates AND rebuilds against the fresh state every
         iteration."""
         for _ in range(20):
-            log = DeltaLog(self.table_path)
-            schema, part_cols, _ = log.replay(None)
-            cfg = dict(log.table_config)
-            actions = build_actions(log, schema, part_cols, cfg)
+            st = DeltaLog(self.table_path).replay(None)
+            actions = build_actions(st, st.schema, st.part_cols, dict(st.config))
             try:
                 return self._commit(self._next_version(), actions)
             except DeltaCommitConflict:
@@ -1376,7 +1446,7 @@ class DeltaLogWriter:
                 "(it validates existing rows)"
             )
 
-        def build(log, schema, part_cols, cfg):
+        def build(st, schema, part_cols, cfg):
             cfg = dict(cfg)
             cfg[key] = str(value)
             return [self._metadata_action(schema, part_cols, cfg)]
@@ -1386,7 +1456,7 @@ class DeltaLogWriter:
     def unset_property(self, key: str) -> int:
         """UNSET TBLPROPERTIES: removes the key (error if absent)."""
 
-        def build(log, schema, part_cols, cfg):
+        def build(st, schema, part_cols, cfg):
             if key not in cfg:
                 raise ValueError(f"{self.table_path}: no property {key!r}")
             cfg = dict(cfg)
@@ -1419,7 +1489,7 @@ class DeltaLogWriter:
         Refused on column-mapped tables — the expression binds logical
         names but staging writes physical ones."""
 
-        def build(log, schema, part_cols, cfg):
+        def build(st, schema, part_cols, cfg):
             if column_mapping(schema, cfg, self.table_path):
                 raise DeltaProtocolError(
                     f"{self.table_path}: CHECK constraints on a "
@@ -1434,7 +1504,7 @@ class DeltaLogWriter:
                 )
             cfg = dict(cfg)
             cfg[f"delta.constraints.{name}"] = expr_sql
-            proto = dict(log.table_protocol or {"minReaderVersion": 1})
+            proto = dict(st.protocol or {"minReaderVersion": 1})
             proto["minWriterVersion"] = max(
                 proto.get("minWriterVersion", 2), 3
             )
@@ -1446,7 +1516,7 @@ class DeltaLogWriter:
         return self._commit_metadata_update(build)
 
     def drop_constraint(self, name: str) -> int:
-        def build(log, schema, part_cols, cfg):
+        def build(st, schema, part_cols, cfg):
             key = f"delta.constraints.{name}"
             if key not in cfg:
                 raise ValueError(f"{self.table_path}: no constraint {name!r}")
@@ -1473,14 +1543,14 @@ class DeltaLogWriter:
         column mapping)."""
         _LEGACY_WF = LEGACY_WRITER_FEATURES
 
-        def build(log, schema, part_cols, cfg):
+        def build(st, schema, part_cols, cfg):
             if (cfg.get("delta.enableInCommitTimestamps") or "").lower() == (
                 "true"
             ):
                 raise ValueError(
                     f"{self.table_path}: in-commit timestamps already enabled"
                 )
-            prot = log.table_protocol or {
+            prot = st.protocol or {
                 "minReaderVersion": 1,
                 "minWriterVersion": 2,
             }
@@ -1532,7 +1602,7 @@ class DeltaLogWriter:
         name (matching logical names against a physical frame would
         silently skip the check — review finding, this round)."""
 
-        def build(log, schema, part_cols, cfg):
+        def build(st, schema, part_cols, cfg):
             if col not in [f.name for f in schema.fields]:
                 raise ValueError(f"{self.table_path}: no column {col!r}")
             existing = read_delta(self.spark, self.table_path)
@@ -1557,7 +1627,7 @@ class DeltaLogWriter:
         return self._commit_metadata_update(build)
 
     def drop_not_null(self, col: str) -> int:
-        def build(log, schema, part_cols, cfg):
+        def build(st, schema, part_cols, cfg):
             if col not in [f.name for f in schema.fields]:
                 raise ValueError(f"{self.table_path}: no column {col!r}")
             new_schema = T.StructType(
@@ -1601,7 +1671,7 @@ class DeltaLogWriter:
                 f"does not evaluate standalone: {exc}"
             ) from None
 
-        def build(log, schema, part_cols, cfg):
+        def build(st, schema, part_cols, cfg):
             if col not in [f.name for f in schema.fields]:
                 raise ValueError(
                     f"{self.table_path}: no column {col!r} — per the "
@@ -1621,7 +1691,7 @@ class DeltaLogWriter:
                     for f in schema.fields
                 ]
             )
-            prot = log.table_protocol or {
+            prot = st.protocol or {
                 "minReaderVersion": 1,
                 "minWriterVersion": 2,
             }
@@ -1652,7 +1722,7 @@ class DeltaLogWriter:
         """Remove a column's CURRENT_DEFAULT (metadata-only; the
         feature stays in the protocol — features are one-way)."""
 
-        def build(log, schema, part_cols, cfg):
+        def build(st, schema, part_cols, cfg):
             fields = {f.name for f in schema.fields}
             if col not in fields:
                 raise ValueError(f"{self.table_path}: no column {col!r}")
@@ -1677,33 +1747,26 @@ class DeltaLogWriter:
 
         return self._commit_metadata_update(build)
 
-    def _enforce_constraints(self, df) -> None:
+    def _enforce_constraints(self, st: DeltaState | None, df) -> None:
         """CHECK + NOT NULL enforcement on data about to be staged: a
         CHECK violates only when its expression evaluates FALSE (NULL
         passes, per the standard); a non-nullable field refuses NULLs.
         Zero cost when the table declares neither; one validation pass
         per constrained write — the price every enforcing Delta
-        writer pays."""
-        try:
-            log = DeltaLog(self.table_path)
-            schema, _, _ = log.replay(None)
-        except FileNotFoundError:
+        writer pays. `st` is the verb's replayed table (None when the
+        table does not exist yet)."""
+        if st is None:
             return
-        pre = "delta.constraints."
-        cons = {
-            k[len(pre):]: v
-            for k, v in (log.table_config or {}).items()
-            if k.startswith(pre)
-        }
+        cons = _constraints(st.config)
         # NOT NULL binds LOGICAL names; on a column-mapped table the
         # staging frame carries PHYSICAL names, so translate — matching
         # logical names against a physical frame silently skipped the
         # check (review finding, this round)
-        cm = column_mapping(schema, log.table_config or {}, self.table_path)
+        cm = column_mapping(st.schema, st.config, self.table_path)
         phys = (cm or {}).get("phys") or {}
         required = [
             phys.get(f.name, f.name)
-            for f in schema.fields
+            for f in st.schema.fields
             if not f.nullable and phys.get(f.name, f.name) in df.columns
         ]
         # ONE OR-combined violation predicate across every CHECK and
@@ -1727,15 +1790,18 @@ class DeltaLogWriter:
                 f"constraint ({labels}); write refused"
             )
 
-    def _stage(self, df, part_cols: list[str] | None = None) -> list[dict]:
+    def _stage(
+        self, st: DeltaState | None, df, part_cols: list[str] | None = None
+    ) -> list[dict]:
         """Stage df through the staging kernel (0-row files dropped)
         and return their `add` actions. With `part_cols`, files land
         in hive-style subdirectories (col=value/...), the partition
         columns are dropped from file content per the Delta spec, and
         each add action carries the partitionValues dict the reader
-        re-attaches (and prunes on). Declared CHECK constraints are
-        enforced on every staged frame."""
-        self._enforce_constraints(df)
+        re-attaches (and prunes on). The CHECK and NOT NULL
+        constraints `st` declares are enforced on every staged
+        frame."""
+        self._enforce_constraints(st, df)
         if part_cols:
             _reject_empty_string_partitions(df, part_cols, self.table_path)
         return [
@@ -1791,7 +1857,7 @@ class DeltaLogWriter:
         ]
 
     def _rt_rewrite_state(
-        self, log: "DeltaLog", schema, part_cols, active
+        self, st: DeltaState
     ) -> tuple[bool, str | None, str | None, list[dict]]:
         """Whether a REWRITE on this table must preserve row ids, and
         how: (enabled, materialized row-id column, materialized
@@ -1801,21 +1867,19 @@ class DeltaLogWriter:
         rewritten by a non-preserving op) keeps the non-preserving
         rewrite and its lineage reads keep refusing (ids are never
         fabricated)."""
-        prot = log.table_protocol or {}
+        prot = st.protocol or {}
         if "rowTracking" not in set(prot.get("writerFeatures") or []):
             return False, None, None, []
-        if not active or any(
-            a.get("baseRowId") is None for a in active.values()
+        if not st.active or any(
+            a.get("baseRowId") is None for a in st.active.values()
         ):
             return False, None, None, []
-        cfg = dict(log.table_config)
+        cfg = dict(st.config)
         mat_id = cfg.get(_MAT_ROW_ID_KEY)
         mat_cv = cfg.get(_MAT_ROW_CV_KEY)
         head: list[dict] = []
         if mat_id is None or mat_cv is None:
-            if {_MAT_ROW_ID_NAME, _MAT_ROW_CV_NAME} & {
-                f.name for f in schema.fields
-            }:
+            if {_MAT_ROW_ID_NAME, _MAT_ROW_CV_NAME} & set(st.schema.fieldNames()):
                 # a FOREIGN tracked table without declared names whose
                 # schema occupies our defaults: preserving is
                 # impossible without guessing — degrade to the
@@ -1828,7 +1892,7 @@ class DeltaLogWriter:
             cfg[_MAT_ROW_ID_KEY] = mat_id
             cfg[_MAT_ROW_CV_KEY] = mat_cv
             cfg.setdefault("delta.enableRowTracking", "true")
-            head = [self._metadata_action(schema, part_cols, cfg)]
+            head = [self._metadata_action(st.schema, st.part_cols, cfg)]
         return True, mat_id, mat_cv, head
 
     def _rt_subset_scan(
@@ -1864,42 +1928,60 @@ class DeltaLogWriter:
             out = out.withColumnRenamed("_row_commit_version", mat_cv)
         return out
 
+    def _newer(self, st: DeltaState, version: int) -> tuple[DeltaState, set[str]]:
+        """`st` advanced over the commits that landed after it, up to
+        `version` (exclusive), and the paths those commits removed:
+        the commit path's whole view of concurrent writers, read
+        without replaying the log again. A commit in that range that
+        log cleanup already deleted refuses with
+        ConcurrentDeltaModification."""
+        units = []
+        for v in range(st.version + 1, version):
+            try:
+                units.append(_commit_actions(self.log_dir, v))
+            except FileNotFoundError:
+                raise ConcurrentDeltaModification(
+                    f"{self.table_path}: commit {v} was cleaned up "
+                    "while this operation ran"
+                ) from None
+        if not units:
+            return st, set()
+        removed = {a["remove"]["path"] for u in units for a in u if "remove" in a}
+        return _fold(self.table_path, units, version - 1, st), removed
+
     def _commit_rt_rewrite(
-        self, mat_head: list[dict], adds: list[dict],
+        self, st: DeltaState, mat_head: list[dict], adds: list[dict],
         other_actions: list[dict], depends_on_rel,
         mat_id: str | None = None, mat_cv: str | None = None,
     ) -> int:
-        """OCC commit of a lineage-preserving rewrite: the staged adds
-        get FRESH baseRowIds from the current high-water mark (every
-        add on a tracked table carries one; the PRESERVED ids ride the
-        files' materialized columns) and the advanced mark commits
-        alongside — _validate_then_commit merged with
+        """OCC commit of a lineage-preserving rewrite of `st`: the
+        staged adds get FRESH baseRowIds from the current high-water
+        mark (every add on a tracked table carries one; the PRESERVED
+        ids ride the files' materialized columns) and the advanced
+        mark commits alongside — _validate_then_commit merged with
         _append_row_tracked's per-retry re-assignment. When the
         materialized names are passed, a concurrent writer declaring
         DIFFERENT names aborts the rewrite (our staged columns would
         be unreadable under theirs, or vice versa)."""
         for _ in range(20):
-            log2 = DeltaLog(self.table_path)
-            _, _, now_active = log2.replay(None)
-            gone = [r for r in depends_on_rel if r not in set(now_active)]
+            v = self._next_version()
+            st, removed = self._newer(st, v)
+            gone = [r for r in depends_on_rel if r in removed]
             if gone:
                 raise ConcurrentDeltaModification(
                     f"{self.table_path}: files rewritten concurrently: "
                     f"{gone[:5]}"
                 )
             if mat_id is not None:
-                cfg2 = log2.table_config
                 for key, want in ((_MAT_ROW_ID_KEY, mat_id),
                                   (_MAT_ROW_CV_KEY, mat_cv)):
-                    got = cfg2.get(key)
+                    got = st.config.get(key)
                     if got is not None and got != want:
                         raise ConcurrentDeltaModification(
                             f"{self.table_path}: materialized row-id "
                             "column names changed concurrently"
                         )
-            hwm = _row_id_hwm(log2, now_active)
-            v = self._next_version()
-            new_hwm = _assign_base_row_ids(adds, hwm + 1, commit_version=v)
+            new_hwm = _assign_base_row_ids(adds, _row_id_hwm(st) + 1, commit_version=v)
             try:
                 v = self._commit(
                     v,
@@ -1914,13 +1996,6 @@ class DeltaLogWriter:
                 write_delta_checkpoint(self.table_path, version=v)
             return v
         raise DeltaCommitConflict(f"{self.table_path}: gave up after retries")
-
-    def _partition_cols(self) -> list[str]:
-        try:
-            return DeltaLog(self.table_path).schema_info(None)[1]
-        except FileNotFoundError:
-            return []
-
 
     def _metadata_action(
         self,
@@ -1940,44 +2015,96 @@ class DeltaLogWriter:
 
     def rename_column(self, old: str, new: str) -> int:
         """Rename a column by ENABLING column mapping (name mode) — the
-        Delta-spec way: every column gains a stable
-        delta.columnMapping.physicalName (its current physical name)
-        and id, the logical schemaString renames the field, and the
-        protocol upgrades to a column-mapping-capable reader in the
-        same metadata-only commit. Existing files keep their physical
-        columns; the mapping-aware read resolves them. Renaming a
-        partition column works too: partitionValues keys and hive dirs
-        stay physical.
+        Delta-spec way (see `_mapped_commit`). Existing files keep
+        their physical columns; the mapping-aware read resolves them.
+        Renaming a partition column works too: partitionValues keys
+        and hive dirs stay physical.
 
         After the rename, the table is a MAPPED table: reads go
         through read_delta; append stays supported (staging renames to
         physical names); rewrite ops (delete_where, merge, OPTIMIZE)
         and add-column evolution refuse, mirroring the read-side
-        posture. Schemas with nested/complex fields refuse: the spec
-        requires EVERY field (nested included) to carry id +
-        physicalName once mapping is on, and emitting them unmapped
-        would hand foreign readers a spec-invalid table.
+        posture."""
 
-        The commit REBUILDS from a fresh replay on every conflict
-        retry — blindly re-committing the first attempt's metaData
-        would clobber a concurrently evolved schema (r7 review #4)."""
-        for _ in range(20):
-            log = DeltaLog(self.table_path)
-            schema, part_cols, _ = log.replay(None)
-            names = [f.name for f in schema.fields]
+        def edit(st, fields):
+            names = [f.name for f in fields]
             if old not in names:
                 raise ValueError(f"{self.table_path}: no column {old!r}")
             if new in names:
                 raise ValueError(f"{self.table_path}: column {new!r} exists")
-            if self.constraints():
+            if _constraints(st.config):
                 raise DeltaProtocolError(
                     f"{self.table_path}: cannot rename with CHECK "
                     "constraints declared — their expressions bind the "
                     "current names; drop the constraints first"
                 )
+            return lambda fs: [
+                T.StructField(new if f.name == old else f.name, f.dataType, f.nullable, f.metadata)
+                for f in fs
+            ], [new if c == old else c for c in st.part_cols]
+
+        return self._mapped_commit(edit)
+
+    def drop_column(self, name: str) -> int:
+        """DROP COLUMN the Delta-spec way: metadata-only, by enabling
+        column mapping (name mode, `_mapped_commit`) and removing the
+        field from the LOGICAL schema. No data file is rewritten — the
+        dropped column's bytes stay in old files, simply unreferenced
+        by the mapping-aware read, and its mapping id retires forever
+        (maxColumnId stays monotone so no future column reuses it).
+        At 100 TB that's the point: dropping a petabyte column costs
+        one commit.
+
+        Refusals: partition columns (the hive layout and
+        partitionValues keys are built from them), tables with CHECK
+        constraints (their expressions may bind the dropped name),
+        nested/complex schemas, and the last remaining column."""
+
+        def edit(st, fields):
+            names = [f.name for f in fields]
+            if name not in names:
+                raise ValueError(f"{self.table_path}: no column {name!r}")
+            if len(names) == 1:
+                raise ValueError(
+                    f"{self.table_path}: cannot drop the only column"
+                )
+            if name in st.part_cols:
+                raise ValueError(
+                    f"{self.table_path}: {name!r} is a partition column "
+                    "— repartition (rewrite) before dropping it"
+                )
+            if _constraints(st.config):
+                raise DeltaProtocolError(
+                    f"{self.table_path}: cannot drop with CHECK "
+                    "constraints declared — their expressions may bind "
+                    f"{name!r}; drop the constraints first"
+                )
+            return lambda fs: [f for f in fs if f.name != name], st.part_cols
+
+        return self._mapped_commit(edit)
+
+    def _mapped_commit(self, edit) -> int:
+        """A metadata-only schema edit under column mapping (name
+        mode): `edit(state, fields)` validates against the replayed
+        table and returns (transform of the mapped fields, partition
+        columns). Every column gains a stable
+        delta.columnMapping.physicalName (its current physical name)
+        and id, maxColumnId never falls (ids of columns dropped by any
+        writer are never reused), and the protocol upgrades to a
+        column-mapping-capable reader in the same commit. Schemas with
+        nested/complex fields refuse: the spec requires EVERY field
+        (nested included) to carry id + physicalName once mapping is
+        on, and emitting them unmapped would hand foreign readers a
+        spec-invalid table. The commit REBUILDS from a fresh replay on
+        every conflict retry — blindly re-committing the first
+        attempt's metaData would clobber a concurrently evolved
+        schema (r7 review #4)."""
+        for _ in range(20):
+            st = DeltaLog(self.table_path).replay(None)
+            transform, part_cols = edit(st, st.schema.fields)
             complex_fields = [
                 f.name
-                for f in schema.fields
+                for f in st.schema.fields
                 if isinstance(
                     f.dataType, (T.StructType, T.ArrayType, T.MapType)
                 )
@@ -1991,30 +2118,19 @@ class DeltaLogWriter:
                 )
             used = [
                 int((f.metadata or {}).get("delta.columnMapping.id", 0))
-                for f in schema.fields
+                for f in st.schema.fields
             ]
             next_id = max(used, default=0)
             fields = []
-            for f in schema.fields:
+            for f in st.schema.fields:
                 md = dict(f.metadata or {})
                 md.setdefault(_CM_PHYS, f.name)
                 if "delta.columnMapping.id" not in md:
                     next_id += 1
                     md["delta.columnMapping.id"] = next_id
-                fields.append(
-                    T.StructField(
-                        new if f.name == old else f.name,
-                        f.dataType,
-                        f.nullable,
-                        md,
-                    )
-                )
-            new_schema = T.StructType(fields)
-            new_part_cols = [new if c == old else c for c in part_cols]
-            config = dict(log.table_config or {})
+                fields.append(T.StructField(f.name, f.dataType, f.nullable, md))
+            config = dict(st.config)
             config.setdefault("delta.columnMapping.mode", "name")
-            # monotonically non-decreasing per the spec: ids of columns
-            # DROPPED by other writers must never be reused
             config["delta.columnMapping.maxColumnId"] = str(
                 max(
                     int(config.get("delta.columnMapping.maxColumnId") or 0),
@@ -2022,7 +2138,7 @@ class DeltaLogWriter:
                 )
             )
             actions: list[dict] = []
-            prot = log.table_protocol or {
+            prot = st.protocol or {
                 "minReaderVersion": 1,
                 "minWriterVersion": 2,
             }
@@ -2052,120 +2168,9 @@ class DeltaLogWriter:
                     }
                 )
             actions.append(
-                self._metadata_action(new_schema, new_part_cols, config)
-            )
-            try:
-                return self._commit(self._next_version(), actions)
-            except DeltaCommitConflict:
-                continue  # re-replay: pick up the concurrent change
-        raise DeltaCommitConflict(f"{self.table_path}: gave up after retries")
-
-    def drop_column(self, name: str) -> int:
-        """DROP COLUMN the Delta-spec way: metadata-only, by enabling
-        column mapping (name mode) and removing the field from the
-        LOGICAL schema. No data file is rewritten — the dropped
-        column's bytes stay in old files, simply unreferenced by the
-        mapping-aware read, and its mapping id retires forever
-        (maxColumnId stays monotone so no future column reuses it).
-        At 100 TB that's the point: dropping a petabyte column costs
-        one commit.
-
-        Refusals: partition columns (the hive layout and
-        partitionValues keys are built from them), tables with CHECK
-        constraints (their expressions may bind the dropped name),
-        nested/complex schemas (the mapping rule rename_column
-        documents), and the last remaining column. Same
-        rebuild-per-retry conflict discipline as rename_column."""
-        for _ in range(20):
-            log = DeltaLog(self.table_path)
-            schema, part_cols, _ = log.replay(None)
-            names = [f.name for f in schema.fields]
-            if name not in names:
-                raise ValueError(f"{self.table_path}: no column {name!r}")
-            if len(names) == 1:
-                raise ValueError(
-                    f"{self.table_path}: cannot drop the only column"
+                self._metadata_action(
+                    T.StructType(transform(fields)), part_cols, config
                 )
-            if name in part_cols:
-                raise ValueError(
-                    f"{self.table_path}: {name!r} is a partition column "
-                    "— repartition (rewrite) before dropping it"
-                )
-            if self.constraints():
-                raise DeltaProtocolError(
-                    f"{self.table_path}: cannot drop with CHECK "
-                    "constraints declared — their expressions may bind "
-                    f"{name!r}; drop the constraints first"
-                )
-            complex_fields = [
-                f.name
-                for f in schema.fields
-                if isinstance(
-                    f.dataType, (T.StructType, T.ArrayType, T.MapType)
-                )
-            ]
-            if complex_fields:
-                raise DeltaProtocolError(
-                    f"{self.table_path}: enabling column mapping with "
-                    f"nested/complex fields {complex_fields} is not "
-                    "implemented (the spec requires every nested field "
-                    "to carry mapping metadata)"
-                )
-            used = [
-                int((f.metadata or {}).get("delta.columnMapping.id", 0))
-                for f in schema.fields
-            ]
-            next_id = max(used, default=0)
-            fields = []
-            for f in schema.fields:
-                md = dict(f.metadata or {})
-                md.setdefault(_CM_PHYS, f.name)
-                if "delta.columnMapping.id" not in md:
-                    next_id += 1
-                    md["delta.columnMapping.id"] = next_id
-                if f.name != name:
-                    fields.append(
-                        T.StructField(f.name, f.dataType, f.nullable, md)
-                    )
-            new_schema = T.StructType(fields)
-            config = dict(log.table_config or {})
-            config.setdefault("delta.columnMapping.mode", "name")
-            # the DROPPED column's id counts too: ids never reuse
-            config["delta.columnMapping.maxColumnId"] = str(
-                max(
-                    int(config.get("delta.columnMapping.maxColumnId") or 0),
-                    next_id,
-                )
-            )
-            actions: list[dict] = []
-            prot = log.table_protocol or {
-                "minReaderVersion": 1,
-                "minWriterVersion": 2,
-            }
-            rv = prot.get("minReaderVersion", 1)
-            wv = prot.get("minWriterVersion", 2)
-            rf = set(prot.get("readerFeatures") or [])
-            wf = set(prot.get("writerFeatures") or [])
-            if rv >= 3 or wf:
-                new_prot = {
-                    "minReaderVersion": max(rv, 3),
-                    "minWriterVersion": max(wv, 7),
-                    "readerFeatures": sorted(rf | {"columnMapping"}),
-                    "writerFeatures": sorted(wf | {"columnMapping"}),
-                }
-                if new_prot != prot:
-                    actions.append({"protocol": new_prot})
-            elif rv < 2 or wv < 5:
-                actions.append(
-                    {
-                        "protocol": {
-                            "minReaderVersion": max(rv, 2),
-                            "minWriterVersion": max(wv, 5),
-                        }
-                    }
-                )
-            actions.append(
-                self._metadata_action(new_schema, part_cols, config)
             )
             try:
                 return self._commit(self._next_version(), actions)
@@ -2174,16 +2179,14 @@ class DeltaLogWriter:
         raise DeltaCommitConflict(f"{self.table_path}: gave up after retries")
 
     def _schema_evolution_action(
-        self, df, merge_schema: bool, snapshot_info=None
+        self, df, merge_schema: bool, st: DeltaState
     ) -> dict | None:
         """Validate df's schema against the table's; returns the
         metaData action recording an ADD-column evolution (or None when
         schemas match). Same rules as planktable._check_schema: adding
         columns needs merge_schema=True (old files read the new column
         as null); dropping or retyping existing columns is never
-        allowed. `snapshot_info=(schema, part_cols, cfg)` lets append
-        pass its already-replayed snapshot (one log replay per append,
-        not three).
+        allowed. `st` is the caller's replayed table.
 
         The evolution metaData action carries the CURRENT table
         configuration forward: metaData REPLACES the whole metadata,
@@ -2191,15 +2194,7 @@ class DeltaLogWriter:
         including CHECK constraints, whose enforcement vanished on
         the very next writer (caught by the round-8 review; pinned in
         tests/test_constraints_evolution.py)."""
-        if snapshot_info is not None:
-            current, part_cols, cfg = snapshot_info
-        else:
-            try:
-                log = DeltaLog(self.table_path)
-                current, part_cols = log.schema_info(None)
-                cfg = dict(log.table_config)
-            except FileNotFoundError:
-                return None
+        current = st.schema
         cur = {f.name: f.dataType for f in current.fields}
         inc = {f.name: f.dataType for f in df.schema.fields}
         missing = set(cur) - set(inc)
@@ -2223,7 +2218,7 @@ class DeltaLogWriter:
                 current.fields
                 + [f for f in df.schema.fields if f.name in added]
             )
-            return self._metadata_action(evolved, part_cols, cfg)
+            return self._metadata_action(evolved, st.part_cols, dict(st.config))
         return None
 
     # -- operations -----------------------------------------------------
@@ -2336,7 +2331,7 @@ class DeltaLogWriter:
             protocol = {
                 "protocol": {"minReaderVersion": 1, "minWriterVersion": wv}
             }
-        adds = self._stage(df, partition_by)
+        adds = self._stage(None, df, partition_by)
         if row_tracking:
             # table-features form: rowTracking (and its prerequisite
             # domainMetadata) are WRITER features — readers without
@@ -2409,18 +2404,17 @@ class DeltaLogWriter:
         null — parquet mergeSchema semantics)."""
         cm = None
         try:
-            log = DeltaLog(self.table_path)
-            cur_schema, part_cols = log.schema_info(None)
-            snapshot_info = (cur_schema, part_cols, dict(log.table_config))
-            cm = column_mapping(cur_schema, log.table_config, self.table_path)
+            st = DeltaLog(self.table_path).replay(None)
+            part_cols = st.part_cols
+            cm = column_mapping(st.schema, st.config, self.table_path)
         except FileNotFoundError:
-            snapshot_info, part_cols = None, []
-        if snapshot_info is not None:
+            st, part_cols = None, []
+        if st is not None:
             # generated columns (delta.generationExpression field
             # metadata): materialize when absent, enforce when supplied
             # — caller values that contradict the expression must not
             # land (they'd silently diverge from every other writer's)
-            for f in snapshot_info[0].fields:
+            for f in st.schema.fields:
                 if not f.metadata or "delta.generationExpression" not in (
                     f.metadata
                 ):
@@ -2442,7 +2436,7 @@ class DeltaLogWriter:
             # OMITS a defaulted column materializes CURRENT_DEFAULT at
             # staging time; supplied values — explicit NULL included —
             # always win (defaults are fallbacks, not invariants)
-            for f in snapshot_info[0].fields:
+            for f in st.schema.fields:
                 if (
                     f.metadata
                     and "CURRENT_DEFAULT" in f.metadata
@@ -2452,7 +2446,7 @@ class DeltaLogWriter:
                         f.name,
                         F.expr(f.metadata["CURRENT_DEFAULT"]).cast(f.dataType),
                     )
-        ident = _identity_info(snapshot_info[0]) if snapshot_info else {}
+        ident = _identity_info(st.schema) if st else {}
         if ident:
             present = sorted(set(ident) & set(df.columns))
             if present:
@@ -2467,7 +2461,7 @@ class DeltaLogWriter:
                     "with plain appends only (no txn idempotence, "
                     "schema evolution, or column mapping)"
                 )
-            return self._append_identity(df)
+            return self._append_identity(st, df)
         if cm:
             # mapped table (rename_column): files store PHYSICAL names,
             # so staging renames df's logical columns; add-column
@@ -2478,7 +2472,7 @@ class DeltaLogWriter:
                     f"{self.table_path}: schema evolution on a "
                     "column-mapped table is not implemented"
                 )
-            want = [(f.name, f.dataType) for f in cur_schema.fields]
+            want = [(f.name, f.dataType) for f in st.schema.fields]
             got = [(f.name, f.dataType) for f in df.schema.fields]
             if want != got:
                 raise ValueError(
@@ -2490,19 +2484,19 @@ class DeltaLogWriter:
             )
             part_cols = [cm["phys"][c] for c in part_cols]
         evolution = (
-            self._schema_evolution_action(df, merge_schema, snapshot_info)
-            if snapshot_info is not None and not cm
+            self._schema_evolution_action(df, merge_schema, st)
+            if st is not None and not cm
             else None
         )
         if evolution is not None:
-            cur_names = {f.name for f in snapshot_info[0].fields}
+            cur_names = set(st.schema.fieldNames())
             new_ntz = [
                 f.name
                 for f in df.schema.fields
                 if f.name not in cur_names and _schema_has_ntz(f.dataType)
             ]
             if new_ntz:
-                prot = log.table_protocol or {}
+                prot = st.protocol or {}
                 feats = set(prot.get("readerFeatures") or []) | set(
                     prot.get("writerFeatures") or []
                 )
@@ -2516,8 +2510,8 @@ class DeltaLogWriter:
                         "an NTZ column (or upgrade the protocol) first"
                     )
         head: list[dict] = [evolution] if evolution is not None else []
-        rt_enabled = snapshot_info is not None and "rowTracking" in set(
-            (log.table_protocol or {}).get("writerFeatures") or []
+        rt_enabled = st is not None and "rowTracking" in set(
+            (st.protocol or {}).get("writerFeatures") or []
         )
         if rt_enabled:
             if txn is not None:
@@ -2527,14 +2521,14 @@ class DeltaLogWriter:
                     "idempotence would need the id-assignment and "
                     "guard loops merged"
                 )
-            return self._append_row_tracked(head, self._stage(df, part_cols))
+            return self._append_row_tracked(st, head, self._stage(st, df, part_cols))
         if txn is None:
-            return self._commit_with_retry(head + self._stage(df, part_cols))
+            return self._commit_with_retry(head + self._stage(st, df, part_cols))
         last = self.last_txn_version(txn[0])
         if last is not None and txn[1] <= last:
             return None  # duplicate micro-batch replay
         actions: list[dict] = head + [{"txn": {"appId": txn[0], "version": txn[1]}}]
-        actions += self._stage(df, part_cols)
+        actions += self._stage(st, df, part_cols)
         for _ in range(20):
             # ORDER MATTERS: pick the target version FIRST, then check
             # the guard. The check then observes every commit < v, so a
@@ -2556,20 +2550,21 @@ class DeltaLogWriter:
             return v
         raise DeltaCommitConflict(f"{self.table_path}: gave up after retries")
 
-    def _append_row_tracked(self, head: list[dict], adds: list[dict]) -> int:
+    def _append_row_tracked(
+        self, st: DeltaState, head: list[dict], adds: list[dict]
+    ) -> int:
         """Append to a row-tracked table: assign fresh baseRowIds from
-        the CURRENT high-water mark and commit the advanced mark (the
+        the CURRENT high-water mark (`st` advanced over the commits
+        that landed since) and commit the advanced mark (the
         delta.rowTracking domain metadata) in the SAME commit as the
         adds. The whole sequence re-runs per OCC conflict — a
         concurrent row-tracked append advanced the mark, so ids must
         be re-assigned (the _append_identity shape; cheaper here
         because ids live only in the log, no re-staging)."""
         for _ in range(20):
-            log = DeltaLog(self.table_path)
-            _, _, active = log.replay(None)
-            hwm = _row_id_hwm(log, active)
             v = self._next_version()
-            new_hwm = _assign_base_row_ids(adds, hwm + 1, commit_version=v)
+            st, _removed = self._newer(st, v)
+            new_hwm = _assign_base_row_ids(adds, _row_id_hwm(st) + 1, commit_version=v)
             actions = head + [_row_tracking_domain(new_hwm)] + adds
             try:
                 v = self._commit(v, actions)
@@ -2580,17 +2575,20 @@ class DeltaLogWriter:
             return v
         raise DeltaCommitConflict(f"{self.table_path}: gave up after retries")
 
-    def _append_identity(self, df) -> int:
+    def _append_identity(self, st: DeltaState, df) -> int:
         """Append to a table with identity columns: allocate ids from
-        the CURRENT high-water mark and commit the advanced mark in
-        the SAME commit as the adds. The whole sequence re-runs per
-        OCC conflict — a concurrent identity append advanced the mark,
-        so ids must be re-allocated and files re-staged (orphaned
-        stage files are vacuum's problem, the id space is correctness:
-        reusing the lost round's ids would collide)."""
+        the CURRENT high-water mark (`st` advanced over the commits
+        that landed since) and commit the advanced mark in the SAME
+        commit, at the version right after the state it read. The
+        whole sequence re-runs per OCC conflict — a concurrent
+        identity append advanced the mark, so ids must be re-allocated
+        and files re-staged (orphaned stage files are vacuum's
+        problem, the id space is correctness: reusing the lost round's
+        ids would collide)."""
         for _ in range(20):
-            log = DeltaLog(self.table_path)
-            schema, part_cols, _active = log.replay(None)
+            v = self._next_version()
+            st, _removed = self._newer(st, v)
+            schema, part_cols = st.schema, st.part_cols
             ident = _identity_info(schema)
             out = df
             new_hwm: dict[str, int | None] = {}
@@ -2615,14 +2613,12 @@ class DeltaLogWriter:
                 ]
             )
             actions = [
-                self._metadata_action(
-                    new_schema, part_cols, dict(log.table_config)
-                )
-            ] + self._stage(out, part_cols)
+                self._metadata_action(new_schema, part_cols, dict(st.config))
+            ] + self._stage(st, out, part_cols)
             try:
-                return self._commit(self._next_version(), actions)
+                return self._commit(v, actions)
             except DeltaCommitConflict:
-                continue  # fresh replay → fresh mark → re-allocate
+                continue  # newer commits → fresh mark → re-allocate
         raise DeltaCommitConflict(f"{self.table_path}: gave up after retries")
 
     def _rewrite(self, op, condition, assignments=None, insert=None) -> int:
@@ -2645,31 +2641,29 @@ class DeltaLogWriter:
         deletes, or update pre/postimage pairs, and `insert` as
         inserts. The commit is OCC-validated: a concurrent rewrite of
         a hit file aborts this one."""
-        log = DeltaLog(self.table_path)
-        schema, part_cols, files = log.snapshot(None)
-        self._refuse_if_append_only(log.table_config, op)
+        st = DeltaLog(self.table_path).replay(None)
+        schema, part_cols = st.schema, st.part_cols
+        files = _whole_files(self.table_path, st)
+        self._refuse_if_append_only(st.config, op)
         if assignments is not None:
             exprs = rw.update_exprs(assignments, schema, part_cols, self.table_path)
         if insert is not None:
             rw.check_replacement(insert, condition, self.table_path, schema)
-        _, _, active = log.replay(None)
-        rt_on, mat_id, mat_cv, mat_head = self._rt_rewrite_state(
-            log, schema, part_cols, active
-        )
+        rt_on, mat_id, mat_cv, mat_head = self._rt_rewrite_state(st)
         live = _assemble_view(
             self.spark, schema, part_cols, files, with_file=True,
             table_root=self.table_path,
         )
         hit_files = rw.hit_files(live, condition, files)
         hit_rel = sorted(_path_key(self.table_path, p) for p, _ in hit_files)
-        cdf = self._cdf_enabled(log.table_config)
-        adds = [] if insert is None else self._stage(insert, part_cols)
+        cdf = self._cdf_enabled(st.config)
+        adds = [] if insert is None else self._stage(st, insert, part_cols)
         tail: list[dict] = []
         changes = []
         if hit_rel:
             hot = (
                 self._rt_subset_scan(
-                    schema, part_cols, hit_files, active, mat_id, mat_cv
+                    schema, part_cols, hit_files, st.active, mat_id, mat_cv
                 )
                 if rt_on
                 else _assemble_view(
@@ -2682,7 +2676,7 @@ class DeltaLogWriter:
             else:
                 lineage = (mat_id, mat_cv) if rt_on else None
                 out = hot.select(rw.updated(schema, exprs, condition, lineage))
-            adds += self._stage(out, part_cols)
+            adds += self._stage(st, out, part_cols)
             tail += [{"remove": {"path": r, "dataChange": True}} for r in hit_rel]
             if cdf:
                 pre = hot.where(rw.matched(condition)).select(schema.fieldNames())
@@ -2700,9 +2694,9 @@ class DeltaLogWriter:
             tail += self._stage_cdc(rw.change_rows(changes), part_cols)
         if rt_on and (hit_rel or adds):
             return self._commit_rt_rewrite(
-                mat_head, adds, tail, hit_rel, mat_id, mat_cv
+                st, mat_head, adds, tail, hit_rel, mat_id, mat_cv
             )
-        return self._validate_then_commit(adds + tail, hit_rel)
+        return self._validate_then_commit(st, adds + tail, hit_rel)
 
     def delete_where(self, condition) -> int:
         """Row-level delete: rewrite only files containing matches;
@@ -2774,10 +2768,10 @@ class DeltaLogWriter:
         and the masked re-adds keep their copied baseRowIds. A
         change-feed table stages the matched rows as deletes or update
         pre/postimages. OCC-validated like the rewrite verbs."""
-        log = DeltaLog(self.table_path)
-        schema, part_cols, active = log.replay(None)
-        self._refuse_if_append_only(log.table_config, f"{op} (DV)")
-        if column_mapping(schema, log.table_config, self.table_path):
+        st = DeltaLog(self.table_path).replay(None)
+        schema, part_cols, active = st.schema, st.part_cols, st.active
+        self._refuse_if_append_only(st.config, f"{op} (DV)")
+        if column_mapping(schema, st.config, self.table_path):
             binds = "predicate" if assignments is None else "assignments"
             raise DeltaProtocolError(
                 f"{self.table_path}: DV {op.lower()} on a column-mapped table "
@@ -2788,7 +2782,7 @@ class DeltaLogWriter:
         if not active:
             return None
         rt_on, mat_id, mat_cv, mat_head = (
-            self._rt_rewrite_state(log, schema, part_cols, active)
+            self._rt_rewrite_state(st)
             if assignments is not None
             else (False, None, None, [])
         )
@@ -2834,7 +2828,7 @@ class DeltaLogWriter:
             return None
         hit_rel = sorted(rel_of[r.f] for r in descs)
         actions: list[dict] = []
-        prot = log.table_protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
+        prot = st.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
         rf = set(prot.get("readerFeatures") or [])
         if prot.get("minReaderVersion", 1) < 3 or "deletionVectors" not in rf:
             wf = set(prot.get("writerFeatures") or [])
@@ -2873,29 +2867,29 @@ class DeltaLogWriter:
                 ).select(upd + [F.col(mat_id), F.col(mat_cv)])
             else:
                 copies = matched.select(upd)
-            adds = self._stage(copies, part_cols)
-        if self._cdf_enabled(log.table_config):
+            adds = self._stage(st, copies, part_cols)
+        if self._cdf_enabled(st.config):
             actions += self._stage_cdc(rw.change_rows(changes), part_cols)
         if rt_on:
             # masked re-adds keep their copied baseRowIds; only the
             # NEW files (updated copies) claim fresh ids
             return self._commit_rt_rewrite(
-                mat_head, adds, actions, hit_rel, mat_id, mat_cv
+                st, mat_head, adds, actions, hit_rel, mat_id, mat_cv
             )
-        return self._validate_then_commit(actions + adds, hit_rel)
+        return self._validate_then_commit(st, actions + adds, hit_rel)
 
-    def _validate_then_commit(self, actions: list[dict], depends_on_rel) -> int:
-        """OCC commit for actions that REMOVE files: valid only while
-        every removed file is still live — a concurrent rewrite of one
-        aborts with ConcurrentDeltaModification (committing the stale
-        actions would silently undo that writer)."""
+    def _validate_then_commit(
+        self, st: DeltaState, actions: list[dict], depends_on_rel
+    ) -> int:
+        """OCC commit for actions that REMOVE files of `st`: valid
+        only while no commit after `st` removed one of them — a
+        concurrent rewrite aborts with ConcurrentDeltaModification
+        (committing the stale actions would silently undo that
+        writer). Only the commits newer than `st` are read."""
         for _ in range(20):
             v = self._next_version()
-            # replay, not snapshot(): liveness validation only needs
-            # the path set, and must keep working on DV'd tables
-            _, _, now_active = DeltaLog(self.table_path).replay(None)
-            now_rel = set(now_active)
-            gone = [r for r in depends_on_rel if r not in now_rel]
+            st, removed = self._newer(st, v)
+            gone = [r for r in depends_on_rel if r in removed]
             if gone:
                 raise ConcurrentDeltaModification(
                     f"{self.table_path}: files rewritten concurrently: {gone[:5]}"
@@ -2930,9 +2924,9 @@ class DeltaLogWriter:
         PARTITION, the same granularity Delta's own OPTIMIZE uses)."""
         if sort_by and zorder_by:
             raise ValueError("pass sort_by or zorder_by, not both")
-        log = DeltaLog(self.table_path)
-        schema, part_cols, active = log.replay(None)
-        if column_mapping(schema, log.table_config, self.table_path):
+        st = DeltaLog(self.table_path).replay(None)
+        schema, part_cols, active = st.schema, st.part_cols, st.active
+        if column_mapping(schema, st.config, self.table_path):
             raise DeltaProtocolError(
                 f"{self.table_path}: OPTIMIZE on a column-mapped table "
                 "would re-stage under logical names; not implemented"
@@ -2951,13 +2945,11 @@ class DeltaLogWriter:
         # when the snapshot is FULLY tracked: a partially-tracked
         # table (files rewritten by a non-preserving op) keeps today's
         # non-preserving rewrite, and its lineage reads keep refusing.
-        rt_live, mat_id, mat_cv, mat_head = self._rt_rewrite_state(
-            log, schema, part_cols, active
-        )
+        rt_live, mat_id, mat_cv, mat_head = self._rt_rewrite_state(st)
         if rt_live:
             # the DV-aware row-id read: survivors keep their ids (DVs
             # are position-based) and the rewrite purges the DVs
-            df = read_delta(self.spark, self.table_path, with_row_ids=True)
+            df = _read_state(self.spark, self.table_path, st, with_row_ids=True)
             if mat_id != "_row_id":
                 df = df.withColumnRenamed("_row_id", mat_id)
             if mat_cv != "_row_commit_version":
@@ -2967,7 +2959,7 @@ class DeltaLogWriter:
             # drops the marked rows, so the rewritten files are clean
             # and the re-adds carry no DV. Still layout-only
             # (dataChange=false): the logical row set is unchanged.
-            df = read_delta(self.spark, self.table_path)
+            df = _read_state(self.spark, self.table_path, st)
         else:
             df = _assemble_view(
                 self.spark, schema, part_cols, files, table_root=self.table_path
@@ -2982,16 +2974,16 @@ class DeltaLogWriter:
             df, num_files, zorder_by, sort_by, target_file_mb, sizes,
             part_cols, [pv for _, pv in files],
         )
-        adds = self._stage(df, part_cols)
+        adds = self._stage(st, df, part_cols)
         for a in adds:
             a["add"]["dataChange"] = False
         rel = sorted(_path_key(self.table_path, p) for p, _ in files)
         removes = [{"remove": {"path": r, "dataChange": False}} for r in rel]
         if rt_live:
             return self._commit_rt_rewrite(
-                mat_head, adds, removes, rel, mat_id, mat_cv
+                st, mat_head, adds, removes, rel, mat_id, mat_cv
             )
-        return self._validate_then_commit(adds + removes, rel)
+        return self._validate_then_commit(st, adds + removes, rel)
 
     def overwrite(self, df) -> int:
         """Replace the table's content atomically: stage the new rows,
@@ -3007,38 +2999,33 @@ class DeltaLogWriter:
         metaData action with df's schema rides the commit, so reads
         after the overwrite project the new columns instead of being
         silently governed by the stale schemaString."""
-        part_cols = self._partition_cols()
         # replay, not snapshot(): overwrite never READS existing files
         # — it tombstones them wholesale, which is exactly right for
         # DV'd files too (the DV dies with its add action)
-        log0 = DeltaLog(self.table_path)
-        cur_schema, _ = log0.schema_info(None)
-        self._refuse_if_append_only(log0.table_config, "OVERWRITE")
+        st = DeltaLog(self.table_path).replay(None)
+        part_cols = st.part_cols
+        self._refuse_if_append_only(st.config, "OVERWRITE")
         head: list[dict] = []
-        if cur_schema.jsonValue() != df.schema.jsonValue():
+        if st.schema.jsonValue() != df.schema.jsonValue():
             # carry the table configuration forward (same rule as the
             # evolution path): metaData REPLACES all metadata, so an
             # action without it would silently drop CHECK constraints
             # and every property. A constraint referencing a column the
             # new schema lacks fails enforcement analysis loudly —
             # drop_constraint first, by design.
-            head = [
-                self._metadata_action(
-                    df.schema, part_cols, dict(log0.table_config)
-                )
-            ]
-        adds = self._stage(df, part_cols)
+            head = [self._metadata_action(df.schema, part_cols, dict(st.config))]
+        adds = self._stage(st, df, part_cols)
         for _ in range(20):
             v = self._next_version()
-            _, _, now_active = DeltaLog(self.table_path).replay(None)
-            rel = sorted(now_active)
+            st, _removed = self._newer(st, v)
+            rel = sorted(st.active)
             actions = head + adds + [
                 {"remove": {"path": r, "dataChange": True}} for r in rel
             ]
             try:
                 return self._commit(v, actions)
             except DeltaCommitConflict:
-                continue  # re-read the snapshot: tombstone what's live NOW
+                continue  # tombstone what is live NOW
         raise DeltaCommitConflict(f"{self.table_path}: gave up after retries")
 
     def replace_where(self, df, condition) -> int:
@@ -3075,10 +3062,9 @@ class DeltaLogWriter:
         from plankton_spark.sources.deletion_vectors import _decode_uuid_path
 
         log = DeltaLog(self.table_path)
-        t_schema, t_parts, t_active = log.replay(version)
-        t_cfg = dict(log.table_config)
-        cur_schema, cur_parts, cur_active = log.replay(None)
-        cur_cfg = dict(log.table_config)
+        target, cur = log.replay(version), log.replay(None)
+        t_schema, t_parts, t_active, t_cfg = target[:4]
+        cur_schema, cur_parts, cur_active, cur_cfg = cur[:4]
 
         missing: list[str] = []
         for rel, add in sorted(t_active.items()):
@@ -3115,7 +3101,7 @@ class DeltaLogWriter:
         actions += [
             {"remove": {"path": r, "dataChange": True}} for r in removed
         ]
-        return self._validate_then_commit(actions, removed)
+        return self._validate_then_commit(cur, actions, removed)
 
     def merge(self, source, key: str, merge_schema: bool = False) -> int:
         """Upsert (MERGE): rows in `source` update same-key rows,
@@ -3145,13 +3131,13 @@ class DeltaLogWriter:
         if raw_lo is None:  # empty source → MERGE commits a no-op marker
             return self._commit_with_retry([])
         lo, hi = _stat_encode(raw_lo), _stat_encode(raw_hi)
-        # ONE log replay feeds schema, partition values, and stats: a
-        # second replay (the old snapshot-then-live_stats shape) could
-        # see a concurrent commit and KeyError instead of the clean
-        # OCC conflict _validate_then_commit raises.
-        log = DeltaLog(self.table_path)
-        schema, part_cols, active = log.replay(None)
-        self._refuse_if_append_only(log.table_config, "MERGE")
+        # ONE log replay feeds schema, partition values, stats and the
+        # commit: a second replay (the old snapshot-then-live_stats
+        # shape) could see a concurrent commit and KeyError instead of
+        # the clean OCC conflict _validate_then_commit raises.
+        st = DeltaLog(self.table_path).replay(None)
+        schema, part_cols, active = st.schema, st.part_cols, st.active
+        self._refuse_if_append_only(st.config, "MERGE")
         if any(a.get("deletionVector") for a in active.values()):
             # merge reads its hit files WHOLE; a DV'd file would feed
             # deleted rows back into the rewrite and resurrect them
@@ -3160,7 +3146,7 @@ class DeltaLogWriter:
                 "vectors would resurrect deleted rows — run optimize() "
                 "first to purge the DVs"
             )
-        if column_mapping(schema, log.table_config, self.table_path):
+        if column_mapping(schema, st.config, self.table_path):
             raise DeltaProtocolError(
                 f"{self.table_path}: MERGE on a column-mapped table "
                 "would re-stage under logical names; not implemented"
@@ -3172,11 +3158,7 @@ class DeltaLogWriter:
                     f"{self.table_path}: merge source missing partition "
                     f"columns {missing}"
                 )
-        evolution = self._schema_evolution_action(
-            source,
-            merge_schema,
-            (schema, part_cols, dict(log.table_config)),
-        )
+        evolution = self._schema_evolution_action(source, merge_schema, st)
         added_fields = []
         if evolution is not None:
             cur_names = {f.name for f in schema.fields}
@@ -3185,7 +3167,7 @@ class DeltaLogWriter:
             ]
             ntz = [f.name for f in added_fields if _schema_has_ntz(f.dataType)]
             if ntz:
-                prot = log.table_protocol or {}
+                prot = st.protocol or {}
                 feats = set(prot.get("readerFeatures") or []) | set(
                     prot.get("writerFeatures") or []
                 )
@@ -3207,10 +3189,10 @@ class DeltaLogWriter:
         else:
             # either bound missing (spec allows omitting untrusted
             # bounds, e.g. truncated long strings) → must rewrite
-            st = self.live_stats(active)
+            stats = self.live_stats(active)
             overlap_rel = rw.overlapping(
-                st, lo, hi,
-                lambda r: (st[r]["minValues"].get(key), st[r]["maxValues"].get(key)),
+                stats, lo, hi,
+                lambda r: (stats[r]["minValues"].get(key), stats[r]["maxValues"].get(key)),
             )
         overlap_files = [
             (os.path.join(self.table_path, rel), active[rel]["partitionValues"])
@@ -3219,9 +3201,7 @@ class DeltaLogWriter:
         overlap = sorted(
             _path_key(self.table_path, p) for p, _ in overlap_files
         )
-        rt_on, mat_id, mat_cv, mat_head = self._rt_rewrite_state(
-            log, schema, part_cols, active
-        )
+        rt_on, mat_id, mat_cv, mat_head = self._rt_rewrite_state(st)
         if rt_on and added_fields and mat_head:
             # evolution emits its own metaData (config carried
             # forward) — composing it with a SECOND metaData that
@@ -3253,11 +3233,11 @@ class DeltaLogWriter:
         # _row_id with a reset commit version; inserts get fresh ids
         merged = rw.merged(hot, source, key, (mat_id, mat_cv) if rt_on else None)
         head = [evolution] if evolution is not None else []
-        rw_adds = self._stage(merged, part_cols)
+        rw_adds = self._stage(st, merged, part_cols)
         tail = [
             {"remove": {"path": r, "dataChange": True}} for r in overlap
         ]
-        if self._cdf_enabled(log.table_config):
+        if self._cdf_enabled(st.config):
             # MERGE change attribution: source rows whose key existed
             # become update pre/postimage pairs, the rest are inserts;
             # unmatched target rows restage verbatim and emit nothing
@@ -3279,9 +3259,9 @@ class DeltaLogWriter:
             # exclusive here (the guard above), so concatenation never
             # stacks two metaData actions in one commit
             return self._commit_rt_rewrite(
-                head + mat_head, rw_adds, tail, overlap, mat_id, mat_cv
+                st, head + mat_head, rw_adds, tail, overlap, mat_id, mat_cv
             )
-        return self._validate_then_commit(head + rw_adds + tail, overlap)
+        return self._validate_then_commit(st, head + rw_adds + tail, overlap)
 
     def vacuum(self, grace_seconds: float = 600.0) -> list[str]:
         """Delete data files referenced by NO commit (staging leftovers
@@ -3334,18 +3314,12 @@ class DeltaLogWriter:
             return None
 
         for v in _commit_versions(self.log_dir):
-            path = os.path.join(self.log_dir, f"{v:020d}.json")
-            with open(path) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    a = json.loads(line)
-                    if "add" in a:
-                        referenced.add(a["add"]["path"])
-                        dv = _dv_rel(a["add"])
-                        if dv:
-                            referenced_dv.add(dv)
+            for a in _commit_actions(self.log_dir, v):
+                if "add" in a:
+                    referenced.add(a["add"]["path"])
+                    dv = _dv_rel(a["add"])
+                    if dv:
+                        referenced_dv.add(dv)
         # checkpoints may be the ONLY record of pre-checkpoint adds
         # (their JSON commits can be cleaned up) — and time travel can
         # replay from ANY retained checkpoint, not just the newest, so
@@ -3476,30 +3450,25 @@ class DeltaLogStreamReader(DataSourceStreamReader):
 
     def _added(self, v_from: int, v_to: int) -> list[tuple[str, dict]]:
         out: list[tuple[str, dict]] = []
+        log_dir = os.path.join(self.path, "_delta_log")
         for v in range(v_from + 1, v_to + 1):
-            path = os.path.join(self.path, "_delta_log", f"{v:020d}.json")
             adds: list[tuple[str, dict]] = []
             has_remove = False
-            with open(path) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    a = json.loads(line)
-                    if "add" in a and a["add"].get("dataChange", True):
-                        if a["add"].get("deletionVector"):
-                            # a DV'd (re-)add is a row-level delete in
-                            # disguise: streaming the file in full would
-                            # resurrect deleted rows
-                            has_remove = True
-                        adds.append(
-                            (
-                                os.path.join(self.path, a["add"]["path"]),
-                                a["add"].get("partitionValues") or {},
-                            )
-                        )
-                    elif "remove" in a and a["remove"].get("dataChange", True):
+            for a in _commit_actions(log_dir, v):
+                if "add" in a and a["add"].get("dataChange", True):
+                    if a["add"].get("deletionVector"):
+                        # a DV'd (re-)add is a row-level delete in
+                        # disguise: streaming the file in full would
+                        # resurrect deleted rows
                         has_remove = True
+                    adds.append(
+                        (
+                            os.path.join(self.path, a["add"]["path"]),
+                            a["add"].get("partitionValues") or {},
+                        )
+                    )
+                elif "remove" in a and a["remove"].get("dataChange", True):
+                    has_remove = True
             if has_remove and not self.ignore_changes:
                 raise ValueError(
                     f"{self.path}: version {v} rewrites/removes data — cannot "
@@ -3608,10 +3577,7 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
 
     def _changes(self, v_from: int, v_to: int) -> list["_CdfPartition"]:
         out: list[_CdfPartition] = []
-        for v in range(v_from + 1, v_to + 1):
-            cpath = os.path.join(self.path, "_delta_log", f"{v:020d}.json")
-            with open(cpath) as fh:
-                acts = [json.loads(x) for x in fh if x.strip()]
+        for v, acts, prior, _st in _commit_states(self.path, range(v_from + 1, v_to + 1)):
             cdc = [a["cdc"] for a in acts if "cdc" in a]
             if cdc:
                 out.extend(
@@ -3652,7 +3618,7 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
                 for a in adds
             )
             if removes:
-                _, _, prev = DeltaLog(self.path).replay(v - 1)
+                prev = _prior(self.path, v, prior).active
                 for r in removes:
                     before = prev.get(r["path"])
                     if before is None or before.get("deletionVector"):
@@ -3761,7 +3727,7 @@ def write_delta_checkpoint(
     log = DeltaLog(table_path)
     if version is None:
         version = log.latest_version()
-    schema, part_cols, active = log.replay(version)
+    st = log.replay(version)
     str_map = pa.map_(pa.string(), pa.string())
     cp_schema = pa.schema(
         [
@@ -3855,14 +3821,11 @@ def write_delta_checkpoint(
         {
             "metaData": {
                 "id": f"plankton-delta-{os.path.basename(table_path)}",
-                "schemaString": schema.json(),
-                "partitionColumns": part_cols,
+                "schemaString": st.schema.json(),
+                "partitionColumns": st.part_cols,
                 # carry the table config (column-mapping mode lives
                 # here) so compaction doesn't strip reader semantics
-                "configuration": sorted(
-                    (k, str(v))
-                    for k, v in (getattr(log, "table_config", {}) or {}).items()
-                ),
+                "configuration": sorted((k, str(v)) for k, v in st.config.items()),
             },
             "protocol": None,
             "add": None,
@@ -3875,7 +3838,7 @@ def write_delta_checkpoint(
             "protocol": (
                 {
                     k: v
-                    for k, v in log.table_protocol.items()
+                    for k, v in st.protocol.items()
                     if k
                     in (
                         "minReaderVersion",
@@ -3884,13 +3847,13 @@ def write_delta_checkpoint(
                         "writerFeatures",
                     )
                 }
-                if getattr(log, "table_protocol", None)
+                if st.protocol
                 else {"minReaderVersion": 1, "minWriterVersion": 2}
             ),
             "add": None,
         },
     ]
-    for rel, add in sorted(active.items()):
+    for rel, add in sorted(st.active.items()):
         abs_path = os.path.join(table_path, rel)
         mtime = add.get("modificationTime") or int(
             os.path.getmtime(abs_path) * 1000
@@ -3918,9 +3881,7 @@ def write_delta_checkpoint(
                 "txn": None,
             }
         )
-    for dom, dm in sorted(
-        (getattr(log, "domain_metadata", None) or {}).items()
-    ):
+    for dom, dm in sorted(st.domains.items()):
         cfg = dm.get("configuration")
         rows.append(
             {
@@ -4100,13 +4061,10 @@ def read_delta_cdf(spark, table_path: str, v_from: int, v_to: int):
     ]
     if not versions and not _commit_versions(log_dir):
         raise FileNotFoundError(f"{table_path}: not a Delta table")
-    log = DeltaLog(table_path)
     frames = []
-    for v in versions:
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            acts = [json.loads(x) for x in fh if x.strip()]
-        schema, part_cols = log.schema_info(v)
-        ict = _commit_ict(log_dir, v)
+    for v, acts, prior, st in _commit_states(table_path, versions):
+        schema, part_cols = st.schema, st.part_cols
+        ict = _ict(acts[0]) if acts else None
         ts_ms = (
             ict
             if ict is not None
@@ -4173,7 +4131,7 @@ def read_delta_cdf(spark, table_path: str, v_from: int, v_to: int):
                 )
             )
         if removes:
-            p_schema, p_parts, p_active = DeltaLog(table_path).replay(v - 1)
+            p_schema, p_parts, p_active = _prior(table_path, v, prior)[:3]
             files = []
             for r in removes:
                 prev = p_active.get(r["path"])
@@ -4205,7 +4163,7 @@ def read_delta_cdf(spark, table_path: str, v_from: int, v_to: int):
                 )
             )
     if not frames:
-        schema, part_cols = log.schema_info(None)
+        schema = DeltaLog(table_path).replay(None).schema
         empty = T.StructType(
             list(schema.fields)
             + [
@@ -4291,10 +4249,9 @@ def clone_delta(spark, src_path: str, dst_path: str) -> int:
     dst_log = os.path.join(dst_path, "_delta_log")
     if os.path.isdir(dst_log) and _commit_versions(dst_log):
         raise FileExistsError(f"{dst_path}: already a Delta table")
-    src_log = DeltaLog(src_path)
-    schema, part_cols, active = src_log.replay(None)
-    cfg = dict(src_log.table_config)
-    proto = src_log.table_protocol or {
+    src = DeltaLog(src_path).replay(None)
+    schema, part_cols, active, cfg = src[:4]
+    proto = src.protocol or {
         "minReaderVersion": 1,
         "minWriterVersion": 2,
     }
@@ -4401,9 +4358,7 @@ def delta_history(table_path: str) -> list[dict]:
     log_dir = os.path.join(table_path, "_delta_log")
     out = []
     for v in _commit_versions(log_dir):
-        path = os.path.join(log_dir, f"{v:020d}.json")
-        with open(path) as fh:
-            actions = [json.loads(x) for x in fh if x.strip()]
+        actions = _commit_actions(log_dir, v)
         n_add = sum(1 for a in actions if "add" in a)
         n_remove = sum(1 for a in actions if "remove" in a)
         has_meta = any("metaData" in a for a in actions)
@@ -4451,7 +4406,10 @@ def delta_history(table_path: str) -> list[dict]:
                 "timestamp_ms": (
                     ict
                     if ict is not None
-                    else int(os.path.getmtime(path) * 1000)
+                    else int(
+                        os.path.getmtime(os.path.join(log_dir, f"{v:020d}.json"))
+                        * 1000
+                    )
                 ),
                 "operation": op,
                 "n_added": n_add,
@@ -4481,8 +4439,7 @@ def files_meta(spark, table_path: str, version: int | None = None):
     happens in Spark after parallelize. At 100 TB an ANALYZE answered
     from here costs zero data IO (the point of the surface).
     """
-    log = DeltaLog(table_path)
-    _schema, _part_cols, active = log.replay(version)
+    active = DeltaLog(table_path).replay(version).active
     rows = []
     for rel, add in sorted(active.items()):
         raw = add.get("stats")

@@ -3162,8 +3162,7 @@ def convert_delta_to_hudi(
     meta_dir = os.path.join(table_path, ".hoodie")
     if os.path.isdir(meta_dir):
         raise FileExistsError(f"{table_path}: already a Hudi table")
-    log = DeltaLog(table_path)
-    schema, part_cols, active = log.replay(None)
+    schema, part_cols, active = DeltaLog(table_path).replay(None)[:3]
     if part_cols:
         raise NotImplementedError(
             f"{table_path}: partitioned Delta layout — partition "

@@ -84,6 +84,12 @@ class IcebergTable:
         if not os.path.isdir(self.meta_dir):
             raise FileNotFoundError(f"not an Iceberg table (no metadata/): {table_path}")
         self.metadata = self._load_current_metadata()
+        # decoded Avro rows by path, and the field-id footer probe by
+        # snapshot: manifest lists and manifests are immutable once
+        # written (every commit writes new, uniquely named files), so
+        # a verb holding this object decodes each of them at most once
+        self._decoded: dict[str, list[dict]] = {}
+        self._carries_ids: dict[int, bool] = {}
 
     def _load_current_metadata(self) -> dict:
         # NOTE: version-hint is advisory (it can lag a just-committed
@@ -144,13 +150,14 @@ class IcebergTable:
         id-resolution meets an id-less file)."""
         import pyarrow.parquet as _pq
 
-        entries, _pos, _eq, _dv = self.scan_entries_full(snapshot_id)
-        if not entries:
-            return False
-        sch = _pq.read_schema(entries[0][0])
-        return any(
-            f.metadata and b"PARQUET:field_id" in f.metadata for f in sch
-        )
+        sid = self._snapshot(snapshot_id)["snapshot-id"]
+        if sid not in self._carries_ids:
+            entries = self.scan_entries_full(sid)[0]
+            self._carries_ids[sid] = bool(entries) and any(
+                f.metadata and b"PARQUET:field_id" in f.metadata
+                for f in _pq.read_schema(entries[0][0])
+            )
+        return self._carries_ids[sid]
 
     def properties(self) -> dict:
         """Current metadata['properties'] (empty map when unset)."""
@@ -275,14 +282,7 @@ class IcebergTable:
         historical schemas and does not order them, so schemas[-1]
         could name the id differently."""
         sid = spec_field.get("source-id")
-        md = self.metadata
-        schemas = md.get("schemas")
-        if schemas:
-            cur_id = md.get("current-schema-id", 0)
-            ice = next(s for s in schemas if s.get("schema-id") == cur_id)
-        else:
-            ice = md["schema"]
-        for f in ice["fields"]:
+        for f in self._current_ice_schema()["fields"]:
             if f["id"] == sid:
                 return f["name"]
         raise ValueError(
@@ -317,6 +317,68 @@ class IcebergTable:
             )
         return [(p, pv) for p, pv, _seq, _sid in data], pos
 
+    def _avro(self, path: str) -> list[dict]:
+        """The rows of one manifest list or manifest, decoded once per
+        instance — the only Avro read of the metadata chain."""
+        rows = self._decoded.get(path)
+        if rows is None:
+            rows = self._decoded[path] = list(read_ocf_generic(path))
+        return rows
+
+    def manifest_list(self, snapshot_id: int | None = None) -> list[dict]:
+        """A snapshot's manifest-list records."""
+        return self._avro(self._resolve(self._snapshot(snapshot_id)["manifest-list"]))
+
+    def manifests(self, snapshot_id: int | None = None) -> list[tuple[dict, list[dict]]]:
+        """[(manifest-list record, its manifest's entries)] of a
+        snapshot: the one manifest walk every scan, lineage map,
+        commit and metadata table derives from."""
+        return [
+            (m, self._avro(self._resolve(m["manifest_path"])))
+            for m in self.manifest_list(snapshot_id)
+        ]
+
+    def _live(self, snapshot_id: int | None):
+        """(manifest record, data_file, absolute path, data sequence
+        number, first_row_id) for each live (non-DELETED) entry of a
+        snapshot, each file once.
+
+        Dedup key: one Puffin file legitimately holds many DV blobs
+        (one manifest entry per blob, same file_path, distinct
+        content_offset), so those key by (path, offset); plain files
+        by path. Sequence numbers follow the spec's inheritance rule:
+        an entry's null/absent ``sequence_number`` inherits its
+        manifest's from the manifest-list record (v1 metadata has
+        neither — everything resolves to 0, which is consistent
+        because v1 cannot contain delete files). A data file's null
+        ``first_row_id`` inherits the manifest-list record's
+        ``first_row_id`` plus the record counts of the inheriting
+        data entries before it in that manifest (the common foreign
+        layout: ids per manifest, nulls per file); None when neither
+        level carries one."""
+        seen: set = set()
+        for m, entries in self.manifests(snapshot_id):
+            m_seq, m_frid = m.get("sequence_number"), m.get("first_row_id")
+            acc = 0  # record counts of the preceding inheriting entries
+            for entry in entries:
+                if entry["status"] == 2:  # DELETED
+                    continue
+                df = entry["data_file"]
+                content = df.get("content", 0)
+                frid = df.get("first_row_id") if content == 0 else None
+                if content == 0 and frid is None and m_frid is not None:
+                    frid = int(m_frid) + acc
+                    acc += int(df["record_count"])
+                path = self._resolve(df["file_path"])
+                key = (path, df.get("content_offset") if content == 1 else None)
+                if key in seen:
+                    continue
+                seen.add(key)
+                e_seq = entry.get("sequence_number")
+                if e_seq is None:
+                    e_seq = m_seq if m_seq is not None else 0
+                yield m, df, path, int(e_seq), frid
+
     def scan_entries_full(self, snapshot_id: int | None = None) -> tuple[
         list[tuple[str, dict, int, int]],
         list[str],
@@ -342,99 +404,71 @@ class IcebergTable:
         partition evolution, live data files span multiple specs and
         each entry's partition record is shaped by ITS manifest's
         spec, not the table default (read_iceberg groups by it).
-
-        Sequence-number resolution follows the spec's inheritance
-        rule: an entry's null/absent ``sequence_number`` inherits the
-        manifest's sequence number from the manifest-list entry
-        (v1 metadata has neither — everything resolves to 0, which is
-        consistent because v1 cannot contain delete files). Equality
+        Sequence numbers resolve as `_live` documents. Equality
         delete files must declare ``equality_ids``; a content=2 entry
         without them is unreadable and refuses loudly."""
-        snap = self._snapshot(snapshot_id)
-        manifest_list = self._resolve(snap["manifest-list"])
         out: list[tuple[str, dict, int, int]] = []
         pos_deletes: list[str] = []
         eq_deletes: list[tuple[str, tuple[int, ...], int]] = []
         dv_deletes: list[tuple[str, str, int, int, int]] = []
-        seen: set[str] = set()
-        for m in read_ocf_generic(manifest_list):
-            manifest = self._resolve(m["manifest_path"])
-            m_sid = int(m.get("partition_spec_id") or 0)
-            m_seq = m.get("sequence_number")
-            for entry in read_ocf_generic(manifest):
-                if entry["status"] == 2:  # DELETED
-                    continue
-                df = entry["data_file"]
-                content = df.get("content", 0)
-                path = self._resolve(df["file_path"])
-                # dedup key: one Puffin file legitimately holds many
-                # DV blobs (one manifest entry per blob, same
-                # file_path, distinct content_offset) — key those by
-                # (path, offset); plain files dedup by path
-                dedup_key = (
-                    f"{path}@{df.get('content_offset')}"
-                    if content == 1 and df.get("content_offset") is not None
-                    else path
-                )
-                if dedup_key in seen:
-                    continue
-                seen.add(dedup_key)
-                e_seq = entry.get("sequence_number")
-                if e_seq is None:
-                    e_seq = m_seq if m_seq is not None else 0
-                if content == 0:
-                    out.append(
-                        (path, df.get("partition") or {}, int(e_seq), m_sid)
+        for m, df, path, e_seq, _frid in self._live(snapshot_id):
+            content = df.get("content", 0)
+            if content == 0:
+                out.append(
+                    (
+                        path,
+                        df.get("partition") or {},
+                        e_seq,
+                        int(m.get("partition_spec_id") or 0),
                     )
-                elif content == 1:  # position deletes (v2 file or v3 DV)
-                    # DV classification keys on PUFFIN format or a blob
-                    # offset — NOT bare referenced_data_file, which the
-                    # v2 spec also allows on plain parquet position-
-                    # delete files (file-scoped deletes from the Java
-                    # writer); those must keep the v2 path (round-9
-                    # review #3)
-                    fmt = str(df.get("file_format") or "").upper()
-                    ref = df.get("referenced_data_file")
-                    off = df.get("content_offset")
-                    if fmt == "PUFFIN" or off is not None:
-                        sz = df.get("content_size_in_bytes")
-                        if ref is None or off is None or sz is None:
-                            raise ValueError(
-                                f"{self.table_path}: deletion-vector "
-                                f"entry {df['file_path']!r} must carry "
-                                "referenced_data_file + content_offset "
-                                "+ content_size_in_bytes (v3 spec)"
-                            )
-                        rc = df.get("record_count")
-                        dv_deletes.append(
-                            (
-                                path,
-                                str(ref),
-                                int(off),
-                                int(sz),
-                                # -1 = unknown (spec-violating foreign
-                                # entry): must never read as "tiny"
-                                int(rc) if rc is not None else -1,
-                            )
-                        )
-                    else:
-                        pos_deletes.append(path)
-                elif content == 2:  # equality deletes
-                    ids = df.get("equality_ids")
-                    if not ids:
+                )
+            elif content == 1:  # position deletes (v2 file or v3 DV)
+                # DV classification keys on PUFFIN format or a blob
+                # offset — NOT bare referenced_data_file, which the
+                # v2 spec also allows on plain parquet position-
+                # delete files (file-scoped deletes from the Java
+                # writer); those must keep the v2 path (round-9
+                # review #3)
+                fmt = str(df.get("file_format") or "").upper()
+                ref = df.get("referenced_data_file")
+                off = df.get("content_offset")
+                if fmt == "PUFFIN" or off is not None:
+                    sz = df.get("content_size_in_bytes")
+                    if ref is None or off is None or sz is None:
                         raise ValueError(
-                            f"{self.table_path}: equality delete file "
-                            f"{df['file_path']!r} declares no "
-                            "equality_ids — unreadable per spec"
+                            f"{self.table_path}: deletion-vector "
+                            f"entry {df['file_path']!r} must carry "
+                            "referenced_data_file + content_offset "
+                            "+ content_size_in_bytes (v3 spec)"
                         )
-                    eq_deletes.append(
-                        (path, tuple(int(i) for i in ids), int(e_seq))
+                    rc = df.get("record_count")
+                    dv_deletes.append(
+                        (
+                            path,
+                            str(ref),
+                            int(off),
+                            int(sz),
+                            # -1 = unknown (spec-violating foreign
+                            # entry): must never read as "tiny"
+                            int(rc) if rc is not None else -1,
+                        )
                     )
                 else:
+                    pos_deletes.append(path)
+            elif content == 2:  # equality deletes
+                ids = df.get("equality_ids")
+                if not ids:
                     raise ValueError(
-                        f"{self.table_path}: unknown data_file content "
-                        f"kind {content!r}"
+                        f"{self.table_path}: equality delete file "
+                        f"{df['file_path']!r} declares no "
+                        "equality_ids — unreadable per spec"
                     )
+                eq_deletes.append((path, tuple(int(i) for i in ids), e_seq))
+            else:
+                raise ValueError(
+                    f"{self.table_path}: unknown data_file content "
+                    f"kind {content!r}"
+                )
         return (
             sorted(out),
             sorted(pos_deletes),
@@ -444,69 +478,33 @@ class IcebergTable:
 
     def first_row_ids(self, snapshot_id: int | None = None) -> dict[str, int]:
         """v3 ROW LINEAGE: live data files' assigned ``first_row_id``
-        at a snapshot, keyed by absolute path. Walks the same
-        manifest-list → manifest chain as scan_entries_full with the
-        same status/dedup rules, reading only data (content=0)
-        entries.
-
-        Implements the spec's INHERITANCE rule: a data file whose
-        first_row_id is null derives it from its manifest-list entry's
-        ``first_row_id`` plus the accumulated record_count of the
-        preceding inheriting data entries in that manifest — the
-        common foreign-writer layout (engines write nulls per file and
-        one base per manifest). Raises only when NEITHER level carries
-        an id — lineage is either derivable for the WHOLE snapshot or
-        not readable at all (a rewrite by a non-lineage-preserving op,
-        or a pre-v3 table)."""
-        snap = self._snapshot(snapshot_id)
-        manifest_list = self._resolve(snap["manifest-list"])
+        at a snapshot, keyed by absolute path, with the spec's
+        inheritance rule (`_live`). Raises only when NEITHER level
+        carries an id — lineage is either derivable for the WHOLE
+        snapshot or not readable at all (a rewrite by a
+        non-lineage-preserving op, or a pre-v3 table)."""
         out: dict[str, int] = {}
-        seen: set[str] = set()
-        for m in read_ocf_generic(manifest_list):
-            m_frid = m.get("first_row_id")
-            acc = 0  # record_counts of preceding inheriting entries
-            for entry in read_ocf_generic(self._resolve(m["manifest_path"])):
-                if entry["status"] == 2:  # DELETED
-                    continue
-                df = entry["data_file"]
-                if df.get("content", 0) != 0:
-                    continue
-                frid = df.get("first_row_id")
-                if frid is None and m_frid is not None:
-                    # inherit: manifest base + running count; only
-                    # inheriting entries consume the manifest's range
-                    # (explicit-id entries were assigned elsewhere)
-                    frid = int(m_frid) + acc
-                    acc += int(df["record_count"])
-                path = self._resolve(df["file_path"])
-                if path in seen:
-                    continue
-                seen.add(path)
-                if frid is None:
-                    raise ValueError(
-                        f"{self.table_path}: data file "
-                        f"{df['file_path']!r} carries no first_row_id "
-                        "(and its manifest-list entry carries none to "
-                        "inherit from) — row lineage is not tracked "
-                        "for this snapshot (pre-v3 table, or files "
-                        "rewritten by a non-lineage-preserving "
-                        "operation)"
-                    )
-                out[path] = int(frid)
+        for _m, df, path, _seq, frid in self._live(snapshot_id):
+            if df.get("content", 0) != 0:
+                continue
+            if frid is None:
+                raise ValueError(
+                    f"{self.table_path}: data file "
+                    f"{df['file_path']!r} carries no first_row_id "
+                    "(and its manifest-list entry carries none to "
+                    "inherit from) — row lineage is not tracked "
+                    "for this snapshot (pre-v3 table, or files "
+                    "rewritten by a non-lineage-preserving "
+                    "operation)"
+                )
+            out[path] = int(frid)
         return out
 
     def field_name_by_id(self, fid: int) -> str:
         """Current-schema column name for an Iceberg field id (used to
         resolve equality_ids; renames keep ids stable, so this maps a
         foreign writer's delete key to today's column name)."""
-        md = self.metadata
-        schemas = md.get("schemas")
-        if schemas:
-            cur_id = md.get("current-schema-id", 0)
-            ice = next(s for s in schemas if s.get("schema-id") == cur_id)
-        else:
-            ice = md["schema"]
-        for f in ice["fields"]:
+        for f in self._current_ice_schema()["fields"]:
             if f["id"] == fid:
                 return f["name"]
         raise ValueError(
@@ -547,6 +545,18 @@ _ROW_ID_COL = "_row_id"
 _ROW_ID_FIELD_ID = 2147483540
 _LAST_SEQ_COL = "_last_updated_sequence_number"
 _LAST_SEQ_FIELD_ID = 2147483539
+
+
+def _lineage_fields(use_ids: bool) -> list[T.StructField]:
+    """The two lineage columns under their reserved names, carrying
+    their reserved parquet field ids when the table's files resolve
+    by id."""
+    return [
+        T.StructField(
+            name, T.LongType(), True, {"parquet.field.id": fid} if use_ids else None
+        )
+        for name, fid in ((_ROW_ID_COL, _ROW_ID_FIELD_ID), (_LAST_SEQ_COL, _LAST_SEQ_FIELD_ID))
+    ]
 
 
 def _initial_defaults(t: "IcebergTable") -> dict[str, object]:
@@ -664,6 +674,12 @@ def read_iceberg(
                 f"{min((s.get('timestamp-ms', 0) for s in t.metadata.get('snapshots') or []), default=None)})"
             )
         snapshot_id = eligible[-1]["snapshot-id"]
+    return _read_snapshot(spark, t, snapshot_id, with_lineage)
+
+
+def _read_snapshot(spark, t: IcebergTable, snapshot_id: int | None, with_lineage=False):
+    """`read_iceberg` of snapshot `snapshot_id` over the opened table
+    `t`, so a writer that holds one reads through its walk."""
     use_ids = t.files_carry_field_ids(snapshot_id)
     schema = t.schema(with_field_ids=use_ids)
     if use_ids:
@@ -703,22 +719,7 @@ def read_iceberg(
         # field ids; older files lack the columns and read NULL, so
         # the projection coalesces per the spec. Field-id metadata
         # rides only when the table's files resolve by id.
-        lineage_fields = [
-            T.StructField(
-                _ROW_ID_COL,
-                T.LongType(),
-                True,
-                {"parquet.field.id": _ROW_ID_FIELD_ID} if use_ids else None,
-            ),
-            T.StructField(
-                _LAST_SEQ_COL,
-                T.LongType(),
-                True,
-                {"parquet.field.id": _LAST_SEQ_FIELD_ID}
-                if use_ids
-                else None,
-            ),
-        ]
+        lineage_fields = _lineage_fields(use_ids)
         frids = t.first_row_ids(snapshot_id)
         # the scan's join key is the file BASENAME (same identity rule
         # as position deletes) — collisions would mis-attribute lineage
@@ -1899,20 +1900,22 @@ class IcebergWriter:
 
     def _stage(
         self,
+        table: IcebergTable | None,
         df,
         snapshot_id: int,
         spec: list[dict] | None = None,
         field_ids: dict[str, int] | None = None,
     ) -> list[dict]:
         """Stage df under data/ through the staging kernel (0-row
-        files dropped); return data_file dicts.
+        files dropped); return data_file dicts. `table` is the verb's
+        opened table (None at create).
 
         Data files carry the Iceberg FIELD IDS as parquet field ids
         (`parquet.field.id` column metadata — Spark's parquet writer
         stores them), so readers can resolve columns by id and column
         RENAMES stay safe. `field_ids` overrides the name→id map
         (create/evolution, where the table metadata doesn't exist or
-        is being replaced); `None` derives it from the current table;
+        is being replaced); `None` derives it from `table`;
         `{}` disables ids (overwrite with schema replacement — stale
         ids would be worse than none).
 
@@ -1926,10 +1929,10 @@ class IcebergWriter:
         spec = spec or []
         if field_ids is None:
             try:
-                field_ids = IcebergTable(self.table_path).field_ids()
-            except (FileNotFoundError, ValueError, KeyError, StopIteration):
+                field_ids = table.field_ids()
+            except (ValueError, KeyError, StopIteration):
                 field_ids = {}
-        field_ids = self._ids_gate(field_ids)
+        field_ids = self._ids_gate(table, field_ids)
         if field_ids:
             df = df.select(
                 [
@@ -1992,21 +1995,21 @@ class IcebergWriter:
             )
         ]
 
-    def _ids_gate(self, field_ids: dict[str, int] | None) -> dict[str, int]:
-        """Suppress parquet field-id stamping when the table's EXISTING
+    def _ids_gate(
+        self, table: IcebergTable | None, field_ids: dict[str, int] | None
+    ) -> dict[str, int]:
+        """Suppress parquet field-id stamping when `table`'s EXISTING
         live files carry none (a converted-in-place table): the spec
         requires writers to be consistent, and a mixed table breaks
         id-resolution on whichever file the one-footer probe misses.
-        Fresh/empty tables keep the ids (the engine's native layout)."""
-        if not field_ids:
+        Fresh/empty tables keep the ids (the engine's native layout).
+        The probe reads scan_entries_full, not scan_entries, so it
+        keeps working on equality-deleted tables (append stays legal
+        there), where scan_entries raises by contract."""
+        if not field_ids or table is None:
             return field_ids or {}
         try:
-            table = IcebergTable(self.table_path)
-            # scan_entries_full, not scan_entries: the probe must keep
-            # working on equality-deleted tables (append stays legal
-            # there), where scan_entries raises by contract
-            entries, _pos, _eq, _dv = table.scan_entries_full(None)
-            if entries and not table.files_carry_field_ids(None):
+            if table.scan_entries_full(None)[0] and not table.files_carry_field_ids(None):
                 return {}
         except (FileNotFoundError, ValueError, KeyError, StopIteration):
             pass
@@ -2150,6 +2153,7 @@ class IcebergWriter:
         os.makedirs(self.meta_dir, exist_ok=True)
         snap_id = 1
         files = self._stage(
+            None,
             df,
             snap_id,
             spec,
@@ -2606,18 +2610,13 @@ class IcebergWriter:
         writes on an audit branch, validate, then fast-forward by
         pointing current at the branch head (rollback_to). Writing to
         a TAG refuses (tags are immutable pins)."""
-        from plankton_spark.sources.avro_ocf import (
-            read_ocf_generic,
-            write_ocf_generic,
-        )
-
         # v3 write-default: a write that OMITS a defaulted column
         # materializes the default at staging time (supplied values,
         # explicit NULL included, win) — the write-side half of
         # add_column's default pair
-        t0 = IcebergTable(self.table_path)
-        sch0 = t0.schema()
-        for f0 in t0._current_ice_schema()["fields"]:
+        table = IcebergTable(self.table_path)
+        sch0 = table.schema()
+        for f0 in table._current_ice_schema()["fields"]:
             if "write-default" in f0 and f0["name"] not in df.columns:
                 df = df.withColumn(
                     f0["name"],
@@ -2627,7 +2626,6 @@ class IcebergWriter:
                 )
 
         for _ in range(20):
-            table = IcebergTable(self.table_path)
             md = self._evolved_metadata(
                 dict(table.metadata), table, df, merge_schema
             )
@@ -2656,12 +2654,10 @@ class IcebergWriter:
                 if s.get("schema-id", 0) == md.get("current-schema-id", 0)
             )
             files = self._stage(
+                table,
                 df,
                 snap_id,
                 spec,
-                # _stage applies _ids_gate itself — wrapping here too
-                # would double the manifest scan + footer probe per
-                # append (review finding, this round)
                 field_ids={f["name"]: f["id"] for f in cur["fields"]},
             )
             # v3 row lineage: continue the table's row-id chain. A
@@ -2689,8 +2685,7 @@ class IcebergWriter:
                 new_seq = (md.get("last-sequence-number") or 0) + 1
                 m_new["sequence_number"] = new_seq
                 md["last-sequence-number"] = new_seq
-            prev_ml = table._resolve(prev["manifest-list"])
-            manifests = list(read_ocf_generic(prev_ml)) + [m_new]
+            manifests = table.manifest_list(prev["snapshot-id"]) + [m_new]
             ml_name = self._unique(f"snap-{snap_id}")
             _write_manifest_list(
                 os.path.join(self.meta_dir, ml_name), manifests
@@ -2725,7 +2720,7 @@ class IcebergWriter:
                 self._commit_metadata(table.metadata_version + 1, md)
                 return snap_id
             except IcebergCommitConflict:
-                continue  # rebase on the newer metadata
+                table = IcebergTable(self.table_path)  # rebase on it
         raise IcebergCommitConflict(f"{self.table_path}: gave up after retries")
 
     def evolve_spec(self, partition_by: list[str] | None) -> int:
@@ -2800,18 +2795,6 @@ class IcebergWriter:
     # -- row-level delete / overwrite (parity with DeltaLogWriter and
     #    planktable: rewrite only hit files, validate removed files are
     #    still live at commit, rebase-on-conflict) --------------------
-
-    def _live_manifests(self, table: IcebergTable) -> list[tuple[dict, list[dict]]]:
-        """[(manifest_record, entries)] for the current snapshot."""
-        from plankton_spark.sources.avro_ocf import read_ocf_generic
-
-        snap = table._snapshot(None)
-        ml = table._resolve(snap["manifest-list"])
-        out = []
-        for m in read_ocf_generic(ml):
-            entries = list(read_ocf_generic(table._resolve(m["manifest_path"])))
-            out.append((m, entries))
-        return out
 
     def _write_entries(
         self,
@@ -2896,7 +2879,8 @@ class IcebergWriter:
         md["last-column-id"] = last_id
         return md
 
-    def _commit_snapshot(self, staged: list[dict], removed_rel: set[str] | None,
+    def _commit_snapshot(self, table: IcebergTable, staged: list[dict],
+                         removed_rel: set[str] | None,
                          keep_unhit: bool, new_schema_df=None,
                          operation: str | None = None,
                          assign_row_ids: bool = False) -> int:
@@ -2904,17 +2888,16 @@ class IcebergWriter:
         data files DELETED (status 2 — readers skip them, incremental
         consumers see the tombstone), carries unhit manifests forward
         verbatim when keep_unhit, adds one ADDED manifest for `staged`
-        files, and commits to exactly read-version + 1, validating on
-        every rebase that each removed file is STILL live — a
-        concurrent rewrite of one of them aborts with
-        IcebergConcurrentDelete instead of silently undoing it.
-        removed_rel=None means "whatever is live at commit time"
-        (OVERWRITE semantics — recomputed per rebase so a concurrent
-        append is tombstoned too, never silently dropped)."""
-        from plankton_spark.sources.avro_ocf import write_ocf_generic
-
+        files, and commits to exactly read-version + 1. The first
+        attempt builds on `table`, the snapshot the verb read; each
+        rebase re-opens the table and validates that every removed
+        file is STILL live — a concurrent rewrite of one of them
+        aborts with IcebergConcurrentDelete instead of silently
+        undoing it. removed_rel=None means "whatever is live at commit
+        time" (OVERWRITE semantics — recomputed per rebase so a
+        concurrent append is tombstoned too, never silently
+        dropped)."""
         for _ in range(20):
-            table = IcebergTable(self.table_path)
             md = dict(table.metadata)
             if new_schema_df is not None:
                 md = self._replacement_schema_md(md, new_schema_df)
@@ -2954,7 +2937,7 @@ class IcebergWriter:
                     staged, snap_frid
                 )
             manifests: list[dict] = []
-            for m, entries in self._live_manifests(table):
+            for m, entries in table.manifests(None):
                 rels = {e["data_file"]["file_path"] for e in entries
                         if e["status"] != 2}
                 hit_here = rels & removed_now
@@ -3030,7 +3013,7 @@ class IcebergWriter:
                 self._commit_metadata(table.metadata_version + 1, md)
                 return snap_id
             except IcebergCommitConflict:
-                continue
+                table = IcebergTable(self.table_path)
         raise IcebergCommitConflict(f"{self.table_path}: gave up after retries")
 
     def _lineage_rewrite_on(self, table: "IcebergTable") -> bool:
@@ -3077,22 +3060,7 @@ class IcebergWriter:
         frids = table.first_row_ids(None)
         full, _pos, _eq, _dv = table.scan_entries_full(None)
         use_ids = table.files_carry_field_ids(None)
-        lineage_fields = [
-            T.StructField(
-                _ROW_ID_COL,
-                T.LongType(),
-                True,
-                {"parquet.field.id": _ROW_ID_FIELD_ID} if use_ids else None,
-            ),
-            T.StructField(
-                _LAST_SEQ_COL,
-                T.LongType(),
-                True,
-                {"parquet.field.id": _LAST_SEQ_FIELD_ID}
-                if use_ids
-                else None,
-            ),
-        ]
+        lineage_fields = _lineage_fields(use_ids)
         subset = {p for p, _pv in entries}
         lineage = {
             os.path.basename(p): (frids[p], int(seq))
@@ -3160,7 +3128,7 @@ class IcebergWriter:
         lin_on = bool(hit_full or insert is not None) and self._lineage_rewrite_on(
             table
         )
-        staged = [] if insert is None else self._stage(insert, 0, spec)
+        staged = [] if insert is None else self._stage(table, insert, 0, spec)
         if hit_full:
             hot = self._hit_scan_ms(table, schema, hit_full, lin_on)
             if assignments is None:
@@ -3169,12 +3137,12 @@ class IcebergWriter:
                 lineage = (_ROW_ID_COL, _LAST_SEQ_COL) if lin_on else None
                 out = hot.select(rw.updated(schema, exprs, condition, lineage))
             staged = staged + self._stage(
-                out, 0, spec,
+                table, out, 0, spec,
                 field_ids=self._lineage_stage_ids(table) if lin_on else None,
             )
         removed_rel = {os.path.relpath(e[0], self.table_path) for e in hit_full}
         return self._commit_snapshot(
-            staged, removed_rel, keep_unhit=True, assign_row_ids=lin_on
+            table, staged, removed_rel, keep_unhit=True, assign_row_ids=lin_on
         )
 
     def delete_where(self, condition) -> int:
@@ -3223,13 +3191,13 @@ class IcebergWriter:
             (f.name, f.dataType) for f in table.schema().fields
         ] == [(f.name, f.dataType) for f in df.schema.fields]
         staged = self._stage(
-            df, 0, spec, field_ids=None if same_schema else {}
+            table, df, 0, spec, field_ids=None if same_schema else {}
         )
         # overwritten rows are NEW rows (delete + insert): fresh ids,
         # but the staged files still need first_row_ids assigned on a
         # lineage table or its reads would refuse forever after
         return self._commit_snapshot(
-            staged, None, keep_unhit=False, new_schema_df=df,
+            table, staged, None, keep_unhit=False, new_schema_df=df,
             assign_row_ids=table.metadata.get("next-row-id") is not None,
         )
 
@@ -3247,11 +3215,11 @@ class IcebergWriter:
         from plankton_spark.filestats import file_stats as _file_stats
         from plankton_spark.filestats import stat_encode as _stat_encode
 
+        table = IcebergTable(self.table_path)
         raw_lo, raw_hi = source.agg(F.min(key), F.max(key)).first()
         if raw_lo is None:
-            return self._commit_snapshot([], set(), keep_unhit=True)
+            return self._commit_snapshot(table, [], set(), keep_unhit=True)
         lo, hi = _stat_encode(raw_lo), _stat_encode(raw_hi)
-        table = IcebergTable(self.table_path)
         schema = table.schema()
         spec = self._writer_spec(table)
         part_cols = table.partition_fields()  # identity attach subset
@@ -3290,12 +3258,12 @@ class IcebergWriter:
             hot, source, key, (_ROW_ID_COL, _LAST_SEQ_COL) if lin_on else None
         )
         staged = self._stage(
-            merged, 0, spec,
+            table, merged, 0, spec,
             field_ids=self._lineage_stage_ids(table) if lin_on else None,
         )
         removed_rel = {os.path.relpath(e[0], self.table_path) for e in overlap_full}
         return self._commit_snapshot(
-            staged, removed_rel, keep_unhit=True, assign_row_ids=lin_on
+            table, staged, removed_rel, keep_unhit=True, assign_row_ids=lin_on
         )
 
     def delete_where_pos(self, condition) -> int | None:
@@ -3492,8 +3460,8 @@ class IcebergWriter:
         if keys_df.isEmpty():
             return None
         key_cols = list(keys_df.columns)
-        table0 = IcebergTable(self.table_path)
-        by_name = {f.name: f for f in table0.schema().fields}
+        table = IcebergTable(self.table_path)
+        by_name = {f.name: f for f in table.schema().fields}
         missing = sorted(set(key_cols) - set(by_name))
         if missing:
             raise ValueError(
@@ -3502,7 +3470,7 @@ class IcebergWriter:
             )
         # field ids from the CURRENT schema (the reader maps them back
         # by id, so renames stay safe)
-        md0 = table0.metadata
+        md0 = table.metadata
         cur = next(
             s
             for s in (md0.get("schemas") or [md0["schema"]])
@@ -3523,7 +3491,6 @@ class IcebergWriter:
         )
         at = staged.path
         for _ in range(20):
-            table = IcebergTable(self.table_path)
             snap_id = max(s["snapshot-id"] for s in table.metadata["snapshots"]) + 1
             rel = f"data/eqdel-snap{snap_id}-{token}.parquet"
             os.replace(
@@ -3545,7 +3512,7 @@ class IcebergWriter:
                     seq=(table.metadata.get("last-sequence-number") or 0) + 1,
                 )
             except IcebergCommitConflict:
-                continue
+                table = IcebergTable(self.table_path)
         os.remove(os.path.join(self.table_path, at))
         raise IcebergCommitConflict(f"{self.table_path}: gave up after retries")
 
@@ -3608,12 +3575,12 @@ class IcebergWriter:
                 return int(m.get("content") or 0)
             cs = {
                 int((e.get("data_file") or {}).get("content") or 0)
-                for e in read_ocf_generic(table._resolve(m["manifest_path"]))
+                for e in table._avro(table._resolve(m["manifest_path"]))
             }
             return 0 if cs <= {0} else 1
 
         manifests = []
-        for m in read_ocf_generic(table._resolve(table._snapshot(None)["manifest-list"])):
+        for m in table.manifest_list(None):
             c = content(m)
             if kept is None or c == 0:
                 manifests.append({**m, "content": c})
@@ -3732,7 +3699,7 @@ class IcebergWriter:
         entries = [(p, pv) for p, pv, _seq, _sid in full]
         deletes = list(pos_dels)
         if not entries:
-            return self._commit_snapshot([], set(), keep_unhit=True)
+            return self._commit_snapshot(table, [], set(), keep_unhit=True)
         # v3 ROW LINEAGE: a compaction must PRESERVE row identities —
         # the spec's rule is to MATERIALIZE _row_id and
         # _last_updated_sequence_number into the rewritten files
@@ -3777,7 +3744,7 @@ class IcebergWriter:
             df = (
                 self._hit_scan_ms(table, table.schema(), full, True)
                 if multi_spec
-                else read_iceberg(self.spark, self.table_path, with_lineage=True)
+                else _read_snapshot(self.spark, table, None, with_lineage=True)
             )
         elif deletes or dv_dels or multi_spec:
             # compaction PURGES row-level deletes: the delete-aware
@@ -3790,7 +3757,7 @@ class IcebergWriter:
             # the board would NULL out old-spec files' content
             # columns); the output restages under the current default
             # spec — exactly the op that RESOLVES the evolution
-            df = read_iceberg(self.spark, self.table_path)
+            df = _read_snapshot(self.spark, table, None)
         elif part_cols:
             df = _assemble_iceberg(self.spark, table.schema(), part_cols, entries)
         else:
@@ -3809,7 +3776,7 @@ class IcebergWriter:
         # the materialized lineage columns are stamped with their
         # RESERVED parquet field ids alongside the table columns' ids
         staged = self._stage(
-            df, 0, spec,
+            table, df, 0, spec,
             field_ids=self._lineage_stage_ids(table) if lineage_live else None,
         )
         removed_rel = (
@@ -3820,7 +3787,7 @@ class IcebergWriter:
         # layout-only rewrite: the spec's "replace" operation (rows
         # unchanged) — maintenance tools skip these in CDC/incremental
         return self._commit_snapshot(
-            staged, removed_rel, keep_unhit=True, operation="replace",
+            table, staged, removed_rel, keep_unhit=True, operation="replace",
             assign_row_ids=lineage_live,
         )
 
@@ -3887,18 +3854,14 @@ class IcebergWriter:
         import shutil as _shutil
         import time as _time
 
-        from plankton_spark.sources.avro_ocf import read_ocf_generic as _read
-
         table = IcebergTable(self.table_path)
         referenced: set[str] = set()
         referenced_meta: set[str] = set()
         for snap in table.snapshots():
-            ml = table._resolve(snap["manifest-list"])
-            referenced_meta.add(ml)
-            for m in _read(ml):
-                mp = table._resolve(m["manifest_path"])
-                referenced_meta.add(mp)
-                for e in _read(mp):
+            referenced_meta.add(table._resolve(snap["manifest-list"]))
+            for m, entries in table.manifests(snap["snapshot-id"]):
+                referenced_meta.add(table._resolve(m["manifest_path"]))
+                for e in entries:
                     referenced.add(table._resolve(e["data_file"]["file_path"]))
         now = _time.time()
         removed: list[str] = []
@@ -4116,15 +4079,14 @@ class IcebergStreamReader(DataSourceStreamReader):
         out: list[tuple[str, dict]] = []
         for snap in snaps[i_from:i_to]:
             sid = snap["snapshot-id"]
-            ml = table._resolve(snap["manifest-list"])
             adds: list[tuple[str, dict]] = []
             has_delete = False
-            for m in read_ocf_generic(ml):
+            for m in table.manifest_list(sid):
                 # manifests carried forward verbatim contain no entries
                 # for THIS snapshot; only newly written ones can
                 if m.get("added_snapshot_id") != sid:
                     continue
-                for e in read_ocf_generic(table._resolve(m["manifest_path"])):
+                for e in table._avro(table._resolve(m["manifest_path"])):
                     if e.get("snapshot_id") != sid:
                         continue
                     if e["data_file"].get("content", 0) != 0:
@@ -5208,44 +5170,17 @@ def files_meta(spark, table_path: str, snapshot_id: int | None = None):
     metadata every scan planning pass already walks), parallelized
     into a DataFrame for the rollup.
     """
-    t = IcebergTable(table_path)
-    snap = t._snapshot(snapshot_id)
-    manifest_list = t._resolve(snap["manifest-list"])
-    rows = []
-    seen: set[str] = set()
-    for m in read_ocf_generic(manifest_list):
-        manifest = t._resolve(m["manifest_path"])
-        m_sid = int(m.get("partition_spec_id") or 0)
-        m_seq = m.get("sequence_number")
-        for entry in read_ocf_generic(manifest):
-            if entry["status"] == 2:  # DELETED
-                continue
-            df = entry["data_file"]
-            path = t._resolve(df["file_path"])
-            # one Puffin file holds many DV blobs (same path, distinct
-            # content_offset) — mirror scan_entries_full's dedup key
-            dk = (
-                f"{path}@{df.get('content_offset')}"
-                if df.get("content_offset") is not None
-                else path
-            )
-            if dk in seen:
-                continue
-            seen.add(dk)
-            e_seq = entry.get("sequence_number")
-            if e_seq is None:
-                e_seq = m_seq if m_seq is not None else 0
-            part = df.get("partition") or {}
-            rows.append(
-                (
-                    path,
-                    {str(k): str(v) for k, v in dict(part).items()},
-                    int(df.get("content") or 0),
-                    int(df["record_count"]),
-                    int(e_seq),
-                    m_sid,
-                )
-            )
+    rows = [
+        (
+            path,
+            {str(k): str(v) for k, v in dict(df.get("partition") or {}).items()},
+            int(df.get("content") or 0),
+            int(df["record_count"]),
+            seq,
+            int(m.get("partition_spec_id") or 0),
+        )
+        for m, df, path, seq, _frid in IcebergTable(table_path)._live(snapshot_id)
+    ]
     out_schema = (
         "path string, partition map<string,string>, content int, "
         "record_count long, sequence_number long, spec_id int"
@@ -5292,8 +5227,9 @@ def convert_delta_to_iceberg(spark, table_path: str) -> int:
     ):
         raise FileExistsError(f"{table_path}: already an Iceberg table")
     log = DeltaLog(table_path)
-    schema, part_cols, active = log.replay(None)
-    if column_mapping(schema, log.table_config, table_path):
+    st = log.replay(None)
+    schema, part_cols, active = st.schema, st.part_cols, st.active
+    if column_mapping(schema, st.config, table_path):
         raise DeltaProtocolError(
             f"{table_path}: column-mapped Delta tables cannot convert — "
             "files store physical names the Iceberg schema would not "
@@ -5334,7 +5270,7 @@ def convert_delta_to_iceberg(spark, table_path: str) -> int:
         from plankton_spark.sources.delta_log import _row_id_hwm
 
         row_ids = {rel: int(a["baseRowId"]) for rel, a in active.items()}
-        next_row_id = _row_id_hwm(log, active) + 1
+        next_row_id = _row_id_hwm(st) + 1
     return _author_iceberg_over(
         spark, table_path, schema, inventory, part_cols, dv_map=dv_map,
         row_ids=row_ids, next_row_id=next_row_id,

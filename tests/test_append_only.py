@@ -52,16 +52,14 @@ def test_unset_reenables_and_properties_roundtrip(spark, tmp_path):
     root, w, o = _make(spark, tmp_path)
     w.set_property("delta.appendOnly", "true")
     w.set_property("team.owner", "data-eng")
-    log = DeltaLog(root)
-    log.replay(None)
-    assert log.table_config["delta.appendOnly"] == "true"
-    assert log.table_config["team.owner"] == "data-eng"
+    st = DeltaLog(root).replay(None)
+    assert st.config["delta.appendOnly"] == "true"
+    assert st.config["team.owner"] == "data-eng"
     w.unset_property("delta.appendOnly")
     w.delete_where(F.col("o_orderkey") % 2 == 0)  # legal again
-    log2 = DeltaLog(root)
-    log2.replay(None)
-    assert "delta.appendOnly" not in log2.table_config
-    assert log2.table_config["team.owner"] == "data-eng"
+    st2 = DeltaLog(root).replay(None)
+    assert "delta.appendOnly" not in st2.config
+    assert st2.config["team.owner"] == "data-eng"
     with pytest.raises(ValueError, match="no property"):
         w.unset_property("delta.appendOnly")
 

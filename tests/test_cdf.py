@@ -158,10 +158,9 @@ def test_cdf_derivation_refuses_dv_commits(spark, tmp_path):
 
 def test_cdf_enablement_recorded(spark, tmp_path):
     root, _w = _mk(spark, tmp_path, "cdf_cfg")
-    log = DeltaLog(root)
-    log.replay(None)
-    assert log.table_config.get("delta.enableChangeDataFeed") == "true"
-    assert (log.table_protocol or {}).get("minWriterVersion", 0) >= 4
+    st = DeltaLog(root).replay(None)
+    assert st.config.get("delta.enableChangeDataFeed") == "true"
+    assert (st.protocol or {}).get("minWriterVersion", 0) >= 4
 
 
 def test_cdf_composes_with_row_tracking(spark, tmp_path):
@@ -627,3 +626,29 @@ def test_cdf_merge_with_empty_source(spark, tmp_path):
     assert not glob.glob(
         os.path.join(root, "_change_data", "**", "*.parquet"), recursive=True
     )
+
+
+def test_cdf_read_replays_the_log_once(spark, tmp_path, monkeypatch):
+    """A feed read replays the log once, to the version before its
+    range, and folds each commit's actions forward: derived deletes
+    resolve against the folded prior state, not a replay per commit."""
+    root = str(tmp_path / "cdf_once")
+    w = DeltaLogWriter(spark, root)
+    w.create(spark.createDataFrame([(i, i * 10) for i in range(20)], "k long, v long").repartition(1))
+    w.append(spark.createDataFrame([(100, 1)], "k long, v long"))  # v1
+    w.delete_where(F.col("k") % 5 == 4)  # v2: remove + add, derived
+    w.update_where({"v": F.col("v") + 1}, F.col("k") == 100)  # v3
+    replays = []
+    real = DeltaLog.replay
+    monkeypatch.setattr(
+        DeltaLog, "replay", lambda self, *a: replays.append(a) or real(self, *a)
+    )
+    counts = _by_type(read_delta_cdf(spark, root, 1, 3))
+    assert replays == [(0,)]
+    assert counts == {
+        (1, "insert"): 1,
+        (2, "delete"): 20,
+        (2, "insert"): 16,
+        (3, "delete"): 1,
+        (3, "insert"): 1,
+    }

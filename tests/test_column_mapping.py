@@ -299,10 +299,9 @@ def test_checkpoint_preserves_mapping_and_protocol(spark, tmp_path):
     root = _author_mapped_table(tmp_path, "cm_ckpt")
     write_delta_checkpoint(root, version=0)
     os.remove(os.path.join(root, "_delta_log", f"{0:020d}.json"))
-    log = DeltaLog(root)
-    schema, _, _ = log.replay(None)
-    assert log.table_config.get("delta.columnMapping.mode") == "name"
-    assert log.table_protocol["minReaderVersion"] == 2
+    st = DeltaLog(root).replay(None)
+    assert st.config.get("delta.columnMapping.mode") == "name"
+    assert st.protocol["minReaderVersion"] == 2
     got = sorted((r.order_id, r.status) for r in read_delta(spark, root).collect())
     assert got == [(1, "A"), (2, "B"), (3, "A")]
 
@@ -336,10 +335,9 @@ def test_rename_column_via_mapping_roundtrip(spark, tmp_path):
     got = sorted((r.k, r.val) for r in read_delta(spark, root).collect())
     assert got == [(0, 0), (1, 2), (2, 4), (10, 20)]
     # protocol upgraded to a mapping-capable reader
-    log = DeltaLog(root)
-    log.replay(None)
-    assert log.table_protocol["minReaderVersion"] >= 2
-    assert log.table_config["delta.columnMapping.mode"] == "name"
+    st = DeltaLog(root).replay(None)
+    assert st.protocol["minReaderVersion"] >= 2
+    assert st.config["delta.columnMapping.mode"] == "name"
     # a second rename keeps the ORIGINAL physical names stable
     w.rename_column("val", "value2")
     got = sorted((r.k, r.value2) for r in read_delta(spark, root).collect())
@@ -474,9 +472,8 @@ def test_rename_protocol_upgrade_never_downgrades(spark, tmp_path):
         for a in actions:
             f.write(json.dumps(a) + "\n")
     w.rename_column("k", "key")
-    log = DeltaLog(root)
-    log.replay(None)
-    prot = log.table_protocol
+    st = DeltaLog(root).replay(None)
+    prot = st.protocol
     assert prot["minReaderVersion"] == 3
     assert prot["minWriterVersion"] == 7
     assert set(prot["writerFeatures"]) >= {
@@ -485,7 +482,7 @@ def test_rename_protocol_upgrade_never_downgrades(spark, tmp_path):
         "columnMapping",
     }
     assert "columnMapping" in prot["readerFeatures"]
-    assert log.table_config["delta.columnMapping.maxColumnId"] == "10"
+    assert st.config["delta.columnMapping.maxColumnId"] == "10"
     assert sorted(r.key for r in read_delta(spark, root).collect()) == [0, 1]
 
 
@@ -508,11 +505,10 @@ def test_drop_column_via_mapping(spark, tmp_path):
     w.append(spark.createDataFrame([(10, 30)], "k long, w long"))
     got = sorted((r.k, r.w) for r in read_delta(spark, root).collect())
     assert got == [(0, 0), (1, 3), (2, 6), (10, 30)]
-    log = DeltaLog(root)
-    log.replay(None)
-    assert log.table_config["delta.columnMapping.mode"] == "name"
+    st = DeltaLog(root).replay(None)
+    assert st.config["delta.columnMapping.mode"] == "name"
     # the dropped column's mapping id is retired, never reused
-    assert int(log.table_config["delta.columnMapping.maxColumnId"]) >= 3
+    assert int(st.config["delta.columnMapping.maxColumnId"]) >= 3
     # time travel BEFORE the drop still sees the column
     old = read_delta(spark, root, version=0)
     assert old.columns == ["k", "v", "w"]

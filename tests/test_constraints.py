@@ -29,9 +29,8 @@ def test_check_constraint_lifecycle(spark, tmp_path):
     w.add_constraint("positive_price", "price > 0")
     assert w.constraints() == {"positive_price": "price > 0"}
     # protocol bumped so non-enforcing legacy writers refuse
-    log = DeltaLog(root)
-    log.replay(None)
-    assert log.table_protocol["minWriterVersion"] >= 3
+    st = DeltaLog(root).replay(None)
+    assert st.protocol["minWriterVersion"] >= 3
     # valid append passes; NULL passes (SQL CHECK: only FALSE violates)
     w.append(_k(spark, [(3, 30.0), (4, None)]).coalesce(1))
     assert read_delta(spark, root).count() == 4

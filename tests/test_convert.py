@@ -208,7 +208,7 @@ def test_optimize_target_respects_partitions(spark, tmp_path):
     w = DeltaLogWriter(spark, root)
     w.create(big.repartition(4), partition_by=["grp"])
     w.optimize(target_file_mb=0.2)
-    _, _, active = DeltaLog(root).replay(None)
+    active = DeltaLog(root).replay(None).active
     per_dir: dict[str, int] = {}
     for rel in active:
         per_dir[rel.split("/")[0]] = per_dir.get(rel.split("/")[0], 0) + 1
@@ -368,9 +368,8 @@ def test_iceberg_to_delta_translates_deletes(spark, tmp_path):
         r["k"]: r["_row_id"]
         for r in read_delta(spark, dv_root, with_row_ids=True).collect()
     } == ice_ids
-    log = DeltaLog(dv_root)
-    log.replay(None)
-    assert "deletionVectors" in (log.table_protocol or {}).get(
+    st = DeltaLog(dv_root).replay(None)
+    assert "deletionVectors" in (st.protocol or {}).get(
         "readerFeatures", []
     )
     # v2 position deletes translate through the same path

@@ -255,7 +255,7 @@ def test_streaming_treats_midstream_dv_add_as_rewrite(spark, tmp_path):
     w.create(spark.range(5).select(F.col("id").alias("k")))
     r = DeltaLogStreamReader(root, ignore_changes=False)
     # commit 1: someone attaches a DV to the live file
-    _, _, active = DeltaLog(root).replay(0)
+    active = DeltaLog(root).replay(0).active
     rel, add = next(iter(active.items()))
     add = dict(add)
     add["deletionVector"] = dvmod.inline_dv_descriptor([0])
@@ -362,10 +362,9 @@ def test_delete_where_dv_marks_rows_without_rewrite(spark, tmp_path):
     got = sorted(r.k for r in read_delta(spark, root).collect())
     assert got == [k for k in range(20) if k % 3 != 0]
     # protocol upgraded with the feature listed
-    log = DeltaLog(root)
-    log.replay(None)
-    assert log.table_protocol["minReaderVersion"] == 3
-    assert "deletionVectors" in log.table_protocol["readerFeatures"]
+    st = DeltaLog(root).replay(None)
+    assert st.protocol["minReaderVersion"] == 3
+    assert "deletionVectors" in st.protocol["readerFeatures"]
     # second DV delete MERGES with the existing vectors
     w.delete_where_dv(F.col("k") % 5 == 0)
     got = sorted(r.k for r in read_delta(spark, root).collect())
@@ -395,7 +394,7 @@ def test_delete_where_dv_untouched_files_keep_no_dv(spark, tmp_path):
     w.create(spark.range(0, 5).coalesce(1).select(F.col("id").alias("k")))
     w.append(spark.range(100, 105).coalesce(1).select(F.col("id").alias("k")))
     w.delete_where_dv(F.col("k") == 102)
-    _, _, active = DeltaLog(root).replay(None)
+    active = DeltaLog(root).replay(None).active
     with_dv = [a for a in active.values() if a.get("deletionVector")]
     assert len(with_dv) == 1  # only the hit file carries a DV
     assert read_delta(spark, root).count() == 9
@@ -431,7 +430,7 @@ def test_optimize_purges_dvs_and_vacuum_reclaims(spark, tmp_path):
     assert dv_files
     # OPTIMIZE purges: clean files, same logical rows
     w.optimize(num_files=1)
-    _, _, active = DeltaLog(root).replay(None)
+    active = DeltaLog(root).replay(None).active
     assert not any(a.get("deletionVector") for a in active.values())
     assert sorted(r.k for r in read_delta(spark, root).collect()) == want
     # the old DV file is now referenced by HISTORY only... it still is

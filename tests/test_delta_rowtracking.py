@@ -36,11 +36,10 @@ def test_create_assigns_ids_and_domain(spark, tmp_path):
     rows = read_delta(spark, root, with_row_ids=True).collect()
     assert sorted(r["_row_id"] for r in rows) == list(range(30))
     assert {r["_row_commit_version"] for r in rows} == {0}
-    log = DeltaLog(root)
-    log.replay(None)
-    dm = log.domain_metadata["delta.rowTracking"]
+    st = DeltaLog(root).replay(None)
+    dm = st.domains["delta.rowTracking"]
     assert json.loads(dm["configuration"])["rowIdHighWaterMark"] == 29
-    prot = log.table_protocol
+    prot = st.protocol
     assert "rowTracking" in prot["writerFeatures"]
     assert "domainMetadata" in prot["writerFeatures"]
 
@@ -87,9 +86,8 @@ def test_hwm_recovers_from_live_adds_without_domain(spark, tmp_path):
 
     root, _w = _mk(spark, tmp_path, "rt4")
     log = DeltaLog(root)
-    _, _, active = log.replay(None)
-    log.domain_metadata = {}  # simulate domain lost to a checkpoint
-    assert _row_id_hwm(log, active) == 29
+    st = log.replay(None)._replace(domains={})  # domain lost to a checkpoint
+    assert _row_id_hwm(st) == 29
 
 
 def test_plain_table_refuses_row_id_read(spark, tmp_path):
@@ -110,8 +108,7 @@ def _foreign_untracked_rewrite(root: str) -> None:
     import shutil as _shutil
 
     log = DeltaLog(root)
-    _, _, active = log.replay(None)
-    rel = sorted(active)[0]
+    rel = sorted(log.replay(None).active)[0]
     new_rel = f"part-foreign-rewrite.parquet"
     _shutil.copyfile(os.path.join(root, rel), os.path.join(root, new_rel))
     v = log.latest_version() + 1
@@ -183,10 +180,9 @@ def test_delete_update_merge_preserve_row_ids(spark, tmp_path):
     # REPLACE WHERE: survivors of the rewritten file keep id AND
     # version; the replacement rows are new rows, with fresh ids above
     # the high-water mark and this commit's version
-    log = DeltaLog(root)
-    log.replay(None)
+    st = DeltaLog(root).replay(None)
     hwm = json.loads(
-        log.domain_metadata["delta.rowTracking"]["configuration"]
+        st.domains["delta.rowTracking"]["configuration"]
     )["rowIdHighWaterMark"]
     region = (F.col("k") >= 20) & (F.col("k") < 25)
     v_rep = w.replace_where(
@@ -285,9 +281,8 @@ def test_create_declares_materialized_columns(spark, tmp_path):
     is merely 'supported') and declare the materialized column names
     up front."""
     root, _w = _mk(spark, tmp_path, "rt_cfg")
-    log = DeltaLog(root)
-    log.replay(None)
-    cfg = log.table_config
+    st = DeltaLog(root).replay(None)
+    cfg = st.config
     assert cfg.get("delta.enableRowTracking") == "true"
     assert (
         cfg.get("delta.rowTracking.materializedRowIdColumnName")
@@ -405,11 +400,10 @@ def test_tracking_survives_checkpoint_compaction(spark, tmp_path):
     assert glob.glob(os.path.join(root, "_delta_log", "*.checkpoint*")), (
         "expected a checkpoint after 10 commits"
     )
-    log = DeltaLog(root)
-    _, _, active = log.replay(None)
+    st = DeltaLog(root).replay(None)
     # replay (checkpoint + tail) still sees every add's ids + domain
-    assert all(a.get("baseRowId") is not None for a in active.values())
-    assert "delta.rowTracking" in log.domain_metadata
+    assert all(a.get("baseRowId") is not None for a in st.active.values())
+    assert "delta.rowTracking" in st.domains
     w.append(spark.createDataFrame([(999, "z")], "k long, v string"))
     by_k = {
         r["k"]: r["_row_id"]

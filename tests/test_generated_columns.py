@@ -44,7 +44,7 @@ def test_create_materializes_and_records_expression(spark, tmp_path):
             F.round(F.col("o_totalprice") * 100).cast("long")
         )
     ).count() == 0
-    schema, _, _ = DeltaLog(root).replay(None)
+    schema = DeltaLog(root).replay(None).schema
     f = schema["price_cents"]
     assert (
         f.metadata["delta.generationExpression"]
@@ -137,9 +137,8 @@ def test_merge_schema_evolution(spark, tmp_path):
     assert kept.where(F.col("flag").isNotNull()).count() == 0
     assert out.count() == base.count()
     # configuration (constraints) survived the evolution commit
-    log = DeltaLog(root)
-    log.replay(None)
-    assert "delta.constraints.pos" in log.table_config
+    st = DeltaLog(root).replay(None)
+    assert "delta.constraints.pos" in st.config
 
 
 def test_append_evolution_keeps_configuration(spark, tmp_path):
@@ -154,9 +153,8 @@ def test_append_evolution_keeps_configuration(spark, tmp_path):
     w.create(base)
     w.add_constraint("pos", "o_totalprice > 0")
     w.append(base.withColumn("extra", F.lit(1).cast("long")), merge_schema=True)
-    log = DeltaLog(root)
-    log.replay(None)
-    assert log.table_config.get("delta.constraints.pos") == "o_totalprice > 0"
+    st = DeltaLog(root).replay(None)
+    assert st.config.get("delta.constraints.pos") == "o_totalprice > 0"
     # and the constraint still ENFORCES after evolution
     import pytest as _pytest
 
@@ -178,6 +176,5 @@ def test_overwrite_schema_replacement_keeps_configuration(spark, tmp_path):
     w.create(base)
     w.add_constraint("pos", "o_totalprice > 0")
     w.overwrite(base.withColumn("tag", F.lit("v2")))
-    log = DeltaLog(root)
-    log.replay(None)
-    assert log.table_config.get("delta.constraints.pos") == "o_totalprice > 0"
+    st = DeltaLog(root).replay(None)
+    assert st.config.get("delta.constraints.pos") == "o_totalprice > 0"

@@ -38,7 +38,7 @@ def test_create_allocates_contiguous_ids(spark, tmp_path):
     n = out.count()
     ids = sorted(r["row_id"] for r in out.select("row_id").collect())
     assert ids == [100 + 3 * k for k in range(n)]
-    schema, _, _ = DeltaLog(root).replay(None)
+    schema = DeltaLog(root).replay(None).schema
     md = schema["row_id"].metadata
     assert md["delta.identity.start"] == 100
     assert md["delta.identity.step"] == 3
@@ -62,7 +62,7 @@ def test_append_advances_watermark_without_collisions(spark, tmp_path):
     ids = [r["row_id"] for r in out.select("row_id").collect()]
     assert len(ids) == len(set(ids)) == out.count()
     assert all((i - 100) % 3 == 0 for i in ids)
-    schema, _, _ = DeltaLog(root).replay(None)
+    schema = DeltaLog(root).replay(None).schema
     assert schema["row_id"].metadata["delta.identity.highWaterMark"] == max(ids)
 
 
@@ -86,7 +86,7 @@ def test_negative_step(spark, tmp_path):
     ids = [r["row_id"] for r in out.select("row_id").collect()]
     assert len(ids) == len(set(ids))
     assert all(i <= 0 and i % 2 == 0 for i in ids)
-    schema, _, _ = DeltaLog(root).replay(None)
+    schema = DeltaLog(root).replay(None).schema
     assert schema["row_id"].metadata["delta.identity.highWaterMark"] == min(ids)
 
 

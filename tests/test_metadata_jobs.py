@@ -452,3 +452,100 @@ def test_iceberg_delete_leaves_same_basename_file_live(spark, tmp_path):
     assert sorted(r.k for r in read_iceberg(spark, root).collect()) == [
         k for k in range(10) if k != 1
     ]
+
+
+# Driver metadata reads per verb on the tables above, then for one
+# snapshot read. Iceberg: (Avro decodes, distinct Avro files read) —
+# each manifest list and manifest is decoded once, and the distinct
+# count grows by one manifest list and one manifest per commit. Delta:
+# DeltaLog.replay calls — one; the commit path then reads only the
+# commits newer than the replayed version (and the newest commit's
+# in-commit-timestamp line). Before verbs carried one opened table
+# from snapshot to commit, Iceberg decoded 5/30/40/50/54 and 14 times
+# and Delta replayed 2/4/4/3/3 and 1 times.
+METADATA_READS = {
+    "iceberg": dict(
+        append=(2, 2), delete=(3, 3), update=(4, 4), merge=(5, 5),
+        optimize=(6, 6), read=(7, 7),
+    ),
+    "delta": dict(append=1, delete=1, update=1, merge=1, optimize=1, read=1),
+}
+
+
+def _metadata_reads(monkeypatch):
+    """Iceberg Avro decodes (paths, in order) and Delta events: ("replay",
+    version replayed), ("open", commit version read by any other
+    parse) and ("ict", version whose first line was read)."""
+    import builtins
+    import re
+
+    from plankton_spark.sources import avro_ocf, delta_log, iceberg_meta
+
+    decodes, events, in_ict = [], [], []
+    real_read = avro_ocf.read_ocf_generic
+
+    def read(path):
+        decodes.append(os.path.realpath(path))
+        return real_read(path)
+
+    monkeypatch.setattr(avro_ocf, "read_ocf_generic", read)
+    monkeypatch.setattr(iceberg_meta, "read_ocf_generic", read)
+    real_replay = delta_log.DeltaLog.replay
+
+    def replay(self, *a, **k):
+        out = real_replay(self, *a, **k)
+        events.append(("replay", self.latest_version() if not a or a[0] is None else a[0]))
+        return out
+
+    monkeypatch.setattr(delta_log.DeltaLog, "replay", replay)
+    real_ict = delta_log._commit_ict
+
+    def ict(log_dir, version):
+        events.append(("ict", version))
+        in_ict.append(1)
+        try:
+            return real_ict(log_dir, version)
+        finally:
+            in_ict.pop()
+
+    monkeypatch.setattr(delta_log, "_commit_ict", ict)
+    commit = re.compile(r"_delta_log/(\d{20})\.json$")
+
+    def opener(path, *a, **k):
+        m = commit.search(str(path))
+        if m and not in_ict:
+            events.append(("open", int(m.group(1))))
+        return builtins.open(path, *a, **k)
+
+    monkeypatch.setattr(delta_log, "open", opener, raising=False)
+    return decodes, events
+
+
+def test_dml_verb_metadata_reads(spark, tmp_path, monkeypatch):
+    t = _Tables(spark, str(tmp_path))
+    decodes, events = _metadata_reads(monkeypatch)
+    got, stale = {"iceberg": {}, "delta": {}}, []
+    for verb in ("append", "delete", "update", "merge", "optimize", "read"):
+        for fmt in ("iceberg", "delta"):
+            decodes.clear()
+            events.clear()
+            if verb == "read":
+                t.read(fmt).schema
+            else:
+                t.verb(fmt, verb)
+            if fmt == "iceberg":
+                got[fmt][verb] = (len(decodes), len(set(decodes)))
+                continue
+            replays = [v for kind, v in events if kind == "replay"]
+            got[fmt][verb] = len(replays)
+            if replays:
+                # after the replay, no commit at or below its version is
+                # parsed again; the newest one's ICT line may be read
+                i = events.index(("replay", replays[0]))
+                stale += [
+                    (verb, e) for e in events[i + 1:]
+                    if e[0] != "replay" and e[1] <= replays[0]
+                    and e != ("ict", replays[0])
+                ]
+    assert got == METADATA_READS
+    assert not stale, stale

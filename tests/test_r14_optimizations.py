@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from plankton_spark import cache
 from plankton_spark.io import read_table
 from plankton_spark.registry import all_queries
-from tests.conftest import SF001
+from tests.conftest import SF001, SF0001
 
 
 def test_reset_session_memos_clears_result_memos(spark):
@@ -66,6 +66,41 @@ def test_gemm_checkpoint_recomputes_after_reset(spark):
     (k1, v1), (k2, v2) = next(iter(first.items())), next(iter(second.items()))
     assert k1 == k2 and v1[1] is not v2[1], "reset must force a fresh checkpoint"
     assert len(out) > 0
+
+
+def _cached_rdds(spark, at_most=None) -> int:
+    """RDDs cached in the block manager; with `at_most`, waits up to
+    5 s for non-blocking unpersists to bring the count down to it."""
+    import time
+
+    for _ in range(50):
+        n = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+        if at_most is None or n <= at_most:
+            break
+        time.sleep(0.1)
+    return n
+
+
+def test_dropped_checkpoints_are_unpersisted(spark):
+    """Neither a reset nor a replaced generation leaves the eager
+    survivor checkpoint it drops cached: over four builds of
+    q_sim_cosine_topk with a reset before each, the cached-RDD count
+    stays flat (it grew by one per build while dropped checkpoints
+    waited for a driver GC)."""
+    from plankton_spark.queries import llm_vectors as lv
+
+    q = all_queries()["q_sim_cosine_topk"]
+    counts: list[int] = []
+    for _ in range(4):
+        cache.reset_session_memos()
+        q(spark, SF0001)
+        counts.append(_cached_rdds(spark, counts[0] if counts else None))
+    assert counts == [counts[0]] * 4, counts
+    lv._checkpoint_reuse("__drop_probe", spark.range(10))
+    n = _cached_rdds(spark)
+    lv._checkpoint_reuse("__drop_probe", spark.range(20))  # replaces it
+    assert _cached_rdds(spark, n) == n
+    cache.reset_session_memos()
 
 
 def test_recursive_builds_lazy_in_valve_session(spark):

@@ -85,14 +85,14 @@ def test_delta_replace_where_partition_scoped(spark, tmp_path):
     root = str(tmp_path / "dl")
     w = DeltaLogWriter(spark, root)
     w.create(_base(spark), partition_by=["grp"])
-    _, _, active_before = DeltaLog(root).replay(None)
+    active_before = DeltaLog(root).replay(None).active
     untouched = {r for r in active_before if "grp=0" in r}
     new = _rows(spark, [(100, 1), (101, 1)])
     w.replace_where(new, F.col("grp") == 1)
     assert _content(read_delta(spark, root)) == EXPECT
     # partition predicate: grp=0 files carry forward by REFERENCE —
     # same physical paths live, nothing outside the slice rewritten
-    _, _, active_after = DeltaLog(root).replay(None)
+    active_after = DeltaLog(root).replay(None).active
     assert untouched <= set(active_after)
     assert not any("grp=0" in r for r in set(active_after) - untouched)
     # idempotent re-run

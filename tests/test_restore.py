@@ -118,9 +118,8 @@ def test_delta_restore_undoes_dv_delete_without_protocol_downgrade(
     w.restore(0)
     assert _ks(read_delta(spark, root)) == list(range(0, 10))
     # protocol is monotone: the deletionVectors feature survives
-    log = DeltaLog(root)
-    log.replay(None)
-    feats = (log.table_protocol or {}).get("readerFeatures") or []
+    st = DeltaLog(root).replay(None)
+    feats = (st.protocol or {}).get("readerFeatures") or []
     assert "deletionVectors" in feats
     # and a restore BACK to the DV'd version re-applies the DV
     w.restore(1)
@@ -146,7 +145,7 @@ def test_delta_restore_refuses_vacuumed(spark, tmp_path):
     w = DeltaLogWriter(spark, root)
     w.create(_k(spark, 0, 5).coalesce(1))
     w.overwrite(_k(spark, 100, 103).coalesce(1))
-    _, _, active0 = DeltaLog(root).replay(0)
+    active0 = DeltaLog(root).replay(0).active
     for rel in active0:
         os.remove(os.path.join(root, rel))
     with pytest.raises(FileNotFoundError, match="vacuum"):

@@ -64,11 +64,11 @@ def test_untouched_files_not_rewritten(spark, tmp_path):
     w = DeltaLogWriter(spark, root)
     # two files split by status via partitioning
     w.create(_slice(spark), partition_by=["o_orderstatus"])
-    _, _, before = DeltaLog(root).replay(None)
+    before = DeltaLog(root).replay(None).active
     w.update_where(
         {"cents": F.col("cents") + 1}, F.col("o_orderstatus") == "F"
     )
-    _, _, after = DeltaLog(root).replay(None)
+    after = DeltaLog(root).replay(None).active
     untouched_before = {p for p in before if "o_orderstatus=F" not in p}
     untouched_after = {p for p in after if "o_orderstatus=F" not in p}
     assert untouched_before == untouched_after  # same physical files
@@ -141,7 +141,7 @@ def test_update_where_dv_masks_and_appends(spark, tmp_path):
     root = str(tmp_path / "dvu")
     w = DeltaLogWriter(spark, root)
     w.create(o)
-    _, _, before = DeltaLog(root).replay(None)
+    before = DeltaLog(root).replay(None).active
     w.update_where_dv(
         {"cents": F.col("cents") + 1000}, F.col("o_orderstatus") == "O"
     )
@@ -149,7 +149,7 @@ def test_update_where_dv_masks_and_appends(spark, tmp_path):
         r["o_orderkey"]: r["cents"] for r in read_delta(spark, root).collect()
     }
     assert got == expect
-    _, _, after = DeltaLog(root).replay(None)
+    after = DeltaLog(root).replay(None).active
     # original file paths still live, now carrying DVs; plus new adds
     assert set(before) <= set(after)
     assert any(a.get("deletionVector") for a in after.values())
@@ -165,7 +165,7 @@ def test_update_where_dv_masks_and_appends(spark, tmp_path):
         r["o_orderkey"]: r["cents"] for r in read_delta(spark, root).collect()
     }
     assert got2 == expect
-    _, _, final = DeltaLog(root).replay(None)
+    final = DeltaLog(root).replay(None).active
     assert not any(a.get("deletionVector") for a in final.values())
 
 
