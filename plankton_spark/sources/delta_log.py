@@ -32,11 +32,18 @@ from typing import NamedTuple
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from plankton_spark.sources import positions
 from plankton_spark.sources import rewrite as rw
 from plankton_spark.sources import stage
+from plankton_spark.sources.pyread import (
+    FilePart,
+    FileReader,
+    TableSource,
+    VersionedStreamReader,
+    by_name,
+    by_physical,
+)
 from plankton_spark.sources.assemble import local_frame
 from plankton_spark.sources.deletion_vectors import dv_row_indexes, write_dv_file
 
@@ -962,81 +969,20 @@ def snapshot_schema(table_path: str, version: int | None = None):
     return schema
 
 
-class DeltaLogDataSource(DataSource):
+class DeltaLogDataSource(TableSource):
     """`spark.read.format("deltalog")` — options: path, versionAsOf."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "deltalog"
-
-    def _resolved(self) -> tuple[str, int | None]:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("deltalog: 'path' option is required")
-        v = self.options.get("versionAsOf")
-        return path, (int(v) if v is not None else None)
+    NAME = "deltalog"
 
     def schema(self):
-        path, version = self._resolved()
-        return snapshot_schema(path, version)
+        return snapshot_schema(self.path, self.int_option("versionAsOf"))
 
-    def reader(self, schema) -> "DeltaLogReader":
-        path, version = self._resolved()
-        full_schema, part_cols, files = DeltaLog(path).snapshot(version)
-        return DeltaLogReader(full_schema, part_cols, files)
+    def reader(self, schema) -> FileReader:
+        schema, _, files = DeltaLog(self.path).snapshot(self.int_option("versionAsOf"))
+        return FileReader([FilePart(p, pv) for p, pv in files], schema)
 
     def streamReader(self, schema) -> "DeltaLogStreamReader":
-        path, _ = self._resolved()
-        ignore_changes = (
-            str(self.options.get("ignoreChanges", "false")).lower() == "true"
-        )
-        return DeltaLogStreamReader(path, ignore_changes)
-
-
-class _DeltaFilePartition(InputPartition):
-    def __init__(self, path: str, partition_values: dict):
-        self.path = path
-        self.partition_values = partition_values
-
-
-class DeltaLogReader(DataSourceReader):
-    """One InputPartition per data file (same fan-out as a native
-    scan); emits Arrow batches with partition columns re-attached."""
-
-    def __init__(self, schema: T.StructType, part_cols: list[str], files):
-        self._schema = schema
-        self._part_cols = part_cols
-        self._files = files
-
-    def partitions(self):
-        return [_DeltaFilePartition(p, pv) for p, pv in self._files]
-
-    def read(self, partition: _DeltaFilePartition):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(self._schema)
-        pf = pq.ParquetFile(partition.path)
-        for batch in pf.iter_batches():
-            n = batch.num_rows
-            cols = []
-            for field in target:
-                if field.name in self._part_cols:
-                    raw = partition.partition_values.get(field.name)
-                    arr = pa.array([raw] * n, type=pa.string()).cast(field.type)
-                else:
-                    i = batch.schema.get_field_index(field.name)
-                    if i < 0:
-                        # pre-evolution file: the column doesn't exist
-                        # yet — null-fill. (batch.column(-1) would
-                        # silently return the file's LAST column.)
-                        arr = pa.nulls(n, field.type)
-                    else:
-                        arr = batch.column(i).cast(field.type)
-                cols.append(arr)
-            yield pa.RecordBatch.from_arrays(cols, schema=target)
+        return DeltaLogStreamReader(self.path, self.ignore_changes())
 
 
 def register(spark) -> None:
@@ -3424,10 +3370,7 @@ class ConcurrentDeltaModification(Exception):
 # {"version": N}. Mirrors the planktable streaming source.
 # ---------------------------------------------------------------------
 
-from pyspark.sql.datasource import DataSourceStreamReader  # noqa: E402
-
-
-class DeltaLogStreamReader(DataSourceStreamReader):
+class DeltaLogStreamReader(VersionedStreamReader):
     """Options handled by DeltaLogDataSource.streamReader: path,
     ignoreChanges. Commits whose actions include `remove` are content
     rewrites — they raise unless ignoreChanges=true (matching the
@@ -3435,24 +3378,17 @@ class DeltaLogStreamReader(DataSourceStreamReader):
     exactly their added files."""
 
     def __init__(self, path: str, ignore_changes: bool):
-        self.path = path
+        super().__init__(path, DeltaLog(path).snapshot(None)[0])
         self.ignore_changes = ignore_changes
-        log = DeltaLog(path)
-        schema, part_cols, _ = log.snapshot(None)
-        self._schema = schema
-        self._part_cols = part_cols
 
-    def initialOffset(self) -> dict:
-        return {"version": -1}
+    def latest(self) -> int:
+        return DeltaLog(self.path).latest_version()
 
-    def latestOffset(self) -> dict:
-        return {"version": DeltaLog(self.path).latest_version()}
-
-    def _added(self, v_from: int, v_to: int) -> list[tuple[str, dict]]:
-        out: list[tuple[str, dict]] = []
+    def _added(self, v_from: int, v_to: int) -> list[FilePart]:
+        out: list[FilePart] = []
         log_dir = os.path.join(self.path, "_delta_log")
         for v in range(v_from + 1, v_to + 1):
-            adds: list[tuple[str, dict]] = []
+            adds: list[FilePart] = []
             has_remove = False
             for a in _commit_actions(log_dir, v):
                 if "add" in a and a["add"].get("dataChange", True):
@@ -3462,9 +3398,9 @@ class DeltaLogStreamReader(DataSourceStreamReader):
                         # resurrect deleted rows
                         has_remove = True
                     adds.append(
-                        (
+                        FilePart(
                             os.path.join(self.path, a["add"]["path"]),
-                            a["add"].get("partitionValues") or {},
+                            a["add"].get("partitionValues"),
                         )
                     )
                 elif "remove" in a and a["remove"].get("dataChange", True):
@@ -3475,33 +3411,17 @@ class DeltaLogStreamReader(DataSourceStreamReader):
                     "stream without duplicates; set ignoreChanges=true to "
                     "stream added files anyway"
                 )
-            if not (has_remove and not self.ignore_changes):
-                out.extend(adds)
+            out.extend(adds)
         return out
 
     def partitions(self, start: dict, end: dict):
-        return [
-            _DeltaFilePartition(p, pv)
-            for p, pv in self._added(start["version"], end["version"])
-        ]
-
-    def read(self, partition: _DeltaFilePartition):
-        reader = DeltaLogReader(self._schema, self._part_cols, [])
-        yield from reader.read(partition)
-
-    def commit(self, end: dict) -> None:
-        pass
+        return self._added(start["version"], end["version"])
 
 
-class _CdfPartition(InputPartition):
-    def __init__(
-        self, path: str, partition_values: dict, change_type: str | None,
-        version: int,
-    ):
-        self.path = path
-        self.partition_values = partition_values
-        self.change_type = change_type  # None → cdc file carries it
-        self.version = version
+_CDF_FIELDS = [
+    T.StructField("_change_type", T.StringType()),
+    T.StructField("_commit_version", T.LongType()),
+]
 
 
 def cdf_schema(table_path: str) -> T.StructType:
@@ -3510,16 +3430,10 @@ def cdf_schema(table_path: str) -> T.StructType:
     passing an explicit readStream schema, which skips the
     Python-runner schema-probe round trip per load() (round 14)."""
     schema, _ = DeltaLog(table_path).schema_info(None)
-    return T.StructType(
-        list(schema.fields)
-        + [
-            T.StructField("_change_type", T.StringType()),
-            T.StructField("_commit_version", T.LongType()),
-        ]
-    )
+    return T.StructType(schema.fields + _CDF_FIELDS)
 
 
-class DeltaCdfDataSource(DataSource):
+class DeltaCdfDataSource(TableSource):
     """format("deltacdf"): the CHANGE DATA FEED as a STREAMING source —
     the CDC-to-downstream pattern (feed a materialized aggregate, sync
     a search index, drive an audit trail) without re-reading
@@ -3528,27 +3442,17 @@ class DeltaCdfDataSource(DataSource):
     contract). Output schema = table columns + _change_type +
     _commit_version."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "deltacdf"
-
-    def _path(self) -> str:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("deltacdf requires option 'path'")
-        return path
+    NAME = "deltacdf"
+    MISSING_PATH = "{} requires option 'path'"
 
     def schema(self):
-        return cdf_schema(self._path())
+        return cdf_schema(self.path)
 
     def streamReader(self, schema) -> "DeltaCdfStreamReader":
-        return DeltaCdfStreamReader(
-            self._path(),
-            int(self.options.get("startingVersion", 0)),
-        )
+        return DeltaCdfStreamReader(self.path, self.int_option("startingVersion", 0))
 
 
-class DeltaCdfStreamReader(DataSourceStreamReader):
+class DeltaCdfStreamReader(VersionedStreamReader):
     """Offsets are commit versions; each micro-batch contributes the
     commits in (start, end] per the CDF reader algorithm: `cdc`
     actions' _change_data files VERBATIM where present, the DERIVED
@@ -3557,38 +3461,44 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
     own DV writes on CDF tables emit cdc actions). Rows project under
     the CURRENT table schema (pre-evolution files null-fill — the
     same serving-schema rule the batch reader applies per version is
-    collapsed to the head here, documented)."""
+    collapsed to the head here, documented); a column-mapped table's
+    files and partitionValues resolve through its physical names."""
 
     def __init__(self, path: str, starting_version: int = 0):
-        self.path = path
-        self.starting_version = starting_version
-        log = DeltaLog(path)
-        schema, part_cols = log.schema_info(None)
-        self._schema = schema
-        self._part_cols = part_cols
-
-    def initialOffset(self) -> dict:
+        st = DeltaLog(path).replay(None)
+        cm = column_mapping(st.schema, st.config, path)
+        self.phys = cm["phys"] if cm else {}
+        self.part_cols = st.part_cols
         # offsets are EXCLUSIVE lower bounds, so starting_version - 1
         # makes startingVersion the first commit whose changes stream
-        return {"version": self.starting_version - 1}
+        super().__init__(
+            path,
+            T.StructType(st.schema.fields + _CDF_FIELDS),
+            starting_version - 1,
+            by_physical(self.phys) if cm else by_name,
+        )
 
-    def latestOffset(self) -> dict:
-        return {"version": DeltaLog(self.path).latest_version()}
+    def latest(self) -> int:
+        return DeltaLog(self.path).latest_version()
 
-    def _changes(self, v_from: int, v_to: int) -> list["_CdfPartition"]:
-        out: list[_CdfPartition] = []
-        for v, acts, prior, _st in _commit_states(self.path, range(v_from + 1, v_to + 1)):
+    def _part(self, action: dict, v: int, change_type: str | None) -> FilePart:
+        pv = action.get("partitionValues") or {}
+        consts = {"_commit_version": v}
+        if change_type is not None:  # None → the cdc file carries it
+            consts["_change_type"] = change_type
+        return FilePart(
+            os.path.join(self.path, action["path"]),
+            {c: pv.get(self.phys.get(c, c)) for c in self.part_cols},
+            consts,
+        )
+
+    def partitions(self, start: dict, end: dict) -> list[FilePart]:
+        out: list[FilePart] = []
+        versions = range(start["version"] + 1, end["version"] + 1)
+        for v, acts, prior, _st in _commit_states(self.path, versions):
             cdc = [a["cdc"] for a in acts if "cdc" in a]
             if cdc:
-                out.extend(
-                    _CdfPartition(
-                        os.path.join(self.path, c["path"]),
-                        c.get("partitionValues") or {},
-                        None,
-                        v,
-                    )
-                    for c in cdc
-                )
+                out.extend(self._part(c, v, None) for c in cdc)
                 continue
             adds = [
                 a["add"]
@@ -3608,15 +3518,7 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
                     "vectors without cdc actions — the change stream "
                     "cannot be derived from whole files"
                 )
-            out.extend(
-                _CdfPartition(
-                    os.path.join(self.path, a["path"]),
-                    a.get("partitionValues") or {},
-                    "insert",
-                    v,
-                )
-                for a in adds
-            )
+            out.extend(self._part(a, v, "insert") for a in adds)
             if removes:
                 prev = _prior(self.path, v, prior).active
                 for r in removes:
@@ -3628,65 +3530,8 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
                             "file at the prior version — the change "
                             "stream cannot be derived"
                         )
-                    out.append(
-                        _CdfPartition(
-                            os.path.join(self.path, r["path"]),
-                            before.get("partitionValues") or {},
-                            "delete",
-                            v,
-                        )
-                    )
+                    out.append(self._part(before, v, "delete"))
         return out
-
-    def partitions(self, start: dict, end: dict):
-        return self._changes(start["version"], end["version"])
-
-    def read(self, partition: "_CdfPartition"):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(self._schema)
-        pf = pq.ParquetFile(partition.path)
-        for batch in pf.iter_batches():
-            n = batch.num_rows
-            cols = []
-            for field in target:
-                if field.name in self._part_cols:
-                    raw = partition.partition_values.get(field.name)
-                    arr = pa.array([raw] * n, type=pa.string()).cast(
-                        field.type
-                    )
-                else:
-                    i = batch.schema.get_field_index(field.name)
-                    if i < 0:
-                        arr = pa.nulls(n, field.type)
-                    else:
-                        arr = batch.column(i).cast(field.type)
-                cols.append(arr)
-            if partition.change_type is None:
-                i = batch.schema.get_field_index("_change_type")
-                ct = batch.column(i).cast(pa.string())
-            else:
-                ct = pa.array(
-                    [partition.change_type] * n, type=pa.string()
-                )
-            cols.append(ct)
-            cols.append(pa.array([partition.version] * n, type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                cols,
-                schema=pa.schema(
-                    list(target)
-                    + [
-                        pa.field("_change_type", pa.string()),
-                        pa.field("_commit_version", pa.int64()),
-                    ]
-                ),
-            )
-
-    def commit(self, end: dict) -> None:
-        pass
 
 
 DELTA_CHECKPOINT_EVERY = 10

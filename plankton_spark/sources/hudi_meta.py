@@ -2659,18 +2659,12 @@ def convert_hudi_to_iceberg(spark, table_path: str) -> int:
 # time filter, or log-block parse) — no shuffle, no driver row path.
 # ---------------------------------------------------------------------
 
-from pyspark.sql.datasource import (  # noqa: E402
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+from plankton_spark.sources.pyread import (  # noqa: E402
+    FilePart,
+    TableSource,
+    VersionedStreamReader,
+    file_batches,
 )
-
-
-class _HudiIncrPartition(InputPartition):
-    def __init__(self, path: str, instant: str, is_log: bool):
-        self.path = path
-        self.instant = instant
-        self.is_log = is_log
 
 
 def incr_schema(table_path: str):
@@ -2708,41 +2702,34 @@ def incr_schema(table_path: str):
     raise ValueError(f"{table_path}: no base file to derive a schema")
 
 
-class HudiIncrDataSource(DataSource):
+class HudiIncrDataSource(TableSource):
     """format("hudiincr"): option 'path' names the Hudi table. Output
     schema = the base-file schema (table columns + the five _hoodie_*
     meta columns — _hoodie_commit_time is the per-record change
     attribution consumers group by)."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "hudiincr"
-
-    def _path(self) -> str:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("hudiincr requires option 'path'")
-        return path
+    NAME = "hudiincr"
+    MISSING_PATH = "{} requires option 'path'"
 
     def schema(self):
-        return incr_schema(self._path())
+        return incr_schema(self.path)
 
     def streamReader(self, schema) -> "HudiIncrStreamReader":
         return HudiIncrStreamReader(
-            self._path(), schema, self.options.get("startingInstant")
+            self.path, schema, self.options.get("startingInstant")
         )
 
 
-class HudiIncrStreamReader(DataSourceStreamReader):
+class HudiIncrStreamReader(VersionedStreamReader):
+    key = "last"
+
     def __init__(self, path: str, schema, starting_instant: str | None = None):
-        self.path = path
-        self._schema = schema
         # option("startingInstant", t): a NEW consumer begins strictly
         # AFTER instant t instead of replaying the whole timeline —
         # real Hudi's hoodie.datasource.read.begin.instanttime. Only
         # consulted for the initial offset; checkpointed consumers
         # resume from their checkpoint as always.
-        self._starting = starting_instant or ""
+        super().__init__(path, schema, starting_instant or "")
         t = HudiTable(path)
         t._check_readable(None)  # refuse what reads refuse
         # VIRTUAL-KEY tables stream too (round-13 continuation): the
@@ -2756,9 +2743,6 @@ class HudiIncrStreamReader(DataSourceStreamReader):
         # delete survivors re-emit at the rewrite instant — the same
         # slice-grain limit the batch incremental documents).
         self._virtual = t.virtual_keys
-
-    def _instants(self):
-        return HudiTable(self.path).data_instants()
 
     def _last(self, offset: dict, instants) -> str:
         """Last-consumed instant time from an offset dict. Accepts the
@@ -2793,19 +2777,16 @@ class HudiIncrStreamReader(DataSourceStreamReader):
                 )
         return instants[pos - 1][0] if 0 < pos <= len(instants) else ""
 
-    def initialOffset(self) -> dict:
-        return {"last": self._starting}
-
-    def latestOffset(self) -> dict:
-        instants = self._instants()
-        return {"last": instants[-1][0] if instants else ""}
+    def latest(self) -> str:
+        instants = HudiTable(self.path).data_instants()
+        return instants[-1][0] if instants else ""
 
     def partitions(self, start: dict, end: dict):
         t = HudiTable(self.path)
         instants = t.data_instants()
         lo = self._last(start, instants)
         hi = self._last(end, instants)
-        out: list[_HudiIncrPartition] = []
+        out: list[FilePart] = []
         for ti, action in instants:
             if not (lo < ti <= hi):
                 continue
@@ -2830,94 +2811,37 @@ class HudiIncrStreamReader(DataSourceStreamReader):
                             "a fresh checkpoint or raise "
                             "keep_last_slices"
                         )
-                    out.append(
-                        _HudiIncrPartition(
-                            full,
-                            ti,
-                            ".log." in os.path.basename(rel),
-                        )
-                    )
+                    # virtual files and log records carry no meta
+                    # columns: the feed's instant column is the
+                    # partition's instant (fresh groups exact, COW
+                    # rewrites slice-grain)
+                    consts = {"_hoodie_commit_time": ti} if self._virtual else {}
+                    out.append(FilePart(full, None, consts, instant=ti))
         return out
 
-    def read(self, partition: _HudiIncrPartition):
+    def batches(self, part: FilePart):
+        """A log file's data blocks of the partition's instant (DELETE
+        blocks are skipped: the incremental feed emits written
+        records, not removals), or a base file's batches masked to the
+        records the instant wrote."""
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(self._schema)
-        if partition.is_log:
+        if ".log." in os.path.basename(part.path):
             from plankton_spark.sources.hudi_log import (
                 AVRO_DATA_BLOCK,
                 read_log_blocks,
             )
 
-            for instant, btype, records in read_log_blocks(partition.path):
-                # DELETE_BLOCKs are skipped: the incremental feed
-                # emits written records, not removals
-                if (
-                    instant != partition.instant
-                    or btype != AVRO_DATA_BLOCK
-                    or not records
-                ):
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(
-                            [
-                                rec.get(f.name, partition.instant)
-                                if self._virtual
-                                and f.name == "_hoodie_commit_time"
-                                else rec.get(f.name)
-                                for rec in records
-                            ]
-                        ).cast(f.type)
-                        for f in target
-                    ],
-                    schema=target,
-                )
+            for instant, btype, records in read_log_blocks(part.path):
+                if instant == part.instant and btype == AVRO_DATA_BLOCK and records:
+                    yield pa.RecordBatch.from_pylist(records), None
             return
-        import pyarrow.parquet as pq
-
-        import pyarrow.compute as pc
-
-        pf = pq.ParquetFile(partition.path)
-        for batch in pf.iter_batches():
+        for batch in file_batches(part.path):
             if self._virtual:
-                # virtual base files are wholly attributed to their
-                # writing instant (fresh groups exact, COW rewrites
-                # slice-grain) — synthesize the feed's instant column
-                if batch.num_rows == 0:
-                    continue
-                cols = [
-                    pa.array(
-                        [partition.instant] * batch.num_rows
-                    ).cast(f.type)
-                    if f.name == "_hoodie_commit_time"
-                    else batch.column(
-                        batch.schema.get_field_index(f.name)
-                    ).cast(f.type)
-                    for f in target
-                ]
-                yield pa.RecordBatch.from_arrays(cols, schema=target)
-                continue
-            mask = pc.equal(
-                batch.column(
-                    batch.schema.get_field_index("_hoodie_commit_time")
-                ),
-                partition.instant,
-            )
-            if not pc.any(mask).as_py():
-                continue
-            cols = [
-                batch.column(batch.schema.get_field_index(f.name))
-                .filter(mask)
-                .cast(f.type)
-                for f in target
-            ]
-            yield pa.RecordBatch.from_arrays(cols, schema=target)
-
-    def commit(self, end: dict) -> None:
-        pass
+                yield batch, None
+            else:
+                yield batch, pc.equal(batch.column("_hoodie_commit_time"), part.instant)
 
 
 def register(spark) -> None:

@@ -39,7 +39,6 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints under
 # `from __future__ import annotations` (string hints eval in module globals)
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from plankton_spark.filestats import _reject_empty_string_partitions
 from plankton_spark.filestats import apply_partition_schema as _apply_partition_schema
@@ -47,6 +46,14 @@ from plankton_spark.sources import positions
 from plankton_spark.sources import puffin as _puffin
 from plankton_spark.sources import rewrite as rw
 from plankton_spark.sources import stage
+from plankton_spark.sources.pyread import (
+    FilePart,
+    FileReader,
+    TableSource,
+    VersionedStreamReader,
+    by_field_id,
+    file_batches,
+)
 from plankton_spark.sources.assemble import local_frame
 from plankton_spark.sources.avro_ocf import read_ocf_generic, write_ocf_generic
 
@@ -1100,127 +1107,29 @@ def _assemble_iceberg(
     )
 
 
-class IcebergDataSource(DataSource):
-    """`spark.read.format("iceberglog")` — options: path, snapshotId."""
+class IcebergDataSource(TableSource):
+    """`spark.read.format("iceberglog")` — options: path, snapshotId.
+    Identity-partition source columns come from the manifest partition
+    record (the spec's column projection — this writer's partitioned
+    files omit them); other columns resolve by Iceberg FIELD ID (what
+    keeps renamed columns reading their old files)."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "iceberglog"
-
-    def _resolved(self) -> tuple[str, int | None]:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("iceberglog: 'path' option is required")
-        sid = self.options.get("snapshotId")
-        return path, (int(sid) if sid is not None else None)
+    NAME = "iceberglog"
 
     def schema(self):
-        path, _ = self._resolved()
-        return IcebergTable(path).schema()
+        return IcebergTable(self.path).schema()
 
-    def reader(self, schema) -> "IcebergReader":
-        path, sid = self._resolved()
-        t = IcebergTable(path)
-        return IcebergReader(
-            t.schema(), t.partition_fields(), t.data_entries(sid), t.field_ids()
+    def reader(self, schema) -> FileReader:
+        t = IcebergTable(self.path)
+        entries = t.data_entries(self.int_option("snapshotId"))
+        return FileReader(
+            [FilePart(p, pv) for p, pv in entries],
+            t.schema(),
+            by_field_id(t.field_ids()),
         )
 
     def streamReader(self, schema) -> "IcebergStreamReader":
-        path, _ = self._resolved()
-        ignore_changes = (
-            str(self.options.get("ignoreChanges", "false")).lower() == "true"
-        )
-        return IcebergStreamReader(path, ignore_changes)
-
-
-class _IceFilePartition(InputPartition):
-    def __init__(self, path: str, pv: dict | None = None):
-        self.path = path
-        self.pv = pv or {}
-
-
-class IcebergReader(DataSourceReader):
-    """One InputPartition per data file, Arrow batches out."""
-
-    def __init__(
-        self,
-        schema: T.StructType,
-        part_cols: list[str],
-        entries,
-        field_ids: dict[str, int] | None = None,
-    ):
-        self._schema = schema
-        self._part_cols = part_cols
-        self._entries = entries
-        self._field_ids = field_ids or {}
-
-    def partitions(self):
-        return [_IceFilePartition(p, pv) for p, pv in self._entries]
-
-    def read(self, partition: _IceFilePartition):
-        yield from _iceberg_batches(
-            partition.path,
-            self._schema,
-            self._part_cols,
-            partition.pv,
-            self._field_ids,
-        )
-
-
-def _iceberg_batches(
-    path: str,
-    schema: T.StructType,
-    part_cols: list[str] | None = None,
-    pv: dict | None = None,
-    field_ids: dict[str, int] | None = None,
-):
-    """One data file as Arrow batches aligned to the table schema:
-    identity-partition source columns come from the manifest partition
-    record (the spec's column projection — this writer's partitioned
-    files omit them); other columns resolve by NAME first, then by
-    Iceberg FIELD ID (the file's PARQUET:field_id metadata — what
-    keeps renamed columns reading their old files), and a column a
-    pre-evolution file lacks entirely is null-filled."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    part_cols = part_cols or []
-    pv = pv or {}
-    field_ids = field_ids or {}
-    target = to_arrow_schema(schema)
-    pf = pq.ParquetFile(path)
-    for batch in pf.iter_batches():
-        n = batch.num_rows
-        cols = []
-        by_id = {}
-        for j, bf in enumerate(batch.schema):
-            fid = (bf.metadata or {}).get(b"PARQUET:field_id")
-            if fid is not None:
-                by_id[int(fid)] = j
-        for f in target:
-            if by_id and f.name in field_ids:
-                # id-carrying file + id-known field: resolve by ID
-                # ONLY — a name fallback would mis-bind after rename
-                # sequences that reuse an old name (a→tmp, b→a), and
-                # a missing id means the column didn't exist yet
-                # (null-fill), never "same-named other column"
-                i = by_id.get(field_ids[f.name], -1)
-            else:
-                i = batch.schema.get_field_index(f.name)
-            if i >= 0:
-                cols.append(batch.column(i).cast(f.type))
-            elif f.name in part_cols:
-                v = pv.get(f.name)
-                cols.append(
-                    pa.nulls(n, f.type)
-                    if v is None
-                    else pa.array([v] * n).cast(f.type)
-                )
-            else:
-                cols.append(pa.nulls(n, f.type))
-        yield pa.RecordBatch.from_arrays(cols, schema=target)
+        return IcebergStreamReader(self.path, self.ignore_changes())
 
 
 def register(spark) -> None:
@@ -2533,7 +2442,7 @@ class IcebergWriter:
         current schema with the SAME id under the new name; readers
         resolve old files by field id (read_iceberg via
         spark.sql.parquet.fieldId.read, the DSv2/stream wrappers via
-        the PARQUET:field_id fallback in _iceberg_batches).
+        the PARQUET:field_id resolution of pyread.by_field_id).
 
         Refused when any live data file lacks parquet field ids (a
         pre-field-id file would silently null-fill under the new
@@ -4028,58 +3937,67 @@ class IcebergWriter:
 # default.
 # ---------------------------------------------------------------------
 
-from pyspark.sql.datasource import DataSourceStreamReader  # noqa: E402
 
+class _SnapshotStream(VersionedStreamReader):
+    """A stream over the snapshot lineage. Offsets carry the
+    last-consumed snapshot id, resolved to a position in the CURRENT
+    snapshot list at read time (ADVICE r6 #5): a raw positional index
+    silently replays or skips snapshots once another tool expires or
+    rewrites the list, so an id that vanished is a hard error. Legacy
+    positional checkpoints resolve as-is."""
 
-class IcebergStreamReader(DataSourceStreamReader):
-    def __init__(self, path: str, ignore_changes: bool):
-        self.path = path
-        self.ignore_changes = ignore_changes
+    key = "last_snapshot_id"
+    LEGACY: str  # the positional key of pre-id checkpoints
+    GONE: str  # the refusal when a checkpointed id is gone
+    FIELDS: list = []  # columns the feed appends to the table's
+
+    def __init__(self, path: str):
         t = IcebergTable(path)
-        self._schema = t.schema()
-        self._part_cols = t.partition_fields()
-        self._field_ids = t.field_ids()
+        super().__init__(
+            path,
+            T.StructType(t.schema().fields + self.FIELDS),
+            None,
+            by_field_id(t.field_ids()),
+        )
 
-    def initialOffset(self) -> dict:
-        return {"last_snapshot_id": None}
+    def _snaps(self) -> list[dict]:
+        return IcebergTable(self.path).snapshots()
 
-    def latestOffset(self) -> dict:
-        snaps = IcebergTable(self.path).snapshots()
-        return {"last_snapshot_id": snaps[-1]["snapshot-id"] if snaps else None}
+    def latest(self) -> int | None:
+        snaps = self._snaps()
+        return snaps[-1]["snapshot-id"] if snaps else None
 
-    @staticmethod
-    def _pos_after(path: str, snaps: list[dict], off: dict) -> int:
-        """Offset dict → position in the CURRENT snapshot list.
-
-        Offsets are keyed on the last-consumed snapshot-id and
-        resolved at read time (ADVICE r6 #5): a raw positional index
-        silently replays or skips snapshots if another tool expires /
-        rewrites the list. A checkpointed id that vanished from the
-        list is a hard error, not silent data loss. Legacy {"index"}
-        checkpoints are honored as-is."""
-        if "index" in off:
-            return off["index"]
-        sid = off.get("last_snapshot_id")
+    def _pos_after(self, snaps: list[dict], off: dict) -> int:
+        if self.LEGACY in off:
+            return off[self.LEGACY]
+        sid = off.get(self.key)
         if sid is None:
             return 0
         for i, s in enumerate(snaps):
             if s["snapshot-id"] == sid:
                 return i + 1
-        raise ValueError(
-            f"{path}: checkpointed snapshot {sid} is no longer in the "
-            "metadata snapshot list (expired or rewritten by another "
-            "tool); cannot resume without replaying or skipping data"
-        )
+        raise ValueError(self.GONE.format(path=self.path, sid=sid))
 
-    def _added(self, start: dict, end: dict) -> list[tuple[str, dict]]:
+
+class IcebergStreamReader(_SnapshotStream):
+    LEGACY = "index"
+    GONE = (
+        "{path}: checkpointed snapshot {sid} is no longer in the "
+        "metadata snapshot list (expired or rewritten by another "
+        "tool); cannot resume without replaying or skipping data"
+    )
+
+    def __init__(self, path: str, ignore_changes: bool):
+        super().__init__(path)
+        self.ignore_changes = ignore_changes
+
+    def _added(self, start: dict, end: dict) -> list[FilePart]:
         table = IcebergTable(self.path)
         snaps = table.snapshots()
-        i_from = self._pos_after(self.path, snaps, start)
-        i_to = self._pos_after(self.path, snaps, end)
-        out: list[tuple[str, dict]] = []
-        for snap in snaps[i_from:i_to]:
+        out: list[FilePart] = []
+        for snap in snaps[self._pos_after(snaps, start) : self._pos_after(snaps, end)]:
             sid = snap["snapshot-id"]
-            adds: list[tuple[str, dict]] = []
+            adds: list[FilePart] = []
             has_delete = False
             for m in table.manifest_list(sid):
                 # manifests carried forward verbatim contain no entries
@@ -4097,9 +4015,9 @@ class IcebergStreamReader(DataSourceStreamReader):
                         continue
                     if e["status"] == 1:
                         adds.append(
-                            (
+                            FilePart(
                                 table._resolve(e["data_file"]["file_path"]),
-                                e["data_file"].get("partition") or {},
+                                e["data_file"].get("partition"),
                             )
                         )
                     elif e["status"] == 2:
@@ -4110,24 +4028,11 @@ class IcebergStreamReader(DataSourceStreamReader):
                     "cannot stream without duplicates; set "
                     "ignoreChanges=true to stream added files anyway"
                 )
-            if not (has_delete and not self.ignore_changes):
-                out.extend(adds)
+            out.extend(adds)
         return out
 
     def partitions(self, start: dict, end: dict):
-        return [_IceFilePartition(p, pv) for p, pv in self._added(start, end)]
-
-    def read(self, partition: _IceFilePartition):
-        yield from _iceberg_batches(
-            partition.path,
-            self._schema,
-            self._part_cols,
-            partition.pv,
-            self._field_ids,
-        )
-
-    def commit(self, end: dict) -> None:
-        pass
+        return self._added(start, end)
 
 
 def read_iceberg_changes(spark, table_path: str, sid_from: int, sid_to: int):
@@ -4471,36 +4376,10 @@ def read_iceberg_changelog(
     return out
 
 
-class _IceChangePartition(InputPartition):
-    """One self-contained file read of the changelog stream. Beyond
-    the position payloads (drop/keep), EQUALITY-DELETED boundaries
-    ship per-partition KEY payloads computed at planning time:
-    ``eq_groups`` is [(key_col_names, {key_tuple: max_delete_seq})]
-    and a row is eq-dead when its key tuple maps to a delete sequence
-    STRICTLY GREATER than ``data_seq`` (the spec's sequence rule,
-    evaluated locally — the per-file reader stays join-free).
-    ``prev_drop``/``prev_eq`` switch the partition into DIFF mode
-    (carried file at an eq boundary): emit rows live under the prev
-    payload but dead under the cur payload — the live-set diff, per
-    file, with no cross-file traffic."""
-
-    def __init__(
-        self, path: str, pv: dict, change_type: str, sid: int,
-        drop_positions=None, keep_positions=None,
-        eq_groups=None, data_seq=None, prev_drop=None, prev_eq=None,
-        diff=False,
-    ):
-        self.path = path
-        self.pv = pv
-        self.change_type = change_type
-        self.sid = sid
-        self.drop_positions = drop_positions
-        self.keep_positions = keep_positions
-        self.eq_groups = eq_groups or []
-        self.data_seq = data_seq
-        self.prev_drop = prev_drop
-        self.prev_eq = prev_eq or []
-        self.diff = diff
+_CDF_FIELDS = [
+    T.StructField("_change_type", T.StringType()),
+    T.StructField("_snapshot_id", T.LongType()),
+]
 
 
 def cdf_schema(table_path: str) -> T.StructType:
@@ -4508,42 +4387,42 @@ def cdf_schema(table_path: str) -> T.StructType:
     _snapshot_id). Shared by DataSource.schema() and callers passing
     an explicit readStream schema, which skips the Python-runner
     schema-probe round trip per load() (optimization round 14)."""
-    t = IcebergTable(table_path)
-    return T.StructType(
-        list(t.schema().fields)
-        + [
-            T.StructField("_change_type", T.StringType()),
-            T.StructField("_snapshot_id", T.LongType()),
-        ]
+    return T.StructType(IcebergTable(table_path).schema().fields + _CDF_FIELDS)
+
+
+class IcebergCdfDataSource(TableSource):
+    """format("icebergcdf"): the Iceberg CHANGELOG SCAN as a streaming
+    source — the cross-format twin of format("deltacdf"). Offsets
+    carry the last-consumed snapshot id, so a restarted consumer
+    resumes at exactly the next unconsumed snapshot. Output schema =
+    table columns + _change_type + _snapshot_id."""
+
+    NAME = "icebergcdf"
+    MISSING_PATH = "{} requires option 'path'"
+
+    def schema(self):
+        return cdf_schema(self.path)
+
+    def streamReader(self, schema) -> "IcebergCdfStreamReader":
+        return IcebergCdfStreamReader(self.path)
+
+
+def _change_part(p, pv, change_type, sid, drop, eq=(), seq=None, prev=None):
+    """One self-contained file read of the changelog stream: rows dead
+    under `drop` (positions) or the `eq` payload are dropped; with
+    `prev` = the (drop, eq) of the snapshot before, only the rows that
+    died since then are kept — the live-set diff, per file, with no
+    cross-file traffic. ``eq`` is [(key_col_names, {key_tuple:
+    max_delete_seq})] and a row is eq-dead when its key tuple maps to
+    a delete sequence STRICTLY GREATER than ``seq``, the file's data
+    sequence (the spec's sequence rule, evaluated locally)."""
+    return FilePart(
+        p, pv, {"_change_type": change_type, "_snapshot_id": sid},
+        sid=sid, drop=sorted(drop), eq=list(eq), seq=seq, prev=prev,
     )
 
 
-class IcebergCdfDataSource(DataSource):
-    """format("icebergcdf"): the Iceberg CHANGELOG SCAN as a streaming
-    source — the cross-format twin of format("deltacdf"). Offsets are
-    SNAPSHOT ORDINALS (positions in the snapshots list: ids are
-    arbitrary, ordinals are monotone), so a restarted consumer resumes
-    at exactly the next unconsumed snapshot. Output schema = table
-    columns + _change_type + _snapshot_id."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "icebergcdf"
-
-    def _path(self) -> str:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("icebergcdf requires option 'path'")
-        return path
-
-    def schema(self):
-        return cdf_schema(self._path())
-
-    def streamReader(self, schema) -> "IcebergCdfStreamReader":
-        return IcebergCdfStreamReader(self._path())
-
-
-class IcebergCdfStreamReader(DataSourceStreamReader):
+class IcebergCdfStreamReader(_SnapshotStream):
     """Per micro-batch, the snapshots in (start, end] contribute their
     change sets under read_iceberg_changelog's rules: ADDED files as
     inserts (minus carried DVs), REMOVED files' pre-snapshot rows as
@@ -4562,45 +4441,13 @@ class IcebergCdfStreamReader(DataSourceStreamReader):
     partitions, so each read task is a self-contained parquet scan +
     position filter — no shuffle, no Python row path beyond Arrow."""
 
-    def __init__(self, path: str):
-        self.path = path
-        t = IcebergTable(path)
-        self._schema = t.schema()
-
-    def _snaps(self):
-        return IcebergTable(self.path).metadata.get("snapshots") or []
-
-    def initialOffset(self) -> dict:
-        return {"last_snapshot_id": None}
-
-    def latestOffset(self) -> dict:
-        snaps = self._snaps()
-        return {
-            "last_snapshot_id": snaps[-1]["snapshot-id"] if snaps else None
-        }
-
-    @staticmethod
-    def _pos_after(path: str, snaps: list[dict], off: dict) -> int:
-        """Offset → position in the CURRENT snapshot list — the same
-        id-keyed resolution IcebergStreamReader got in round 6
-        (this reader was missed then): a raw positional index
-        silently replays or skips snapshots after another tool
-        expires part of the list. A checkpointed id that vanished is
-        a hard retention error; legacy {"pos"} checkpoints are
-        honored as-is."""
-        if "pos" in off:
-            return off["pos"]
-        sid = off.get("last_snapshot_id")
-        if sid is None:
-            return 0
-        for i, s in enumerate(snaps):
-            if s["snapshot-id"] == sid:
-                return i + 1
-        raise ValueError(
-            f"{path}: checkpointed snapshot id {sid} is no longer in "
-            "the snapshot list — retention (expire_snapshots) outran "
-            "this consumer; restart from a fresh checkpoint"
-        )
+    LEGACY = "pos"
+    GONE = (
+        "{path}: checkpointed snapshot id {sid} is no longer in "
+        "the snapshot list — retention (expire_snapshots) outran "
+        "this consumer; restart from a fresh checkpoint"
+    )
+    FIELDS = _CDF_FIELDS
 
     @staticmethod
     def _eq_payload(t, eqs):
@@ -4639,11 +4486,9 @@ class IcebergCdfStreamReader(DataSourceStreamReader):
         return [(list(c), m) for c, m in sorted(groups.items())]
 
     def partitions(self, start: dict, end: dict):
-        from plankton_spark.sources import puffin as _puffin
-
         t = IcebergTable(self.path)
-        snaps = t.metadata.get("snapshots") or []
-        out: list[_IceChangePartition] = []
+        snaps = t.snapshots()
+        out: list[FilePart] = []
         cache: dict[int | None, tuple[dict, dict, list, dict]] = {}
 
         def state(sid: int | None):
@@ -4703,8 +4548,8 @@ class IcebergCdfStreamReader(DataSourceStreamReader):
                 )
             return eq_payload_cache[key]
 
-        lo = self._pos_after(self.path, snaps, start)
-        hi = self._pos_after(self.path, snaps, end)
+        lo = self._pos_after(snaps, start)
+        hi = self._pos_after(snaps, end)
         for i in range(lo, min(hi, len(snaps))):
             snap = snaps[i]
             sid = snap["snapshot-id"]
@@ -4713,93 +4558,46 @@ class IcebergCdfStreamReader(DataSourceStreamReader):
             prev_sid = snaps[i - 1]["snapshot-id"] if i > 0 else None
             files_prev, dv_prev, eq_prev, seq_prev = state(prev_sid)
             files_cur, dv_cur, eq_cur, seq_cur = state(sid)
-            if eq_prev or eq_cur:
-                # EQUALITY-DELETED boundary (the round-12 refusal,
-                # lifted): the live-set diff the batch changelog runs
-                # as a cross-file join is computed at PLANNING time
-                # into per-partition payloads — each reader applies
-                # its own file's position drops + eq-key payload
-                # locally and stays join-free. New eq delete FILES
-                # since prev decide which carried files can have
-                # newly-dead rows (eq state only accumulates).
-                pay_prev = eq_payload(eq_prev)
-                pay_cur = eq_payload(eq_cur)
-                new_eq = [e for e in eq_cur if e not in set(eq_prev)]
-                for p, pv in sorted(files_cur.items()):
-                    base = os.path.basename(p)
-                    if p not in files_prev:
-                        out.append(
-                            _IceChangePartition(
-                                p, pv, "insert", sid,
-                                drop_positions=sorted(dv_cur.get(p, ())),
-                                eq_groups=pay_cur,
-                                data_seq=seq_cur.get(base),
-                            )
-                        )
-                        continue
-                    dv_grew = set(dv_cur.get(p, ())) - set(
-                        dv_prev.get(p, ())
-                    )
-                    eq_hits = any(
-                        int(sq) > seq_cur.get(base, 1 << 62)
-                        for _pp, _ids, sq in new_eq
-                    )
-                    if dv_grew or eq_hits:
-                        out.append(
-                            _IceChangePartition(
-                                p, pv, "delete", sid,
-                                drop_positions=sorted(dv_cur.get(p, ())),
-                                eq_groups=pay_cur,
-                                data_seq=seq_cur.get(base),
-                                prev_drop=sorted(dv_prev.get(p, ())),
-                                prev_eq=pay_prev,
-                                diff=True,
-                            )
-                        )
-                for p, pv in sorted(files_prev.items()):
-                    if p not in files_cur:
-                        out.append(
-                            _IceChangePartition(
-                                p, pv, "delete", sid,
-                                drop_positions=sorted(dv_prev.get(p, ())),
-                                eq_groups=pay_prev,
-                                data_seq=seq_prev.get(
-                                    os.path.basename(p)
-                                ),
-                            )
-                        )
-                continue
+            # the live-set diff the batch changelog runs as a
+            # cross-file join is computed at PLANNING time into
+            # per-partition payloads: each reader applies its own
+            # file's position drops + eq-key payload locally and stays
+            # join-free. New eq delete FILES since prev decide which
+            # carried files can have newly-dead rows (eq state only
+            # accumulates).
+            pay_prev = eq_payload(eq_prev)
+            pay_cur = eq_payload(eq_cur)
+            new_eq = [e for e in eq_cur if e not in set(eq_prev)]
             for p, pv in sorted(files_cur.items()):
-                if p in files_prev:
-                    grown = sorted(
-                        set(dv_cur.get(p, ()))
-                        - set(dv_prev.get(p, ()))
-                    )
-                    if grown:
-                        out.append(
-                            _IceChangePartition(
-                                p, pv, "delete", sid,
-                                keep_positions=grown,
-                            )
-                        )
-                else:
+                seq = seq_cur.get(os.path.basename(p))
+                if p not in files_prev:
                     out.append(
-                        _IceChangePartition(
-                            p, pv, "insert", sid,
-                            drop_positions=sorted(dv_cur.get(p, ())),
+                        _change_part(p, pv, "insert", sid, dv_cur.get(p, ()), pay_cur, seq)
+                    )
+                    continue
+                grown = set(dv_cur.get(p, ())) - set(dv_prev.get(p, ()))
+                eq_hits = any(
+                    int(sq) > (1 << 62 if seq is None else seq)
+                    for _pp, _ids, sq in new_eq
+                )
+                if grown or eq_hits:
+                    out.append(
+                        _change_part(
+                            p, pv, "delete", sid, grown, pay_cur, seq,
+                            prev=(sorted(dv_prev.get(p, ())), pay_prev),
                         )
                     )
             for p, pv in sorted(files_prev.items()):
                 if p not in files_cur:
                     out.append(
-                        _IceChangePartition(
-                            p, pv, "delete", sid,
-                            drop_positions=sorted(dv_prev.get(p, ())),
+                        _change_part(
+                            p, pv, "delete", sid, dv_prev.get(p, ()),
+                            pay_prev, seq_prev.get(os.path.basename(p)),
                         )
                     )
         return out
 
-    def _eq_dead(self, batch, partition, eq_groups, target):
+    def _eq_dead(self, batch, part, eq_groups):
         """Per-batch eq-deadness: a row is dead when its key tuple
         maps (in some payload group) to a delete sequence strictly
         greater than the file's data sequence. Key columns absent
@@ -4811,113 +4609,41 @@ class IcebergCdfStreamReader(DataSourceStreamReader):
 
         n = batch.num_rows
         dead = np.zeros(n, dtype=bool)
-        ds = partition.data_seq
-        if ds is None:
+        if part.seq is None:
             return dead
         for cols, keymap in eq_groups:
             if not keymap:
                 continue
             vals = []
             for c in cols:
-                i = batch.schema.get_field_index(c)
+                i = self.resolve(batch.schema, c)
                 if i >= 0:
                     vals.append(batch.column(i).to_pylist())
                 else:
-                    fld = target.field(c)
-                    raw = partition.pv.get(c)
-                    typed = (
-                        pa.array([raw], type=pa.string())
-                        .cast(fld.type)[0]
-                        .as_py()
-                    )
-                    vals.append([typed] * n)
+                    typed = pa.array([part.pv.get(c)]).cast(self.target.field(c).type)
+                    vals.append([typed[0].as_py()] * n)
             for r in range(n):
                 if dead[r]:
                     continue
                 sq = keymap.get(tuple(v[r] for v in vals))
-                if sq is not None and sq > ds:
+                if sq is not None and sq > part.seq:
                     dead[r] = True
         return dead
 
-    def read(self, partition: "_IceChangePartition"):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    def batches(self, part):
+        import numpy as np
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        # the partition's spec's identity columns are whatever table
-        # columns the file content omits — resolved per batch below
-        target = to_arrow_schema(self._schema)
-        pf = pq.ParquetFile(partition.path)
         row_base = 0
-        keep = (
-            set(partition.keep_positions)
-            if partition.keep_positions is not None
-            else None
-        )
-        drop = set(partition.drop_positions or ())
-        for batch in pf.iter_batches():
-            n = batch.num_rows
-            import numpy as np
-
-            idx = np.arange(row_base, row_base + n)
-            row_base += n
-            if partition.diff:
-                # carried file at an eq boundary: emit rows live
-                # under the PREV payload but dead under the CUR one
-                dead_prev = np.isin(
-                    idx, list(set(partition.prev_drop or ()))
-                ) | self._eq_dead(
-                    batch, partition, partition.prev_eq, target
-                )
-                dead_cur = np.isin(idx, list(drop)) | self._eq_dead(
-                    batch, partition, partition.eq_groups, target
-                )
-                mask = ~dead_prev & dead_cur
-            elif keep is not None:
-                mask = np.isin(idx, list(keep))
-            elif drop or partition.eq_groups:
-                mask = ~(
-                    np.isin(idx, list(drop))
-                    | self._eq_dead(
-                        batch, partition, partition.eq_groups, target
-                    )
-                )
+        for batch in file_batches(part.path):
+            idx = np.arange(row_base, row_base + batch.num_rows)
+            row_base += batch.num_rows
+            dead = np.isin(idx, part.drop) | self._eq_dead(batch, part, part.eq)
+            if part.prev is not None:
+                prev_drop, prev_eq = part.prev
+                was_dead = np.isin(idx, prev_drop) | self._eq_dead(batch, part, prev_eq)
+                yield batch, dead & ~was_dead
             else:
-                mask = None
-            if mask is not None and not mask.any():
-                continue
-            cols = []
-            for field in target:
-                i = batch.schema.get_field_index(field.name)
-                if i < 0:
-                    raw = partition.pv.get(field.name)
-                    arr = pa.array(
-                        [raw] * n, type=pa.string()
-                    ).cast(field.type)
-                else:
-                    arr = batch.column(i).cast(field.type)
-                if mask is not None:
-                    arr = arr.filter(pa.array(mask))
-                cols.append(arr)
-            m = len(cols[0]) if cols else 0
-            cols.append(
-                pa.array([partition.change_type] * m, type=pa.string())
-            )
-            cols.append(pa.array([partition.sid] * m, type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                cols,
-                schema=pa.schema(
-                    list(target)
-                    + [
-                        pa.field("_change_type", pa.string()),
-                        pa.field("_snapshot_id", pa.int64()),
-                    ]
-                ),
-            )
-
-    def commit(self, end: dict) -> None:
-        pass
+                yield batch, ~dead if part.drop or part.eq else None
 
 
 def convert_to_iceberg(

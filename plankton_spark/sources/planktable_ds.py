@@ -3,13 +3,12 @@ the planktable transactional log (plankton_spark/table_format.py), so
 the table format is reachable through the standard reader API
 (options: `path`, optional `versionAsOf`).
 
-Read path: the driver replays the commit log to a file list (tiny
-JSON work), then each data file becomes one InputPartition and is
-read executor-side as Arrow RecordBatches — the same
-file-per-partition fan-out a native scan has, with Arrow keeping the
-transfer columnar. Schema evolution is honored by aligning every
-file's batches to the unified snapshot schema (missing columns →
-nulls), mirroring parquet mergeSchema.
+Read path: the driver replays the commit log to a file list and the
+schema the log records (tiny JSON work), then each data file becomes
+one InputPartition, read executor-side as Arrow RecordBatches aligned
+to that schema (missing columns → nulls, mirroring parquet
+mergeSchema). Only a log written before commits recorded their schema
+unions the file footers, once, on the driver.
 
 NOTE the 100 TB hot path remains `PlankTable.read()` (native JVM
 vectorized parquet over the explicit file list); this wrapper exists
@@ -18,113 +17,61 @@ for API parity and for consumers that only speak `spark.read.format`.
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql import types as T
 
-from plankton_spark.table_format import PlankTable
-
-
-def _snapshot_files(path: str, version: int | None) -> list[str]:
-    # log replay needs no SparkSession — only the _log directory
-    return PlankTable(None, path).files(version)
+from plankton_spark.sources.pyread import FilePart, FileReader, TableSource, VersionedStreamReader
+from plankton_spark.table_format import PlankTable, _version_file
 
 
-def _unified_schema(files: list[str]):
+def _footer_schema(files: list[str]) -> T.StructType:
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     unified = pa.unify_schemas([pq.read_schema(f) for f in files])
-
-    def _norm(t):
-        # Spark's historical parquet default writes timestamps as INT96,
-        # which pyarrow surfaces as timestamp[ns] — but Spark's Python
-        # DataSource Arrow bridge rejects NANOSECOND batches. µs is the
-        # engine's timestamp resolution everywhere, so narrow here (the
-        # aligned-batch cast below follows this schema).
-        if pa.types.is_timestamp(t) and t.unit != "us":
-            return pa.timestamp("us", tz=t.tz)
-        return t
-
-    # force nullable: a column added by schema evolution is non-null
-    # in ITS files but null for every older file's rows (and parquet
-    # marks Spark non-null columns `required`, which would make the
-    # aligned null-fill batches violate the declared schema)
-    return pa.schema(
-        [pa.field(f.name, _norm(f.type), nullable=True) for f in unified]
+    # Spark's historical parquet default writes timestamps as INT96,
+    # which pyarrow surfaces as timestamp[ns] — but Spark's Python
+    # DataSource Arrow bridge rejects NANOSECOND batches. µs is the
+    # engine's timestamp resolution everywhere, so narrow here.
+    return from_arrow_schema(
+        pa.schema(
+            [
+                f.with_type(pa.timestamp("us", tz=f.type.tz)) if pa.types.is_timestamp(f.type) else f
+                for f in unified
+            ]
+        )
     )
 
 
-class PlankTableDataSource(DataSource):
+def _snapshot(path: str, version: int | None) -> tuple[list[str], T.StructType]:
+    """(data files, schema) at `version`. Every column is nullable: a
+    column added by schema evolution is null for every older file's
+    rows."""
+    live, _props, js = PlankTable(None, path)._state(version)
+    files = sorted(os.path.join(path, rel) for rel in live)
+    if not files:
+        raise FileNotFoundError(f"{path}: empty snapshot")
+    schema = _footer_schema(files) if js is None else T.StructType.fromJson(js)
+    return files, T.StructType([T.StructField(f.name, f.dataType, True, f.metadata) for f in schema])
+
+
+class PlankTableDataSource(TableSource):
     """Options: path (table root), versionAsOf (optional int)."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "planktable"
-
-    def _resolved(self) -> tuple[str, int | None]:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("planktable: 'path' option is required")
-        v = self.options.get("versionAsOf")
-        return path, (int(v) if v is not None else None)
+    NAME = "planktable"
 
     def schema(self):
-        from pyspark.sql.pandas.types import from_arrow_schema
+        return _snapshot(self.path, self.int_option("versionAsOf"))[1]
 
-        path, version = self._resolved()
-        files = _snapshot_files(path, version)
-        if not files:
-            raise FileNotFoundError(f"{path}: empty snapshot")
-        return from_arrow_schema(_unified_schema(files))
-
-    def reader(self, schema) -> "PlankTableReader":
-        path, version = self._resolved()
-        return PlankTableReader(_snapshot_files(path, version))
+    def reader(self, schema) -> FileReader:
+        files = PlankTable(None, self.path).files(self.int_option("versionAsOf"))
+        return FileReader([FilePart(f) for f in files], schema)
 
     def streamReader(self, schema) -> "PlankTableStreamReader":
-        path, _ = self._resolved()
-        ignore_changes = str(
-            self.options.get("ignoreChanges", "false")
-        ).lower() == "true"
-        return PlankTableStreamReader(path, ignore_changes)
-
-
-class _File(InputPartition):
-    def __init__(self, file: str):
-        self.file = file
-
-
-class PlankTableReader(DataSourceReader):
-    def __init__(self, files: list[str]):
-        self.files = files
-        # computed once on the driver; shipped to executors with the
-        # partition-plan closure so every file aligns to ONE schema
-        self.schema_files = list(files)
-
-    def partitions(self):
-        return [_File(f) for f in self.files]
-
-    def read(self, partition: _File):
-        yield from _aligned_batches(partition.file, self.schema_files)
-
-
-def _aligned_batches(file: str, schema_files: list[str]):
-    """Read one data file as Arrow batches aligned to the unified
-    schema of `schema_files`: missing columns become nulls, column
-    order matches — the executor-side half of mergeSchema."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    target = _unified_schema(schema_files)
-    table = pq.read_table(file)
-    arrays = []
-    for field in target:
-        if field.name in table.column_names:
-            arrays.append(table.column(field.name).cast(field.type))
-        else:
-            arrays.append(pa.nulls(table.num_rows, field.type))
-    yield from pa.table(arrays, schema=target).to_batches()
+        return PlankTableStreamReader(self.path, self.ignore_changes())
 
 
 def register(spark) -> None:
@@ -146,38 +93,25 @@ def register(spark) -> None:
 # ignoreChanges=true, because their re-added files duplicate surviving
 # rows — exactly the caveat public table formats document.
 
-import json as _json
-
-from pyspark.sql.datasource import DataSourceStreamReader
-
 _APPEND_OPS = {"CREATE", "APPEND", "STREAM_APPEND"}
 _SKIP_OPS = {"OPTIMIZE"}
 
 
-class PlankTableStreamReader(DataSourceStreamReader):
+class PlankTableStreamReader(VersionedStreamReader):
     def __init__(self, path: str, ignore_changes: bool):
-        self.path = path
-        self.ignore_changes = ignore_changes
         # the stream's schema is pinned at query start (latest
         # snapshot); every batch aligns to it
-        self.schema_files = _snapshot_files(path, None)
+        super().__init__(path, _snapshot(path, None)[1])
+        self.ignore_changes = ignore_changes
 
-    def _table(self) -> PlankTable:
-        return PlankTable(None, self.path)
+    def latest(self) -> int:
+        return PlankTable(None, self.path).latest_version()
 
-    def initialOffset(self) -> dict:
-        return {"version": -1}
-
-    def latestOffset(self) -> dict:
-        return {"version": self._table().latest_version()}
-
-    def _added_files(self, v_from: int, v_to: int) -> list[str]:
-        from plankton_spark.table_format import _version_file
-
-        out: list[str] = []
-        for v in range(v_from + 1, v_to + 1):
+    def partitions(self, start: dict, end: dict):
+        out: list[FilePart] = []
+        for v in range(start["version"] + 1, end["version"] + 1):
             with open(_version_file(self.path, v)) as f:
-                commit = _json.load(f)
+                commit = json.load(f)
             op = commit.get("operation")
             if op in _SKIP_OPS:
                 continue
@@ -187,17 +121,5 @@ class PlankTableStreamReader(DataSourceStreamReader):
                     "cannot stream without duplicates; set ignoreChanges=true "
                     "to stream re-added files anyway"
                 )
-            out.extend(
-                os.path.join(self.path, a["file"]) for a in commit.get("add", [])
-            )
+            out.extend(FilePart(os.path.join(self.path, a["file"])) for a in commit.get("add", []))
         return out
-
-    def partitions(self, start: dict, end: dict):
-        files = self._added_files(start["version"], end["version"])
-        return [_File(f) for f in files]
-
-    def read(self, partition: _File):
-        yield from _aligned_batches(partition.file, self.schema_files)
-
-    def commit(self, end: dict) -> None:
-        pass
