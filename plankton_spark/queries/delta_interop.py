@@ -435,7 +435,7 @@ def q_deltalog_clone(spark, sf_dir):
     DIVERGES — an append and a DELETE rewrite run on the clone while
     the source must read back byte-identical (its log never moves).
     The delete tombstones source-referenced files in the CLONE's log
-    only (absolute action keys, _path_key), which is the correctness
+    only (absolute action keys, rel_path), which is the correctness
     heart of cloning."""
     from plankton_spark.sources.delta_log import (
         DeltaLogWriter,
@@ -498,9 +498,10 @@ def q_delta_convert(spark, sf_dir):
     files via the file-list prune)."""
     from plankton_spark.sources.delta_log import (
         DeltaLogWriter,
-        convert_to_delta,
         read_delta,
     )
+    from plankton_spark.sources import delta_log
+    from plankton_spark.sources.convert import hive_inventory
 
     root = _scratch(sf_dir, "delta_convert")
     shutil.rmtree(root, ignore_errors=True)
@@ -508,7 +509,7 @@ def q_delta_convert(spark, sf_dir):
     o.where(F.col("o_orderkey") < 2000).write.partitionBy(
         "o_orderstatus"
     ).parquet(root)
-    convert_to_delta(spark, root)
+    delta_log.author(spark, root, hive_inventory)
     w = DeltaLogWriter(spark, root)
     w.append(
         o.where(

@@ -320,11 +320,8 @@ def q_hudi_convert(spark, sf_dir):
     pre-append contents (the two chains legitimately diverge once a
     target-side write lands; per-target reads stay snapshot-exact)."""
     from plankton_spark.sources.delta_log import DeltaLogWriter, read_delta
-    from plankton_spark.sources.hudi_meta import (
-        HudiWriter,
-        convert_hudi_to_delta,
-        convert_hudi_to_iceberg,
-    )
+    from plankton_spark.sources.hudi_meta import HudiWriter
+    from plankton_spark.sources import delta_log, hudi_meta, iceberg_meta
     from plankton_spark.sources.iceberg_meta import read_iceberg
 
     root = _fresh(sf_dir, "hudi_convert")
@@ -336,8 +333,8 @@ def q_hudi_convert(spark, sf_dir):
     )
     inserts = o.where((F.col("o_orderkey") >= 1000) & (F.col("o_orderkey") < 1200))
     w.upsert(updates.unionByName(inserts))
-    convert_hudi_to_iceberg(spark, root)
-    convert_hudi_to_delta(spark, root)
+    iceberg_meta.author(spark, root, hudi_meta.inventory)
+    delta_log.author(spark, root, hudi_meta.inventory)
     dw = DeltaLogWriter(spark, root)
     dw.append(
         o.where((F.col("o_orderkey") >= 1200) & (F.col("o_orderkey") < 1400))
@@ -635,10 +632,8 @@ def q_hudi_convert_reverse(spark, sf_dir):
     virtual-key tables; partitioned and DV'd sources refuse
     conversion (no zero-rewrite representation)."""
     from plankton_spark.sources.delta_log import DeltaLogWriter
-    from plankton_spark.sources.hudi_meta import (
-        convert_delta_to_hudi,
-        read_hudi,
-    )
+    from plankton_spark.sources.hudi_meta import read_hudi
+    from plankton_spark.sources import delta_log, hudi_meta
 
     root = _fresh(sf_dir, "hudi_convert_reverse")
     o = _orders(spark, sf_dir).select("o_orderkey", "o_orderstatus")
@@ -647,7 +642,7 @@ def q_hudi_convert_reverse(spark, sf_dir):
     w.create(o.where(k < 1000).coalesce(1))
     w.append(o.where((k >= 1000) & (k < 1200)).coalesce(1))
     w.delete_where(k % 10 == 3)
-    convert_delta_to_hudi(spark, root, record_key="o_orderkey")
+    hudi_meta.author(spark, root, delta_log.inventory, record_key="o_orderkey")
     return read_hudi(spark, root).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("o_orderkey").cast("long").alias("key_sum"),
@@ -836,10 +831,8 @@ def q_hudi_incremental_virtual(spark, sf_dir):
     an EMPTY frame (the legitimate no-changes poll result, not an
     error)."""
     from plankton_spark.sources.delta_log import DeltaLogWriter
-    from plankton_spark.sources.hudi_meta import (
-        convert_delta_to_hudi,
-        read_hudi,
-    )
+    from plankton_spark.sources.hudi_meta import read_hudi
+    from plankton_spark.sources import delta_log, hudi_meta
 
     root = _fresh(sf_dir, "hudi_incr_virtual")
     o = _orders(spark, sf_dir).select("o_orderkey", "o_orderstatus")
@@ -848,7 +841,7 @@ def q_hudi_incremental_virtual(spark, sf_dir):
     dw.create(o.where(k < 1000).coalesce(1))
     dw.append(o.where((k >= 1000) & (k < 1200)).coalesce(1))
     dw.delete_where(k % 10 == 3)
-    inst = convert_delta_to_hudi(spark, root, record_key="o_orderkey")
+    inst = hudi_meta.author(spark, root, delta_log.inventory, record_key="o_orderkey")
     n_after = read_hudi(spark, root, incremental=(inst, inst)).count()
     return read_hudi(spark, root, incremental=("0" * 17, inst)).agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1302,9 +1295,9 @@ def q_hudi_virtual_write(spark, sf_dir):
     from plankton_spark.sources.delta_log import DeltaLogWriter
     from plankton_spark.sources.hudi_meta import (
         HudiWriter,
-        convert_delta_to_hudi,
         read_hudi,
     )
+    from plankton_spark.sources import delta_log, hudi_meta
 
     root = _fresh(sf_dir, "hudi_virtual_write")
     o = _orders(spark, sf_dir)
@@ -1312,7 +1305,7 @@ def q_hudi_virtual_write(spark, sf_dir):
     dw = DeltaLogWriter(spark, root)
     dw.create(o.where(k < 1000).coalesce(1))
     dw.append(o.where((k >= 1000) & (k < 1200)).coalesce(1))
-    inst0 = convert_delta_to_hudi(spark, root, record_key="o_orderkey")
+    inst0 = hudi_meta.author(spark, root, delta_log.inventory, record_key="o_orderkey")
     n_at_convert = read_hudi(spark, root).count()
     w = HudiWriter(spark, root)
     upd = (

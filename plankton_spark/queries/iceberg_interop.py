@@ -353,10 +353,9 @@ def q_iceberg_convert(spark, sf_dir):
     stamping auto-suppressed so the spec's writer-consistency rule
     holds over the id-less originals), and the conversion snapshot
     still time-travels after the append."""
-    from plankton_spark.sources.iceberg_meta import (
-        IcebergWriter,
-        convert_to_iceberg,
-    )
+    from plankton_spark.sources.iceberg_meta import IcebergWriter
+    from plankton_spark.sources import iceberg_meta
+    from plankton_spark.sources.convert import hive_inventory
 
     root = _scratch(sf_dir, "iceberg_convert")
     shutil.rmtree(root, ignore_errors=True)
@@ -364,7 +363,7 @@ def q_iceberg_convert(spark, sf_dir):
     o.where(F.col("o_orderkey") < 2000).write.partitionBy(
         "o_orderstatus"
     ).parquet(root)
-    s1 = convert_to_iceberg(spark, root)
+    s1 = iceberg_meta.author(spark, root, hive_inventory)
     w = IcebergWriter(spark, root)
     w.append(
         o.where(
@@ -1743,26 +1742,24 @@ def q_iceberg_rowlineage_compact(spark, sf_dir):
 )
 def q_iceberg_convert_reverse(spark, sf_dir):
     """The migration matrix's REVERSE arrow (round-10 verdict #3):
-    convert_iceberg_to_delta authors a _delta_log over an Iceberg
-    table's live files in place — manifest-chain inventory (rewritten
-    files invisible), footer stats into add actions, zero data
-    movement — and v3 row lineage TRANSLATES to Delta row tracking
-    (first_row_id → baseRowId verbatim, next-row-id → hwm domain
-    metadata, materialized-column config pointed at the Iceberg
-    reserved names). The lifecycle compounds every preservation
-    mechanism: id-chained create/append, a DV delete, an Iceberg
-    OPTIMIZE (purges the DVs and MATERIALIZES survivor ids into the
-    rewritten file), then conversion — and the DELTA-chain row-id read
-    must still see the ORIGINAL per-row ids, now resolved through the
-    materialized column the Iceberg compaction wrote. The oracle
-    recomputes ids relationally from the deterministic layout;
+    delta_log.author(.., iceberg_meta.inventory) authors a _delta_log
+    over an Iceberg table's live files in place — manifest-chain
+    inventory (rewritten files invisible), footer stats into add
+    actions, zero data movement — and v3 row lineage TRANSLATES to
+    Delta row tracking (first_row_id → baseRowId verbatim, next-row-id
+    → hwm domain metadata, materialized-column config pointed at the
+    Iceberg reserved names). The lifecycle compounds every
+    preservation mechanism: id-chained create/append, a DV delete, an
+    Iceberg OPTIMIZE (purges the DVs and MATERIALIZES survivor ids
+    into the rewritten file), then conversion — and the DELTA-chain
+    row-id read must still see the ORIGINAL per-row ids, now resolved
+    through the materialized column the Iceberg compaction wrote. The
+    oracle recomputes ids relationally from the deterministic layout;
     DV'd / eq-deleted / transform-partitioned / multi-spec sources
-    refuse (sources/iceberg_meta.py:_iceberg_convertible_snapshot)."""
+    refuse (sources/iceberg_meta.py:inventory)."""
     from plankton_spark.sources.delta_log import read_delta
-    from plankton_spark.sources.iceberg_meta import (
-        IcebergWriter,
-        convert_iceberg_to_delta,
-    )
+    from plankton_spark.sources.iceberg_meta import IcebergWriter
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root = _scratch(sf_dir, "iceberg_convert_reverse")
     shutil.rmtree(root, ignore_errors=True)
@@ -1784,7 +1781,7 @@ def q_iceberg_convert_reverse(spark, sf_dir):
     )
     w.delete_where_dv(F.col("o_orderkey") % 7 == 0)
     w.optimize(num_files=1)
-    convert_iceberg_to_delta(spark, root)
+    delta_log.author(spark, root, iceberg_meta.inventory)
     t = read_delta(spark, root, with_row_ids=True)
     return t.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -113,18 +113,16 @@ def q_iceberg_partitions(spark, sf_dir):
 def q_uniform_convert(spark, sf_dir):
     """UniForm-style dual metadata: a Delta table (created, then
     row-level-deleted so tombstones exist) gains Iceberg metadata over
-    its LIVE files via convert_delta_to_iceberg — and the result read
-    through the ICEBERG metadata chain must equal the relational truth
-    (tombstoned files leaking into the manifest would be a hash
-    mismatch, not just a row-count blip). Zero data movement: both
-    logs reference the same parquet."""
+    its LIVE files via iceberg_meta.author(.., delta_log.inventory) —
+    and the result read through the ICEBERG metadata chain must equal
+    the relational truth (tombstoned files leaking into the manifest
+    would be a hash mismatch, not just a row-count blip). Zero data
+    movement: both logs reference the same parquet."""
     import shutil as _shutil
 
     from plankton_spark.sources.delta_log import DeltaLogWriter
-    from plankton_spark.sources.iceberg_meta import (
-        convert_delta_to_iceberg,
-        read_iceberg,
-    )
+    from plankton_spark.sources.iceberg_meta import read_iceberg
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root = _scratch(sf_dir, "uniform_dual")
     _shutil.rmtree(root, ignore_errors=True)
@@ -132,7 +130,7 @@ def q_uniform_convert(spark, sf_dir):
     w = DeltaLogWriter(spark, root)
     w.create(o)
     w.delete_where(F.col("o_orderkey") % 3 == 0)
-    convert_delta_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, delta_log.inventory)
     return (
         read_iceberg(spark, root)
         .groupBy("o_orderstatus")
@@ -397,10 +395,8 @@ def q_uniform_dv(spark, sf_dir):
     import shutil as _shutil
 
     from plankton_spark.sources.delta_log import DeltaLogWriter
-    from plankton_spark.sources.iceberg_meta import (
-        convert_delta_to_iceberg,
-        read_iceberg,
-    )
+    from plankton_spark.sources.iceberg_meta import read_iceberg
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root = _scratch(sf_dir, "uniform_dv")
     _shutil.rmtree(root, ignore_errors=True)
@@ -408,7 +404,7 @@ def q_uniform_dv(spark, sf_dir):
     w = DeltaLogWriter(spark, root)
     w.create(o)
     w.delete_where_dv(F.col("o_orderkey") % 5 == 0)
-    convert_delta_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, delta_log.inventory)
     return (
         read_iceberg(spark, root)
         .groupBy("o_orderstatus")
@@ -453,10 +449,8 @@ def q_uniform_rowlineage(spark, sf_dir):
     import shutil as _shutil
 
     from plankton_spark.sources.delta_log import DeltaLogWriter
-    from plankton_spark.sources.iceberg_meta import (
-        convert_delta_to_iceberg,
-        read_iceberg,
-    )
+    from plankton_spark.sources.iceberg_meta import read_iceberg
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root = _scratch(sf_dir, "uniform_rowlineage")
     _shutil.rmtree(root, ignore_errors=True)
@@ -478,7 +472,7 @@ def q_uniform_rowlineage(spark, sf_dir):
         .sortWithinPartitions("o_orderkey")
     )
     w.delete_where_dv(F.col("o_orderkey") % 7 == 0)
-    convert_delta_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, delta_log.inventory)
     t = read_iceberg(spark, root, with_lineage=True)
     return t.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -512,7 +506,7 @@ def q_uniform_rowlineage_compact(spark, sf_dir):
     conversion. The compaction materializes each survivor's original
     _row_id into the rewritten file under the configuration-declared
     hidden column — whose name this engine picks as the ICEBERG v3
-    reserved name, so convert_delta_to_iceberg needs no file rewrite
+    reserved name, so the Delta→Iceberg conversion needs no file rewrite
     or extra metadata: the translated table's lineage read resolves
     the SAME physical column (materialized values win) and falls back
     to first_row_id + position (the fresh post-rewrite ids) only
@@ -522,10 +516,8 @@ def q_uniform_rowlineage_compact(spark, sf_dir):
     import shutil as _shutil
 
     from plankton_spark.sources.delta_log import DeltaLogWriter
-    from plankton_spark.sources.iceberg_meta import (
-        convert_delta_to_iceberg,
-        read_iceberg,
-    )
+    from plankton_spark.sources.iceberg_meta import read_iceberg
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root = _scratch(sf_dir, "uniform_rowlineage_compact")
     _shutil.rmtree(root, ignore_errors=True)
@@ -548,7 +540,7 @@ def q_uniform_rowlineage_compact(spark, sf_dir):
     )
     w.delete_where_dv(F.col("o_orderkey") % 7 == 0)
     w.optimize(num_files=1)
-    convert_delta_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, delta_log.inventory)
     t = read_iceberg(spark, root, with_lineage=True)
     return t.agg(
         F.count(F.lit(1)).alias("n_rows"),

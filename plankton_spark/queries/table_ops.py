@@ -186,15 +186,16 @@ def q_table_convert_cross(spark, sf_dir):
     log."""
     from plankton_spark.sources.delta_log import (
         DeltaLogWriter,
-        convert_planktable_to_delta,
         read_delta,
     )
+    from plankton_spark import table_format
+    from plankton_spark.sources import delta_log
 
     o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     t = _fresh_table(spark, sf_dir, "pt_cross")  # rmtree'd fresh
     t.create(o.where(F.col("o_orderkey") < 1000))
     t.delete_where(F.col("o_orderstatus") == "F")
-    convert_planktable_to_delta(spark, t.path)
+    delta_log.author(spark, t.path, table_format.inventory)
     w = DeltaLogWriter(spark, t.path)
     w.append(
         o.where(

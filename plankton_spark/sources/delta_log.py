@@ -45,6 +45,7 @@ from plankton_spark.sources.pyread import (
     by_physical,
 )
 from plankton_spark.sources.assemble import local_frame
+from plankton_spark.sources.convert import Inventory, LiveFile, pv_str, rel_path
 from plankton_spark.sources.deletion_vectors import dv_row_indexes, write_dv_file
 
 
@@ -244,16 +245,6 @@ def column_mapping(
             for f in schema.fields
         }
     return {"phys": phys, "ids": ids}
-
-
-def _path_key(table_path: str, p: str) -> str:
-    """The add/remove-action key for an absolute data-file path:
-    in-table files key by table-relative path; files OUTSIDE the table
-    root key by their absolute path verbatim (the spec allows absolute
-    add paths — a shallow clone's source references), matching the
-    keys replay() builds its active dict with."""
-    rel = os.path.relpath(p, table_path)
-    return p if rel.split(os.sep, 1)[0] == ".." else rel
 
 
 def _commit_actions(log_dir: str, version: int) -> list[dict]:
@@ -784,7 +775,7 @@ def _read_state(
             (p, pv)
             for p, pv in files
             if all(
-                pv.get(c) == _pv_filter_str(v) for c, v in partitions.items()
+                pv.get(c) == pv_str(v) for c, v in partitions.items()
             )
         ]
     if with_row_ids:
@@ -906,25 +897,6 @@ def _row_tracked_scan(
     ).select(*schema.fieldNames(), *names)
 
 
-def _pv_filter_str(v) -> str | None:
-    """A caller-supplied partition filter value in Delta's
-    partitionValues string encoding: None matches the JSON-null
-    partition; dates/timestamps use their ISO form; everything else
-    delegates to the shared hive encoding (assemble._hive_str —
-    lowercase booleans; floats come back None there, so float filter
-    values fall back to plain str, matching what OUR writer's dirs
-    recorded)."""
-    import datetime
-
-    from plankton_spark.sources.assemble import _hive_str
-
-    if v is None:
-        return None
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat(sep=" ") if isinstance(v, datetime.datetime) else v.isoformat()
-    return _hive_str(v) if _hive_str(v) is not None else str(v)
-
-
 def _assemble_view(
     spark,
     schema,
@@ -1002,7 +974,6 @@ from plankton_spark.filestats import _reject_empty_string_partitions  # noqa: E4
 from plankton_spark.filestats import file_stats as _file_stats  # noqa: E402
 from plankton_spark.filestats import footer_stats as _footer_stats  # noqa: E402
 from plankton_spark.filestats import stat_encode as _stat_encode  # noqa: E402
-from plankton_spark.filestats import apply_partition_schema as _apply_partition_schema  # noqa: E402
 
 
 def _pv_typed(raw: str | None, dtype: T.DataType):
@@ -1121,9 +1092,9 @@ class DeltaCommitConflict(Exception):
 # resolve them through these keys, never assume). This writer picks
 # the Iceberg v3 reserved metadata-column names (_row_id /
 # _row_commit_version) as its materialized names so a UniForm
-# translation (convert_delta_to_iceberg) carries preserved ids with
-# zero file rewrites — the Iceberg lineage reader resolves the same
-# physical column by its own spec name.
+# translation (iceberg_meta.author over delta_log.inventory) carries
+# preserved ids with zero file rewrites — the Iceberg lineage reader
+# resolves the same physical column by its own spec name.
 _MAT_ROW_ID_KEY = "delta.rowTracking.materializedRowIdColumnName"
 _MAT_ROW_CV_KEY = "delta.rowTracking.materializedRowCommitVersionColumnName"
 _MAT_ROW_ID_NAME = "_row_id"
@@ -1176,16 +1147,20 @@ def _row_id_hwm(st: DeltaState) -> int:
         except (ValueError, TypeError):
             pass
     for add in st.active.values():
-        b = add.get("baseRowId")
-        if b is None:
-            continue
-        raw = add.get("stats")
-        try:
-            n = (json.loads(raw) if isinstance(raw, str) else raw)["numRecords"]
-        except (ValueError, TypeError, KeyError):
-            continue
-        hwm = max(hwm, int(b) + int(n) - 1)
+        b, n = add.get("baseRowId"), _num_records(add)
+        if b is not None and n is not None:
+            hwm = max(hwm, int(b) + n - 1)
     return hwm
+
+
+def _num_records(add: dict) -> int | None:
+    """An add action's stats.numRecords, None when it records none."""
+    raw = add.get("stats")
+    try:
+        n = (json.loads(raw) if isinstance(raw, str) else raw)["numRecords"]
+    except (ValueError, TypeError, KeyError):
+        return None
+    return None if n is None else int(n)
 
 
 def _constraints(cfg: dict) -> dict[str, str]:
@@ -1858,9 +1833,9 @@ class DeltaLogWriter:
         }
         positions.basenames(active, _dv_refusal(self.table_path))
         dv_desc = {
-            p: active[_path_key(self.table_path, p)]["deletionVector"]
+            p: active[rel_path(self.table_path, p)]["deletionVector"]
             for p, _pv in files
-            if active.get(_path_key(self.table_path, p), {}).get(
+            if active.get(rel_path(self.table_path, p), {}).get(
                 "deletionVector"
             )
         }
@@ -2601,7 +2576,7 @@ class DeltaLogWriter:
             table_root=self.table_path,
         )
         hit_files = rw.hit_files(live, condition, files)
-        hit_rel = sorted(_path_key(self.table_path, p) for p, _ in hit_files)
+        hit_rel = sorted(rel_path(self.table_path, p) for p, _ in hit_files)
         cdf = self._cdf_enabled(st.config)
         adds = [] if insert is None else self._stage(st, insert, part_cols)
         tail: list[dict] = []
@@ -2923,7 +2898,7 @@ class DeltaLogWriter:
         adds = self._stage(st, df, part_cols)
         for a in adds:
             a["add"]["dataChange"] = False
-        rel = sorted(_path_key(self.table_path, p) for p, _ in files)
+        rel = sorted(rel_path(self.table_path, p) for p, _ in files)
         removes = [{"remove": {"path": r, "dataChange": False}} for r in rel]
         if rt_live:
             return self._commit_rt_rewrite(
@@ -3145,7 +3120,7 @@ class DeltaLogWriter:
             for rel in overlap_rel
         ]
         overlap = sorted(
-            _path_key(self.table_path, p) for p, _ in overlap_files
+            rel_path(self.table_path, p) for p, _ in overlap_files
         )
         rt_on, mat_id, mat_cv, mat_head = self._rt_rewrite_state(st)
         if rt_on and added_fields and mat_head:
@@ -4024,55 +3999,113 @@ def read_delta_cdf(spark, table_path: str, v_from: int, v_to: int):
     return out
 
 
-def convert_to_delta(
-    spark, table_path: str, partition_schema: dict[str, str] | None = None
-) -> int:
-    """CONVERT TO DELTA (in-place migration — the public
-    ``CONVERT TO DELTA parquet.`path``` behavior): author version 0 of
-    a ``_delta_log`` over an EXISTING parquet directory. Data files are
-    inventoried and footer-read for per-file stats, never rewritten or
-    moved — the migration cost is O(files) metadata, not O(bytes).
-    Hive-style ``key=value`` subdirectories become partition columns
-    (typed by Spark's partition discovery; each add action carries the
-    spec's string partitionValues, so partition-pruned reads work
-    immediately). Refuses when a _delta_log already exists, when no
-    parquet file is found, or when files disagree on partition
-    depth/keys (a half-hive layout has no faithful Delta
-    representation). ``partition_schema`` overrides the inferred type
-    of named partition columns (e.g. {"grp": "long"}): hive directory
-    names erase types and Spark's discovery guesses the narrowest int
-    — the same reason the public CONVERT TO DELTA takes an explicit
-    PARTITIONED BY schema."""
-    from plankton_spark.filestats import inventory_hive_dir
+def inventory(spark, table_path: str) -> Inventory:
+    """The conversion inventory (`sources/convert.py`) of a Delta
+    table's current snapshot. The log replay, not a directory walk,
+    picks the live files, so tombstoned files and staging leftovers
+    are invisible. Record counts come from each add's stats, deletion
+    vectors decode to the file's deleted row indexes, and baseRowId
+    becomes its first row id when every live file carries one (a
+    partially tracked snapshot converts without ids rather than
+    fabricating them). Refuses a column-mapped table: its files store
+    physical names that the target's schema would not resolve."""
+    st = DeltaLog(table_path).replay(None)
+    if column_mapping(st.schema, st.config, table_path):
+        raise DeltaProtocolError(
+            f"{table_path}: column-mapped Delta tables cannot convert — "
+            "files store physical names the target schema would not "
+            "resolve"
+        )
+    tracked = bool(st.active) and all(
+        a.get("baseRowId") is not None for a in st.active.values()
+    )
+    files = [
+        LiveFile(
+            os.path.join(table_path, rel),
+            a["partitionValues"],
+            _num_records(a),
+            tuple(dv_row_indexes(table_path, a["deletionVector"]))
+            if a.get("deletionVector")
+            else (),
+            int(a["baseRowId"]) if tracked else None,
+        )
+        for rel, a in sorted(st.active.items())
+    ]
+    return Inventory(
+        "Delta", st.schema, st.part_cols, files,
+        _row_id_hwm(st) + 1 if tracked else None,
+    )
 
+
+def author(spark, table_path: str, source) -> int:
+    """Author version 0 of a ``_delta_log`` over the files of the
+    inventory ``source(spark, table_path)`` returns, in place: CONVERT
+    TO DELTA for a parquet directory (`convert.hive_inventory`) and the
+    Delta arm of every other format's migration. Nothing is rewritten
+    or moved; the cost is O(files) metadata. Each add carries its
+    partition values and footer stats for the schema's columns; a
+    file's deleted rows become a DV file (the roaring payloads share
+    one codec, so the translation is exact); first row ids become
+    baseRowId verbatim, with the high-water mark in the rowTracking
+    domain and the materialized-column names of the Iceberg reserved
+    ones, so ids an Iceberg compaction materialized keep winning. The
+    protocol lists exactly the features those need. A schema that
+    already holds the materialized names converts without ids.
+    Refuses when a _delta_log exists, before the source is read."""
     log_dir = os.path.join(table_path, "_delta_log")
     if os.path.isdir(log_dir) and _commit_versions(log_dir):
         raise FileExistsError(f"{table_path}: already a Delta table")
-    inventory, part_keys = inventory_hive_dir(table_path)
-    adds: list[dict] = []
-    for rel, pv in inventory:
-        p = os.path.join(table_path, rel)
-        adds.append(
-            {
-                "add": {
-                    "path": rel,
-                    "partitionValues": pv,
-                    "size": os.path.getsize(p),
-                    "modificationTime": int(os.path.getmtime(p) * 1000),
-                    "dataChange": True,
-                    "stats": json.dumps(_file_stats(p)),
-                }
-            }
-        )
-    # partition discovery types the key=value columns and appends them
-    # after the file columns — exactly the schema the metaData needs
-    schema = spark.read.option("basePath", table_path).parquet(table_path).schema
-    schema = _apply_partition_schema(schema, partition_schema, table_path)
+    inv = source(spark, table_path)
+    names = set(inv.schema.fieldNames())
+    ids = inv.next_row_id is not None and not (
+        {_MAT_ROW_ID_NAME, _MAT_ROW_CV_NAME} & names
+    )
+    readers = {"timestampNtz"} if _schema_has_ntz(inv.schema) else set()
+    if any(f.deleted for f in inv.files):
+        # a reader feature: readers without it would resurrect rows
+        readers.add("deletionVectors")
+    writers = readers | ({"rowTracking", "domainMetadata"} if ids else set())
+    protocol: dict = {
+        "minReaderVersion": 3 if readers else 1,
+        "minWriterVersion": 7 if writers else 2,
+    }
+    if writers:
+        protocol["writerFeatures"] = sorted(writers | LEGACY_WRITER_FEATURES[2])
+    if readers:
+        protocol["readerFeatures"] = sorted(readers)
+    cfg = (
+        {
+            "delta.enableRowTracking": "true",
+            _MAT_ROW_ID_KEY: _MAT_ROW_ID_NAME,
+            _MAT_ROW_CV_KEY: _MAT_ROW_CV_NAME,
+        }
+        if ids
+        else {}
+    )
     w = DeltaLogWriter(spark, table_path)
     actions = [
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        w._metadata_action(schema, part_keys),
-    ] + adds
+        {"protocol": protocol},
+        w._metadata_action(inv.schema, inv.part_cols, cfg),
+    ]
+    if ids:
+        actions.append(_row_tracking_domain(inv.next_row_id - 1))
+    for f in inv.files:
+        st = _file_stats(f.path)
+        for k in ("minValues", "maxValues", "nullCount"):
+            st[k] = {c: v for c, v in st[k].items() if c.split(".")[0] in names}
+        add = {
+            "path": rel_path(table_path, f.path),
+            "partitionValues": f.partition,
+            "size": os.path.getsize(f.path),
+            "modificationTime": int(os.path.getmtime(f.path) * 1000),
+            "dataChange": True,
+            "stats": json.dumps(st),
+        }
+        if ids:
+            add.update(baseRowId=f.first_row_id, defaultRowCommitVersion=0)
+        if f.deleted:
+            add["deletionVector"] = write_dv_file(table_path, f.deleted)
+        actions.append({"add": add})
     return w._commit(0, actions)
 
 
@@ -4083,7 +4116,7 @@ def clone_delta(spark, src_path: str, dst_path: str) -> int:
     allows absolute add paths) — zero bytes copied, O(files) metadata.
     The clone then diverges freely: its commits tombstone/add its own
     files and never write the source; its vacuum cannot reclaim source
-    files (they live outside its root, and _path_key keeps their
+    files (they live outside its root, and rel_path keeps their
     action keys absolute so rewrites tombstone them correctly).
     Protocol, schema, partitioning, table config (column mapping
     included) and deletion vectors all carry over — on-disk 'u' DVs
@@ -4118,76 +4151,6 @@ def clone_delta(spark, src_path: str, dst_path: str) -> int:
         a["dataChange"] = True
         actions.append({"add": a})
     return w._commit(0, actions)
-
-
-def convert_planktable_to_delta(spark, table_path: str) -> int:
-    """Migrate a planktable to Delta IN PLACE with zero rewrite: the
-    current snapshot's parquet files (already plain parquet under the
-    table root) become version 0's add actions — O(files) footer
-    stats, data untouched. The `_log/` directory stays behind as the
-    planktable history (time travel on the OLD format keeps working
-    for retained versions); new writes go through the Delta log.
-    Refuses when a _delta_log already exists."""
-    from plankton_spark.table_format import PlankTable
-
-    log_dir = os.path.join(table_path, "_delta_log")
-    if os.path.isdir(log_dir) and _commit_versions(log_dir):
-        raise FileExistsError(f"{table_path}: already a Delta table")
-    t = PlankTable(spark, table_path)
-    snap = t._snapshot()  # raises if not a planktable
-    adds = []
-    for rel in sorted(snap):
-        p = os.path.join(table_path, rel)
-        adds.append(
-            {
-                "add": {
-                    "path": rel,
-                    "partitionValues": {},
-                    "size": os.path.getsize(p),
-                    "modificationTime": int(os.path.getmtime(p) * 1000),
-                    "dataChange": True,
-                    "stats": json.dumps(_file_stats(p)),
-                }
-            }
-        )
-    schema = t.read().schema
-    w = DeltaLogWriter(spark, table_path)
-    actions = [
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        w._metadata_action(schema, []),
-    ] + adds
-    return w._commit(0, actions)
-
-
-def convert_delta_to_planktable(spark, table_path: str) -> int:
-    """The reverse migration: the Delta table's current snapshot
-    becomes planktable version 0 — metadata-only, same zero-rewrite
-    contract. Refuses partitioned tables (Delta's hive layout omits
-    partition columns from file content, which planktable's
-    file-derived schema cannot represent), and snapshot() already
-    refuses DV'd or column-mapped sources. The `_delta_log` stays
-    behind for the old format's time travel."""
-    from plankton_spark.table_format import PlankTable, _minmax
-
-    t = PlankTable(spark, table_path)
-    if t.versions():
-        raise FileExistsError(f"{table_path}: already a planktable")
-    schema, part_cols, files = DeltaLog(table_path).snapshot(None)
-    if part_cols:
-        raise ValueError(
-            f"{table_path}: partitioned Delta tables cannot become a "
-            "planktable — the hive layout omits partition columns "
-            "from file content, which a file-derived schema cannot "
-            "represent"
-        )
-    adds = [
-        {
-            "file": os.path.relpath(p, table_path),
-            "stats": _minmax(_file_stats(p)),
-        }
-        for p, _ in sorted(files)
-    ]
-    return t._commit(0, operation="CONVERT", add=adds, remove=[])
 
 
 def delta_history(table_path: str) -> list[dict]:

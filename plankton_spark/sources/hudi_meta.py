@@ -75,6 +75,7 @@ from pyspark.sql.window import Window
 
 from plankton_spark.sources import stage
 from plankton_spark.sources.assemble import local_frame
+from plankton_spark.sources.convert import Inventory, LiveFile, refuse_layout, rel_path
 
 META_COLS = [
     "_hoodie_commit_time",
@@ -2525,115 +2526,36 @@ class HudiWriter:
         return stats
 
 
-def _convert_inventory(t: HudiTable) -> list[tuple[str, str, str, str]]:
-    """Latest-file-slice inventory for the format converters. A
-    fully-compacted MERGE_ON_READ table (zero live log files) is
-    base-files-only and converts exactly like COW; live log deltas
-    have no Delta/Iceberg representation and refuse."""
+def inventory(spark, table_path: str) -> Inventory:
+    """The conversion inventory (`sources/convert.py`) of a Hudi table:
+    its latest file slices (the XTable direction). The timeline, not a
+    directory walk, picks them, so superseded slices and uncommitted
+    files are invisible; replacecommit timelines convert, since
+    clustering output is the latest slice set. The schema excludes the
+    five ``_hoodie_*`` meta columns (the public XTable behavior): files
+    keep them and every reader's projection prunes them at the scan.
+    The table converts unpartitioned: Hudi keeps the partition field
+    in file content, where Delta and Iceberg expect partition columns
+    removed, so predicate pushdown and file stats do the pruning. A
+    fully compacted MERGE_ON_READ table (no live log files) converts
+    like COPY_ON_WRITE. Refuses un-compacted MERGE_ON_READ, whose log
+    deltas no target can represent, and a table with no file slices."""
+    t = HudiTable(table_path)
     if t.table_type == "MERGE_ON_READ":
-        slices5 = t.file_slices_with_logs()
-        if any(lrs for *_x, lrs in slices5):
+        slices = t.file_slices_with_logs()
+        if any(lrs for *_x, lrs in slices):
             raise NotImplementedError(
-                f"{t.table_path}: un-compacted MERGE_ON_READ — live log "
+                f"{table_path}: un-compacted MERGE_ON_READ — live log "
                 "deltas have no Delta/Iceberg representation; compact() "
                 "first"
             )
-        return [(p, fid, ti, rel) for p, fid, ti, rel, _ in slices5]
-    return t.file_slices()
-
-
-def convert_hudi_to_delta(spark, table_path: str) -> int:
-    """Close the Hudi arm of the migration matrix: author a
-    ``_delta_log`` version 0 over the Hudi COW table's LATEST FILE
-    SLICES in place — O(files) footer metadata, zero data movement
-    (the XTable direction). The timeline (not a directory walk) picks
-    the inventory, so superseded slices and uncommitted files are
-    invisible. The Delta schema EXCLUDES the five ``_hoodie_*`` meta
-    columns (the public XTable behavior — meta fields are a Hudi
-    implementation detail); files keep them physically and every
-    reader's projection prunes them at the scan. The table converts
-    UNPARTITIONED at the Delta layer: Hudi keeps the partition field
-    in file content, where the Delta spec expects partition columns
-    REMOVED from files — declaring it partitioned would double the
-    column. Partition pruning still works through ordinary predicate
-    pushdown + per-file stats on the data column. Replacecommit
-    timelines convert (clustering output IS the latest slice set);
-    MOR tables convert once fully compacted (zero live logs —
-    _convert_inventory); un-compacted MOR and an existing _delta_log
-    refuse."""
-    from plankton_spark.filestats import file_stats as _fstats
-    from plankton_spark.sources.delta_log import (
-        DeltaLogWriter,
-        _commit_versions,
-    )
-
-    log_dir = os.path.join(table_path, "_delta_log")
-    if os.path.isdir(log_dir) and _commit_versions(log_dir):
-        raise FileExistsError(f"{table_path}: already a Delta table")
-    t = HudiTable(table_path)
-    slices = _convert_inventory(t)
+    else:
+        slices = t.file_slices()
     if not slices:
         raise ValueError(f"{table_path}: no file slices to convert")
-    paths = [os.path.join(table_path, rel) for _, _, _, rel in slices]
+    paths = [os.path.join(table_path, s[3]) for s in slices]
     schema = read_slices(spark, paths).drop(*META_COLS).schema
-    adds = []
-    for _, _, _, rel in slices:
-        p = os.path.join(table_path, rel)
-        st = _fstats(p)
-        st["minValues"] = {k: v for k, v in st.get("minValues", {}).items() if not k.startswith("_hoodie_")}
-        st["maxValues"] = {k: v for k, v in st.get("maxValues", {}).items() if not k.startswith("_hoodie_")}
-        st["nullCount"] = {k: v for k, v in st.get("nullCount", {}).items() if not k.startswith("_hoodie_")}
-        adds.append(
-            {
-                "add": {
-                    "path": rel,
-                    "partitionValues": {},
-                    "size": os.path.getsize(p),
-                    "modificationTime": int(os.path.getmtime(p) * 1000),
-                    "dataChange": True,
-                    "stats": json.dumps(st),
-                }
-            }
-        )
-    w = DeltaLogWriter(spark, table_path)
-    actions = [
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        w._metadata_action(schema, [], {}),
-    ]
-    return w._commit(0, actions + adds)
-
-
-def convert_hudi_to_iceberg(spark, table_path: str) -> int:
-    """The other Hudi migration arrow (XTable's Hudi → Iceberg
-    direction): author Iceberg metadata/ over the LATEST FILE SLICES
-    in place — same inventory rules as convert_hudi_to_delta (timeline
-    replay, superseded slices invisible, O(files) footer metadata,
-    zero data movement), sharing the converters' metadata-authoring
-    tail (_author_iceberg_over). The Iceberg schema excludes the five
-    ``_hoodie_*`` meta columns (scans prune them from file content);
-    the table converts unpartitioned at the Iceberg layer because
-    Hudi keeps the partition field IN file content where an identity
-    spec would expect it projected out — predicate pushdown + footer
-    stats give equivalent pruning. Both converters may run on the SAME
-    Hudi table (``.hoodie``, ``_delta_log`` and ``metadata/`` are
-    disjoint) — the XTable multi-target layout. Replacecommit
-    timelines and fully-compacted MOR convert; un-compacted MOR and
-    an existing Iceberg table refuse."""
-    from plankton_spark.sources.iceberg_meta import _author_iceberg_over
-
-    meta_dir = os.path.join(table_path, "metadata")
-    if os.path.isdir(meta_dir) and any(
-        f.endswith(".metadata.json") for f in os.listdir(meta_dir)
-    ):
-        raise FileExistsError(f"{table_path}: already an Iceberg table")
-    t = HudiTable(table_path)
-    slices = _convert_inventory(t)
-    if not slices:
-        raise ValueError(f"{table_path}: no file slices to convert")
-    paths = [os.path.join(table_path, rel) for _, _, _, rel in slices]
-    schema = read_slices(spark, paths).drop(*META_COLS).schema
-    inventory = [(rel, {}) for _, _, _, rel in sorted(slices)]
-    return _author_iceberg_over(spark, table_path, schema, inventory, [])
+    return Inventory("Hudi", schema, [], [LiveFile(p, {}) for p in paths])
 
 
 # ---------------------------------------------------------------------
@@ -3062,46 +2984,31 @@ def rollback(table_path: str, instant: str, spark=None) -> list[str]:
     return sorted(removed)
 
 
-def convert_delta_to_hudi(
-    spark, table_path: str, record_key: str
-) -> str:
-    """The reverse Hudi arrow (XTable's Hudi-target direction):
-    author a ``.hoodie`` timeline over a Delta table's LIVE files in
-    place — O(files) metadata, zero data movement. Foreign files
-    carry no ``_hoodie_*`` meta columns, so the table is authored in
-    the spec's VIRTUAL-KEY mode (``hoodie.populate.meta.fields=
-    false`` — record identity comes from the declared key field, the
-    published XTable/virtual-keys behavior). Snapshot reads, time
-    travel to the conversion instant, and partition_path pruning work
-    through the normal slice replay; ``with_meta`` refuses (there is no
-    per-record commit time to surface), the INCREMENTAL query
-    attributes at file-slice grain (see read_hudi), and this
-    engine's writer refuses virtual-key tables
-    (upserts would need meta-field backfill — a rewrite, not a
-    conversion). Refuses partitioned Delta layouts (Delta strips
-    partition columns from file CONTENT where Hudi expects them
-    present) and deletion-vector files (rows would resurrect)."""
-    from plankton_spark.sources.delta_log import DeltaLog
-
+def author(spark, table_path: str, source, record_key: str) -> str:
+    """Author a ``.hoodie`` timeline over the files of the inventory
+    ``source(spark, table_path)`` returns, in place (XTable's
+    Hudi-target direction): one BULK_INSERT commit, O(files) metadata,
+    zero data movement. Foreign files carry no ``_hoodie_*`` meta
+    columns, so the table is authored in the spec's VIRTUAL-KEY mode
+    (``hoodie.populate.meta.fields=false``): record identity comes
+    from `record_key`. Snapshot reads, time travel to the conversion
+    instant, partition_path pruning and engine writes work through the
+    normal slice replay; ``with_meta`` refuses (there is no per-record
+    commit time to surface) and the incremental query attributes at
+    file-slice grain (see read_hudi). Refuses an existing ``.hoodie``
+    before the source is read, then partitioned or deleted-from
+    inventories (`convert.refuse_layout`: a base file keeps partition
+    columns and cannot express deletes) and a record key outside the
+    schema."""
     meta_dir = os.path.join(table_path, ".hoodie")
     if os.path.isdir(meta_dir):
         raise FileExistsError(f"{table_path}: already a Hudi table")
-    schema, part_cols, active = DeltaLog(table_path).replay(None)[:3]
-    if part_cols:
-        raise NotImplementedError(
-            f"{table_path}: partitioned Delta layout — partition "
-            "columns live only in directory names, but Hudi expects "
-            "them in file content; no zero-rewrite representation"
-        )
-    if any(a.get("deletionVector") for a in active.values()):
-        raise NotImplementedError(
-            f"{table_path}: live deletion vectors — a Hudi base file "
-            "cannot express them; OPTIMIZE (purge DVs) first"
-        )
-    if record_key not in [f.name for f in schema.fields]:
+    inv = source(spark, table_path)
+    refuse_layout(inv, table_path, "Hudi", NotImplementedError)
+    if record_key not in inv.schema.fieldNames():
         raise ValueError(
             f"{table_path}: record key {record_key!r} not in the "
-            "Delta schema"
+            f"{inv.format} schema"
         )
     os.makedirs(meta_dir)
     _write_props(
@@ -3119,113 +3026,25 @@ def convert_delta_to_hudi(
         },
     )
     instant = f"{_INSTANT0:017d}"
-    stats = {
-        "": [
-            {
-                "fileId": os.path.splitext(os.path.basename(rel))[0],
-                "path": rel,
-                "prevCommit": "null",
-                "numWrites": None,
-                "fileSizeInBytes": os.path.getsize(
-                    os.path.join(table_path, rel)
-                ),
-            }
-            for rel in sorted(active)
-        ]
-    }
-    for phase in ("requested", "inflight"):
-        open(
-            os.path.join(meta_dir, f"{instant}.commit.{phase}"), "w"
-        ).close()
-    with open(
-        os.path.join(meta_dir, f"{instant}.commit"), "w", encoding="utf-8"
-    ) as fh:
-        json.dump(
-            {
-                "operationType": "BULK_INSERT",
-                "partitionToWriteStats": stats,
-            },
-            fh,
-            indent=2,
-            sort_keys=True,
-        )
-    return instant
-
-
-def convert_iceberg_to_hudi(
-    spark, table_path: str, record_key: str
-) -> str:
-    """Iceberg → Hudi (the last cell of the migration matrix's Hudi
-    column): same virtual-key authoring as convert_delta_to_hudi, with
-    the live-file inventory coming from the MANIFEST CHAIN (files
-    dropped by rewrites and failed-commit orphans are invisible).
-    Refuses row-level deletes (position/equality/DV — a Hudi base
-    file cannot express them), transform/identity-partitioned and
-    multi-spec snapshots (identity layouts strip the source column
-    from file content where Hudi expects it), and an existing
-    ``.hoodie``."""
-    from plankton_spark.sources.iceberg_meta import IcebergTable
-
-    meta_dir = os.path.join(table_path, ".hoodie")
-    if os.path.isdir(meta_dir):
-        raise FileExistsError(f"{table_path}: already a Hudi table")
-    t = IcebergTable(table_path)
-    full, pos_dels, eq_dels, dv_dels = t.scan_entries_full(None)
-    if pos_dels or eq_dels or dv_dels:
-        raise NotImplementedError(
-            f"{table_path}: live row-level deletes — a Hudi base file "
-            "cannot express them; OPTIMIZE (purge deletes) first"
-        )
-    if any(pv for _p, pv, _sq, _s in full) or t.partition_spec():
-        raise NotImplementedError(
-            f"{table_path}: partitioned snapshot — identity layouts "
-            "strip the source column from file content where Hudi "
-            "expects it present; no zero-rewrite representation"
-        )
-    schema = t.schema()
-    if record_key not in [f.name for f in schema.fields]:
-        raise ValueError(
-            f"{table_path}: record key {record_key!r} not in the schema"
-        )
-    os.makedirs(meta_dir)
-    _write_props(
-        os.path.join(meta_dir, "hoodie.properties"),
+    stats = [
         {
-            "hoodie.table.name": os.path.basename(
-                os.path.normpath(table_path)
-            ),
-            "hoodie.table.type": "COPY_ON_WRITE",
-            "hoodie.table.version": "6",
-            "hoodie.timeline.layout.version": "1",
-            "hoodie.table.recordkey.fields": record_key,
-            "hoodie.table.partition.fields": "",
-            "hoodie.populate.meta.fields": "false",
-        },
-    )
-    instant = f"{_INSTANT0:017d}"
-    stats = {
-        "": [
-            {
-                "fileId": os.path.splitext(os.path.basename(p))[0],
-                "path": os.path.relpath(p, table_path),
-                "prevCommit": "null",
-                "numWrites": None,
-                "fileSizeInBytes": os.path.getsize(p),
-            }
-            for p, _pv, _sq, _s in sorted(full)
-        ]
-    }
+            "fileId": os.path.splitext(os.path.basename(f.path))[0],
+            "path": rel_path(table_path, f.path),
+            "prevCommit": "null",
+            "numWrites": None,
+            "fileSizeInBytes": os.path.getsize(f.path),
+        }
+        for f in inv.files
+    ]
     for phase in ("requested", "inflight"):
-        open(
-            os.path.join(meta_dir, f"{instant}.commit.{phase}"), "w"
-        ).close()
+        open(os.path.join(meta_dir, f"{instant}.commit.{phase}"), "w").close()
     with open(
         os.path.join(meta_dir, f"{instant}.commit"), "w", encoding="utf-8"
     ) as fh:
         json.dump(
             {
                 "operationType": "BULK_INSERT",
-                "partitionToWriteStats": stats,
+                "partitionToWriteStats": {"": stats},
             },
             fh,
             indent=2,

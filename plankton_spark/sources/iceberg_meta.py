@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from plankton_spark.filestats import _reject_empty_string_partitions
-from plankton_spark.filestats import apply_partition_schema as _apply_partition_schema
 from plankton_spark.sources import positions
 from plankton_spark.sources import puffin as _puffin
 from plankton_spark.sources import rewrite as rw
@@ -56,6 +55,7 @@ from plankton_spark.sources.pyread import (
 )
 from plankton_spark.sources.assemble import local_frame
 from plankton_spark.sources.avro_ocf import read_ocf_generic, write_ocf_generic
+from plankton_spark.sources.convert import Inventory, LiveFile, pv_str, rel_path
 
 
 def _iceberg_type_to_spark(t) -> T.DataType:
@@ -4646,130 +4646,202 @@ class IcebergCdfStreamReader(_SnapshotStream):
                 yield batch, ~dead if part.drop or part.eq else None
 
 
-def convert_to_iceberg(
-    spark, table_path: str, partition_schema: dict[str, str] | None = None
-) -> int:
-    """In-place migration of an existing parquet directory to an
-    Iceberg table (the public `migrate` / `add_files` procedures):
-    authors metadata/ — snapshot 1's manifest references the EXISTING
-    files where they lie, nothing is rewritten or moved. Hive-style
-    ``key=value`` subdirectories become an identity partition spec
-    with typed values in the manifest partition records (metadata-only
-    pruning works immediately); Spark-layout files (partition values
-    only in directory names, source columns omitted from file content)
-    are expected — the same column-projection layout the engine's own
-    writer stages. Converted files live OUTSIDE data/, so vacuum (which
-    reclaims only data/ orphans) can never eat them. Refuses when the
-    directory already is an Iceberg table, has no parquet file, or
-    mixes partition layouts. ``partition_schema`` overrides the
-    inferred type of named partition columns (hive directory names
-    erase types; discovery guesses the narrowest int)."""
-    from plankton_spark.filestats import inventory_hive_dir
-    from plankton_spark.sources.avro_ocf import write_ocf_generic
+def inventory(spark, table_path: str) -> Inventory:
+    """The conversion inventory (`sources/convert.py`) of an Iceberg
+    table's current snapshot. The manifest chain, not a directory
+    walk, picks the live files, so files dropped by rewrites and
+    failed-commit orphans are invisible. Record counts and first row
+    ids come from the manifests (the ids only when the whole snapshot
+    carries them); v3 deletion vectors and v2 position-delete files
+    decode to each data file's deleted row indexes, matched by
+    basename as the delete-aware read matches them. Refuses, from
+    metadata alone:
 
+    - a column renamed, or dropped and re-added under a new field id,
+      in the retained schemas — files written before hold other names
+      for current columns, which a name-based target would read as
+      NULL;
+    - live equality deletes — their sequence semantics have no
+      position representation;
+    - a partition-evolved (multi-spec) snapshot — one target layout
+      cannot describe two;
+    - non-identity transforms (day/bucket/truncate) — a target's
+      partition values are identity values."""
+    import pyarrow.parquet as _pq
+
+    t = IcebergTable(table_path)
+    current = t.field_ids()
+    ids = set(current.values())
+    moved = sorted(
+        {
+            (f["name"], f["id"])
+            for s in t.metadata.get("schemas") or []
+            for f in s["fields"]
+            if (f["name"] in current or f["id"] in ids)
+            and current.get(f["name"]) != f["id"]
+        }
+    )
+    if moved:
+        raise ValueError(
+            f"{table_path}: columns renamed, or dropped and re-added, in "
+            f"the retained schemas ((name, field id): {moved}) — files "
+            "written before hold other names for the current columns, "
+            "which a name-based target would read as NULL; conversion "
+            "refused"
+        )
+    full, pos_dels, eq_dels, dv_dels = t.scan_entries_full(None)
+    if eq_dels:
+        raise ValueError(
+            f"{table_path}: live row-level deletes (equality: "
+            f"{len(eq_dels)}) — their sequence semantics have no "
+            "position representation; run OPTIMIZE first to purge them"
+        )
+    spec_ids = sorted({sid for *_x, sid in full})
+    if len(spec_ids) > 1:
+        raise ValueError(
+            f"{table_path}: partition-evolved snapshot (specs "
+            f"{spec_ids}) — compact to a single spec before converting"
+        )
+    spec = t.partition_spec_for(spec_ids[0]) if spec_ids else t.partition_spec()
+    non_identity = [
+        f.get("name")
+        for f in spec
+        if _norm_transform(f.get("transform", "identity"))[0] != "identity"
+    ]
+    if non_identity:
+        raise ValueError(
+            f"{table_path}: transform-partitioned fields "
+            f"{non_identity} have no identity representation in the "
+            "target format — conversion refused"
+        )
+    by_base = {os.path.basename(p): p for p, *_x in full}
+    if (pos_dels or dv_dels) and len(by_base) < len(full):
+        raise ValueError(
+            f"{table_path}: duplicate data-file basenames — delete "
+            "translation would be ambiguous"
+        )
+    deleted: dict[str, set[int]] = {}
+    for pp, ref, off, sz, _card in dv_dels:
+        base = by_base.get(os.path.basename(ref.rstrip("/")))
+        if base:
+            deleted.setdefault(base, set()).update(
+                _puffin.dv_indexes(pp, int(off), int(sz))
+            )
+    for dfp in pos_dels:
+        tbl = _pq.read_table(dfp, columns=["file_path", "pos"])
+        for fp, pos in zip(
+            tbl.column("file_path").to_pylist(), tbl.column("pos").to_pylist()
+        ):
+            base = by_base.get(os.path.basename(str(fp).rstrip("/")))
+            if base:
+                deleted.setdefault(base, set()).add(int(pos))
+    live = {
+        path: (int(df["record_count"]), frid)
+        for _m, df, path, _seq, frid in t._live(None)
+        if df.get("content", 0) == 0
+    }
+    next_row_id = t.metadata.get("next-row-id")
+    if not full or any(fr is None for _n, fr in live.values()):
+        next_row_id = None  # partially tracked: convert without ids
+    files = [
+        LiveFile(
+            p,
+            {k: pv_str(v) for k, v in (pv or {}).items()},
+            live[p][0],
+            tuple(sorted(deleted.get(p, ()))),
+            live[p][1] if next_row_id is not None else None,
+        )
+        for p, pv, _seq, _sid in full
+    ]
+    part_cols = [t.source_column(f) for f in spec]
+    return Inventory("Iceberg", t.schema(), part_cols, files, next_row_id)
+
+
+def author(spark, table_path: str, source) -> int:
+    """Author snapshot 1 of an Iceberg table (manifest, manifest list,
+    metadata.json) over the files of the inventory ``source(spark,
+    table_path)`` returns, in place: the public `migrate`/`add_files`
+    for a parquet directory (`convert.hive_inventory`) and the Iceberg
+    arm of every other format's migration — a Delta table read through
+    both logs is UniForm-style dual metadata. Nothing is rewritten or
+    moved. Partition columns become an identity spec with typed values
+    in the manifest partition records, so metadata-only pruning works
+    at once; files keep Spark's layout (partition values only in
+    directory names), the layout this engine's writer stages. Record
+    counts come from the inventory, and a footer is opened only for a
+    file whose source metadata has none. Files outside data/ are never
+    vacuum candidates.
+
+    First row ids translate to v3 row lineage verbatim (Delta
+    baseRowId and Iceberg first_row_id are both file base + physical
+    position) with the next row id as the high-water mark; deleted
+    rows become one Puffin file of deletion-vector-v1 blobs (the
+    roaring payloads share one codec with Delta's, so the translation
+    is exact and CRC-verified on every read) under a v3 delete
+    manifest. Either makes the metadata format-version 3. One-shot
+    snapshot export: later source commits are not mirrored. Refuses an
+    existing Iceberg table before the source is read."""
     meta_dir = os.path.join(table_path, "metadata")
     if os.path.isdir(meta_dir) and any(
         f.endswith(".metadata.json") for f in os.listdir(meta_dir)
     ):
         raise FileExistsError(f"{table_path}: already an Iceberg table")
-    schema = spark.read.option("basePath", table_path).parquet(table_path).schema
-    schema = _apply_partition_schema(schema, partition_schema, table_path)
-    dtypes = {f.name: f.dataType for f in schema.fields}
-    inventory, part_keys = inventory_hive_dir(
-        table_path, type_for=lambda k, raw: _typed_pv(raw, dtypes[k])
-    )
-    return _author_iceberg_over(spark, table_path, schema, inventory, part_keys)
-
-
-def _author_iceberg_over(
-    spark, table_path: str, schema, inventory, part_keys, dv_map=None,
-    row_ids=None, next_row_id=None,
-) -> int:
-    """Shared metadata-authoring tail of the converters: write snapshot
-    1's manifest + manifest list + v1 metadata.json over an EXISTING
-    file inventory ([(rel_path, typed_partition_values)]) — nothing is
-    rewritten or moved. Hive `key=value` keys become an identity spec;
-    record counts come from each footer (metadata-only IO).
-
-    ``row_ids`` ({rel_path: first_row_id}) translates the source
-    format's ROW TRACKING into v3 row lineage: each entry keeps its
-    assigned first row id verbatim (Delta baseRowId and Iceberg
-    first_row_id have identical semantics — file-base + physical
-    position), ``next_row_id`` carries the high-water mark, and the
-    metadata is authored as format-version 3 — so _row_id survives the
-    format translation bit-for-bit with zero data movement.
-
-    ``dv_map`` ({rel_path: sorted deleted row indexes}) translates the
-    source format's deletion vectors: one Puffin file with a
-    deletion-vector-v1 blob per DV'd file plus a v3 delete manifest,
-    and the metadata is authored as format-version 3. The roaring
-    payloads are re-encoded through the shared codec (Delta's
-    RoaringBitmapArray and Iceberg's portable DV serialization are the
-    same bytes), so the translation is exact by construction and
-    CRC-verified on every read."""
-    from plankton_spark.sources.avro_ocf import write_ocf_generic
-
-    meta_dir = os.path.join(table_path, "metadata")
-    spec = [
-        {"name": k, "transform": "identity", "source": k}
-        for k in (part_keys or [])
-    ]
-    es = _entry_schema(_spec_avro_fields(schema, spec, table_path)) if spec else None
-    w = IcebergWriter(spark, table_path)
-    os.makedirs(meta_dir, exist_ok=True)
-    snap_id = 1
     import pyarrow.parquet as _pq
 
+    inv = source(spark, table_path)
+    schema, snap_id = inv.schema, 1
+    dtypes = {f.name: f.dataType for f in schema.fields}
+    spec = [
+        {"name": k, "transform": "identity", "source": k} for k in inv.part_cols
+    ]
+    es = _entry_schema(_spec_avro_fields(schema, spec, table_path)) if spec else None
+    lineage = inv.next_row_id is not None
+    w = IcebergWriter(spark, table_path)
+    os.makedirs(meta_dir, exist_ok=True)
     data_files = [
         {
             "content": 0,
-            "file_path": rel,
+            "file_path": rel_path(table_path, f.path),
             "file_format": "PARQUET",
-            "partition": pv,
-            # spec: record_count is REQUIRED and real — footer only
-            "record_count": _pq.ParquetFile(
-                os.path.join(table_path, rel)
-            ).metadata.num_rows,
-            "file_size_in_bytes": os.path.getsize(
-                os.path.join(table_path, rel)
-            ),
-            **(
-                {"first_row_id": int(row_ids[rel])}
-                if row_ids is not None
-                else {}
-            ),
+            "partition": {
+                k: None if v is None else _typed_pv(v, dtypes[k])
+                for k, v in f.partition.items()
+            },
+            # spec: record_count is REQUIRED and real
+            "record_count": f.records
+            if f.records is not None
+            else _pq.ParquetFile(f.path).metadata.num_rows,
+            "file_size_in_bytes": os.path.getsize(f.path),
+            **({"first_row_id": f.first_row_id} if lineage else {}),
         }
-        for rel, pv in inventory
+        for f in inv.files
     ]
     m = w._write_manifest(
         w._unique(f"m{snap_id}"), data_files, snap_id, entry_schema=es
     )
-    ml_name = w._unique(f"snap-{snap_id}")
-    if not dv_map:
-        write_ocf_generic(
-            os.path.join(meta_dir, ml_name), _MANIFEST_FILE_SCHEMA, [m]
-        )
+    ml_path = os.path.join(meta_dir, w._unique(f"snap-{snap_id}"))
+    dvs = [(rel_path(table_path, f.path), f.deleted) for f in inv.files if f.deleted]
+    if not dvs:
+        write_ocf_generic(ml_path, _MANIFEST_FILE_SCHEMA, [m])
     else:
-        from plankton_spark.sources import puffin as _puffin
-
-        blobs = [
-            {
-                "type": "deletion-vector-v1",
-                "data": _puffin.dv_blob(idx),
-                "snapshot-id": snap_id,
-                "properties": {
-                    "referenced-data-file": rel,
-                    "cardinality": str(len(idx)),
-                },
-            }
-            for rel, idx in sorted(dv_map.items())
-        ]
         puffin_rel = "data/dv-converted.puffin"
         os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
+        puffin_path = os.path.join(table_path, puffin_rel)
         metas = _puffin.write_puffin(
-            os.path.join(table_path, puffin_rel), blobs
+            puffin_path,
+            [
+                {
+                    "type": "deletion-vector-v1",
+                    "data": _puffin.dv_blob(idx),
+                    "snapshot-id": snap_id,
+                    "properties": {
+                        "referenced-data-file": rel,
+                        "cardinality": str(len(idx)),
+                    },
+                }
+                for rel, idx in dvs
+            ],
         )
-        puffin_size = os.path.getsize(os.path.join(table_path, puffin_rel))
         dv_entries = [
             {
                 "status": 1,
@@ -4780,19 +4852,19 @@ def _author_iceberg_over(
                     "file_format": "PUFFIN",
                     "partition": {},
                     "record_count": len(idx),
-                    "file_size_in_bytes": puffin_size,
+                    "file_size_in_bytes": os.path.getsize(puffin_path),
                     "referenced_data_file": rel,
                     "content_offset": bm["offset"],
                     "content_size_in_bytes": bm["length"],
                 },
             }
-            for (rel, idx), bm in zip(sorted(dv_map.items()), metas)
+            for (rel, idx), bm in zip(dvs, metas)
         ]
         mdv_name = w._unique(f"m{snap_id}-dv")
         mdv_path = os.path.join(meta_dir, mdv_name)
         write_ocf_generic(mdv_path, _DV_ENTRY_SCHEMA_V3, dv_entries)
         write_ocf_generic(
-            os.path.join(meta_dir, ml_name),
+            ml_path,
             _MANIFEST_FILE_SCHEMA_V2,
             [
                 {**m, "content": 0},
@@ -4818,18 +4890,23 @@ def _author_iceberg_over(
             for i, f in enumerate(schema.fields)
         ],
     }
-    col_ids = {f["name"]: f["id"] for f in ice_schema["fields"]}
     spec_fields = [
         {
-            "name": f["name"],
+            "name": k,
             "transform": "identity",
-            "source-id": col_ids[f["source"]],
+            "source-id": schema.fieldNames().index(k) + 1,
             "field-id": 1000 + i,
         }
-        for i, f in enumerate(spec)
+        for i, k in enumerate(inv.part_cols)
     ]
+    snapshot = {
+        "snapshot-id": snap_id,
+        "timestamp-ms": int(_time.time() * 1000),
+        "manifest-list": f"metadata/{os.path.basename(ml_path)}",
+        "summary": {"operation": "append"},
+    }
     metadata = {
-        "format-version": 3 if (dv_map or row_ids is not None) else 1,
+        "format-version": 3 if (dvs or lineage) else 1,
         "table-uuid": f"plankton-iceberg-{os.path.basename(table_path)}",
         "location": table_path,
         "last-updated-ms": 0,
@@ -4841,20 +4918,13 @@ def _author_iceberg_over(
         "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
         "default-spec-id": 0,
         "current-snapshot-id": snap_id,
-        "snapshots": [
-            {
-                "snapshot-id": snap_id,
-                "timestamp-ms": int(_time.time() * 1000),
-                "manifest-list": f"metadata/{ml_name}",
-                "summary": {"operation": "append"},
-            }
-        ],
+        "snapshots": [snapshot],
     }
-    if row_ids is not None and next_row_id is not None:
-        metadata["next-row-id"] = int(next_row_id)
+    if lineage:
+        metadata["next-row-id"] = int(inv.next_row_id)
         # the converted snapshot carries every translated file, so its
         # id assignments notionally start at 0
-        metadata["snapshots"][0]["first-row-id"] = 0
+        snapshot["first-row-id"] = 0
     w._commit_metadata(1, metadata)
     return snap_id
 
@@ -4915,374 +4985,3 @@ def files_meta(spark, table_path: str, snapshot_id: int | None = None):
     # (unique paths make full-tuple sort work by accident — until a
     # tie makes it a TypeError)
     return local_frame(spark, sorted(rows, key=lambda r: r[0]), out_schema)
-
-
-def convert_delta_to_iceberg(spark, table_path: str) -> int:
-    """UniForm-style dual metadata: author Iceberg metadata over a
-    Delta table's LIVE files, in place — both logs then reference the
-    SAME parquet files, so Iceberg readers open the table without a
-    single row being copied. The Delta log replay (not a directory
-    walk) chooses the inventory, so tombstoned files and staging
-    leftovers are invisible to the Iceberg snapshot; Delta
-    partitionValues become typed identity-spec partition records (the
-    layouts agree: both engines' hive staging omits source columns
-    from file content).
-
-    One-shot snapshot export: Delta commits AFTER the conversion are
-    not reflected on the Iceberg side (re-convert after dropping
-    metadata/ to refresh — refusing silent divergence beats pretending
-    to mirror). Refused for column-mapped tables (physical file names
-    differ from the logical schema). Live Delta deletion vectors
-    TRANSLATE to Iceberg v3 Puffin DVs (byte-compatible roaring
-    payloads through the shared codec) — the converted table reads
-    identically on both sides with zero data movement.
-
-    Vacuum safety is mutual by construction: Delta's vacuum removes
-    only unreferenced *.parquet (Iceberg's Avro/JSON metadata is never
-    a candidate), and this engine's Iceberg vacuum reclaims only
-    data/ orphans (Delta files live at the root / hive dirs)."""
-    from plankton_spark.sources.delta_log import (
-        DeltaLog,
-        DeltaProtocolError,
-        column_mapping,
-    )
-
-    meta_dir = os.path.join(table_path, "metadata")
-    if os.path.isdir(meta_dir) and any(
-        f.endswith(".metadata.json") for f in os.listdir(meta_dir)
-    ):
-        raise FileExistsError(f"{table_path}: already an Iceberg table")
-    log = DeltaLog(table_path)
-    st = log.replay(None)
-    schema, part_cols, active = st.schema, st.part_cols, st.active
-    if column_mapping(schema, st.config, table_path):
-        raise DeltaProtocolError(
-            f"{table_path}: column-mapped Delta tables cannot convert — "
-            "files store physical names the Iceberg schema would not "
-            "resolve"
-        )
-    # Delta deletion vectors TRANSLATE (round 9): each descriptor's
-    # row indexes re-encode as an Iceberg v3 Puffin deletion-vector-v1
-    # blob — the two formats' roaring payloads are byte-compatible by
-    # design (shared codec, sources/deletion_vectors.py), so the
-    # conversion stays zero-data-movement even for DV'd tables (the
-    # pre-round-9 behavior was a purge-first refusal).
-    from plankton_spark.sources.deletion_vectors import dv_row_indexes
-
-    dv_map = {
-        rel: dv_row_indexes(table_path, a["deletionVector"])
-        for rel, a in sorted(active.items())
-        if a.get("deletionVector")
-    }
-    dtypes = {f.name: f.dataType for f in schema.fields}
-    inventory = []
-    for rel, add in sorted(active.items()):
-        pv = {}
-        for k, v in (add.get("partitionValues") or {}).items():
-            pv[k] = None if v is None else _typed_pv(v, dtypes[k])
-        inventory.append((rel, pv))
-    # Delta ROW TRACKING translates to v3 row lineage when the WHOLE
-    # snapshot carries it (baseRowId and first_row_id have identical
-    # semantics — file base + physical position, which DV translation
-    # preserves because positions are physical). A partially-tracked
-    # snapshot (files rewritten by a non-preserving op) translates
-    # WITHOUT lineage — mirroring both readers' refuse-don't-guess
-    # contract rather than fabricating ids.
-    row_ids = None
-    next_row_id = None
-    if active and all(
-        a.get("baseRowId") is not None for a in active.values()
-    ):
-        from plankton_spark.sources.delta_log import _row_id_hwm
-
-        row_ids = {rel: int(a["baseRowId"]) for rel, a in active.items()}
-        next_row_id = _row_id_hwm(st) + 1
-    return _author_iceberg_over(
-        spark, table_path, schema, inventory, part_cols, dv_map=dv_map,
-        row_ids=row_ids, next_row_id=next_row_id,
-    )
-
-
-def convert_planktable_to_iceberg(spark, table_path: str) -> int:
-    """Close the migration matrix: author Iceberg metadata over a
-    planktable's LIVE files in place (the planktable twin of
-    convert_delta_to_iceberg). The planktable log replay picks the
-    inventory — files removed by rewrites stay invisible — and
-    planktable files always carry their full columns (no hive layout,
-    no column mapping, no deletion vectors), so the conversion has no
-    refusal cases beyond double-conversion. One-shot snapshot export,
-    same contract as the Delta converter."""
-    from plankton_spark.table_format import PlankTable
-
-    meta_dir = os.path.join(table_path, "metadata")
-    if os.path.isdir(meta_dir) and any(
-        f.endswith(".metadata.json") for f in os.listdir(meta_dir)
-    ):
-        raise FileExistsError(f"{table_path}: already an Iceberg table")
-    t = PlankTable(spark, table_path)
-    live = t._snapshot(None)
-    schema = t.read().schema
-    inventory = [(rel, {}) for rel in sorted(live)]
-    return _author_iceberg_over(spark, table_path, schema, inventory, [])
-
-
-def _iceberg_convertible_snapshot(
-    table_path: str, translate_deletes: bool = False,
-) -> tuple["IcebergTable", list[tuple[str, dict]], list[str], dict]:
-    """Live data-file inventory of an Iceberg table's CURRENT snapshot
-    for an in-place conversion to another format, with the refusal
-    discipline convert_delta_to_iceberg applies mirrored back:
-
-    - live row-level deletes: with ``translate_deletes`` (the Delta
-      arrow), v3 deletion vectors AND v2 position-delete files decode
-      to per-file sorted row indexes (the Delta DV payload — same
-      physical-position semantics, shared roaring codec downstream)
-      returned as the dv_map; without it (the planktable arrow, whose
-      format has no delete concept) any live delete refuses.
-      EQUALITY deletes always refuse (their strictly-greater sequence
-      semantics have no Delta representation).
-    - non-identity partition transforms (day/bucket/truncate) refuse —
-      the target formats' partitionValues are identity-typed and a
-      derived dir ordinal has no faithful representation.
-    - a partition-evolved (multi-spec) snapshot refuses — one metaData
-      cannot describe two layouts.
-
-    Returns (table, [(abs_path, typed_partition_values)], identity
-    partition column names, {abs_data_path: sorted deleted row
-    indexes})."""
-    t = IcebergTable(table_path)
-    full, pos_dels, eq_dels, dv_dels = t.scan_entries_full(None)
-    if eq_dels or (
-        not translate_deletes and (pos_dels or dv_dels)
-    ):
-        raise ValueError(
-            f"{table_path}: live row-level deletes (position files: "
-            f"{len(pos_dels)}, equality: {len(eq_dels)}, deletion "
-            f"vectors: {len(dv_dels)}) — a whole-file conversion would "
-            "resurrect deleted rows; run OPTIMIZE first to purge them"
-        )
-    dv_map: dict[str, list[int]] = {}
-    if translate_deletes and (pos_dels or dv_dels):
-        from collections import defaultdict
-
-        from plankton_spark.sources import puffin as _puffin
-
-        # file identity by basename — the same rule (and the same
-        # uniqueness/URI-safety validation) the delete-aware read
-        # applies; translation must reproduce exactly what
-        # read_iceberg computes
-        by_base: dict[str, str] = {}
-        for p, _pv, _s, _sid in full:
-            b = os.path.basename(p)
-            if b in by_base:
-                raise ValueError(
-                    f"{table_path}: duplicate data-file basenames — "
-                    "delete translation would be ambiguous"
-                )
-            by_base[b] = p
-        idx: dict[str, set[int]] = defaultdict(set)
-        for pp, ref, off, sz, _card in dv_dels:
-            base = os.path.basename(ref.rstrip("/"))
-            if base in by_base:
-                idx[by_base[base]].update(
-                    _puffin.dv_indexes(pp, int(off), int(sz))
-                )
-        if pos_dels:
-            import pyarrow.parquet as _pq
-
-            for dfp in pos_dels:
-                tbl = _pq.read_table(dfp, columns=["file_path", "pos"])
-                for fp, pos in zip(
-                    tbl.column("file_path").to_pylist(),
-                    tbl.column("pos").to_pylist(),
-                ):
-                    base = os.path.basename(str(fp).rstrip("/"))
-                    if base in by_base:
-                        idx[by_base[base]].add(int(pos))
-        dv_map = {p: sorted(v) for p, v in idx.items() if v}
-    spec_ids = sorted({sid for _p, _pv, _s, sid in full})
-    if len(spec_ids) > 1:
-        raise ValueError(
-            f"{table_path}: partition-evolved snapshot (specs "
-            f"{spec_ids}) — compact to a single spec before converting"
-        )
-    spec = (
-        t.partition_spec_for(spec_ids[0]) if spec_ids else t.partition_spec()
-    )
-    non_identity = [
-        f.get("name")
-        for f in spec
-        if _norm_transform(f.get("transform", "identity"))[0] != "identity"
-    ]
-    if non_identity:
-        raise ValueError(
-            f"{table_path}: transform-partitioned fields "
-            f"{non_identity} have no identity representation in the "
-            "target format — conversion refused"
-        )
-    part_cols = [t.source_column(f) for f in spec] if spec else []
-    return t, [(p, pv) for p, pv, _s, _sid in full], part_cols, dv_map
-
-
-def convert_iceberg_to_delta(spark, table_path: str) -> int:
-    """Close the migration matrix (round-10 verdict #3): author a
-    ``_delta_log`` version 0 over an Iceberg table's LIVE files in
-    place — the exact reverse of convert_delta_to_iceberg, O(files)
-    footer metadata and zero data movement. The manifest chain (not a
-    directory walk) picks the inventory, so files dropped by rewrites
-    and failed-commit orphans are invisible; identity partition values
-    become Delta partitionValues strings (both engines' hive staging
-    omits the source columns from file content, so the layouts agree);
-    per-file stats come from footers into each add action.
-
-    v3 ROW LINEAGE translates to Delta ROW TRACKING when the whole
-    snapshot carries it: first_row_id becomes each add's baseRowId
-    VERBATIM (identical file-base + physical-position semantics),
-    next-row-id seeds the rowIdHighWaterMark domain metadata, and the
-    materialized-column config keys point at the Iceberg reserved
-    names — so ids MATERIALIZED by an Iceberg compaction keep winning
-    on the Delta side through the same physical columns. A
-    partially-tracked snapshot converts WITHOUT tracking (both
-    readers' refuse-don't-fabricate contract).
-
-    Iceberg ROW-LEVEL DELETES translate too (the exact reverse of
-    q_uniform_dv's direction): v3 Puffin deletion vectors AND v2
-    position-delete files decode to per-file row indexes and
-    re-encode as Delta DV files (shared roaring codec — exact by
-    construction), so a deleted-from Iceberg table reads identically
-    through the Delta chain with zero data movement; the protocol
-    carries the deletionVectors reader/writer feature. Equality
-    deletes and transform-partitioned / multi-spec sources refuse via
-    _iceberg_convertible_snapshot. One-shot snapshot export, same
-    divergence contract as the forward converter."""
-    from plankton_spark.filestats import file_stats as _fstats
-    from plankton_spark.sources.delta_log import (
-        LEGACY_WRITER_FEATURES,
-        DeltaLogWriter,
-        _commit_versions,
-        _pv_filter_str,
-        _row_tracking_domain,
-        _schema_has_ntz,
-    )
-    from plankton_spark.sources.deletion_vectors import write_dv_file
-
-    log_dir = os.path.join(table_path, "_delta_log")
-    if os.path.isdir(log_dir) and _commit_versions(log_dir):
-        raise FileExistsError(f"{table_path}: already a Delta table")
-    t, entries, part_cols, dv_map = _iceberg_convertible_snapshot(
-        table_path, translate_deletes=True
-    )
-    schema = t.schema()
-    row_ids = None
-    next_row_id = t.metadata.get("next-row-id")
-    if next_row_id is not None and entries:
-        try:
-            frids = t.first_row_ids(None)
-            row_ids = {p: int(fr) for p, fr in frids.items()}
-        except ValueError:
-            row_ids = None  # partially tracked → convert without ids
-    if row_ids is not None and (
-        {"_row_id", "_row_commit_version"} & {f.name for f in schema.fields}
-    ):
-        row_ids = None  # reserved-name clash: translate without ids
-    adds: list[dict] = []
-    for p, pv in sorted(entries):
-        rel = os.path.relpath(p, table_path)
-        add = {
-            "path": rel,
-            "partitionValues": {
-                k: _pv_filter_str(v) for k, v in (pv or {}).items()
-            },
-            "size": os.path.getsize(p),
-            "modificationTime": int(os.path.getmtime(p) * 1000),
-            "dataChange": True,
-            "stats": json.dumps(_fstats(p)),
-        }
-        if row_ids is not None:
-            add["baseRowId"] = row_ids[p]
-            add["defaultRowCommitVersion"] = 0
-        if p in dv_map:
-            # re-encode the decoded indexes as a Delta DV file — the
-            # roaring payloads share one codec, so the translation is
-            # exact and CRC-verified on every read
-            add["deletionVector"] = write_dv_file(table_path, dv_map[p])
-        adds.append({"add": add})
-    cfg: dict[str, str] = {}
-    wf: set[str] = set()
-    for lv, feats in LEGACY_WRITER_FEATURES.items():
-        if 2 >= lv:
-            wf |= feats
-    reader_features: list[str] = []
-    min_reader = 1
-    if _schema_has_ntz(schema):
-        min_reader, reader_features = 3, ["timestampNtz"]
-        wf |= {"timestampNtz"}
-    if dv_map:
-        # deletionVectors is a READER feature: readers without it
-        # would resurrect the deleted rows
-        min_reader = 3
-        reader_features = sorted(set(reader_features) | {"deletionVectors"})
-        wf |= {"deletionVectors"}
-    if row_ids is not None:
-        wf |= {"rowTracking", "domainMetadata"}
-        cfg = {
-            "delta.enableRowTracking": "true",
-            "delta.rowTracking.materializedRowIdColumnName": "_row_id",
-            "delta.rowTracking.materializedRowCommitVersionColumnName": (
-                "_row_commit_version"
-            ),
-        }
-    if row_ids is not None or reader_features:
-        protocol: dict = {
-            "minReaderVersion": min_reader,
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(wf),
-        }
-        if reader_features:
-            protocol["readerFeatures"] = reader_features
-    else:
-        protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
-    w = DeltaLogWriter(spark, table_path)
-    actions: list[dict] = [
-        {"protocol": protocol},
-        w._metadata_action(schema, part_cols, cfg),
-    ]
-    if row_ids is not None:
-        actions.append(_row_tracking_domain(int(next_row_id) - 1))
-    return w._commit(0, actions + adds)
-
-
-def convert_iceberg_to_planktable(spark, table_path: str) -> int:
-    """The planktable arrow of the reverse migration: the Iceberg
-    table's current snapshot becomes planktable version 0 —
-    metadata-only, zero rewrite, footer stats into the planktable log.
-    Refuses ANY partition spec (this engine's identity layout omits
-    source columns from file content, which planktable's file-derived
-    schema cannot represent — the same reason
-    convert_delta_to_planktable refuses partitioned sources) on top of
-    _iceberg_convertible_snapshot's delete/transform refusals. The
-    metadata/ directory stays behind for the old format's time
-    travel."""
-    from plankton_spark.filestats import file_stats
-    from plankton_spark.table_format import PlankTable, _minmax
-
-    t = PlankTable(spark, table_path)
-    if t.versions():
-        raise FileExistsError(f"{table_path}: already a planktable")
-    _ice, entries, part_cols, _dv = _iceberg_convertible_snapshot(table_path)
-    if part_cols:
-        raise ValueError(
-            f"{table_path}: identity-partitioned Iceberg tables cannot "
-            "become a planktable — the hive layout omits partition "
-            "columns from file content, which a file-derived schema "
-            "cannot represent"
-        )
-    adds = [
-        {
-            "file": os.path.relpath(p, table_path),
-            "stats": _minmax(file_stats(p)),
-        }
-        for p, _pv in sorted(entries)
-    ]
-    return t._commit(0, operation="CONVERT", add=adds, remove=[])
-

@@ -68,11 +68,17 @@ def _checkpoint_file(path: str, v: int) -> str:
     return os.path.join(_log_dir(path), f"{v:08d}.checkpoint.json")
 
 
-from plankton_spark.filestats import footer_stats  # noqa: E402
+from plankton_spark.filestats import file_stats, footer_stats  # noqa: E402
 from plankton_spark.filestats import stat_encode as _stat_value  # noqa: E402
 from plankton_spark.sources import rewrite as rw  # noqa: E402
 from plankton_spark.sources import stage  # noqa: E402
 from plankton_spark.sources.assemble import local_frame  # noqa: E402
+from plankton_spark.sources.convert import (  # noqa: E402
+    Inventory,
+    LiveFile,
+    refuse_layout,
+    rel_path,
+)
 
 
 def _minmax(st: dict) -> dict:
@@ -907,6 +913,41 @@ class PlankTable:
                 continue  # count data versions only
             expired.append(int(stem))
         return expired
+
+
+def inventory(spark, path: str) -> Inventory:
+    """The conversion inventory (`sources/convert.py`) of a planktable's
+    current snapshot: the log replay picks the live files, so files a
+    rewrite removed stay invisible. Planktable files carry their full
+    columns (no hive layout, no column mapping, no deletes)."""
+    t = PlankTable(spark, path)
+    live = t._snapshot(None)  # raises if not a planktable
+    files = [LiveFile(os.path.join(path, rel), {}) for rel in sorted(live)]
+    return Inventory("planktable", t.read().schema, [], files)
+
+
+def author(spark, path: str, source) -> int:
+    """Author planktable version 0 (operation CONVERT) over the files of
+    the inventory ``source(spark, path)`` returns, in place: metadata
+    only, with each file's footer min/max as its stats and the
+    source's schema recorded, so reads plan without inference and see
+    only the logical columns. The source's own metadata stays behind
+    for its time travel. Refuses an existing planktable before the
+    source is read, then partitioned or deleted-from inventories
+    (`convert.refuse_layout`: planktable's file-derived schema has no
+    partition layout and no delete concept)."""
+    t = PlankTable(spark, path)
+    if t.versions():
+        raise FileExistsError(f"{path}: already a planktable")
+    inv = source(spark, path)
+    refuse_layout(inv, path, "PlankTable")
+    adds = [
+        {"file": rel_path(path, f.path), "stats": _minmax(file_stats(f.path))}
+        for f in inv.files
+    ]
+    return t._commit(
+        0, operation="CONVERT", add=adds, remove=[], schema=inv.schema
+    )
 
 
 def files_meta(spark, path: str, version: int | None = None):

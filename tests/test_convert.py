@@ -10,19 +10,20 @@ spec's writer-consistency rule holds)."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import pytest
 
 from pyspark.sql import functions as F
 
+from plankton_spark.sources import delta_log, iceberg_meta
+from plankton_spark.sources.convert import hive_inventory
 from plankton_spark.sources.delta_log import (
     DeltaLogWriter,
-    convert_to_delta,
     read_delta,
 )
 from plankton_spark.sources.iceberg_meta import (
     IcebergWriter,
-    convert_to_iceberg,
     read_iceberg,
 )
 
@@ -57,8 +58,13 @@ def test_convert_to_delta_roundtrip(spark, tmp_path, partitioned):
     before = sorted(
         p for p in os.listdir(root) if not p.startswith(("_", "."))
     )
-    v = convert_to_delta(
-        spark, root, partition_schema={"grp": "long"} if partitioned else None
+    v = delta_log.author(
+        spark,
+        root,
+        partial(
+            hive_inventory,
+            partition_schema={"grp": "long"} if partitioned else None,
+        ),
     )
     assert v == 0
     assert _content(read_delta(spark, root)) == _content(_df(spark))
@@ -76,21 +82,23 @@ def test_convert_to_delta_roundtrip(spark, tmp_path, partitioned):
     got = _content(read_delta(spark, root))
     assert got == sorted([(k, k % 2) for k in range(8)])
     with pytest.raises(FileExistsError, match="already a Delta table"):
-        convert_to_delta(spark, root)
+        delta_log.author(spark, root, hive_inventory)
 
 
 def test_convert_to_delta_partition_pruning_and_refusals(spark, tmp_path):
     root = _parquet_dir(spark, str(tmp_path / "dp"), True)
-    convert_to_delta(spark, root, partition_schema={"grp": "long"})
+    delta_log.author(
+        spark, root, partial(hive_inventory, partition_schema={"grp": "long"})
+    )
     pruned = read_delta(spark, root, partitions={"grp": 1})
     assert _content(pruned) == [(k, 1) for k in range(1, 10, 2)]
     # non-hive subdirectory refuses
     bad = str(tmp_path / "bad")
     _df(spark).coalesce(1).write.parquet(os.path.join(bad, "plain_subdir"))
     with pytest.raises(ValueError, match="non-hive"):
-        convert_to_delta(spark, bad)
+        delta_log.author(spark, bad, hive_inventory)
     with pytest.raises(FileNotFoundError, match="no parquet"):
-        convert_to_delta(spark, str(tmp_path / "empty"))
+        delta_log.author(spark, str(tmp_path / "empty"), hive_inventory)
 
 
 # ---------------------------------------------------------------------
@@ -101,8 +109,13 @@ def test_convert_to_delta_partition_pruning_and_refusals(spark, tmp_path):
 @pytest.mark.parametrize("partitioned", [False, True])
 def test_convert_to_iceberg_roundtrip(spark, tmp_path, partitioned):
     root = _parquet_dir(spark, str(tmp_path / "i"), partitioned)
-    snap = convert_to_iceberg(
-        spark, root, partition_schema={"grp": "long"} if partitioned else None
+    snap = iceberg_meta.author(
+        spark,
+        root,
+        partial(
+            hive_inventory,
+            partition_schema={"grp": "long"} if partitioned else None,
+        ),
     )
     assert snap == 1
     assert _content(read_iceberg(spark, root)) == _content(_df(spark))
@@ -120,14 +133,16 @@ def test_convert_to_iceberg_roundtrip(spark, tmp_path, partitioned):
         (k, k % 2) for k in range(8)
     )
     with pytest.raises(FileExistsError, match="already an Iceberg"):
-        convert_to_iceberg(spark, root)
+        iceberg_meta.author(spark, root, hive_inventory)
 
 
 def test_convert_to_iceberg_partitioned_prunes_and_time_travels(
     spark, tmp_path
 ):
     root = _parquet_dir(spark, str(tmp_path / "ip"), True)
-    s1 = convert_to_iceberg(spark, root, partition_schema={"grp": "long"})
+    s1 = iceberg_meta.author(
+        spark, root, partial(hive_inventory, partition_schema={"grp": "long"})
+    )
     w = IcebergWriter(spark, root)
     w.delete_where(F.col("grp") == 0)
     assert _content(read_iceberg(spark, root)) == [
@@ -228,16 +243,15 @@ def test_optimize_target_respects_partitions(spark, tmp_path):
 
 
 def test_planktable_to_delta_roundtrip(spark, tmp_path):
-    from plankton_spark.sources.delta_log import (
-        convert_planktable_to_delta,
-    )
+    from plankton_spark import table_format
+    from plankton_spark.sources import delta_log
     from plankton_spark.table_format import PlankTable
 
     root = str(tmp_path / "pt2d")
     t = PlankTable(spark, root)
     t.create(_df(spark).coalesce(2))
     t.delete_where(F.col("k") >= 8)
-    v = convert_planktable_to_delta(spark, root)
+    v = delta_log.author(spark, root, table_format.inventory)
     assert v == 0
     assert _content(read_delta(spark, root)) == sorted(
         (k, k % 2) for k in range(8)
@@ -248,7 +262,7 @@ def test_planktable_to_delta_roundtrip(spark, tmp_path):
     assert read_delta(spark, root).count() == 9
     assert t.read(version=0).count() == 10
     with pytest.raises(FileExistsError, match="already a Delta"):
-        convert_planktable_to_delta(spark, root)
+        delta_log.author(spark, root, table_format.inventory)
     # MERGE exercises the converted add actions' stats pruning
     w.merge(
         spark.createDataFrame([(0, 5)], "k long, grp long"), "k"
@@ -258,29 +272,28 @@ def test_planktable_to_delta_roundtrip(spark, tmp_path):
 
 
 def test_delta_to_planktable_roundtrip_and_refusals(spark, tmp_path):
-    from plankton_spark.sources.delta_log import (
-        convert_delta_to_planktable,
-    )
+    from plankton_spark import table_format
+    from plankton_spark.sources import delta_log
     from plankton_spark.table_format import PlankTable
 
     root = str(tmp_path / "d2pt")
     w = DeltaLogWriter(spark, root)
     w.create(_df(spark).coalesce(2))
     w.delete_where(F.col("k") >= 8)
-    convert_delta_to_planktable(spark, root)
+    table_format.author(spark, root, delta_log.inventory)
     t = PlankTable(spark, root)
     assert _content(t.read()) == sorted((k, k % 2) for k in range(8))
     # planktable writes work (incl. stats-pruned merge on converted adds)
     t.append(spark.createDataFrame([(100, 0)], "k long, grp long"))
     assert t.read().count() == 9
     with pytest.raises(FileExistsError, match="already a planktable"):
-        convert_delta_to_planktable(spark, root)
+        table_format.author(spark, root, delta_log.inventory)
     # partitioned source refuses
     proot = str(tmp_path / "d2pt_part")
     wp = DeltaLogWriter(spark, proot)
     wp.create(_df(spark), partition_by=["grp"])
     with pytest.raises(ValueError, match="partitioned"):
-        convert_delta_to_planktable(spark, proot)
+        table_format.author(spark, proot, delta_log.inventory)
 
 
 def test_iceberg_to_delta_roundtrip_and_lineage(spark, tmp_path):
@@ -291,9 +304,9 @@ def test_iceberg_to_delta_roundtrip_and_lineage(spark, tmp_path):
     from plankton_spark.sources.delta_log import read_delta
     from plankton_spark.sources.iceberg_meta import (
         IcebergWriter,
-        convert_iceberg_to_delta,
         read_iceberg,
     )
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root = str(tmp_path / "i2d")
     w = IcebergWriter(spark, root)
@@ -308,7 +321,7 @@ def test_iceberg_to_delta_roundtrip_and_lineage(spark, tmp_path):
         for r in read_iceberg(spark, root, with_lineage=True).collect()
     }
     w.optimize(num_files=1)  # purges the DVs, materializes the ids
-    convert_iceberg_to_delta(spark, root)
+    delta_log.author(spark, root, iceberg_meta.inventory)
     d = read_delta(spark, root)
     assert d.columns == ["k", "v"] and d.count() == 24
     d_ids = {
@@ -317,7 +330,7 @@ def test_iceberg_to_delta_roundtrip_and_lineage(spark, tmp_path):
     }
     assert d_ids == ice_ids
     with pytest.raises(FileExistsError):
-        convert_iceberg_to_delta(spark, root)
+        delta_log.author(spark, root, iceberg_meta.inventory)
     # identity-partitioned: pruning works through the Delta chain
     proot = str(tmp_path / "i2d_part")
     wp = IcebergWriter(spark, proot)
@@ -328,7 +341,7 @@ def test_iceberg_to_delta_roundtrip_and_lineage(spark, tmp_path):
         ),
         partition_by=["grp"],
     )
-    convert_iceberg_to_delta(spark, proot)
+    delta_log.author(spark, proot, iceberg_meta.inventory)
     assert read_delta(spark, proot, partitions={"grp": "a"}).count() == 10
 
 
@@ -340,9 +353,9 @@ def test_iceberg_to_delta_translates_deletes(spark, tmp_path):
     from plankton_spark.sources.delta_log import DeltaLog, read_delta
     from plankton_spark.sources.iceberg_meta import (
         IcebergWriter,
-        convert_iceberg_to_delta,
         read_iceberg,
     )
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     dv_root = str(tmp_path / "i2d_dv")
     w = IcebergWriter(spark, dv_root)
@@ -359,7 +372,7 @@ def test_iceberg_to_delta_translates_deletes(spark, tmp_path):
         r["k"]: r["_row_id"]
         for r in read_iceberg(spark, dv_root, with_lineage=True).collect()
     }
-    convert_iceberg_to_delta(spark, dv_root)
+    delta_log.author(spark, dv_root, iceberg_meta.inventory)
     assert sorted(
         (r["k"], r["v"]) for r in read_delta(spark, dv_root).collect()
     ) == ice
@@ -382,7 +395,7 @@ def test_iceberg_to_delta_translates_deletes(spark, tmp_path):
     )
     wp.delete_where_pos(F.col("k") % 7 == 0)
     want = sorted(r["k"] for r in read_iceberg(spark, p_root).collect())
-    convert_iceberg_to_delta(spark, p_root)
+    delta_log.author(spark, p_root, iceberg_meta.inventory)
     assert sorted(r["k"] for r in read_delta(spark, p_root).collect()) == want
 
 
@@ -390,11 +403,9 @@ def test_iceberg_to_delta_refusals(spark, tmp_path):
     """Refuse-don't-corrupt: equality deletes (sequence semantics have
     no Delta representation) and transform partitions refuse; the
     planktable arrow refuses ANY live delete."""
-    from plankton_spark.sources.iceberg_meta import (
-        IcebergWriter,
-        convert_iceberg_to_delta,
-        convert_iceberg_to_planktable,
-    )
+    from plankton_spark.sources.iceberg_meta import IcebergWriter
+    from plankton_spark import table_format
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     eq_root = str(tmp_path / "i2d_eq")
     w = IcebergWriter(spark, eq_root)
@@ -404,7 +415,7 @@ def test_iceberg_to_delta_refusals(spark, tmp_path):
     )
     w.delete_where_eq(spark.createDataFrame([(3,)], "k long"))
     with pytest.raises(ValueError, match="row-level deletes"):
-        convert_iceberg_to_delta(spark, eq_root)
+        delta_log.author(spark, eq_root, iceberg_meta.inventory)
     b_root = str(tmp_path / "i2d_bucket")
     wb = IcebergWriter(spark, b_root)
     wb.create(
@@ -413,7 +424,7 @@ def test_iceberg_to_delta_refusals(spark, tmp_path):
         partition_by=["bucket(4,k)"],
     )
     with pytest.raises(ValueError, match="transform-partitioned"):
-        convert_iceberg_to_delta(spark, b_root)
+        delta_log.author(spark, b_root, iceberg_meta.inventory)
     pdv_root = str(tmp_path / "i2p_dv")
     wd = IcebergWriter(spark, pdv_root)
     wd.create(
@@ -422,26 +433,25 @@ def test_iceberg_to_delta_refusals(spark, tmp_path):
     )
     wd.delete_where_dv(F.col("k") < 2)
     with pytest.raises(ValueError, match="row-level deletes"):
-        convert_iceberg_to_planktable(spark, pdv_root)
+        table_format.author(spark, pdv_root, iceberg_meta.inventory)
 
 
 def test_iceberg_to_planktable_roundtrip_and_refusals(spark, tmp_path):
-    from plankton_spark.sources.iceberg_meta import (
-        IcebergWriter,
-        convert_iceberg_to_planktable,
-    )
+    from plankton_spark.sources.iceberg_meta import IcebergWriter
+    from plankton_spark import table_format
+    from plankton_spark.sources import iceberg_meta
     from plankton_spark.table_format import PlankTable
 
     root = str(tmp_path / "i2p")
     w = IcebergWriter(spark, root)
     w.create(spark.createDataFrame([(i, i * 2) for i in range(25)],
                                    "k long, v long"))
-    convert_iceberg_to_planktable(spark, root)
+    table_format.author(spark, root, iceberg_meta.inventory)
     pt = PlankTable(spark, root)
     assert pt.read().count() == 25
     assert sorted(r["k"] for r in pt.read().collect()) == list(range(25))
     with pytest.raises(FileExistsError):
-        convert_iceberg_to_planktable(spark, root)
+        table_format.author(spark, root, iceberg_meta.inventory)
     # identity-partitioned refuses: files omit the source column
     proot = str(tmp_path / "i2p_part")
     wp = IcebergWriter(spark, proot)
@@ -453,4 +463,4 @@ def test_iceberg_to_planktable_roundtrip_and_refusals(spark, tmp_path):
         partition_by=["grp"],
     )
     with pytest.raises(ValueError, match="file-derived schema"):
-        convert_iceberg_to_planktable(spark, proot)
+        table_format.author(spark, proot, iceberg_meta.inventory)

@@ -130,13 +130,11 @@ def test_iceberg_origin_converts_then_tracks_identically(spark, tmp_path):
         iw0 = IcebergWriter(spark, root)
         iw0.create(_batch(spark, 51, 0, 40).coalesce(1))
         iw0.append(_batch(spark, 52, 100, 12).coalesce(1))
-    from plankton_spark.sources.iceberg_meta import (
-        convert_iceberg_to_delta,
-        convert_iceberg_to_planktable,
-    )
+    from plankton_spark import table_format
+    from plankton_spark.sources import delta_log, iceberg_meta
 
-    convert_iceberg_to_delta(spark, roots["dl"])
-    convert_iceberg_to_planktable(spark, roots["pt"])
+    delta_log.author(spark, roots["dl"], iceberg_meta.inventory)
+    table_format.author(spark, roots["pt"], iceberg_meta.inventory)
     dw = DeltaLogWriter(spark, roots["dl"])
     pt = PlankTable(spark, roots["pt"])
     iw = IcebergWriter(spark, roots["ib"])

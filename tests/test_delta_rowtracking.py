@@ -331,10 +331,8 @@ def test_uniform_convert_after_optimize_carries_materialized_ids(
     the Iceberg lineage read resolves the SAME physical columns and
     every _row_id read through the Iceberg chain equals what the
     Delta side assigned — across the rewrite, with zero data copies."""
-    from plankton_spark.sources.iceberg_meta import (
-        convert_delta_to_iceberg,
-        read_iceberg,
-    )
+    from plankton_spark.sources.iceberg_meta import read_iceberg
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root, w = _mk(spark, tmp_path, "uni_opt")
     w.append(spark.createDataFrame([(800, "q")], "k long, v string"))
@@ -344,7 +342,7 @@ def test_uniform_convert_after_optimize_carries_materialized_ids(
         for r in read_delta(spark, root, with_row_ids=True).collect()
     }
     w.optimize(num_files=1)
-    convert_delta_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, delta_log.inventory)
     ice_ids = {
         r["k"]: r["_row_id"]
         for r in read_iceberg(spark, root, with_lineage=True).collect()
@@ -454,10 +452,8 @@ def test_uniform_convert_partial_tracking_translates_without_lineage(
     (a foreign rewrite stripped a baseRowId) must translate WITHOUT
     lineage: data reads fine through the Iceberg chain, the lineage
     read refuses — ids are never fabricated."""
-    from plankton_spark.sources.iceberg_meta import (
-        convert_delta_to_iceberg,
-        read_iceberg,
-    )
+    from plankton_spark.sources.iceberg_meta import read_iceberg
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root = str(tmp_path / "uni_partial")
     w = DeltaLogWriter(spark, root)
@@ -468,7 +464,7 @@ def test_uniform_convert_partial_tracking_translates_without_lineage(
         row_tracking=True,
     )
     _foreign_untracked_rewrite(root)
-    convert_delta_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, delta_log.inventory)
     assert read_iceberg(spark, root).count() == 30
     import pytest as _pytest
 
@@ -481,9 +477,9 @@ def test_uniform_convert_fully_tracked_carries_ids(spark, tmp_path):
     ICEBERG chain equals what the DELTA side assigned."""
     from plankton_spark.sources.iceberg_meta import (
         IcebergTable,
-        convert_delta_to_iceberg,
         read_iceberg,
     )
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root, w = _mk(spark, tmp_path, "uni_full")
     w.append(spark.createDataFrame([(800, "q")], "k long, v string"))
@@ -491,7 +487,7 @@ def test_uniform_convert_fully_tracked_carries_ids(spark, tmp_path):
         r["k"]: r["_row_id"]
         for r in read_delta(spark, root, with_row_ids=True).collect()
     }
-    convert_delta_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, delta_log.inventory)
     ice_ids = {
         r["k"]: r["_row_id"]
         for r in read_iceberg(spark, root, with_lineage=True).collect()

@@ -11,10 +11,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from plankton_spark.sources import delta_log, hudi_meta
 from plankton_spark.sources.hudi_meta import (
     HudiTable,
     HudiWriter,
-    convert_hudi_to_delta,
     read_hudi,
 )
 
@@ -222,12 +222,12 @@ def test_convert_to_delta_matches_and_refuses_twice(spark, tmp_path):
     w.create(_df(spark, 0, 60))
     w.upsert(_df(spark, 40, 80, status="B"))
     expected = _content(read_hudi(spark, root))
-    convert_hudi_to_delta(spark, root)
+    delta_log.author(spark, root, hudi_meta.inventory)
     got = _content(read_delta(spark, root).select("k", "status", "grp"))
     assert got == expected
     assert "_hoodie_commit_time" not in read_delta(spark, root).columns
     with pytest.raises(FileExistsError):
-        convert_hudi_to_delta(spark, root)
+        delta_log.author(spark, root, hudi_meta.inventory)
 
 
 def test_pending_instants_invisible(spark, tmp_path):
@@ -250,7 +250,7 @@ def test_convert_to_iceberg_multi_target(spark, tmp_path):
     BOTH Delta and Iceberg; all three chains read identical contents
     (superseded upsert slices invisible through every chain)."""
     from plankton_spark.sources.delta_log import read_delta
-    from plankton_spark.sources.hudi_meta import convert_hudi_to_iceberg
+    from plankton_spark.sources import hudi_meta, iceberg_meta
     from plankton_spark.sources.iceberg_meta import read_iceberg
 
     root = str(tmp_path / "t")
@@ -258,12 +258,12 @@ def test_convert_to_iceberg_multi_target(spark, tmp_path):
     w.create(_df(spark, 0, 60))
     w.upsert(_df(spark, 40, 80, status="B"))
     expected = _content(read_hudi(spark, root))
-    convert_hudi_to_iceberg(spark, root)
-    convert_hudi_to_delta(spark, root)
+    iceberg_meta.author(spark, root, hudi_meta.inventory)
+    delta_log.author(spark, root, hudi_meta.inventory)
     assert _content(read_iceberg(spark, root).select("k", "status", "grp")) == expected
     assert _content(read_delta(spark, root).select("k", "status", "grp")) == expected
     with pytest.raises(FileExistsError):
-        convert_hudi_to_iceberg(spark, root)
+        iceberg_meta.author(spark, root, hudi_meta.inventory)
 
 
 # ---- MERGE_ON_READ ----
@@ -348,7 +348,7 @@ def test_mor_compaction_equivalence(spark, tmp_path):
 
 
 def test_mor_refusals(spark, tmp_path):
-    from plankton_spark.sources.hudi_meta import convert_hudi_to_delta
+    from plankton_spark.sources import delta_log, hudi_meta
 
     root = str(tmp_path / "t")
     w = HudiWriter(spark, root, record_key="k", table_type="MERGE_ON_READ")
@@ -356,7 +356,7 @@ def test_mor_refusals(spark, tmp_path):
     w.upsert(_df(spark, 0, 5, status="B"))
     # converters can't represent un-compacted log deltas
     with pytest.raises(NotImplementedError, match="log"):
-        convert_hudi_to_delta(spark, root)
+        delta_log.author(spark, root, hudi_meta.inventory)
     # a deltacommit on a COW table is an inconsistent timeline
     root2 = str(tmp_path / "t2")
     w2 = HudiWriter(spark, root2, record_key="k")
@@ -374,7 +374,7 @@ def test_mor_delete_lifecycle(spark, tmp_path):
     bases; a post-compaction read is identical; the converter refusal
     lifts once compacted."""
     from plankton_spark.sources.delta_log import read_delta
-    from plankton_spark.sources.hudi_meta import convert_hudi_to_delta
+    from plankton_spark.sources import delta_log, hudi_meta
 
     root = str(tmp_path / "t")
     w = HudiWriter(spark, root, record_key="k", table_type="MERGE_ON_READ")
@@ -404,7 +404,7 @@ def test_mor_delete_lifecycle(spark, tmp_path):
     assert _content(read_hudi(spark, root)) == before
     assert sum(len(lrs) for *_x, lrs in HudiTable(root).file_slices_with_logs()) == 0
     # converter refusal lifts on the compacted table
-    convert_hudi_to_delta(spark, root)
+    delta_log.author(spark, root, hudi_meta.inventory)
     assert _content(read_delta(spark, root).select("k", "status", "grp")) == before
     # incremental across the delete range emits no rows for deleted
     # keys (removals are not records)
@@ -564,13 +564,13 @@ def test_virtual_key_incremental_slice_grain(spark, tmp_path):
     attribution: the conversion instant owns every converted slice, a
     later empty range returns an empty frame."""
     from plankton_spark.sources.delta_log import DeltaLogWriter
-    from plankton_spark.sources.hudi_meta import convert_delta_to_hudi
+    from plankton_spark.sources import delta_log, hudi_meta
 
     root = str(tmp_path / "t")
     dw = DeltaLogWriter(spark, root)
     dw.create(_df(spark, 0, 40).coalesce(1))
     dw.delete_where(F.col("k") % 4 == 0)
-    inst = convert_delta_to_hudi(spark, root, record_key="k")
+    inst = hudi_meta.author(spark, root, delta_log.inventory, record_key="k")
     full = read_hudi(spark, root, incremental=("0" * 17, inst))
     assert full.count() == 30
     assert set(full.columns) == {"k", "status", "grp"}
@@ -666,7 +666,7 @@ def test_mor_clean_drops_detached_logs(spark, tmp_path):
 
 def test_delta_to_hudi_virtual_keys(spark, tmp_path):
     from plankton_spark.sources.delta_log import DeltaLogWriter, read_delta
-    from plankton_spark.sources.hudi_meta import convert_delta_to_hudi
+    from plankton_spark.sources import delta_log, hudi_meta
 
     root = str(tmp_path / "t")
     dw = DeltaLogWriter(spark, root)
@@ -674,7 +674,7 @@ def test_delta_to_hudi_virtual_keys(spark, tmp_path):
     dw.append(_df(spark, 50, 80, status="B").coalesce(1))
     dw.delete_where(F.col("k") % 5 == 0)
     expected = _content(read_delta(spark, root))
-    convert_delta_to_hudi(spark, root, record_key="k")
+    hudi_meta.author(spark, root, delta_log.inventory, record_key="k")
     got = _content(read_hudi(spark, root).select("k", "status", "grp"))
     assert got == expected
     # virtual-key refusal: meta reads (nothing to surface). Engine
@@ -686,17 +686,17 @@ def test_delta_to_hudi_virtual_keys(spark, tmp_path):
     w = HudiWriter(spark, root)
     assert w.virtual and w.record_key == "k"
     with pytest.raises(FileExistsError):
-        convert_delta_to_hudi(spark, root, record_key="k")
+        hudi_meta.author(spark, root, delta_log.inventory, record_key="k")
     # partitioned Delta refuses (content lacks the partition column)
     root2 = str(tmp_path / "t2")
     dw2 = DeltaLogWriter(spark, root2)
     dw2.create(_df(spark, 0, 20), partition_by=["status"])
     with pytest.raises(NotImplementedError, match="partition"):
-        convert_delta_to_hudi(spark, root2, record_key="k")
+        hudi_meta.author(spark, root2, delta_log.inventory, record_key="k")
 
 
 def test_iceberg_to_hudi_virtual_keys(spark, tmp_path):
-    from plankton_spark.sources.hudi_meta import convert_iceberg_to_hudi
+    from plankton_spark.sources import hudi_meta, iceberg_meta
     from plankton_spark.sources.iceberg_meta import IcebergWriter, read_iceberg
 
     root = str(tmp_path / "t")
@@ -705,7 +705,7 @@ def test_iceberg_to_hudi_virtual_keys(spark, tmp_path):
     iw.append(_df(spark, 50, 70, status="B").coalesce(1))
     iw.delete_where(F.col("k") % 4 == 0)  # rewrite: old files tombstoned
     expected = _content(read_iceberg(spark, root).select("k", "status", "grp"))
-    convert_iceberg_to_hudi(spark, root, record_key="k")
+    hudi_meta.author(spark, root, iceberg_meta.inventory, record_key="k")
     got = _content(read_hudi(spark, root).select("k", "status", "grp"))
     assert got == expected
     # DV'd source refuses
@@ -714,7 +714,7 @@ def test_iceberg_to_hudi_virtual_keys(spark, tmp_path):
     iw2.create(_df(spark, 0, 30).coalesce(1))
     iw2.delete_where_dv(F.col("k") == 1)
     with pytest.raises(NotImplementedError, match="row-level deletes"):
-        convert_iceberg_to_hudi(spark, root2, record_key="k")
+        hudi_meta.author(spark, root2, iceberg_meta.inventory, record_key="k")
 
 
 def test_duplicate_key_batches_refuse(spark, tmp_path):
@@ -1156,16 +1156,14 @@ def test_virtual_key_write_lifecycle(spark, tmp_path):
     removes, untouched groups are not rewritten, time travel to the
     conversion instant intact, virtual MOR refuses."""
     from plankton_spark.sources.delta_log import DeltaLogWriter
-    from plankton_spark.sources.hudi_meta import (
-        HudiTable,
-        convert_delta_to_hudi,
-    )
+    from plankton_spark.sources.hudi_meta import HudiTable
+    from plankton_spark.sources import delta_log, hudi_meta
 
     root = str(tmp_path / "vk")
     dw = DeltaLogWriter(spark, root)
     dw.create(_df(spark, 0, 50).coalesce(1))
     dw.append(_df(spark, 50, 80, status="B").coalesce(1))
-    inst0 = convert_delta_to_hudi(spark, root, record_key="k")
+    inst0 = hudi_meta.author(spark, root, delta_log.inventory, record_key="k")
     w = HudiWriter(spark, root)
     assert w.virtual
     up = _df(spark, 0, 5, status="U").unionByName(

@@ -11,14 +11,17 @@ import json
 import os
 import uuid
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
 from plankton_spark.sources.assemble import file_key, local_frame
+from plankton_spark.sources import delta_log, iceberg_meta
+from plankton_spark.sources.convert import hive_inventory
 from plankton_spark.sources.delta_log import (
     DeltaLog,
     DeltaLogWriter,
-    convert_to_delta,
     read_delta,
 )
 from plankton_spark.sources.hudi_meta import (
@@ -30,7 +33,6 @@ from plankton_spark.sources.hudi_meta import (
 from plankton_spark.sources.iceberg_meta import (
     IcebergTable,
     IcebergWriter,
-    convert_to_iceberg,
     read_iceberg,
 )
 from plankton_spark.table_format import PlankTable
@@ -428,7 +430,9 @@ def _same_basename_parquet(spark, root):
 
 def test_delta_delete_leaves_same_basename_file_live(spark, tmp_path):
     root = _same_basename_parquet(spark, str(tmp_path / "d"))
-    convert_to_delta(spark, root, partition_schema={"grp": "long"})
+    delta_log.author(
+        spark, root, partial(hive_inventory, partition_schema={"grp": "long"})
+    )
     before = {p for p, _ in DeltaLog(root).snapshot()[2]}
     DeltaLogWriter(spark, root).delete_where(F.col("k") == 1)  # grp=1 only
     after = {p for p, _ in DeltaLog(root).snapshot()[2]}
@@ -442,7 +446,9 @@ def test_delta_delete_leaves_same_basename_file_live(spark, tmp_path):
 
 def test_iceberg_delete_leaves_same_basename_file_live(spark, tmp_path):
     root = _same_basename_parquet(spark, str(tmp_path / "i"))
-    convert_to_iceberg(spark, root, partition_schema={"grp": "long"})
+    iceberg_meta.author(
+        spark, root, partial(hive_inventory, partition_schema={"grp": "long"})
+    )
     before = set(IcebergTable(root).data_files())
     IcebergWriter(spark, root).delete_where(F.col("k") == 1)  # grp=1 only
     after = set(IcebergTable(root).data_files())

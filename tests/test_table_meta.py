@@ -95,17 +95,16 @@ def test_iceberg_files_meta_content_codes(spark, tmp_path):
 def test_convert_in_place_real_record_counts(spark, tmp_path):
     """convert_to_iceberg inventories foreign parquet with real
     per-file counts (was -1)."""
-    from plankton_spark.sources.iceberg_meta import (
-        convert_to_iceberg,
-        files_meta,
-    )
+    from plankton_spark.sources.iceberg_meta import files_meta
+    from plankton_spark.sources import iceberg_meta
+    from plankton_spark.sources.convert import hive_inventory
 
     src = str(tmp_path / "plain")
     o = read_table(spark, SF0001, "orders").select(
         "o_orderkey", "o_orderstatus"
     ).where(F.col("o_orderkey") < 300)
     o.coalesce(2).write.parquet(src)
-    convert_to_iceberg(spark, src)
+    iceberg_meta.author(spark, src, hive_inventory)
     fm = files_meta(spark, src).collect()
     assert fm and all(r["record_count"] > 0 for r in fm)
     assert sum(r["record_count"] for r in fm) == o.count()

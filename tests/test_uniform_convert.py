@@ -20,17 +20,15 @@ def _orders(spark):
 
 def test_dual_metadata_equal_reads(spark, tmp_path):
     from plankton_spark.sources.delta_log import DeltaLogWriter, read_delta
-    from plankton_spark.sources.iceberg_meta import (
-        convert_delta_to_iceberg,
-        read_iceberg,
-    )
+    from plankton_spark.sources.iceberg_meta import read_iceberg
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root = str(tmp_path / "d")
     w = DeltaLogWriter(spark, root)
     w.create(_orders(spark))
     # a rewrite creates tombstones the Iceberg snapshot must NOT see
     w.delete_where(F.col("o_orderkey") % 3 == 0)
-    convert_delta_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, delta_log.inventory)
     d = read_delta(spark, root).orderBy("o_orderkey").collect()
     i = read_iceberg(spark, root).orderBy("o_orderkey").collect()
     assert len(d) == len(i) > 0
@@ -42,15 +40,15 @@ def test_dual_metadata_partitioned(spark, tmp_path):
     from plankton_spark.sources.delta_log import DeltaLogWriter, read_delta
     from plankton_spark.sources.iceberg_meta import (
         IcebergTable,
-        convert_delta_to_iceberg,
         read_iceberg,
     )
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root = str(tmp_path / "p")
     DeltaLogWriter(spark, root).create(
         _orders(spark), partition_by=["o_orderstatus"]
     )
-    convert_delta_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, delta_log.inventory)
     d = read_delta(spark, root)
     i = read_iceberg(spark, root)
     dd = {
@@ -77,15 +75,15 @@ def test_dv_table_translates_to_v3_puffin(spark, tmp_path):
     from plankton_spark.sources.delta_log import DeltaLogWriter, read_delta
     from plankton_spark.sources.iceberg_meta import (
         IcebergTable,
-        convert_delta_to_iceberg,
         read_iceberg,
     )
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root = str(tmp_path / "dv")
     w = DeltaLogWriter(spark, root)
     w.create(_orders(spark))
     w.delete_where_dv(F.col("o_orderkey") % 5 == 0)
-    convert_delta_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, delta_log.inventory)
 
     d = sorted(r["o_orderkey"] for r in read_delta(spark, root).collect())
     i = sorted(r["o_orderkey"] for r in read_iceberg(spark, root).collect())
@@ -101,34 +99,33 @@ def test_refuses_mapped(spark, tmp_path):
         DeltaLogWriter,
         DeltaProtocolError,
     )
-    from plankton_spark.sources.iceberg_meta import convert_delta_to_iceberg
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root2 = str(tmp_path / "cm")
     w2 = DeltaLogWriter(spark, root2)
     w2.create(_orders(spark))
     w2.rename_column("o_totalprice", "price")
     with pytest.raises(DeltaProtocolError, match="column-mapped"):
-        convert_delta_to_iceberg(spark, root2)
+        iceberg_meta.author(spark, root2, delta_log.inventory)
 
 
 def test_refuses_double_convert(spark, tmp_path):
     from plankton_spark.sources.delta_log import DeltaLogWriter
-    from plankton_spark.sources.iceberg_meta import convert_delta_to_iceberg
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root = str(tmp_path / "twice")
     DeltaLogWriter(spark, root).create(_orders(spark))
-    convert_delta_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, delta_log.inventory)
     with pytest.raises(FileExistsError):
-        convert_delta_to_iceberg(spark, root)
+        iceberg_meta.author(spark, root, delta_log.inventory)
 
 
 def test_planktable_to_iceberg(spark, tmp_path):
     """Migration-matrix closure: planktable → Iceberg in place, live
     files only (a rewrite's dropped files stay invisible)."""
-    from plankton_spark.sources.iceberg_meta import (
-        convert_planktable_to_iceberg,
-        read_iceberg,
-    )
+    from plankton_spark.sources.iceberg_meta import read_iceberg
+    from plankton_spark import table_format
+    from plankton_spark.sources import iceberg_meta
     from plankton_spark.table_format import PlankTable
 
     root = str(tmp_path / "pk")
@@ -136,7 +133,7 @@ def test_planktable_to_iceberg(spark, tmp_path):
     o = _orders(spark)
     t.create(o)
     t.delete_where(F.col("o_orderkey") % 4 == 0)
-    convert_planktable_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, table_format.inventory)
     i = read_iceberg(spark, root)
     p = t.read()
     assert i.count() == p.count() > 0
@@ -147,7 +144,7 @@ def test_planktable_to_iceberg(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(FileExistsError):
-        convert_planktable_to_iceberg(spark, root)
+        iceberg_meta.author(spark, root, table_format.inventory)
 
 
 def test_partitioned_dv_table_translates(spark, tmp_path):
@@ -158,15 +155,15 @@ def test_partitioned_dv_table_translates(spark, tmp_path):
     from plankton_spark.sources.delta_log import DeltaLogWriter, read_delta
     from plankton_spark.sources.iceberg_meta import (
         IcebergTable,
-        convert_delta_to_iceberg,
         read_iceberg,
     )
+    from plankton_spark.sources import delta_log, iceberg_meta
 
     root = str(tmp_path / "pdv")
     w = DeltaLogWriter(spark, root)
     w.create(_orders(spark), partition_by=["o_orderstatus"])
     w.delete_where_dv(F.col("o_orderkey") % 5 == 0)
-    convert_delta_to_iceberg(spark, root)
+    iceberg_meta.author(spark, root, delta_log.inventory)
 
     t = IcebergTable(root)
     assert t.metadata["format-version"] == 3
